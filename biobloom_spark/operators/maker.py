@@ -206,7 +206,7 @@ def _build_partial_fn(sizing: dict, params: BloomParams, text_col: str, key_col:
     """
     w = params.shingle_w
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         filter_id, bucket = str(key[0]), int(key[1])
         meta = sizing[filter_id]
         bloom = BloomSketch(
@@ -486,7 +486,7 @@ def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None,
     h, bb, S = _seg_layout(params, build)
     k = S.bit_length() - 1
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         fid, seg = str(key[0]), int(key[1])
         if seg == -1:
             hll = HLLSketch(p=_HLL_P)
@@ -550,7 +550,7 @@ def _assemble_fn(params: BloomParams, build: BuildConfig, pinned: dict | None):
     the slice reducers."""
     h, bb, S = _seg_layout(params, build)
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         fid = str(key[0])
         comp = pdf[pdf["seg"] == -1].iloc[0]
         slices = {int(r["seg"]): r for _, r in pdf[pdf["seg"] >= 0].iterrows()}
@@ -621,7 +621,7 @@ def _merge_partials_fn(sizing: dict, out_schema, final: bool, params: BloomParam
     """applyInPandas kernel merging partial rows (OR bitmaps, max registers,
     add counters, re-compress digests)."""
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         filter_id = str(key[0])
         meta = sizing[filter_id]
         m, h = meta["m_bits"], meta["num_hashes"]
@@ -967,7 +967,7 @@ def _merge_registry_fn():
     """applyInPandas kernel: OR-merge all registry rows of one filter_id
     (from k unioned registries) into one row."""
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         cols = [f.name for f in REGISTRY_SCHEMA.fields]
         if len(pdf) == 1:
             return pdf[cols]

@@ -21,8 +21,9 @@ over the corpus partitions (zero shuffle — only sparse claim blobs move),
 ownership resolves by an associative min-tiebreak merge in one reducer
 per slot-range segment (the driver only memcpy-assembles resolved uint16
 slices — claim-cardinality data never lands on the driver), saturation is
-a second broadcast pass with per-segment dedup, and classification is one
-broadcast + mapInPandas pass over the (much larger) query corpus.
+one lost-pair scan (``_lost_slot_scan``, a corpus pass per label group)
+with per-segment dedup, and classification is one broadcast + mapInPandas
+pass over the (much larger) query corpus.
 """
 
 from __future__ import annotations
@@ -67,10 +68,9 @@ _SEG_IDS_SCHEMA = T.StructType(
         T.StructField("seg", T.IntegerType(), False),
         T.StructField("ids", T.BinaryType(), False),
         # lost (slot, label) claim pairs of this segment — int64 slots
-        # followed by uint16 labels (n = len/10).  The saturation pass
-        # needs ONLY these (see MIBFClaims.lost_pairs), so the dense
-        # build can broadcast ~|collisions| bytes instead of the full
-        # uint16 id array.
+        # followed by uint16 labels (n = len/10).  The saturation scan
+        # needs ONLY these (see MIBFClaims.lost_pairs), so it broadcasts
+        # ~|collisions| bytes instead of the full uint16 id array.
         T.StructField("lost", T.BinaryType(), True),
     ]
 )
@@ -86,6 +86,25 @@ def _unpack_lost(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
         np.frombuffer(payload[: 8 * n], dtype="<i8").astype(np.int64),
         np.frombuffer(payload[8 * n :], dtype="<u2").astype(np.uint16),
     )
+
+
+def _decode_lost(payloads, keep: set[int]) -> dict[int, np.ndarray]:
+    """Packed ``lost`` values → {label index: sorted distinct lost slots}
+    for the labels in ``keep``."""
+    acc: dict[int, list[np.ndarray]] = {}
+    for p in payloads:
+        slots, labels = _unpack_lost(p)
+        order = np.argsort(labels, kind="stable")
+        labs, starts = np.unique(labels[order], return_index=True)
+        for li, part in zip(labs.tolist(), np.split(slots[order], starts[1:])):
+            if li in keep:
+                acc.setdefault(li, []).append(part)
+    return {li: np.unique(np.concatenate(parts)) for li, parts in acc.items()}
+
+
+#: default ``_lost_slot_scan`` budget: lost-slot bytes one saturation leg
+#: broadcasts when the caller passes no ``max_broadcast_bytes``
+_LOST_BROADCAST_CAP = 64 << 20
 
 _SAT_SCHEMA = T.StructType(
     [
@@ -173,7 +192,7 @@ def _resolved_segments(
 
     partials = base.mapInPandas(claims_pass, schema=_CLAIMS_SCHEMA)
 
-    def resolve_seg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def resolve_seg(key, pdf):
         """One reducer per slot-range segment: merge that segment's claims
         (associative min-tiebreak) and emit the resolved uint16 id slice
         plus the segment's lost (slot, label) claim pairs."""
@@ -281,7 +300,6 @@ def build_mibf(
     max_broadcast_bytes: int | None = None,
     canonical: bool = False,
     hash_family: str = "poly",
-    pin_source: bool = True,
 ) -> MIBFSketch:
     """Build one miBF over all values of ``key_col`` (labels).
 
@@ -302,21 +320,18 @@ def build_mibf(
        driver only memcpy-assembles slices (never touches claim blobs),
        mirroring the Bloom build's segmented merge (maker._assemble_fn);
     3. saturation: frames whose label lost every slot mark those slots
-       saturated (insertSaturation analog) — lost-slot sets are likewise
-       deduped per segment in reducers before the driver ORs the bit.
+       saturated (insertSaturation analog) — ``_lost_slot_scan`` tests
+       each frame against its own label's lost-slot set from the resolve
+       stage, one corpus pass per label group, and dedups the slots per
+       segment in reducers before the driver ORs the bit.  A corpus whose
+       claims never collide skips this pass.
     The corpus is read twice and never shuffled; only sparse claim blobs
     move, and no claim-cardinality data structure ever lands on the
     driver.  Labels are capped at 32767 (Doc/MultiIndex.md:165).
 
-    ``max_broadcast_bytes`` caps the id-array bytes broadcast during the
-    saturation pass: beyond the cap, saturation runs sharded by slot-range
-    segment (one segment broadcast per pass, per-probe ownership entries
-    stitched by a frame-level OR — ``_saturate_sharded``) instead of
-    broadcasting the full resolved sketch.  None = single broadcast.
-
-    ``pin_source`` (sharded saturation only): pin the projected corpus
-    once for the segment passes; set False only for sources that
-    re-evaluate deterministically (see ``session.pin_rows``).
+    ``max_broadcast_bytes`` caps the lost-slot bytes (8 B per slot) one
+    saturation leg broadcasts; a larger lost-pair set splits into more
+    label groups.  None = ``_LOST_BROADCAST_CAP`` (64 MiB).
     """
     base, bc_map, labels, seed_arr, h, canonical, m_slots = _prep_build(
         spark, docs, key_col, text_col, shingle_w, num_hashes, occupancy,
@@ -339,8 +354,7 @@ def build_mibf(
         bounds, S,
     )
     ids = np.zeros(m_slots, dtype=np.uint16)
-    lost_acc: dict[int, list[np.ndarray]] = {}
-    n_lost = 0
+    lost: list[bytes] = []
     # toPandas: the resolved slices are ~2 B x m_slots of binary — the
     # Arrow transfer path measured 2x faster than the pickled-row collect
     # for this payload (tools/r06_measure notes; guide §6 Arrow transfers)
@@ -348,162 +362,123 @@ def build_mibf(
         s = int(r.seg)
         ids[bounds[s] : bounds[s + 1]] = np.frombuffer(bytes(r.ids), dtype=np.uint16)
         if r.lost:
-            lslots, llabels = _unpack_lost(bytes(r.lost))
-            n_lost += lslots.size
-            for li in np.unique(llabels):
-                lost_acc.setdefault(int(li), []).append(lslots[llabels == li])
+            lost.append(bytes(r.lost))
     sketch = MIBFSketch(
         m_slots, h, shingle_w, labels, ids, seed_arr, hash_family, canonical
     )
-
-    # --- saturation pass (insertSaturation, MIBFGen.hpp:196-223) ----------
-    # An element is saturated iff its label lost EVERY probe slot, and a
-    # probed slot is always claimed — so losing a slot == appearing in the
-    # resolve stage's lost-pair set.  When that set is small (it is
-    # |collision claims|, not |slots|), broadcast it instead of the full
-    # uint16 id array: the per-worker broadcast read drops from
-    # O(m_slots) to O(collisions) and a collision-free corpus (disjoint
-    # label vocabularies) skips the second corpus scan entirely.
-    if n_lost == 0:
-        return sketch
-    lost_by_label = {
-        li: np.unique(np.concatenate(parts)) for li, parts in lost_acc.items()
-    }
-    lost_bytes = 10 * n_lost
-    if lost_bytes <= max(sketch.ids.nbytes // 2, 1 << 20) and (
-        max_broadcast_bytes is None or lost_bytes <= max_broadcast_bytes
-    ):
-        _saturate_lost_pairs(
-            spark, base, sketch, bc_map, lost_by_label, bounds, S,
-            seed_arr, hash_family, canonical,
-        )
-        return sketch
-    if max_broadcast_bytes is not None and sketch.ids.nbytes > max_broadcast_bytes:
-        n_seg = _clamp_segments(-(-sketch.ids.nbytes // max_broadcast_bytes))
-        _saturate_sharded(spark, base, sketch, bc_map, n_seg, pin_source=pin_source)
-        return sketch
-    bc_ids = spark.sparkContext.broadcast(sketch.serialize())
-
-    def sat_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lmap = bc_map.value
-        resolved = MIBFSketch.deserialize(
-            bc_ids.value, m_slots, h, shingle_w, labels, seed_arr,
-            hash_family=hash_family, canonical=canonical,
-        )
-        cache: dict = {}
-        sat: list[np.ndarray] = []
-        for pdf in batches:
-            for lab, grp in pdf.groupby("__label"):
-                li = lmap.get(str(lab))
-                if li is None:
-                    continue
-                rows, _off = _frame_hash_rows(
-                    grp["__text"].to_numpy(), None, shingle_w, seed_arr, cache,
-                    canonical, hash_family,
-                )
-                if rows.size == 0:
-                    continue
-                pos = resolved.positions_for(rows)
-                lost = resolved.lost_elements(pos, li)
-                if lost.any():
-                    sat.append(np.unique(pos[:, lost]))
-        if sat:
-            allsat = np.unique(np.concatenate(sat))
-            cut = np.searchsorted(allsat, bounds)
-            out_seg, out_sl = [], []
-            for s in range(S):
-                lo, hi = int(cut[s]), int(cut[s + 1])
-                if hi > lo:
-                    out_seg.append(s)
-                    out_sl.append(allsat[lo:hi].tobytes())
-            yield pd.DataFrame({"seg": out_seg, "slots": out_sl})
-
-    def sat_reduce(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        """Dedup one segment's lost slots before they reach the driver."""
-        u = np.unique(
-            np.concatenate(
-                [np.frombuffer(bytes(p), dtype=np.int64) for p in pdf["slots"]]
-            )
-        )
-        return pd.DataFrame({"seg": [int(key[0])], "slots": [u.tobytes()]})
-
-    for r in (
-        base.mapInPandas(sat_pass, schema=_SAT_SCHEMA)
-        .groupBy("seg")
-        .applyInPandas(sat_reduce, schema=_SAT_SCHEMA)
-        .collect()
-    ):
+    budget = _LOST_BROADCAST_CAP if max_broadcast_bytes is None else max_broadcast_bytes
+    scan = _lost_slot_scan(
+        spark, base, _sketch_meta(sketch), bc_map, lambda: lost, bounds, budget
+    )
+    for r in scan.collect():
         sketch.apply_saturation(np.frombuffer(bytes(r["slots"]), dtype=np.int64))
     return sketch
 
 
-def _saturate_lost_pairs(
+def _lost_slot_scan(
     spark: SparkSession,
     base: DataFrame,
-    sketch: MIBFSketch,
+    meta: tuple,
     bc_map,
-    lost_by_label: dict[int, np.ndarray],
+    lost_payloads,
     bounds: np.ndarray,
-    S: int,
-    seed_arr: np.ndarray | None,
-    hash_family: str,
-    canonical: bool,
-) -> None:
-    """Saturation from the resolve stage's lost-pair sets — the id-array-
-    free twin of ``build_mibf``'s dense ``sat_pass``.
+    budget: int,
+) -> DataFrame:
+    """The saturation scan (insertSaturation, MIBFGen.hpp:196-223) of both
+    ``build_mibf`` and ``mibf_store.build_mibf_store`` → DataFrame
+    (seg, slots): per slot-range segment of ``bounds``, the sorted distinct
+    int64 slots to mark saturated.  Segments with nothing to mark emit no
+    row; when no claim lost its slot (disjoint label vocabularies) there
+    are no groups and the corpus is not scanned at all.
 
-    ``lost_by_label[li]`` = sorted slots label ``li`` claimed but lost.
-    A frame of label ``li`` is saturated iff ALL its probe slots are in
-    that set (every probed slot was claimed by the label in pass 1, so
-    'not owned' == 'lost'); label groups with an empty lost set skip the
-    membership test — only the rehash remains, and the pass is launched
-    at all only when some label lost something.
+    A frame is saturated iff its label lost EVERY probe slot.  Each probed
+    slot was claimed by the frame's label in the claims pass, so 'lost' ==
+    'in the resolve stage's lost-pair set of that label', which
+    ``MIBFClaims.merge_all`` makes globally complete.  A frame only ever
+    tests its own label's set, so labels pack (in index order) into groups
+    whose lost sets total at most ``budget`` bytes at 8 B per slot; each
+    group is one mapInPandas leg over ``base`` filtered to its labels,
+    broadcasting only that group's sets.  Frames never span legs, so no
+    row surrogate, stitch or pin is needed; the legs union into one
+    per-segment dedup reducer.
+
+    ``lost_payloads()`` yields the resolve stage's packed ``lost`` values.
+    It is read once to size the groups and once per group, so the driver
+    holds one group's lost sets at a time.
+
+    A single label whose lost set exceeds ``budget`` gets a group of its
+    own and that leg's broadcast exceeds the cap; past
+    ``_MAX_SHARD_SEGMENTS`` groups the remaining labels join the last
+    group (the ``_clamp_segments`` plan-size guard).  Both are documented
+    trades, never wrong results.
     """
-    m_slots, h, shingle_w = sketch.m_slots, sketch.num_hashes, sketch.shingle_w
-    bc_lost = spark.sparkContext.broadcast(lost_by_label)
+    m_slots, h, w, labels, seeds, family, canonical = meta
+    sizes: dict[int, int] = {}
+    for p in lost_payloads():
+        li, n = np.unique(_unpack_lost(p)[1], return_counts=True)
+        for a, b in zip(li.tolist(), n.tolist()):
+            sizes[a] = sizes.get(a, 0) + b
+    groups: list[list[int]] = []
+    used = 0
+    for li in sorted(sizes):
+        if not groups or (
+            used + 8 * sizes[li] > budget and len(groups) < _MAX_SHARD_SEGMENTS
+        ):
+            groups.append([])
+            used = 0
+        groups[-1].append(li)
+        used += 8 * sizes[li]
+    if not groups:
+        return spark.createDataFrame([], _SAT_SCHEMA)
     probe = MIBFSketch(
-        m_slots, h, shingle_w, [], np.zeros(0, dtype=np.uint16), seed_arr,
-        hash_family, canonical,
+        m_slots, h, w, [], np.zeros(0, dtype=np.uint16), seeds, family, canonical
     )
+    S = len(bounds) - 1
 
-    def sat_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lmap = bc_map.value
-        lostmap = bc_lost.value
-        cache: dict = {}
-        sat: list[np.ndarray] = []
-        for pdf in batches:
-            for lab, grp in pdf.groupby("__label"):
-                li = lmap.get(str(lab))
-                if li is None:
-                    continue
-                lost_L = lostmap.get(int(li))
-                if lost_L is None or lost_L.size == 0:
-                    continue
-                rows, _off = _frame_hash_rows(
-                    grp["__text"].to_numpy(), None, shingle_w, seed_arr, cache,
-                    canonical, hash_family,
+    def leg(group: list[int]) -> DataFrame:
+        bc_lost = spark.sparkContext.broadcast(
+            _decode_lost(lost_payloads(), set(group))
+        )
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            lmap = bc_map.value
+            lostmap = bc_lost.value
+            cache: dict = {}
+            sat: list[np.ndarray] = []
+            for pdf in batches:
+                for lab, grp in pdf.groupby("__label"):
+                    lost_L = lostmap.get(lmap.get(str(lab)))
+                    if lost_L is None:
+                        continue
+                    rows, _off = _frame_hash_rows(
+                        grp["__text"].to_numpy(), None, w, seeds, cache,
+                        canonical, family,
+                    )
+                    if rows.size == 0:
+                        continue
+                    pos = probe.positions_for(rows)
+                    idx = np.searchsorted(lost_L, pos)
+                    np.minimum(idx, lost_L.size - 1, out=idx)
+                    lost = (lost_L[idx] == pos).all(axis=0)
+                    if lost.any():
+                        sat.append(np.unique(pos[:, lost]))
+            if sat:
+                allsat = np.unique(np.concatenate(sat))
+                cut = np.searchsorted(allsat, bounds)
+                segs = [s for s in range(S) if cut[s + 1] > cut[s]]
+                yield pd.DataFrame(
+                    {
+                        "seg": segs,
+                        "slots": [allsat[cut[s] : cut[s + 1]].tobytes() for s in segs],
+                    }
                 )
-                if rows.size == 0:
-                    continue
-                pos = probe.positions_for(rows)
-                idx = np.searchsorted(lost_L, pos)
-                np.minimum(idx, lost_L.size - 1, out=idx)
-                member = lost_L[idx] == pos
-                lost = member.all(axis=0)
-                if lost.any():
-                    sat.append(np.unique(pos[:, lost]))
-        if sat:
-            allsat = np.unique(np.concatenate(sat))
-            cut = np.searchsorted(allsat, bounds)
-            out_seg, out_sl = [], []
-            for s in range(S):
-                lo, hi = int(cut[s]), int(cut[s + 1])
-                if hi > lo:
-                    out_seg.append(s)
-                    out_sl.append(allsat[lo:hi].tobytes())
-            yield pd.DataFrame({"seg": out_seg, "slots": out_sl})
 
-    def sat_reduce(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        names = [labels[li - 1] for li in group]
+        return base.filter(F.col("__label").isin(names)).mapInPandas(
+            run, schema=_SAT_SCHEMA
+        )
+
+    def dedup(key, pdf):
         u = np.unique(
             np.concatenate(
                 [np.frombuffer(bytes(p), dtype=np.int64) for p in pdf["slots"]]
@@ -511,203 +486,10 @@ def _saturate_lost_pairs(
         )
         return pd.DataFrame({"seg": [int(key[0])], "slots": [u.tobytes()]})
 
-    for r in (
-        base.mapInPandas(sat_pass, schema=_SAT_SCHEMA)
-        .groupBy("seg")
-        .applyInPandas(sat_reduce, schema=_SAT_SCHEMA)
-        .collect()
-    ):
-        sketch.apply_saturation(np.frombuffer(bytes(r["slots"]), dtype=np.int64))
-
-
-def _lost_slots_from_pairs(
-    spark: SparkSession,
-    base: DataFrame,
-    meta: tuple,
-    bc_map,
-    lost_by_label: dict[int, np.ndarray],
-) -> DataFrame:
-    """Distributed lost-element scan from the resolve stage's lost-pair
-    sets: ONE corpus pass, no id-array broadcast — the store-build twin
-    of ``_saturate_lost_pairs`` (returns the same distinct ``slot``
-    DataFrame shape as ``_sharded_lost_slots``)."""
-    m_slots, h, w, _labels, seeds, family, canonical = meta
-    bc_lost = spark.sparkContext.broadcast(lost_by_label)
-    probe = MIBFSketch(
-        m_slots, h, w, [], np.zeros(0, dtype=np.uint16), seeds, family, canonical
-    )
-    slot_schema = T.StructType([T.StructField("slot", T.LongType(), False)])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lmap = bc_map.value
-        lostmap = bc_lost.value
-        cache: dict = {}
-        sat: list[np.ndarray] = []
-        for pdf in batches:
-            for lab, grp in pdf.groupby("__label"):
-                li = lmap.get(str(lab))
-                if li is None:
-                    continue
-                lost_L = lostmap.get(int(li))
-                if lost_L is None or lost_L.size == 0:
-                    continue
-                rows, _off = _frame_hash_rows(
-                    grp["__text"].to_numpy(), None, w, seeds, cache,
-                    canonical, family,
-                )
-                if rows.size == 0:
-                    continue
-                pos = probe.positions_for(rows)
-                idx = np.searchsorted(lost_L, pos)
-                np.minimum(idx, lost_L.size - 1, out=idx)
-                member = lost_L[idx] == pos
-                lost = member.all(axis=0)
-                if lost.any():
-                    sat.append(np.unique(pos[:, lost]))
-        if sat:
-            yield pd.DataFrame({"slot": np.unique(np.concatenate(sat))})
-
-    return base.mapInPandas(run, schema=slot_schema).distinct()
-
-
-def _saturate_sharded(
-    spark: SparkSession,
-    base: DataFrame,
-    sketch: MIBFSketch,
-    bc_map,
-    n_segments: int,
-    pin_source: bool = True,
-) -> None:
-    """Saturation without a full-array broadcast — the sharded twin of the
-    ``sat_pass`` in ``build_mibf`` (insertSaturation, MIBFGen.hpp:196-223).
-    Mutates ``sketch`` in place (sets SAT_BIT), like the dense pass.
-    """
-    bounds = _seg_bounds(sketch.m_slots, int(n_segments))
-    ids = sketch.ids
-    sat_slots = _sharded_lost_slots(
-        spark, base, _sketch_meta(sketch),
-        lambda s, lo, hi: ids[lo:hi].tobytes(), bc_map, bounds,
-        pin_source=pin_source,
-    )
-    pack_schema = T.StructType([T.StructField("slots", T.BinaryType(), False)])
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    {"slots": [pdf["slot"].to_numpy().astype(np.int64).tobytes()]}
-                )
-
-    for r in sat_slots.mapInPandas(pack, schema=pack_schema).collect():
-        sketch.apply_saturation(np.frombuffer(bytes(r["slots"]), dtype=np.int64))
-
-
-def _sharded_lost_slots(
-    spark: SparkSession,
-    base: DataFrame,
-    meta: tuple,
-    seg_bytes,
-    bc_map,
-    bounds: np.ndarray,
-    pin_source: bool = True,
-) -> DataFrame:
-    """The distributed lost-element scan shared by the in-memory sharded
-    saturation and the store build (insertSaturation, MIBFGen.hpp:196-223).
-
-    Pass s broadcasts only slot range ``[bounds[s], bounds[s+1])`` of the
-    resolved id array (``seg_bytes(s, lo, hi)`` — an in-memory slice or a
-    parquet segment read) and emits, for every probe position it owns, one
-    (row, frame, slot, owned-by-this-label) entry.  Every probe belongs to
-    exactly one segment, so a groupBy on (row, frame) sees all h probes of
-    every frame: frames where no probe is owned are the lost elements, and
-    their slots — deduped distributively — are the saturation set.  The
-    corpus is hashed once per segment and the probe entries ride one
-    shuffle; executor memory stays bounded by the segment size.  Returns a
-    DataFrame with one distinct ``slot`` column.
-    """
-    m_slots, h, w, _labels, seeds, family, canonical = meta
-    S = len(bounds) - 1
-    from ..session import pin_rows
-
-    # pin: saturation bits must come from ONE consistent row set across
-    # the S passes even for non-deterministic sources (see session.pin_rows;
-    # pin_source=False = caller asserts a deterministic source, re-scan)
-    keyed = pin_rows(
-        base.withColumn("__row", F.monotonically_increasing_id()),
-        pin=pin_source,
-    )
-    entry_schema = T.StructType(
-        [
-            T.StructField("__row", T.LongType(), False),
-            T.StructField("frame", T.LongType(), False),
-            T.StructField("slot", T.LongType(), False),
-            T.StructField("owned", T.BooleanType(), False),
-        ]
-    )
-
-    def seg_pass(s: int):
-        lo, hi = int(bounds[s]), int(bounds[s + 1])
-        bc_seg = spark.sparkContext.broadcast(seg_bytes(s, lo, hi))
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # must not close over `sketch` (would ship the full id array)
-            seg = np.frombuffer(bc_seg.value, dtype=np.uint16)
-            probe = MIBFSketch(
-                m_slots, h, w, [], np.zeros(0, dtype=np.uint16), seeds,
-                family, canonical,
-            )
-            lmap = bc_map.value
-            cache: dict = {}
-            for pdf in batches:
-                cols: list[list[np.ndarray]] = [[], [], [], []]
-                for lab, grp in pdf.groupby("__label"):
-                    li = lmap.get(str(lab))
-                    if li is None:
-                        continue
-                    rows_h, offsets = _frame_hash_rows(
-                        grp["__text"].to_numpy(), None, w, seeds, cache,
-                        canonical, family,
-                    )
-                    if rows_h.size == 0 or int(offsets[-1]) == 0:
-                        continue
-                    pos = probe.positions_for(rows_h)
-                    in_seg = (pos >= lo) & (pos < hi)
-                    ii, gg = np.nonzero(in_seg)
-                    if ii.size == 0:
-                        continue
-                    doc = np.searchsorted(offsets, gg, side="right") - 1
-                    slots = pos[ii, gg]
-                    row_ids = grp["__row"].to_numpy()
-                    cols[0].append(row_ids[doc])
-                    cols[1].append(gg - offsets[doc])
-                    cols[2].append(slots)
-                    cols[3].append(
-                        (seg[slots - lo] & ID_MASK) == np.uint16(li)
-                    )
-                if cols[0]:
-                    yield pd.DataFrame(
-                        {
-                            "__row": np.concatenate(cols[0]),
-                            "frame": np.concatenate(cols[1]),
-                            "slot": np.concatenate(cols[2]),
-                            "owned": np.concatenate(cols[3]),
-                        }
-                    )
-
-        return keyed.mapInPandas(run, schema=entry_schema)
-
-    entries = seg_pass(0)
-    for s in range(1, S):
-        entries = entries.unionByName(seg_pass(s))
-    lost = (
-        entries.groupBy("__row", "frame")
-        .agg(
-            F.max(F.col("owned").cast("int")).alias("any_owned"),
-            F.collect_list("slot").alias("slots"),
-        )
-        .filter(F.col("any_owned") == 0)
-    )
-    return lost.select(F.explode("slots").alias("slot")).distinct()
+    scan = leg(groups[0])
+    for g in groups[1:]:
+        scan = scan.unionByName(leg(g))
+    return scan.groupBy("seg").applyInPandas(dedup, schema=_SAT_SCHEMA)
 
 
 def _sketch_meta(sketch: MIBFSketch) -> tuple:

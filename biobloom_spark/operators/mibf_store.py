@@ -12,10 +12,12 @@ table of slot-range segments:
 
 - ``build_mibf_store``: claims→ownership resolution lands segment rows
   straight in parquet (``_resolved_segments`` reducers write, the driver
-  never sees ids); the saturation scan (``_sharded_lost_slots``) reads
-  one segment per pass; the SAT_BIT update is a cogrouped
-  ``applyInPandas`` over (segment rows × lost slots).  Driver-side state
-  is O(n_segments) metadata only.
+  never sees ids); the saturation scan (``_lost_slot_scan``, shared with
+  ``build_mibf``) tests frames against the resolve stage's lost-pair sets,
+  one corpus pass per label group, and the driver reads those sets one
+  group at a time; the SAT_BIT update is a cogrouped ``applyInPandas``
+  over (segment rows × the scan's per-segment slots).  Driver-side state
+  is O(n_segments) metadata plus one label group's lost sets.
 - ``classify_mibf_store`` / ``classify_mibf_store_pairs``: the sharded
   classification kernel (``_classify_mibf_sharded``) with segment bytes
   fetched from parquet per pass — executor memory is bounded by one
@@ -32,7 +34,6 @@ from __future__ import annotations
 
 import hashlib
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -47,20 +48,14 @@ from ..sketch.mibf import (
     seed_masks_to_arrays,
 )
 from .mibf import (
+    _LOST_BROADCAST_CAP,
     _classify_mibf_sharded,
     _clamp_segments,
-    _lost_slots_from_pairs,
+    _lost_slot_scan,
     _prep_build,
     _resolved_segments,
     _seg_bounds,
-    _sharded_lost_slots,
-    _unpack_lost,
 )
-
-#: largest total lost-pair payload the store build will broadcast for the
-#: one-pass saturation scan; beyond it (or for pre-round-6 resolved
-#: checkpoints without the column) the segmented rescan path runs instead
-_LOST_BROADCAST_CAP = 64 << 20
 
 __all__ = [
     "MIBFStore",
@@ -212,7 +207,6 @@ def build_mibf_store(
     hash_family: str = "poly",
     resume: bool = False,
     snapshot_id: str | None = None,
-    pin_source: bool = True,
 ) -> MIBFStore:
     """Build a miBF straight into a parquet store (MIBFGen.hpp:131-309
     semantics; byte-identical resolution+saturation to ``build_mibf``).
@@ -224,8 +218,9 @@ def build_mibf_store(
     1. sizing pass (shared ``_prep_build``);
     2. ``_resolved_segments`` writes resolved uint16 slices to
        ``{path}/resolved`` — reducers write, driver sees nothing;
-    3. ``_sharded_lost_slots`` scans for saturation one segment per pass
-       (reading ``{path}/resolved`` from the driver only to broadcast);
+    3. ``_lost_slot_scan`` finds the saturated slots from the ``lost``
+       pair column of ``{path}/resolved``, one corpus pass per label
+       group (the driver streams that column once per group);
     4. a cogrouped ``applyInPandas`` ORs SAT_BIT into the owned slots,
        emits per-segment label bincounts + saturation counts, and writes
        ``{path}/segments``; the tiny per-segment stats aggregate into
@@ -244,9 +239,13 @@ def build_mibf_store(
     per-segment rows double as the build's partition-level lineage.
     """
     snap_src = snapshot_id or ";".join(sorted(docs.inputFiles()))
+    # "lost-pairs": the resolved/ checkpoint format, whose rows carry the
+    # lost-pair column the saturation scan reads; a checkpoint written
+    # before that column existed fingerprints differently and rebuilds
     param_fp = repr((
         key_col, text_col, shingle_w, num_hashes, occupancy, seeds,
         expected_entries, segment_bytes, min_segments, canonical, hash_family,
+        "lost-pairs",
     ))
     snap_fp = (
         hashlib.md5((snap_src + "|" + param_fp).encode()).hexdigest()
@@ -297,64 +296,22 @@ def build_mibf_store(
                 canonical, bounds, S,
             ).write.mode("overwrite").parquet(resolved_path)
 
-        # saturation: prefer the resolve stage's lost-pair sets (round 6)
-        # — ONE corpus pass with a |collisions|-sized broadcast, or ZERO
-        # passes when no claim lost its slot — over the segmented
-        # full-array rescan (S corpus passes).  Falls back for resolved
-        # checkpoints written before the `lost` column existed and for
-        # lost sets too big to broadcast.
-        resolved_cols = spark.read.parquet(resolved_path)
-        sat_slots = None
-        if "lost" in resolved_cols.columns:
-            n_lost_bytes = int(
-                resolved_cols.agg(
-                    F.sum(F.length("lost")).alias("b")
-                ).collect()[0]["b"]
-                or 0
-            )
-            if n_lost_bytes == 0:
-                sat_slots = spark.createDataFrame([], "slot long")
-            elif n_lost_bytes <= _LOST_BROADCAST_CAP:
-                lost_acc: dict[int, list[np.ndarray]] = {}
-                for r in resolved_cols.select("lost").collect():
-                    if r["lost"]:
-                        ls, ll = _unpack_lost(bytes(r["lost"]))
-                        for li in np.unique(ll):
-                            lost_acc.setdefault(int(li), []).append(ls[ll == li])
-                lost_by_label = {
-                    li: np.unique(np.concatenate(parts))
-                    for li, parts in lost_acc.items()
-                }
-                sat_slots = _lost_slots_from_pairs(
-                    spark, base, meta7, bc_map, lost_by_label
-                )
-        if sat_slots is None:
-            sat_slots = _sharded_lost_slots(
-                spark, base, meta7,
-                lambda s, lo, hi: _read_segment(spark, resolved_path, s, lo, hi),
-                bc_map, bounds, pin_source=pin_source,
-            )
-        bounds_b = bounds  # captured by value semantics via closure
-
-        def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                sl = pdf["slot"].to_numpy().astype(np.int64)
-                seg = (np.searchsorted(bounds_b, sl, side="right") - 1).astype(np.int32)
-                yield pd.DataFrame({"seg": seg, "slot": sl})
-
-        sat_tagged = sat_slots.mapInPandas(
-            tag, schema="seg int, slot long"
+        resolved = spark.read.parquet(resolved_path)
+        sat = _lost_slot_scan(
+            spark, base, meta7, bc_map,
+            lambda: (bytes(r["lost"]) for r in resolved.select("lost").toLocalIterator()),
+            bounds, _LOST_BROADCAST_CAP,
         )
 
-        def finalize(key, seg_pdf: pd.DataFrame, sat_pdf: pd.DataFrame) -> pd.DataFrame:
+        def finalize(key, seg_pdf, sat_pdf):
             s = int(key[0])
-            lo, hi = int(bounds_b[s]), int(bounds_b[s + 1])
+            lo, hi = int(bounds[s]), int(bounds[s + 1])
             if len(seg_pdf):
                 ids = np.frombuffer(bytes(seg_pdf["ids"].iloc[0]), dtype=np.uint16).copy()
             else:  # saturation slots always target owned (resolved) slots, but
                 ids = np.zeros(hi - lo, dtype=np.uint16)  # stay total anyway
-            if len(sat_pdf):
-                ids[sat_pdf["slot"].to_numpy().astype(np.int64) - lo] |= SAT_BIT
+            for b in sat_pdf["slots"]:
+                ids[np.frombuffer(bytes(b), dtype=np.int64) - lo] |= SAT_BIT
             counts = np.bincount(
                 (ids & ID_MASK).astype(np.int64), minlength=L + 1
             ).astype(np.int64)
@@ -367,10 +324,9 @@ def build_mibf_store(
                 }
             )
 
-        resolved_df = spark.read.parquet(resolved_path)
         final = (
-            resolved_df.groupby("seg")
-            .cogroup(sat_tagged.groupby("seg"))
+            resolved.select("seg", "ids").groupby("seg")
+            .cogroup(sat.groupby("seg"))
             .applyInPandas(finalize, schema=_FINAL_SEG_SCHEMA)
         )
         final.write.mode("overwrite").parquet(seg_path)

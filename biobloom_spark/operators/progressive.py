@@ -136,6 +136,7 @@ def progressive_build(
         ]
 
     remaining = read_docs
+    matched_all = None
     for it in range(1, max_iterations + 1):
         if text2_col:
             res = categorize_pairs(
@@ -147,7 +148,11 @@ def progressive_build(
                 spark, remaining, filters + bait_filters, cfg,
                 id_col=id_col, text_col=text_col,
             )
-        matched_ids = res.filter(F.size("hits") > 0).select(id_col)
+        # checkpointed, and `remaining` is ONE anti-join against the union
+        # of these id sets: iteration k's plan never re-evaluates an
+        # earlier iteration's categorize, so every iteration after the
+        # first runs the same jobs
+        matched_ids = res.filter(F.size("hits") > 0).select(id_col).localCheckpoint()
         n_matched = matched_ids.count()
         if n_matched == 0:
             break
@@ -173,7 +178,10 @@ def progressive_build(
                 "fpr": max(running.fpr_from_occupancy(), 1e-300),
             }
         ]
-        remaining = remaining.join(matched_ids, on=id_col, how="left_anti")
+        matched_all = (
+            matched_ids if matched_all is None else matched_all.unionByName(matched_ids)
+        )
+        remaining = read_docs.join(matched_all, on=id_col, how="left_anti")
         # stop when the filter stopped growing (totalEntries fixpoint,
         # BloomFilterGenerator.cpp:176,402 analog)
     return filters, tagged

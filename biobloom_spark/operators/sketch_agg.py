@@ -377,7 +377,7 @@ def _merge_fn(keep_salt: bool = False, sketch_params: tuple | None = None):
     p, cw, cd = _resolve_params(sketch_params)
     cols = [_COLS[0]] + (["salt"] if keep_salt else []) + _COLS[1:]
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         from ..sketch import CountMinSketch, HLLSketch, KLLSketch, TDigestSketch
 
         if len(pdf) == 1:

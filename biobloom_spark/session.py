@@ -66,11 +66,10 @@ def pin_rows(df, pin: bool = True):
     set with stable surrogate ids.
 
     The sharded/chunked paths (`_categorize_sharded`,
-    `_classify_mibf_sharded`, `_sharded_lost_slots`) attach
-    ``monotonically_increasing_id()`` and re-scan the plan once per
-    segment pass; for a non-deterministic source (``orderBy(rand())``, an
-    unseeded ``sample()``, a shuffle whose fetch order varies) each pass
-    would re-evaluate the plan and assign the SAME surrogate to DIFFERENT
+    `_classify_mibf_sharded`) attach ``monotonically_increasing_id()``
+    and re-scan the plan once per segment pass; for a non-deterministic
+    source (``orderBy(rand())``, an unseeded ``sample()``, a shuffle whose
+    fetch order varies) each pass would re-evaluate the plan and assign the SAME surrogate to DIFFERENT
     rows, silently stitching partials from different documents together.
     An eager ``localCheckpoint`` computes the projected rows once, stores
     them on the executors (memory-and-disk) with lineage truncated, and
@@ -80,7 +79,9 @@ def pin_rows(df, pin: bool = True):
     (id, text) columns for the operator's lifetime — the standard
     multi-pass trade (same blocks the passes would otherwise re-derive by
     re-scanning the source per pass); blocks are freed when the checkpointed
-    plan is garbage-collected.
+    plan is garbage-collected.  The miBF saturation scan
+    (`mibf._lost_slot_scan`) needs no pin: each of its label-group legs
+    sees whole frames, so no pass's output is stitched to another's.
 
     ``pin=False`` skips the checkpoint — the scale escape for sources the
     caller KNOWS re-evaluate identically (a plain parquet/file scan with no

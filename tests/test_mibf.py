@@ -34,6 +34,23 @@ def _vocab_texts(rng, vocab_prefix, n_docs, n_tokens, vocab_size=400):
     ]
 
 
+def _saturation_corpus(spark, request, name):
+    """(corpus, build kwargs) of a corpus whose labels contest slots:
+    "identical" = two labels with the same text, "shared" = three labels
+    over one vocabulary, "nthash" = the DNA reads under ntHash."""
+    schema = "doc_id string, text string, lang string"
+    if name == "identical":
+        text = " ".join(f"t{i}" for i in range(100))
+        return spark.createDataFrame([("a1", text, "a"), ("b1", text, "b")], schema), {}
+    if name == "shared":
+        text = " ".join(f"s{i % 37}x{i % 11}" for i in range(150))
+        rows = [(f"d{li}{j}", text + f" tail{li}", f"L{li}")
+                for li in range(3) for j in range(2)]
+        return spark.createDataFrame(rows, schema), {}
+    _, df = request.getfixturevalue("dna_corpus")
+    return df, {"shingle_w": TestHashFamilies.K, "hash_family": "nthash"}
+
+
 @pytest.fixture(scope="module")
 def labeled_corpus(spark):
     rng = np.random.default_rng(5)
@@ -133,23 +150,16 @@ class TestSketch:
                 raw = sk.ids[pos[:, lost]]
                 assert ((raw & SAT_BIT) != 0).all()
 
-    def test_sharded_saturation_matches_dense(self, spark):
-        """A broadcast cap that forces the sharded saturation path must
-        yield a byte-identical sketch (same owners, same SAT bits) — the
-        executor-memory escape hatch for the build's last full-array
-        broadcast."""
-        text = " ".join(f"t{i}" for i in range(100))
-        df = spark.createDataFrame(
-            [("a1", text, "a"), ("b1", text, "b")],
-            "doc_id string, text string, lang string",
-        )
-        dense = build_mibf(spark, df, key_col="lang", occupancy=0.5)
-        assert dense.saturation_rate() > 0.05  # the pass has real work
-        cap = dense.ids.nbytes // 3  # forces >= 3 segments
-        sharded = build_mibf(
-            spark, df, key_col="lang", occupancy=0.5, max_broadcast_bytes=cap
-        )
-        assert dense.serialize() == sharded.serialize()
+    def test_build_raises_no_user_warning(self, spark):
+        """Grouped applyInPandas kernels carry no partial type hints, which
+        Spark would warn about on every build."""
+        import warnings
+
+        df, _kw = _saturation_corpus(spark, None, "identical")
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            sk = build_mibf(spark, df, key_col="lang", occupancy=0.5)
+        assert sk.saturation_rate() > 0  # the saturation scan ran too
 
     def test_serde_roundtrip(self, mibf):
         back = MIBFSketch.deserialize(
@@ -531,7 +541,6 @@ class TestHashFamilies:
         _, df = dna_corpus
         sk = build_mibf(
             spark, df, key_col="lang", shingle_w=self.K, hash_family="nthash",
-            max_broadcast_bytes=30_000,  # forces a multi-segment saturation pass
         )
         key = lambda r: (
             r["assigned"], tuple(r["hits"]), r["n_frames"],
@@ -587,7 +596,7 @@ class TestStore:
         assert store.saturation_rate() == pytest.approx(mibf.saturation_rate())
 
     def test_store_build_with_saturation_matches(self, spark, tmp_path):
-        """Same degenerate corpus as the sharded-saturation test: the
+        """Same degenerate corpus as the saturation reference test: the
         store's cogrouped SAT update must set the same bits."""
         from biobloom_spark.operators.mibf_store import build_mibf_store
 
@@ -682,10 +691,8 @@ class TestStore:
             raise RuntimeError("killed mid-build")
 
         # run 1: dies between resolution and saturation — resolved is
-        # checkpointed, segments/meta are not (both saturation routes are
-        # killed: the round-6 lost-pair fast path and the sharded rescan)
-        monkeypatch.setattr(ms, "_sharded_lost_slots", boom)
-        monkeypatch.setattr(ms, "_lost_slots_from_pairs", boom)
+        # checkpointed, segments/meta are not
+        monkeypatch.setattr(ms, "_lost_slot_scan", boom)
         with pytest.raises(RuntimeError, match="killed"):
             ms.build_mibf_store(spark, labeled_corpus, path, **kw)
         monkeypatch.undo()
@@ -714,6 +721,44 @@ class TestStore:
             resume=True, snapshot_id="snap-b",
         )
         assert store2.to_sketch(spark).serialize() == reference.serialize()
+
+    def test_store_old_fingerprint_rebuilds(
+        self, spark, labeled_corpus, mibf, tmp_path, monkeypatch
+    ):
+        """A snapshot fingerprinted by the formula used before resolved/
+        checkpoints carried the lost-pair column is discarded: the
+        resolution stage reruns instead of resuming from that checkpoint."""
+        import hashlib
+
+        import biobloom_spark.operators.mibf_store as ms
+
+        path = str(tmp_path / "oldfp")
+        kw = dict(
+            key_col="lang", occupancy=0.5, min_segments=4, segment_bytes=1,
+            resume=True, snapshot_id="snap-old",
+        )
+        old_params = repr((
+            "lang", "text", 3, 3, 0.5, None, None, 1, 4, False, "poly",
+        ))
+        old_fp = hashlib.md5(("snap-old|" + old_params).encode()).hexdigest()
+        spark.createDataFrame([(old_fp,)], "fp string").write.parquet(
+            f"{path}/snapshot"
+        )
+        # a committed resolved/ stage without the lost column
+        spark.createDataFrame([(0, b"")], "seg int, ids binary").write.parquet(
+            f"{path}/resolved"
+        )
+        calls = []
+        real = ms._resolved_segments
+
+        def spy(*a, **k):
+            calls.append(1)
+            return real(*a, **k)
+
+        monkeypatch.setattr(ms, "_resolved_segments", spy)
+        store = ms.build_mibf_store(spark, labeled_corpus, path, **kw)
+        assert calls == [1]
+        assert store.to_sketch(spark).serialize() == mibf.serialize()
 
 
 class TestClaimsWireFormat:
@@ -834,21 +879,71 @@ class TestLostPairSaturation:
         assert np.array_equal(d.slots, c.slots)
         assert np.array_equal(d.ties, c.ties)
 
-    def test_lost_pair_saturation_matches_sharded(self, spark):
-        """Shared-vocabulary corpus (every slot contested): the lost-pair
-        saturation path (default guard) must produce a byte-identical
-        sketch to the sharded full-array saturation path (forced via
-        ``max_broadcast_bytes=1``, which also rules the lost-pair
-        broadcast out)."""
+    @pytest.mark.parametrize("budget", [None, 1, "ids_third", "lost_two_thirds"])
+    @pytest.mark.parametrize("corpus", ["identical", "shared", "nthash"])
+    def test_lost_slot_scan_matches_local_reference(
+        self, spark, request, monkeypatch, corpus, budget
+    ):
+        """Every saturation route is byte-identical to a local numpy
+        reference: ownership from ``MIBFSketch.from_claims`` and saturation
+        from ``lost_elements`` per label.  The budgets force one label group
+        (default cap), one group per label (1 byte), a third of the id
+        array, and two thirds of the lost sets' total (groups of one and of
+        two labels side by side); the scan's plan has one MapInPandas leg
+        per label group."""
+        from biobloom_spark.functions.text import batch_frames
         from biobloom_spark.operators import mibf as M
 
-        text = " ".join(f"s{i % 37}x{i % 11}" for i in range(150))
-        rows = [(f"d{li}{j}", text + f" tail{li}", f"L{li}")
-                for li in range(3) for j in range(2)]
-        df = spark.createDataFrame(rows, "doc_id string, text string, lang string")
-        sk_fast = M.build_mibf(spark, df, key_col="lang", occupancy=0.5)
-        sk_sharded = M.build_mibf(
-            spark, df, key_col="lang", occupancy=0.5, max_broadcast_bytes=1,
+        df, kw = _saturation_corpus(spark, request, corpus)
+        w, family = kw.get("shingle_w", 3), kw.get("hash_family", "poly")
+        rows = df.select("lang", "text").collect()
+        labels = sorted({r["lang"] for r in rows})
+        pos_by: dict[int, np.ndarray] = {}
+        for li, lab in enumerate(labels, start=1):
+            texts = np.array([r["text"] for r in rows if r["lang"] == lab])
+            pos_by[li] = batch_frames(texts, w, {}, hash_family=family)[0]
+        n_frames = sum(f.size for f in pos_by.values())
+        m_slots = mibf_size_slots(n_frames, 3, 0.5)
+        probe = MIBFSketch(m_slots, 3, w, [], np.zeros(0, dtype=np.uint16),
+                           hash_family=family)
+        acc = MIBFClaims()
+        for li in pos_by:
+            pos_by[li] = probe.positions_for(pos_by[li])
+            acc = acc.merge(MIBFClaims.from_positions(pos_by[li], li))
+        ref = MIBFSketch.from_claims(acc, m_slots, 3, w, labels, hash_family=family)
+        lost_bytes = []
+        for li, pos in pos_by.items():
+            lost_bytes.append(
+                8 * int(((ref.ids[np.unique(pos)] & ID_MASK) != li).sum())
+            )
+            lost = ref.lost_elements(pos, li)
+            ref.apply_saturation(pos[:, lost].ravel())
+        assert ref.saturation_rate() > 0  # the scan has real work
+
+        cap = {
+            "ids_third": 2 * m_slots // 3,
+            "lost_two_thirds": 2 * sum(lost_bytes) // 3,
+        }.get(budget, budget)
+        # labels pack in index order; a group closes when the next set
+        # would take it past the budget
+        groups, used = 0, 0
+        limit = M._LOST_BROADCAST_CAP if cap is None else cap
+        for b in (x for x in lost_bytes if x):
+            if groups == 0 or used + b > limit:
+                groups, used = groups + 1, 0
+            used += b
+        scans = []
+        real = M._lost_slot_scan
+
+        def spy(*a, **k):
+            scans.append(real(*a, **k))
+            return scans[-1]
+
+        monkeypatch.setattr(M, "_lost_slot_scan", spy)
+        sk = M.build_mibf(
+            spark, df, key_col="lang", occupancy=0.5, expected_entries=n_frames,
+            max_broadcast_bytes=cap, **kw,
         )
-        assert sk_fast.serialize() == sk_sharded.serialize()
-        assert sk_fast.saturation_rate() > 0  # the corpus really contests
+        assert sk.serialize() == ref.serialize()
+        plan = scans[0]._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("MapInPandas") == groups

@@ -168,3 +168,39 @@ def test_incremental_equals_rebuild_from_scratch(spark, genome_reads):
     )
     scratch = load_registry(reg)[0]
     assert filters[0]["bitmap"] == scratch["bitmap"]
+
+
+def test_progressive_lineage_stays_flat(spark, genome_reads, monkeypatch):
+    """Each iteration's matched ids are checkpointed and the unmatched
+    reads are one anti-join against their union, so iteration 3 runs the
+    same Spark jobs as iteration 2 instead of re-evaluating every earlier
+    iteration's categorize plan.  Iteration 1 categorizes the reads as
+    given, without that anti-join."""
+    import biobloom_spark.operators.categorizer as cat
+
+    seeds, read_df = genome_reads
+    sc = spark.sparkContext
+    real = cat.categorize
+    iters = []
+
+    def tagged_categorize(*a, **k):
+        iters.append(f"progressive-lineage-{len(iters) + 1}")
+        sc.setJobGroup(iters[-1], iters[-1])
+        return real(*a, **k)
+
+    monkeypatch.setattr(cat, "categorize", tagged_categorize)
+    try:
+        progressive_build(
+            spark, seeds, read_df.select("doc_id", "text"), max_iterations=3,
+            params=BloomParams(),
+            build=BuildConfig(num_buckets=2, merge_groups=1),
+            scoring=ScoringConfig(method="simple", threshold=0.3),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    st = sc.statusTracker()
+    jobs = [st.getJobIdsForGroup(g) for g in iters]
+    assert len(iters) == 3
+    assert len(jobs[2]) == len(jobs[1])

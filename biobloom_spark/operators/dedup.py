@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sketch.hashing import splitmix64
-from .exact import shingle_frames
+from .exact import shingle_array_col, shingle_frames
 
 __all__ = [
     "exact_dedup",
@@ -153,44 +153,42 @@ def exact_jaccard_on_pairs(
     ``pairs`` carries (id_a, id_b) from any candidate generator
     (minhash_lsh_pairs(verify=False), simhash blocks, exact-hash groups).
     Cost is O(candidates), never all-pairs: the corpus is first
-    semi-joined down to the docs that appear in a candidate, only those
-    are shingled, intersections come from an equi-join on
-    (pair, shingle), and |A∪B| = |A|+|B|-|A∩B|.
+    semi-joined down to the docs that appear in a candidate, each of
+    those is shingled ONCE into a distinct-shingle array, the arrays
+    join the candidates on id_a and then on id_b, and
+    |A∩B| = size(array_intersect(A, B)), |A∪B| = |A|+|B|-|A∩B|.  No
+    shingle-row explode and no shingle-volume exchange: the only rows
+    that move are candidates and one array per candidate doc.
 
     Output (id_a, id_b, jaccard) is defined identically to
     ``ngram_jaccard_pairs`` — when the candidate generator's recall over
     ``threshold`` is total, the two are EQUAL, which is what makes an
     LSH/simhash pipeline oracle-checkable end to end (the gate queries
-    use high-recall banding for exactly that).
+    use high-recall banding for exactly that).  Each distinct candidate
+    row keeps the orientation it was given; a pair sharing no shingle
+    (which includes a null, short or absent doc) emits no row, as in the
+    shingle self-join, and never reaches the 0/0 division.
     """
-    # defensive dedup: a duplicated candidate row would double-count
-    # shingle intersections through the equi-join below
+    # a duplicated candidate row would otherwise emit its pair twice
     cand = pairs.select("id_a", "id_b").distinct()
     ids = (
         cand.select(F.col("id_a").alias(id_col))
         .union(cand.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    sub = docs.join(ids, on=id_col, how="left_semi").select(id_col, text_col)
-    sh = (
-        shingle_frames(sub, text_col, w)
-        .select(F.col(id_col).alias("id"), "shingle")
-        .distinct()
+    sub = docs.join(ids, on=id_col, how="left_semi")
+    sh = sub.select(
+        F.col(id_col).alias("id"),
+        F.array_distinct(shingle_array_col(text_col, w)).alias("sh"),
     )
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        cand.join(sh.select(F.col("id").alias("id_a"), "shingle"), on="id_a")
-        .join(sh.select(F.col("id").alias("id_b"), "shingle"), on=["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter = F.size(F.array_intersect("sa", "sb"))
+    union = F.size("sa") + F.size("sb") - F.col("inter")
     return (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), on="id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), on="id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6),
-        )
+        cand.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sa")), on="id_a")
+        .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sb")), on="id_b")
+        .withColumn("inter", inter)
+        .filter(F.col("inter") > 0)
+        .withColumn("jaccard", F.round(F.col("inter") / union, 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -270,29 +268,36 @@ def minhash_lsh_pairs(
     """MinHash + LSH near-duplicate pairs (the 100 TB dedup path).
 
     shingle → minhash(num_perm) → band into ``bands`` groups of r =
-    num_perm/bands rows → bucket-join on (band, band-hash) → candidate
-    pairs → (optionally) verify estimated Jaccard = matching-minhash
-    fraction >= threshold.  S-curve: P(candidate) = 1-(1-s^r)^b; defaults
-    (b=32, r=4) put the knee near s≈0.42 with recall >0.99 at s=0.8.
+    num_perm/bands rows → group ids by (band, band-hash) bucket →
+    candidate pairs → (optionally) verify estimated Jaccard =
+    matching-minhash fraction >= threshold.  S-curve: P(candidate) =
+    1-(1-s^r)^b; defaults (b=32, r=4) put the knee near s≈0.42 with
+    recall >0.99 at s=0.8.
 
     Never materializes cross products: candidates only from shared
     buckets; duplicate candidate pairs from multiple bands collapsed by
-    distinct before verification.
+    one dropDuplicates before verification.
 
-    Exchange economics (the 100 TB concern): the band join and the
-    candidate dedup move only (id, band, band-hash) / (id_a, id_b) rows —
-    the ~1 KB/doc signatures ride NEITHER (at 128 perms and 32 bands the
-    old shape shipped the signature 32x through the band join and twice
-    per candidate through the dedup).  Signatures re-join the deduped
-    candidate ids once per side for verification; the signature stage is
-    persisted so the three references compute the minhash pass once.
+    Exchange economics (the 100 TB concern): the minhash UDF runs once,
+    and its (band, band-hash, id) rows cross ONE exchange into the
+    bucket grouping; each bucket's id list then emits its id_a < id_b
+    pairs in-stream (two explodes), and only (id_a, id_b) rows cross the
+    candidate dedup.  A band self-join would shuffle both sides at
+    scale (a sort-merge join) — twice the band rows — and reference the
+    minhash pass once per side.  A bucket of k ids costs O(k) per row
+    for the filtered id list, the same bucket the join put in one task.
+    The ~1 KB/doc signatures ride neither exchange (at 128 perms and 32
+    bands shipping them through the banding would move each 32x).
+    ``verify=True`` re-joins the signatures to the deduped candidate ids
+    once per side; the signature stage is persisted so the three
+    references compute the minhash pass once.
     """
     if num_perm % bands:
         raise ValueError("num_perm must be divisible by bands")
     r = num_perm // bands
     sigs = minhash_signatures(docs, id_col, text_col, w, num_perm)
     if verify:
-        # three lazy references below (band join + two signature re-joins):
+        # three lazy references below (banding + two signature re-joins):
         # persist so the Arrow minhash pass runs once, spilling if needed.
         # Lifetime: the cache lives while the returned (lazy) DataFrame is
         # reachable — there is no point inside this function after which
@@ -311,12 +316,17 @@ def minhash_lsh_pairs(
     banded = sigs.select(F.col(id_col).alias("id"), band_idx).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
     )
-    lhs = banded.select("band", "bh", F.col("id").alias("id_a"))
-    rhs = banded.select("band", "bh", F.col("id").alias("id_b"))
+    buckets = (
+        banded.groupBy("band", "bh")
+        .agg(F.collect_list("id").alias("ids"))
+        .filter(F.size("ids") > 1)
+    )
     cand_ids = (
-        lhs.join(rhs, on=["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        buckets.select("ids", F.explode("ids").alias("id_a"))
+        .select(
+            "id_a",
+            F.explode(F.filter("ids", lambda y: y > F.col("id_a"))).alias("id_b"),
+        )
         .dropDuplicates(["id_a", "id_b"])
     )
     if not verify:
@@ -402,8 +412,6 @@ def simhash_signatures_sql(
     assembly — identical values, whole-stage codegen throughout, one
     map-side-combined exchange.
     """
-    from .exact import shingle_array_col
-
     sh_arr = shingle_array_col(text_col, w)
     d = docs.select(id_col, F.explode_outer(sh_arr).alias("__shingle"))
     # hex -> uint64 in two 32-bit halves (conv of 8 hex chars fits a signed
@@ -526,8 +534,8 @@ def embedding_near_dups(
     projections satisfy the same Johnson–Lindenstrauss/sign-sketch
     guarantees as Gaussian (Achlioptas 2003), so recall behaves alike.
 
-    Exchange economics (mirrors minhash_lsh_pairs): the bucket join and
-    the candidate dedup move only (id, tbl, bucket) / (id_a, id_b) rows —
+    Exchange economics: the bucket join and the candidate dedup move
+    only (id, tbl, bucket) / (id_a, id_b) rows —
     the d-float vectors ride NEITHER (the old shape shipped each vector L
     times through the table join and twice per candidate through the
     dedup); vectors re-join the deduped candidate ids once per side for

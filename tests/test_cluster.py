@@ -6,12 +6,15 @@ the gate queries oracle-checkable."""
 from __future__ import annotations
 
 import random
+from collections import defaultdict
 
+import numpy as np
 import pytest
 
 from biobloom_spark.corpus import generate_corpus_pandas
 from biobloom_spark.operators.cluster import connected_components, dedup_clusters
 from biobloom_spark.operators.dedup import (
+    _minhash_batch,
     exact_jaccard_on_pairs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -150,3 +153,90 @@ class TestTwoPhaseEquivalence:
         verified = exact_jaccard_on_pairs(dup_docs, cand, w=3, threshold=0.9)
         for r in verified.collect():
             assert r["jaccard"] >= 0.9
+
+    def test_verify_edge_cases_match_exact_twin(self, spark, dup_docs):
+        """A hand-made candidate set at threshold 0: every distinct row
+        comes back once, in the orientation given, with the exact twin's
+        Jaccard; pairs sharing no shingle (null text, fewer than w
+        tokens, no common window) or naming an absent id emit nothing,
+        and nothing raises under the session's ANSI default."""
+        extra = spark.createDataFrame(
+            [
+                (100, None),  # null text
+                (101, "too short"),  # fewer than w tokens
+                (103, "also short"),  # with 101: |A| = |B| = 0, no 0/0 division
+                (102, "qq1 qq2 qq3 qq4 qq5"),  # no window in common with anyone
+            ],
+            "doc_id long, text string",
+        )
+        docs = dup_docs.unionByName(extra)
+        rows = [
+            (0, 60), (0, 60),  # duplicated row
+            (1, 61), (61, 1),  # both orientations
+            (0, 1), (2, 3), (5, 4), (7, 30),
+            (100, 1), (1, 100), (101, 2), (100, 101), (101, 103),
+            (0, 102), (102, 3),
+            (0, 999), (999, 998),  # absent ids
+        ]
+        cand = spark.createDataFrame(rows, "id_a long, id_b long")
+        got = [
+            (r["id_a"], r["id_b"], r["jaccard"])
+            for r in exact_jaccard_on_pairs(docs, cand, w=3, threshold=0.0).collect()
+        ]
+        exact = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(docs, w=3, threshold=0.0).collect()
+        }
+        want = sorted(
+            (a, b, exact[(min(a, b), max(a, b))])
+            for a, b in set(rows)
+            if (min(a, b), max(a, b)) in exact
+        )
+        assert sorted(got) == want
+        keys = {(a, b) for a, b, _ in got}
+        assert {(0, 60), (1, 61), (61, 1)} <= keys
+        assert not keys & {(100, 1), (1, 100), (101, 2), (100, 101), (101, 103), (0, 102),
+                           (102, 3), (0, 999), (999, 998)}
+
+
+def _local_lsh_pairs(ids, texts, w, num_perm, bands):
+    """Brute-force LSH: band the local minhash signatures and pair every
+    two ids that share a band slice (a < b, one entry per pair)."""
+    sig = _minhash_batch(np.array(texts, dtype=object), w, num_perm, {})
+    r = num_perm // bands
+    pairs = set()
+    for b in range(bands):
+        buckets = defaultdict(list)
+        for i, row in zip(ids, sig[:, b * r : (b + 1) * r]):
+            buckets[row.tobytes()].append(i)
+        for members in buckets.values():
+            pairs.update((x, y) for x in members for y in members if x < y)
+    return pairs
+
+
+class TestBucketPairs:
+    @pytest.mark.parametrize("id_col", ["url", "doc_id"])
+    def test_lsh_pairs_equal_local_banding(self, spark, id_col):
+        """minhash_lsh_pairs(verify=False) == brute-force banding of
+        ``_minhash_batch`` signatures, on a corpus with one 30-id bucket
+        in every band, a near-dup pair and unrelated docs; string ids
+        order lexically ("p10" < "p9"), long ids numerically."""
+        pdf = generate_corpus_pandas(40, seed=7, langs=("en", "de"), mean_tokens=60)
+        texts = [pdf["text"][0]] * 30 + list(pdf["text"][1:])
+        toks = texts[30].split()
+        toks[len(toks) // 2] = "MUTATED"
+        texts.append(" ".join(toks))
+        keys = [f"p{i}" for i in range(len(texts))] if id_col == "url" else list(range(len(texts)))
+        docs = spark.createDataFrame(
+            list(zip(keys, texts)),
+            f"{id_col} {'string' if id_col == 'url' else 'long'}, text string",
+        )
+        got = [
+            (r["id_a"], r["id_b"])
+            for r in minhash_lsh_pairs(docs, id_col=id_col, verify=False).collect()
+        ]
+        assert len(got) == len(set(got))
+        assert all(a < b for a, b in got)
+        want = _local_lsh_pairs(keys, texts, w=3, num_perm=128, bands=32)
+        assert set(got) == want
+        assert len(want) >= 30 * 29 // 2 + 1

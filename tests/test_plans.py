@@ -59,7 +59,9 @@ def test_categorize_scan_prunes_columns(spark, pq_corpus):
 
 
 def test_lsh_joins_are_not_cartesian(spark, pq_corpus):
-    """Candidate generation must stay bucket-join shaped."""
+    """Candidate generation must stay bucket shaped: ids grouped per
+    (band, band-hash) bucket and paired inside their bucket, never a
+    cross product; the verify re-joins are equi-joins on the ids."""
     pairs = minhash_lsh_pairs(pq_corpus, id_col="url", num_perm=32, bands=8)
     assert_no_cartesian(pairs, "minhash_lsh_pairs")
 
@@ -145,8 +147,8 @@ def test_key_distribution_no_global_window(spark, pq_corpus):
 
 def test_exact_verify_stage_not_cartesian(spark, pq_corpus):
     """The two-phase dedup verify (candidates → exact Jaccard) must stay
-    equi-join shaped: intersections from a (pair, shingle) join, never a
-    pairwise text comparison."""
+    equi-join shaped: each candidate doc's shingle array joins the
+    candidates on id_a and on id_b, never a pairwise text comparison."""
     from biobloom_spark.operators.dedup import exact_jaccard_on_pairs
 
     cand = minhash_lsh_pairs(pq_corpus, id_col="url", num_perm=32, bands=16,
@@ -154,6 +156,64 @@ def test_exact_verify_stage_not_cartesian(spark, pq_corpus):
     verified = exact_jaccard_on_pairs(pq_corpus, cand, id_col="url",
                                       text_col="text", threshold=0.5)
     assert_no_cartesian(verified, "exact_jaccard_on_pairs")
+
+
+@pytest.fixture(scope="module")
+def pq_dup_corpus(spark, pq_corpus, tmp_path_factory):
+    """pq_corpus plus 20 re-keyed copies, so LSH finds candidates and AQE
+    cannot collapse the executed plan to an empty relation."""
+    import pyspark.sql.functions as F
+
+    path = str(tmp_path_factory.mktemp("plans_dups") / "corpus")
+    dups = pq_corpus.orderBy("url").limit(20).withColumn("url", F.concat("url", F.lit("#dup")))
+    pq_corpus.unionByName(dups).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _final_plan(df) -> tuple[list, str]:
+    """Collect ``df`` and return (rows, the final AQE physical plan)."""
+    rows = df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    return rows, plan.split("== Initial Plan ==")[0]
+
+
+def _generates(plan: str) -> list[str]:
+    return [ln for ln in plan.splitlines() if "Generate " in ln]
+
+
+def test_lsh_pairs_run_minhash_once(spark, pq_dup_corpus):
+    """minhash_lsh_pairs(verify=False) groups band rows into buckets: the
+    executed plan runs the minhash UDF once and holds no join (a band
+    self-join would reference the minhash pass once per side)."""
+    import re
+
+    pairs = minhash_lsh_pairs(pq_dup_corpus, id_col="url", num_perm=32, bands=8,
+                              verify=False)
+    rows, plan = _final_plan(pairs)
+    assert rows
+    assert plan.count("MapInPandas") == 1, plan
+    assert not re.search(r"Join|CartesianProduct", plan), plan
+
+
+def test_exact_verify_adds_no_shingle_generate(spark, pq_dup_corpus):
+    """exact_jaccard_on_pairs intersects one shingle array per candidate
+    doc: the executed chain runs the minhash UDF once, and its only
+    Generate nodes are candidate generation's (band explode + the two
+    bucket explodes) — no shingle-row explode and so no shingle-volume
+    exchange."""
+    from biobloom_spark.operators.dedup import exact_jaccard_on_pairs
+
+    cand = minhash_lsh_pairs(pq_dup_corpus, id_col="url", num_perm=32, bands=8,
+                             verify=False)
+    _, lsh_plan = _final_plan(cand)
+    verified = exact_jaccard_on_pairs(pq_dup_corpus, cand, id_col="url")
+    rows, plan = _final_plan(verified)
+    assert rows
+    assert plan.count("MapInPandas") == 1, plan
+    gens = _generates(plan)
+    assert len(gens) == len(_generates(lsh_plan)) == 3, plan
+    assert not any("regexp_extract_all" in g for g in gens), plan
 
 
 def test_connected_components_rounds_are_bucket_joins(spark):

@@ -145,7 +145,7 @@ def q_bloom_categorize_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior (FPR bounds, multiMatch, thresholds) is pytest-verified in
     tests/test_e2e_spark.py instead.
     """
-    from biobloom_spark.config import BloomParams, BuildConfig
+    from biobloom_spark.config import BloomParams
     from biobloom_spark.operators import build_filters, categorize, load_registry, summarize
     from biobloom_spark.sources.tables import tokens_col
 
@@ -158,7 +158,6 @@ def q_bloom_categorize_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     reg = build_filters(
         spark, d, key_col="lang", text_col="text", id_col="doc_id",
         params=BloomParams(fpr=1e-6, shingle_w=SHINGLE_W),
-        build=BuildConfig(num_buckets=8, merge_groups=4),
     )
     filters = load_registry(reg)
     res = categorize(spark, d, filters, id_col="doc_id")

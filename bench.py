@@ -38,7 +38,6 @@ def _calibration() -> dict:
 
 
 def main() -> None:
-    from biobloom_spark.config import BuildConfig
     from biobloom_spark.operators import (
         build_filters,
         categorize,
@@ -85,7 +84,6 @@ def main() -> None:
     warm_docs.count()
     warm_reg = build_filters(
         spark, warm_docs, key_col="lang", text_col="text", id_col="doc_id",
-        build=BuildConfig(num_buckets=4, merge_groups=2),
     )
     warm_filters = load_registry(warm_reg)
     summarize(
@@ -100,12 +98,10 @@ def main() -> None:
         "bloom_build",
         lambda: build_filters(
             spark, docs, key_col="lang", text_col="text", id_col="doc_id",
-            build=BuildConfig(num_buckets=max(CPUS, 8), merge_groups=8),
         ).write.format("noop").mode("overwrite").save(),
     )
     reg = build_filters(
         spark, docs, key_col="lang", text_col="text", id_col="doc_id",
-        build=BuildConfig(num_buckets=max(CPUS, 8), merge_groups=8),
     )
     filters = load_registry(reg)
 

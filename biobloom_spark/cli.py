@@ -180,7 +180,7 @@ def _cmd_maker(argv: list[str]) -> int:
 
     from pyspark.sql import functions as F
 
-    from .config import BloomParams, BuildConfig, ScoringConfig
+    from .config import BloomParams, ScoringConfig
     from .operators.maker import build_filters, load_registry
     from .operators.progressive import progressive_build
     from .sources.bf_format import registry_row_to_bf

@@ -106,43 +106,30 @@ class CategorizerConfig:
 
 @dataclass(frozen=True)
 class BuildConfig:
-    """Distributed build layout knobs (scale path)."""
+    """Distributed Bloom build layout knobs (``build_filters``).
 
-    #: partial-build strategy: "partition" = zero-shuffle, every task builds
-    #: all keys' partials over its own documents (memory/task = sum of all
-    #: bitmaps); "bucketed" = salted shuffle to (key, bucket) groups (one
-    #: bitmap per task, for huge/high-cardinality filter sets);
-    #: "auto" picks by total bitmap size
-    strategy: str = "auto"
-    #: auto-strategy threshold: total bits across filters a single task may
-    #: hold (4 GiB of bitmaps)
-    partition_strategy_max_bits: int = 1 << 35
-    #: shuffle buckets per filter key (bucketed strategy) — sized so a
-    #: bucket's shingles fit executor memory at target SF
-    num_buckets: int = 32
-    #: two-level merge fan-in (bucket partials → g groups → final)
-    merge_groups: int = 8
-    #: segmented merge width (partition strategy, 64-bit blocked layout):
-    #: each filter's bitmap is built as S independent hash-prefix slices in
-    #: parallel — merge parallelism is filters x S instead of filters.
-    #: Power of two.  Raise at larger cluster/filter scale.
+    The build has one shape: a zero-shuffle partial pass (every task emits
+    its own documents' unique frame hashes per filter key, split into
+    hash-prefix slices), one reducer per (filter, slice), then a
+    per-filter assembly.  The corpus is read once and never shuffled."""
+
+    #: segmented merge width (64-bit blocked layout): each filter's bitmap
+    #: is built as S independent hash-prefix slices in parallel — merge
+    #: parallelism is filters x S instead of filters.  Power of two.  Raise
+    #: at larger cluster/filter scale.
     merge_segments: int = 16
-    #: coalesce the input to this many partitions before the partial pass
-    #: (partition strategy only).  The partials exchange ships one
-    #: unique-hash set per map task, and zipfian web corpora overlap
-    #: heavily across tasks — so its volume is ~proportional to the map
-    #: task count, not the data size.  Fewer, bigger map tasks cut the
-    #: merge shuffle (the build's one non-scaling resource at fixed
-    #: hardware, BENCH.md round-4); bound it by memory — each task holds
-    #: its partition's unique hashes at ~8 B each.  ``coalesce`` (no
-    #: shuffle) only ever reduces the partition count; resume partition
-    #: ids stay deterministic for a fixed value.  None = leave input as-is.
+    #: coalesce the input to this many partitions before the partial pass.
+    #: The partials exchange ships one unique-hash set per map task, and
+    #: zipfian web corpora overlap heavily across tasks — so its volume is
+    #: ~proportional to the map task count, not the data size.  Fewer,
+    #: bigger map tasks cut the merge shuffle (the build's one non-scaling
+    #: resource at fixed hardware, BENCH.md round-4); bound it by memory —
+    #: each task holds its partition's unique hashes at ~8 B each.
+    #: ``coalesce`` (no shuffle) only ever reduces the partition count;
+    #: resume partition ids stay deterministic for a fixed value.  None =
+    #: leave input as-is.
     coalesce_input: int | None = None
-    #: write per-bucket lineage rows for resume
-    checkpoint: bool = True
 
     def __post_init__(self) -> None:
-        if self.strategy not in ("auto", "partition", "bucketed"):
-            raise ValueError(f"unknown build strategy {self.strategy!r}")
         if self.merge_segments < 1 or self.merge_segments & (self.merge_segments - 1):
             raise ValueError("merge_segments must be a power of two")

@@ -6,7 +6,7 @@ pre-pass, then insert every k-mer of every reference sequence, then store
 bitmap + metadata.  Single machine, OpenMP threads over a serialized
 reader.
 
-Spark lifecycle here (partition strategy, the default):
+Spark lifecycle here:
 
 1. **Sparse partial pass** — ONE zero-shuffle ``mapInPandas`` over the
    corpus: each task shingles its own documents and emits, per filter key,
@@ -26,12 +26,8 @@ Spark lifecycle here (partition strategy, the default):
    BloomFilterInfo.cpp:81-116); per-partition lineage rows make a killed
    job resume from completed partitions (SURVEY.md §7.3).
 
-The bucketed strategy (huge/high-cardinality filter sets) keeps the
-salted-shuffle shape: docs shuffle once to (key, bucket) groups, dense
-partials two-level-merge per key.
-
-At 100 TB: the corpus is read once and never shuffled (partition
-strategy); everything that moves is sketch-sized.
+At 100 TB: the corpus is read once and never shuffled; everything that
+moves is sketch-sized.
 """
 
 from __future__ import annotations
@@ -39,7 +35,6 @@ from __future__ import annotations
 import hashlib
 import os
 import uuid
-import zlib
 from typing import Iterable
 
 import numpy as np
@@ -57,12 +52,10 @@ from ..sketch import (
     TDigestSketch,
     approx_fpr,
     blocked_size_bits,
-    optimal_hash_num,
     optimal_size_bits,
     resolve_block_layout,
 )
 from ..sources.tables import (
-    LINEAGE_SCHEMA,
     PARTIAL_SCHEMA,
     REGISTRY_LAYOUT_VERSION,
     REGISTRY_SCHEMA,
@@ -137,47 +130,6 @@ def size_filters(
     return out
 
 
-def _estimate_total_bits(docs: DataFrame, params: BloomParams) -> int | None:
-    """Metadata-only total-bitmap-size estimate for the auto strategy pick
-    — the analog of the reference sizing filters from input *file sizes*
-    (-n / calcExpectedEntries over file length, BloomFilterGenerator.h:
-    108-141) rather than a corpus scan.  Returns None when the input has
-    no file listing (in-memory DataFrames) — callers treat that as small.
-
-    Σ_k m_k ≈ bits_per_entry × Σ_k n_k is key-count-independent, so one
-    aggregate estimate suffices: entries ≈ compressed bytes / ~3 (web text
-    in parquet+snappy runs ~3-6 bytes per token; underestimating
-    bytes/token overestimates entries, which only flips to the bucketed
-    strategy early — the safe direction).
-    """
-    try:
-        files = docs.inputFiles()
-    except Exception:  # pragma: no cover - exotic sources
-        return None
-    if not files:
-        return None
-    total = 0
-    for uri in files:
-        path = uri[5:] if uri.startswith("file:") else uri
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    entries = max(1, total // 3)
-    h, bb = resolve_block_layout(params.fpr, params.num_hashes, params.block_bits)
-    if bb:
-        return blocked_size_bits(entries, params.fpr, h, bb)
-    return optimal_size_bits(entries, params.fpr, h)
-
-
-def _pack_dense(raw: bytes) -> bytes:
-    """Dense bitmap payload: zlib only when it actually pays (low-occupancy
-    bitmaps shrink 10-50x; half-full ones barely shrink and the deflate
-    pass costs more than the shuffle bytes it saves)."""
-    z = zlib.compress(raw, 1)
-    return b"D" + z if len(z) < (len(raw) * 3) // 4 else b"E" + raw
-
-
 def _snapshot_path(partials_path: str) -> str:
     return partials_path.rstrip("/") + "_snapshot"
 
@@ -195,71 +147,6 @@ def _write_snapshot(partials_path: str, fp: str) -> None:
         f.write(fp)
 
 
-def _build_partial_fn(sizing: dict, params: BloomParams, text_col: str, key_col: str,
-                      subtract_bits: bytes | None, subtract_meta: tuple | None):
-    """applyInPandas kernel: one (filter_id, bucket) group → one partial row.
-
-    Insert loop parity: every frame of every doc inserted, redundancy
-    tracked via insertAndCheck semantics (BloomFilterGenerator.h:143-188);
-    optional subtract-filter veto skips frames present in the subtract
-    sketch (loadFilterSubtract, BloomFilterGenerator.h:217-285).
-    """
-    w = params.shingle_w
-
-    def fn(key, pdf):
-        filter_id, bucket = str(key[0]), int(key[1])
-        meta = sizing[filter_id]
-        bloom = BloomSketch(
-            m_bits=meta["m_bits"], num_hashes=meta["num_hashes"],
-            block_bits=meta.get("block_bits", params.block_bits),
-            **_family_kwargs(params),
-        )
-        hll = HLLSketch(p=_HLL_P)
-        cms = CountMinSketch(width=_CMS_W, depth=_CMS_D)
-        td = TDigestSketch()
-        kll = KLLSketch()
-        sub = None
-        if subtract_bits is not None:
-            sm, sh_, sb, sseg = subtract_meta
-            sub = BloomSketch.deserialize(
-                subtract_bits, sm, sh_, block_bits=sb, seg_offsets=sseg,
-                **_family_kwargs(params),
-            )
-        frames, _offs, tok_hashes, tok_counts = batch_frames(
-            pdf[text_col].to_numpy(), w, canonical=params.canonical,
-            hash_family=params.hash_family,
-        )
-        if sub is not None and frames.size:
-            frames = frames[~sub.contains_batch(frames)]
-        bloom.update_batch(frames)
-        hll.update_batch(frames)
-        cms.update_batch(tok_hashes)
-        lengths = tok_counts.astype(np.float64)
-        td.update_batch(lengths)
-        kll.update_batch(lengths)
-        return pd.DataFrame(
-            {
-                "filter_id": [filter_id],
-                "bucket": [bucket],
-                "seg": [-1],
-                "n_docs": [len(pdf)],
-                "n_inserted": [bloom.n_inserted],
-                "n_new": [bloom.n_new],
-                "n_redundant": [bloom.n_redundant],
-                # partials are ~1%-occupancy bitmaps: zlib-1 shrinks the
-                # shuffle/merge bytes 10-50x (the dominant build cost at
-                # large m); the final registry bitmap stays raw
-                "bitmap": [b"D" + zlib.compress(bloom.serialize(), 1)],
-                "hll": [hll.serialize()],
-                "cms": [cms.serialize()],
-                "tdigest": [td.serialize()],
-                "kll": [kll.serialize()],
-            }
-        )[[f.name for f in PARTIAL_SCHEMA.fields]]
-
-    return fn
-
-
 _PARTIAL_COLS = [
     "filter_id", "bucket", "seg", "n_docs", "n_inserted", "n_new",
     "n_redundant", "bitmap", "hll", "cms", "tdigest", "kll",
@@ -275,7 +162,7 @@ def _family_kwargs(params: BloomParams) -> dict:
 
 
 def _seg_layout(params: BloomParams, build: BuildConfig) -> tuple[int, int, int]:
-    """(num_hashes, block_bits, S) for the partition-strategy build.
+    """(num_hashes, block_bits, S) for the build.
     Hash-prefix segmentation requires the single-word layout (an item's
     whole footprint lives in the word picked by its hash); other layouts
     run with S=1 (one slice = the whole bitmap)."""
@@ -360,7 +247,7 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
     """mapInPandas kernel: one *input partition* → S sparse slice rows +
     one companion row per key.
 
-    The zero-shuffle build strategy: every task accumulates state for
+    The zero-shuffle build: every task accumulates state for
     every filter key over the documents it already holds (like the
     categorizer holds every filter bitmap, and like the reference's
     threads all inserting into shared filters,
@@ -369,10 +256,10 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
 
     Emitted per key:
     - S slice rows (``seg`` 0..S-1): the partition's *unique frame hashes*
-      whose top log2(S) bits equal ``seg`` (raw, tag ``b"R"`` — uniform
-      64-bit hashes are incompressible; zlib measured 6% shrink for ~0.5 s
-      per task), plus that slice's pre-dedup frame count (its sizing
-      input).  No dense bitmap is ever allocated map-side — no
+      whose top log2(S) bits equal ``seg`` (delta-packed by
+      ``_pack_slice_hashes`` — uniform 64-bit hashes are incompressible to
+      zlib, measured 6% shrink for ~0.5 s per task), plus that slice's
+      pre-dedup frame count (its sizing input).  No dense bitmap is ever allocated map-side — no
       100s-of-MB page-fault/scatter storms (measured: dense-per-task made
       16 cores *slower* than 4).
     - one companion row (``seg`` -1): doc/frame counters + the HLL / CMS /
@@ -470,8 +357,7 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
     return fn
 
 
-def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None,
-                   out_schema):
+def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None):
     """applyInPandas kernel per (filter_id, seg) group.
 
     ``seg >= 0``: union the group's sorted hash blobs, size the slice from
@@ -617,123 +503,6 @@ def _assemble_fn(params: BloomParams, build: BuildConfig, pinned: dict | None):
     return fn
 
 
-def _merge_partials_fn(sizing: dict, out_schema, final: bool, params: BloomParams):
-    """applyInPandas kernel merging partial rows (OR bitmaps, max registers,
-    add counters, re-compress digests)."""
-
-    def fn(key, pdf):
-        filter_id = str(key[0])
-        meta = sizing[filter_id]
-        m, h = meta["m_bits"], meta["num_hashes"]
-        bb = meta.get("block_bits", params.block_bits)
-        bloom = None  # densify lazily: sparse unions never touch a bitmap
-        saw_dense = False
-        sparse_parts: list[np.ndarray] = []
-        hll = HLLSketch(p=_HLL_P)
-        cms = CountMinSketch(width=_CMS_W, depth=_CMS_D)
-        td = TDigestSketch()
-        kll = KLLSketch()
-        n_docs = n_ins = n_new = n_red = 0
-        for _, row in pdf.iterrows():
-            payload = bytes(row["bitmap"])
-            tag, body = payload[:1], payload[1:]
-            if tag == b"R":
-                sparse_parts.append(np.frombuffer(body, dtype=np.uint64))
-            elif tag == b"H":
-                sparse_parts.append(
-                    np.frombuffer(zlib.decompress(body), dtype=np.uint64)
-                )
-            elif tag in (b"D", b"E"):
-                saw_dense = True
-                if bloom is None:
-                    bloom = BloomSketch(m_bits=m, num_hashes=h, block_bits=bb,
-                                        **_family_kwargs(params))
-                raw = zlib.decompress(body) if tag == b"D" else body
-                bloom.bits |= np.frombuffer(raw, dtype=np.uint8)
-            else:  # pragma: no cover - unknown tag
-                raise ValueError(f"unknown partial bitmap tag {tag!r}")
-            n_new += int(row["n_new"])
-            n_red += int(row["n_redundant"])
-            if row["hll"] is not None:
-                hll = hll.merge(HLLSketch.deserialize(bytes(row["hll"]), p=_HLL_P))
-            if row["cms"] is not None:
-                cms = cms.merge(CountMinSketch.deserialize(bytes(row["cms"]), _CMS_W, _CMS_D))
-            if row["tdigest"] is not None:
-                td = td.merge(TDigestSketch.deserialize(bytes(row["tdigest"])))
-            if row["kll"] is not None:
-                kll = kll.merge(KLLSketch.deserialize(bytes(row["kll"])))
-            n_docs += int(row["n_docs"])
-            n_ins += int(row["n_inserted"])
-        uniq = (
-            np.unique(np.concatenate(sparse_parts))
-            if sparse_parts
-            else np.empty(0, dtype=np.uint64)
-        )
-        if not final and bloom is None and uniq.nbytes < m // 8:
-            # pure-sparse union stays sparse: level-1 merges are then just
-            # sorted-set unions; the single densify happens at the final
-            # merge — one scatter pass per filter total
-            payload = b"R" + uniq.tobytes()
-            n_new_out, n_red_out = int(uniq.size), n_ins - int(uniq.size)
-        else:
-            if bloom is None:
-                bloom = BloomSketch(m_bits=m, num_hashes=h, block_bits=bb,
-                                    **_family_kwargs(params))
-            if uniq.size:
-                bloom.update_batch(uniq, assume_unique=True)
-            payload = (
-                _pack_dense(bloom.serialize()) if not final else bloom.serialize()
-            )
-            n_new_out, n_red_out = n_new, n_red
-        common = {
-            "filter_id": [filter_id],
-            "n_docs": [n_docs],
-            "n_inserted": [n_ins],
-            "bitmap": [payload],
-            "hll": [hll.serialize()],
-            "cms": [cms.serialize()],
-            "tdigest": [td.serialize()],
-            "kll": [kll.serialize()],
-        }
-        if not final:
-            return pd.DataFrame(
-                {
-                    **common,
-                    "bucket": [int(key[1])],
-                    "seg": [-1],
-                    "n_new": [n_new_out],
-                    "n_redundant": [n_red_out],
-                }
-            )[[f.name for f in PARTIAL_SCHEMA.fields]]
-        # pure-sparse lineage → num_entries is the EXACT distinct count
-        # (improves on the reference's scan-order counter, SURVEY §7.4);
-        # any dense partial in the ancestry degrades it to the documented
-        # additive overcount
-        num_entries = int(uniq.size) if (sparse_parts and not saw_dense) else n_new
-        return pd.DataFrame(
-            {
-                **common,
-                "layout_version": [REGISTRY_LAYOUT_VERSION],
-                "m_bits": [m],
-                "num_hashes": [h],
-                "block_bits": [bb],
-                "shingle_w": [params.shingle_w],
-                "canonical": [params.canonical],
-                "hash_family": [params.hash_family],
-                "target_fpr": [params.fpr],
-                "expected_entries": [meta["expected_entries"]],
-                "num_entries": [num_entries],
-                "redundant_entries": [n_ins - num_entries],
-                "approx_fpr": [approx_fpr(m, num_entries, h)],
-                "occupancy_fpr": [bloom.fpr_from_occupancy()],
-                "distinct_frames_hll": [hll.estimate()],
-                "seg_offsets": [None],
-            }
-        )[[f.name for f in REGISTRY_SCHEMA.fields]]
-
-    return fn
-
-
 def build_filters(
     spark: SparkSession,
     docs: DataFrame,
@@ -753,10 +522,12 @@ def build_filters(
     """Build one Bloom filter (+ companion sketches) per value of key_col.
 
     Returns the registry DataFrame (one row per filter).  When
-    ``partials_path`` is set, per-bucket partials are checkpointed there and
-    a re-invocation resumes, recomputing only missing (filter, bucket)
-    groups — the north rule's mid-build resumability.
+    ``partials_path`` is set, per-partition partials are checkpointed there
+    and a re-invocation over the same input resumes, recomputing only the
+    missing input partitions — the north rule's mid-build resumability.
     ``subtract`` = (bitmap_bytes, m_bits, num_hashes[, block_bits]) veto filter.
+    ``id_col`` is accepted for call-site compatibility; the build does not
+    read it (documents are never keyed or shuffled by id).
     """
     from ..session import ensure_workers
 
@@ -788,36 +559,6 @@ def build_filters(
         else (None, None)
     )
 
-    # --- stage 2: partial build ------------------------------------------
-    # Strategy pick (BuildConfig.strategy):
-    #  * "partition" (zero-shuffle, default): every task accumulates sparse
-    #    hash partials for every key over the documents it already holds —
-    #    corpus never moves, no skew concern, no sizing pre-scan (slices
-    #    self-size at reduce time from exact counts).
-    #  * "bucketed" (salted shuffle): high-cardinality/huge filter sets —
-    #    docs shuffle to (key, salt-bucket) groups so each task holds ONE
-    #    bitmap; salting defuses zipf-skewed keys.  Needs the sizing
-    #    pre-pass (dense partials require m upfront).
-    # "auto" picks by estimated total bitmap size: from the pinned sizing
-    # when given, else a metadata-only file-size estimate (the reference's
-    # own -n/file-size sizing estimate, BloomFilterGenerator.h:108-141 /
-    # Options -n) — never a corpus scan.
-    strategy = build.strategy
-    if strategy == "auto":
-        if pinned is not None:
-            total_bits = sum(meta["m_bits"] for meta in pinned.values())
-        else:
-            total_bits = _estimate_total_bits(docs, params)
-        strategy = (
-            "partition"
-            if total_bits is None or total_bits <= build.partition_strategy_max_bits
-            else "bucketed"
-        )
-    if strategy == "bucketed":
-        sizing = pinned or size_filters(docs, key_col, text_col, params)
-        if not sizing:
-            return spark.createDataFrame([], REGISTRY_SCHEMA)
-
     # resume is only safe against the SAME input snapshot: partition ids /
     # doc membership shift when the file listing changes, silently dropping
     # or double-counting data.  Fingerprint the scan's file listing; on
@@ -830,20 +571,20 @@ def build_filters(
     # different coalesce_input (different partition ids), key/text column,
     # sizing, subtract filter, or hash family against same-listing partials
     # would silently drop or mis-hash data (build_mibf_store fingerprints
-    # its params for the same reason).
-    snap = snapshot_id or ";".join(sorted(docs.inputFiles()))
-    param_fp = repr((
-        key_col, text_col, params, build,
-        sorted(keys) if keys is not None else None,
-        sorted(expected_sizing.items()) if expected_sizing else None,
-        (hashlib.md5(sub_bits).hexdigest(), sub_meta) if sub_bits is not None else None,
-    ))
-    snap_fp = (
-        hashlib.md5((snap + "|" + param_fp).encode()).hexdigest() if snap else None
-    )
-    resume = False
-    if partials_path and os.path.exists(partials_path):
-        resume = snap_fp is not None and _read_snapshot(partials_path) == snap_fp
+    # its params for the same reason).  Only a checkpointed build reads it.
+    resume, snap_fp = False, None
+    if partials_path:
+        snap = snapshot_id or ";".join(sorted(docs.inputFiles()))
+        param_fp = repr((
+            key_col, text_col, params, build,
+            sorted(keys) if keys is not None else None,
+            sorted(expected_sizing.items()) if expected_sizing else None,
+            (hashlib.md5(sub_bits).hexdigest(), sub_meta) if sub_bits is not None else None,
+        ))
+        if snap:
+            snap_fp = hashlib.md5((snap + "|" + param_fp).encode()).hexdigest()
+        if snap_fp is not None and os.path.exists(partials_path):
+            resume = _read_snapshot(partials_path) == snap_fp
         if resume:
             # a checkpoint from an older engine version (pre-segmentation
             # schema) is stale state, not resumable state — rebuild
@@ -853,49 +594,32 @@ def build_filters(
                 have_cols = set()
             resume = {f.name for f in PARTIAL_SCHEMA.fields} <= have_cols
 
-    if strategy == "partition":
-        base = docs.select(
-            F.col(key_col).cast("string").alias("filter_id"),
-            F.col(text_col).alias(text_col),
+    # --- stage 1: sparse partials, zero shuffle ---------------------------
+    # every task accumulates sparse hash partials for every key over the
+    # documents it already holds — the corpus never moves, no sizing
+    # pre-scan (slices self-size at reduce time from exact counts)
+    base = docs.select(
+        F.col(key_col).cast("string").alias("filter_id"),
+        F.col(text_col).alias(text_col),
+    )
+    if build.coalesce_input:
+        base = base.coalesce(build.coalesce_input)
+    done_buckets: frozenset = frozenset()
+    if resume:
+        done_buckets = frozenset(
+            int(r["bucket"])
+            for r in spark.read.parquet(partials_path).select("bucket").distinct().collect()
         )
-        if build.coalesce_input:
-            base = base.coalesce(build.coalesce_input)
-        done_buckets: frozenset = frozenset()
-        if resume:
-            done_buckets = frozenset(
-                int(r["bucket"])
-                for r in spark.read.parquet(partials_path).select("bucket").distinct().collect()
-            )
-        # same snapshot → same listing → deterministic partition ids;
-        # recompute only missing partitions.  The skip lives inside the
-        # Arrow kernel (TaskContext) so a resumed build keeps the
-        # vectorized scan — the old rdd.mapPartitionsWithIndex filter
-        # pickled every surviving row through a Python RDD round-trip.
-        part_fn = _build_partition_fn(
-            params, build, text_col, "filter_id", sub_bits, sub_meta,
-            skip_buckets=done_buckets or None,
-        )
-        new_partials = base.mapInPandas(part_fn, schema=PARTIAL_SCHEMA)
-    else:
-        bucketed = docs.select(
-            F.col(key_col).cast("string").alias("filter_id"),
-            F.col(text_col).alias(text_col),
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(build.num_buckets))
-            .cast("int")
-            .alias("bucket"),
-        )
-        todo = bucketed
-        if resume:
-            have_partials = spark.read.parquet(partials_path)
-            done_keys = have_partials.select("filter_id", "bucket").distinct()
-            todo = bucketed.join(done_keys, on=["filter_id", "bucket"], how="left_anti")
-
-        partial_fn = _build_partial_fn(sizing, params, text_col, "filter_id", sub_bits, sub_meta)
-        new_partials = (
-            todo.repartition(build.num_buckets, "filter_id", "bucket")
-            .groupBy("filter_id", "bucket")
-            .applyInPandas(partial_fn, schema=PARTIAL_SCHEMA)
-        )
+    # same snapshot → same listing → deterministic partition ids;
+    # recompute only missing partitions.  The skip lives inside the
+    # Arrow kernel (TaskContext) so a resumed build keeps the
+    # vectorized scan — the old rdd.mapPartitionsWithIndex filter
+    # pickled every surviving row through a Python RDD round-trip.
+    part_fn = _build_partition_fn(
+        params, build, text_col, "filter_id", sub_bits, sub_meta,
+        skip_buckets=done_buckets or None,
+    )
+    new_partials = base.mapInPandas(part_fn, schema=PARTIAL_SCHEMA)
 
     if partials_path:
         mode = "append" if resume else "overwrite"
@@ -918,36 +642,19 @@ def build_filters(
     else:
         partials = new_partials
 
-    # --- stage 3: merge ---------------------------------------------------
-    if strategy == "partition":
-        # segmented merge: one reducer per (filter, hash-prefix slice) —
-        # merge parallelism is filters x S, each task a small sorted-set
-        # union + one sequential slice scatter; the per-filter assembly is
-        # memcpy + stats.  The old shape (one reducer per filter doing a
-        # 10^7-hash sort + random scatter) was the build's non-scaling
-        # bottleneck (BENCH.md round-2 profile).
-        reduced = partials.groupBy("filter_id", "seg").applyInPandas(
-            _seg_reduce_fn(params, build, pinned, PARTIAL_SCHEMA), schema=PARTIAL_SCHEMA
-        )
-        registry = reduced.groupBy("filter_id").applyInPandas(
-            _assemble_fn(params, build, pinned), schema=REGISTRY_SCHEMA
-        )
-    else:
-        # bucketed: two-level merge.  Level 1 bounds the final fan-in (no
-        # single-reducer hotspot at large bucket counts); skipped when the
-        # partial count is already small.
-        g = max(1, build.merge_groups)
-        if partials_path is None and build.num_buckets <= max(32, 2 * g):
-            merge_in = partials
-        else:
-            merge_in = (
-                partials.withColumn("bucket", F.pmod(F.col("bucket"), F.lit(g)).cast("int"))
-                .groupBy("filter_id", "bucket")
-                .applyInPandas(_merge_partials_fn(sizing, PARTIAL_SCHEMA, False, params), schema=PARTIAL_SCHEMA)
-            )
-        registry = merge_in.groupBy("filter_id").applyInPandas(
-            _merge_partials_fn(sizing, REGISTRY_SCHEMA, True, params), schema=REGISTRY_SCHEMA
-        )
+    # --- stages 2-3: segmented merge, then per-filter assembly -------------
+    # one reducer per (filter, hash-prefix slice) — merge parallelism is
+    # filters x S, each task a small sorted-set union + one sequential
+    # slice scatter; the per-filter assembly is memcpy + stats.  The old
+    # shape (one reducer per filter doing a 10^7-hash sort + random
+    # scatter) was the build's non-scaling bottleneck (BENCH.md round-2
+    # profile).
+    reduced = partials.groupBy("filter_id", "seg").applyInPandas(
+        _seg_reduce_fn(params, build, pinned), schema=PARTIAL_SCHEMA
+    )
+    registry = reduced.groupBy("filter_id").applyInPandas(
+        _assemble_fn(params, build, pinned), schema=REGISTRY_SCHEMA
+    )
 
     if registry_path:
         registry.write.mode("overwrite").parquet(registry_path)

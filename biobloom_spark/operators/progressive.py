@@ -16,7 +16,7 @@ superset-per-iteration of any reference schedule, and converges to the
 same closure with enough iterations (SURVEY.md §7.4).
 
 Each iteration = one categorize (broadcast probe, zero shuffle) + one
-build over the matched subset (salted bucketed build) — both already
+build over the matched subset (zero-shuffle partial build) — both already
 scale-shaped; the driver loop only moves sketch-sized state.
 """
 

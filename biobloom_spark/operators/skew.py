@@ -3,8 +3,8 @@
 The north-star deployment keys reference filters by language/domain over
 zipfian web data, so the heavy keys are the scale hazard: a plain
 ``repartition(key)`` puts site0.example's 10^9 pages in one task.  The
-bucketed build already salts internally (maker.py "bucketed" strategy);
-this module exposes the same defense as reusable, composable operators:
+Bloom build never keys the corpus (maker.py partials are per input
+partition); this module exposes salting as reusable, composable operators:
 
 - ``key_distribution`` — exact per-key weight (one shuffle, map-side
   partial agg; share via a broadcast 1-row total, never a global window);

@@ -54,7 +54,7 @@ def assert_no_shuffle(df: DataFrame, what: str = "plan") -> None:
 
 def assert_max_shuffles(df: DataFrame, limit: int, what: str = "plan") -> None:
     """Fail if the plan shuffles more than ``limit`` times (e.g. the
-    bucketed build moves the corpus exactly once)."""
+    Bloom build shuffles only its two partial-row exchanges)."""
     n = _shuffle_count(df)
     if n > limit:
         raise AssertionError(

@@ -6,7 +6,7 @@ probability 1-delta for ``w = ceil(e/eps)``, ``d = ceil(ln(1/delta))``.
 
 Merge = elementwise add → associative and commutative (not idempotent, as
 per the algorithm; partials must partition the data, which the maker's
-bucketed build guarantees).
+per-input-partition build guarantees).
 """
 
 from __future__ import annotations

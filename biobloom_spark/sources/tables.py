@@ -81,6 +81,7 @@ REGISTRY_SCHEMA = T.StructType(
 PARTIAL_SCHEMA = T.StructType(
     [
         T.StructField("filter_id", T.StringType(), False),
+        # source input partition id: the unit a resumed build skips
         T.StructField("bucket", T.IntegerType(), False),
         # bitmap segment this row belongs to; -1 = companion row (counters
         # + HLL/CMS/t-digest/KLL, no bloom payload)
@@ -97,7 +98,7 @@ PARTIAL_SCHEMA = T.StructType(
     ]
 )
 
-#: per-bucket lineage/metrics row (north-rule resumability, SURVEY.md §7.3)
+#: per-(filter, input partition) lineage/metrics row (north-rule resumability, SURVEY.md §7.3)
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("job_id", T.StringType(), False),

@@ -48,7 +48,6 @@ def registry(spark, corpus):
         text_col="text",
         id_col="url",
         params=BloomParams(),
-        build=BuildConfig(num_buckets=8, merge_groups=4),
     )
     return load_registry(reg)
 
@@ -69,26 +68,10 @@ class TestMaker:
             # built filter must meet the configured FPR bound
             assert f["fpr"] <= f["target_fpr"] * 1.5
 
-    def test_bitmap_partition_invariance(self, spark, corpus):
-        """OR-merge associativity end-to-end: 1 bucket vs 8 buckets vs 3
-        merge-groups must produce byte-identical bitmaps."""
-        cfgs = [BuildConfig(num_buckets=1, merge_groups=1),
-                BuildConfig(num_buckets=8, merge_groups=3)]
-        maps = []
-        for b in cfgs:
-            reg = load_registry(
-                build_filters(spark, corpus, id_col="url", build=b, keys=["en", "de"])
-            )
-            maps.append({f["filter_id"]: f["bitmap"] for f in reg})
-        assert maps[0].keys() == maps[1].keys()
-        for k in maps[0]:
-            assert maps[0][k] == maps[1][k], f"bitmap differs for {k}"
-
     def test_resume_from_partials(self, spark, corpus, tmp_path):
         ppath = str(tmp_path / "partials")
         reg1 = build_filters(
-            spark, corpus, id_col="url", partials_path=ppath,
-            build=BuildConfig(num_buckets=4, merge_groups=2), keys=["en"],
+            spark, corpus, id_col="url", partials_path=ppath, keys=["en"],
             snapshot_id="corpus-v1",
         )
         bitmap1 = {r["filter_id"]: bytes(r["bitmap"]) for r in reg1.collect()}
@@ -100,8 +83,7 @@ class TestMaker:
         # reuses them (and the merged bitmap is unchanged)
         n_partials = spark.read.parquet(ppath).count()
         reg2 = build_filters(
-            spark, corpus, id_col="url", partials_path=ppath,
-            build=BuildConfig(num_buckets=4, merge_groups=2), keys=["en"],
+            spark, corpus, id_col="url", partials_path=ppath, keys=["en"],
             snapshot_id="corpus-v1",
         )
         bitmap2 = {r["filter_id"]: bytes(r["bitmap"]) for r in reg2.collect()}
@@ -114,19 +96,16 @@ class TestMaker:
         (which would drop/double-count data); the build starts fresh."""
         ppath = str(tmp_path / "partials")
         build_filters(
-            spark, corpus.limit(100), id_col="url", partials_path=ppath,
-            build=BuildConfig(num_buckets=4, merge_groups=2), keys=["en"],
+            spark, corpus.limit(100), id_col="url", partials_path=ppath, keys=["en"],
             snapshot_id="corpus-v1",
         )
         # different snapshot id → stale partials discarded, full rebuild
         reg = build_filters(
-            spark, corpus, id_col="url", partials_path=ppath,
-            build=BuildConfig(num_buckets=4, merge_groups=2), keys=["en"],
+            spark, corpus, id_col="url", partials_path=ppath, keys=["en"],
             snapshot_id="corpus-v2",
         )
         ref = build_filters(
-            spark, corpus, id_col="url",
-            build=BuildConfig(num_buckets=4, merge_groups=2), keys=["en"],
+            spark, corpus, id_col="url", keys=["en"],
         )
         got = {r["filter_id"]: bytes(r["bitmap"]) for r in reg.collect()}
         want = {r["filter_id"]: bytes(r["bitmap"]) for r in ref.collect()}
@@ -141,23 +120,39 @@ class TestMaker:
         # stale state: a (complete) build over the WRONG subset, same
         # snapshot id — only the param change can force the rebuild
         build_filters(
-            spark, corpus.limit(100), id_col="url", partials_path=ppath,
-            build=BuildConfig(strategy="partition"), keys=["en"],
+            spark, corpus.limit(100), id_col="url", partials_path=ppath, keys=["en"],
             snapshot_id="corpus-v1",
         )
         reg = build_filters(
             spark, corpus, id_col="url", partials_path=ppath,
-            build=BuildConfig(strategy="partition", coalesce_input=2),
+            build=BuildConfig(coalesce_input=2),
             keys=["en"], snapshot_id="corpus-v1",
         )
         ref = build_filters(
             spark, corpus, id_col="url",
-            build=BuildConfig(strategy="partition", coalesce_input=2),
+            build=BuildConfig(coalesce_input=2),
             keys=["en"],
         )
         got = {r["filter_id"]: bytes(r["bitmap"]) for r in reg.collect()}
         want = {r["filter_id"]: bytes(r["bitmap"]) for r in ref.collect()}
         assert got == want
+
+    def test_input_listing_read_only_for_checkpointed_builds(
+        self, spark, corpus, tmp_path, monkeypatch
+    ):
+        """The resume fingerprint (the input file listing) is computed only
+        when partials are checkpointed — a plain build, like each
+        progressive_build iteration, never lists its input."""
+        calls = []
+        real = type(corpus).inputFiles
+        monkeypatch.setattr(
+            type(corpus), "inputFiles", lambda df: calls.append(1) or real(df)
+        )
+        build_filters(spark, corpus, id_col="url", keys=["en"])
+        assert calls == []
+        build_filters(spark, corpus, id_col="url", keys=["en"],
+                      partials_path=str(tmp_path / "partials"))
+        assert calls == [1]
 
     def test_subtract_filter_veto(self, spark, corpus):
         """U2 semantics (BloomFilterGenerator.cpp:1175-1199): frames present
@@ -339,7 +334,6 @@ class TestCategorizer:
         reg512 = load_registry(build_filters(
             spark, corpus, key_col="lang", text_col="text", id_col="url",
             params=BloomParams(block_bits=512),
-            build=BuildConfig(num_buckets=8, merge_groups=4),
         ))
         cap = min(len(f["bitmap"]) for f in reg512) // 2
         key = lambda rows: {
@@ -605,17 +599,21 @@ class TestSliceHashPacking:
         assert _unpack_slice_hashes(_pack_slice_hashes(np.empty(0, np.uint64), 0), 0).size == 0
 
     def test_build_invariant_under_coalesce(self, spark, corpus):
-        """coalesce_input changes only the exchange volume, never the
-        result: byte-identical bitmaps with and without it."""
+        """How the input is partitioned changes only the exchange volume,
+        never the result: byte-identical bitmaps as-is, under
+        coalesce_input, and after a shuffle into more partitions (every
+        partition's partials OR together into the same slices)."""
         maps = []
-        for b in (
-            BuildConfig(strategy="partition"),
-            BuildConfig(strategy="partition", coalesce_input=2),
+        for docs, b in (
+            (corpus, BuildConfig()),
+            (corpus, BuildConfig(coalesce_input=2)),
+            (corpus.repartition(8), BuildConfig()),
         ):
             reg = load_registry(
-                build_filters(spark, corpus, id_col="url", build=b, keys=["en", "de"])
+                build_filters(spark, docs, id_col="url", build=b, keys=["en", "de"])
             )
             maps.append({f["filter_id"]: f["bitmap"] for f in reg})
-        assert maps[0].keys() == maps[1].keys()
-        for k in maps[0]:
-            assert maps[0][k] == maps[1][k], f"bitmap differs for {k}"
+        for other in maps[1:]:
+            assert other.keys() == maps[0].keys()
+            for k in maps[0]:
+                assert other[k] == maps[0][k], f"bitmap differs for {k}"

@@ -13,7 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from biobloom_spark.config import BloomParams, BuildConfig, ScoringConfig, CategorizerConfig
+from biobloom_spark.config import BloomParams, ScoringConfig, CategorizerConfig
 from biobloom_spark.operators.categorizer import categorize
 from biobloom_spark.operators.maker import build_filters, load_registry
 from biobloom_spark.sources.fasta import pair_reads, read_fasta, seq_to_char_tokens
@@ -71,7 +71,7 @@ class TestFastaSource:
         params = BloomParams(shingle_w=25)  # k=25, the reference default
         reg = build_filters(
             spark, refs, key_col="header", text_col="text", id_col="header",
-            params=params, build=BuildConfig(num_buckets=2, merge_groups=1),
+            params=params,
         )
         filters = load_registry(reg)
         reads = seq_to_char_tokens(read_fasta(spark, f"{d}/reads.fq.gz"))
@@ -114,7 +114,7 @@ class TestFastaSource:
         params = BloomParams(shingle_w=25, canonical=True)
         reg = build_filters(
             spark, refs, key_col="header", text_col="text", id_col="header",
-            params=params, build=BuildConfig(num_buckets=2, merge_groups=1),
+            params=params,
         )
         filters = load_registry(reg)
         assert all(f["canonical"] for f in filters)
@@ -302,7 +302,7 @@ class TestBFFormat:
             read_bf(prefix)
 
     def test_registry_row_export_import(self, spark, tmp_path):
-        from biobloom_spark.config import BloomParams, BuildConfig
+        from biobloom_spark.config import BloomParams
         from biobloom_spark.operators.maker import build_filters
         from biobloom_spark.sources.bf_format import bf_to_registry_row, registry_row_to_bf
 
@@ -313,7 +313,6 @@ class TestBFFormat:
         reg = build_filters(
             spark, docs, id_col="doc_id",
             params=BloomParams(block_bits=0),  # classic layout = format parity
-            build=BuildConfig(num_buckets=1, merge_groups=1),
         )
         row = reg.collect()[0].asDict()
         registry_row_to_bf(row, str(tmp_path))

@@ -11,7 +11,7 @@ import os
 
 import pytest
 
-from biobloom_spark.config import BloomParams, BuildConfig
+from biobloom_spark.config import BloomParams
 from biobloom_spark.operators.categorizer import categorize
 from biobloom_spark.operators.dedup import embedding_near_dups, minhash_lsh_pairs
 from biobloom_spark.operators.maker import build_filters, load_registry
@@ -39,8 +39,7 @@ def test_categorize_plan_is_shuffle_free(spark, pq_corpus):
     """J1 contract: broadcast filters + one mapInPandas — the corpus moves
     zero times (SURVEY.md §2.3; the 100 TB plan)."""
     reg = load_registry(
-        build_filters(spark, pq_corpus, id_col="url",
-                      build=BuildConfig(num_buckets=1, merge_groups=1))
+        build_filters(spark, pq_corpus, id_col="url")
     )
     result = categorize(spark, pq_corpus, reg, id_col="url")
     assert_no_shuffle(result, "categorize")
@@ -50,8 +49,7 @@ def test_categorize_scan_prunes_columns(spark, pq_corpus):
     """Categorize reads only (id, text) — the scan must not drag the other
     corpus columns through the Arrow bridge."""
     reg = load_registry(
-        build_filters(spark, pq_corpus, id_col="url",
-                      build=BuildConfig(num_buckets=1, merge_groups=1))
+        build_filters(spark, pq_corpus, id_col="url")
     )
     result = categorize(spark, pq_corpus, reg, id_col="url")
     cols = scan_read_schema(result)
@@ -72,17 +70,20 @@ def test_embedding_lsh_not_cartesian(spark):
     assert_no_cartesian(pairs, "embedding_near_dups")
 
 
-def test_bucketed_build_shuffles_corpus_once(spark, pq_corpus):
-    """The salted bucketed build moves documents exactly once (stage 2);
-    later stages shuffle only sketch-sized partial rows."""
-    reg = build_filters(
-        spark, pq_corpus, id_col="url",
-        params=BloomParams(),
-        build=BuildConfig(strategy="bucketed", num_buckets=4, merge_groups=2),
-    )
-    # corpus-sized exchanges: the repartition before applyInPandas; the
-    # partial/merge exchanges carry a handful of sketch rows each
-    assert count_exchanges(reg) <= 3, count_exchanges(reg)
+def test_build_shuffles_only_partials(spark, pq_corpus):
+    """The Bloom build never moves the corpus: the partial pass is a
+    map-side ``MapInPandas`` straight over the scan, and the plan's only
+    two exchanges carry sketch-sized partial rows — (filter_id, seg) into
+    the slice reducers, then filter_id into the per-filter assembly."""
+    from biobloom_spark.plans import plan_string
+
+    reg = build_filters(spark, pq_corpus, id_col="url")
+    assert count_exchanges(reg) == 2, count_exchanges(reg)
+    plan = plan_string(reg, "simple")
+    assert plan.count("MapInPandas") == 1, plan
+    below_map = plan[plan.index("MapInPandas"):]
+    assert "FileScan" in below_map, plan
+    assert "Exchange" not in below_map[:below_map.index("FileScan")], plan
 
 
 def test_mibf_classify_plan_is_shuffle_free(spark, pq_corpus):
@@ -105,8 +106,7 @@ def test_chunked_categorize_one_stitch_shuffle(spark, pq_corpus):
     from biobloom_spark.plans import assert_no_cartesian
 
     reg = load_registry(
-        build_filters(spark, pq_corpus, id_col="url",
-                      build=BuildConfig(num_buckets=1, merge_groups=1))
+        build_filters(spark, pq_corpus, id_col="url")
     )
     cap = min(len(f["bitmap"]) for f in reg) // 2
     result = categorize(spark, pq_corpus, reg, id_col="url",

@@ -14,7 +14,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from biobloom_spark.config import BloomParams, BuildConfig, ScoringConfig
+from biobloom_spark.config import BloomParams, ScoringConfig
 from biobloom_spark.operators.progressive import progressive_build
 
 
@@ -42,7 +42,6 @@ def test_progressive_walks_the_genome(spark, genome_reads):
         read_df.select("doc_id", "text"),
         max_iterations=8,
         params=BloomParams(),
-        build=BuildConfig(num_buckets=2, merge_groups=1),
         scoring=ScoringConfig(method="simple", threshold=0.3),
     )
     t = tagged.filter(F.col("iteration") > 0).join(read_df, on="doc_id").cache()
@@ -66,7 +65,6 @@ def test_progressive_stops_without_matches(spark):
     )
     filters, tagged = progressive_build(
         spark, seeds, reads, max_iterations=4,
-        build=BuildConfig(num_buckets=1, merge_groups=1),
     )
     assert tagged.filter(F.col("iteration") > 0).count() == 0
     assert len(filters) == 1
@@ -84,13 +82,11 @@ def test_progressive_bait_extends_matches(spark, genome_reads):
             spark,
             tail_reads.withColumn("k", F.lit("bait")),
             key_col="k", id_col="doc_id",
-            build=BuildConfig(num_buckets=1, merge_groups=1),
         )
     )[0]
     filters, tagged = progressive_build(
         spark, seeds, read_df.select("doc_id", "text"),
         max_iterations=1,
-        build=BuildConfig(num_buckets=2, merge_groups=1),
         scoring=ScoringConfig(threshold=0.3),
         bait=(bait_reg["bitmap"], bait_reg["m_bits"], bait_reg["num_hashes"],
               bait_reg["block_bits"], bait_reg["seg_offsets"]),
@@ -123,12 +119,10 @@ def test_progressive_bait_under_nthash(spark):
             spark,
             reads.filter(F.col("doc_id") == "r2").withColumn("k", F.lit("bait")),
             key_col="k", id_col="doc_id", params=params,
-            build=BuildConfig(num_buckets=1, merge_groups=1),
         )
     )[0]
     filters, tagged = progressive_build(
         spark, seeds, reads, max_iterations=2, params=params,
-        build=BuildConfig(num_buckets=1, merge_groups=1),
         scoring=ScoringConfig(threshold=0.2),
         bait=(bait_reg["bitmap"], bait_reg["m_bits"], bait_reg["num_hashes"],
               bait_reg["block_bits"], bait_reg["seg_offsets"]),
@@ -148,7 +142,6 @@ def test_incremental_equals_rebuild_from_scratch(spark, genome_reads):
     filters, tagged = progressive_build(
         spark, seeds, read_df.select("doc_id", "text"),
         max_iterations=8, params=params,
-        build=BuildConfig(num_buckets=2, merge_groups=1),
         scoring=ScoringConfig(method="simple", threshold=0.3),
     )
     closure = seeds.select("doc_id", "text").unionByName(
@@ -163,7 +156,6 @@ def test_incremental_equals_rebuild_from_scratch(spark, genome_reads):
     reg = build_filters(
         spark, closure.withColumn("__fkey", F.lit("progressive")),
         key_col="__fkey", text_col="text", id_col="doc_id", params=params,
-        build=BuildConfig(num_buckets=2, merge_groups=1),
         expected_sizing=sizing,
     )
     scratch = load_registry(reg)[0]
@@ -193,7 +185,6 @@ def test_progressive_lineage_stays_flat(spark, genome_reads, monkeypatch):
         progressive_build(
             spark, seeds, read_df.select("doc_id", "text"), max_iterations=3,
             params=BloomParams(),
-            build=BuildConfig(num_buckets=2, merge_groups=1),
             scoring=ScoringConfig(method="simple", threshold=0.3),
         )
     finally:

@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from biobloom_spark.config import BuildConfig
 from biobloom_spark.corpus import generate_corpus
 from biobloom_spark.operators.categorizer import categorize
 from biobloom_spark.operators.maker import build_filters, load_registry
@@ -22,9 +21,7 @@ def test_stream_matches_batch(spark, tmp_path):
     ).cache()
     src = str(tmp_path / "drop")
     corpus.write.mode("overwrite").parquet(src)
-    reg = build_filters(
-        spark, corpus, id_col="url", build=BuildConfig(num_buckets=2, merge_groups=1)
-    )
+    reg = build_filters(spark, corpus, id_col="url")
     filters = load_registry(reg)
 
     stream = stream_from_parquet_dir(spark, src, max_files_per_trigger=2)

@@ -33,13 +33,11 @@ spark = SparkSession.builder.getOrCreate()
 import biobloom_spark
 assert ".zip" in biobloom_spark.__file__, biobloom_spark.__file__
 from biobloom_spark.corpus import generate_corpus
-from biobloom_spark.config import BuildConfig
 from biobloom_spark.operators import build_filters, categorize, load_registry, summarize
 
 docs = generate_corpus(spark, 400, seed=7, num_partitions=4).cache()
 reg = build_filters(
     spark, docs, key_col="lang", text_col="text", id_col="url",
-    build=BuildConfig(num_buckets=4, merge_groups=2),
 )
 filters = load_registry(reg)
 rows = summarize(

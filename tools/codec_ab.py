@@ -45,12 +45,12 @@ def run_one(codec: str, cores: int) -> dict:
     # untimed warm build (first-touch page faults dominate rep 0 on this VM)
     build_filters(
         spark, docs, key_col="lang", text_col="text", id_col="url",
-        build=BuildConfig(num_buckets=64, merge_groups=8, coalesce_input=8),
+        build=BuildConfig(coalesce_input=8),
     )
     t0 = time.perf_counter()
     build_filters(
         spark, docs, key_col="lang", text_col="text", id_col="url",
-        build=BuildConfig(num_buckets=64, merge_groups=8, coalesce_input=8),
+        build=BuildConfig(coalesce_input=8),
     ).write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
 

@@ -41,7 +41,6 @@ def prepare() -> None:
     """One-time: build the real registry over the scale corpus (Spark)."""
     if os.path.exists(os.path.join(REGISTRY_PATH, "_SUCCESS")):
         return
-    from biobloom_spark.config import BuildConfig
     from biobloom_spark.operators import build_filters
     from biobloom_spark.session import get_spark
 
@@ -49,7 +48,6 @@ def prepare() -> None:
     docs = spark.read.parquet(CORPUS_PATH)
     build_filters(
         spark, docs, key_col="lang", text_col="text", id_col="url",
-        build=BuildConfig(num_buckets=64, merge_groups=8),
     ).write.mode("overwrite").parquet(REGISTRY_PATH)
     spark.stop()
 

@@ -44,12 +44,11 @@ def main() -> None:
     docs = spark.read.parquet(CORPUS_PATH).cache()
     n = docs.count()
     params = BloomParams()
-    build = BuildConfig(num_buckets=64, merge_groups=8, coalesce_input=coalesce)
+    build = BuildConfig(coalesce_input=coalesce)
 
     # warm: small build exercises codegen + python workers
     build_filters(
         spark, docs.limit(2000), key_col="lang", text_col="text", id_col="url",
-        build=BuildConfig(num_buckets=4, merge_groups=2),
     ).write.format("noop").mode("overwrite").save()
     # untimed full pass: page-fault warmup
     build_filters(
@@ -79,7 +78,7 @@ def main() -> None:
 
     t0 = time.perf_counter()
     reduced = partials.groupBy("filter_id", "seg").applyInPandas(
-        _seg_reduce_fn(params, build, None, PARTIAL_SCHEMA), schema=PARTIAL_SCHEMA
+        _seg_reduce_fn(params, build, None), schema=PARTIAL_SCHEMA
     )
     reg = reduced.groupBy("filter_id").applyInPandas(
         _assemble_fn(params, build, None), schema=REGISTRY_SCHEMA

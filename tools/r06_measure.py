@@ -34,7 +34,6 @@ def main() -> None:
     ap.add_argument("--skip-warmup", action="store_true")
     args = ap.parse_args()
 
-    from biobloom_spark.config import BuildConfig
     from biobloom_spark.operators import (
         build_filters,
         categorize,
@@ -80,7 +79,6 @@ def main() -> None:
         warm_docs.count()
         warm_reg = build_filters(
             spark, warm_docs, key_col="lang", text_col="text", id_col="doc_id",
-            build=BuildConfig(num_buckets=4, merge_groups=2),
         )
         warm_filters = load_registry(warm_reg)
         summarize(
@@ -93,13 +91,11 @@ def main() -> None:
         "bloom_build",
         lambda: build_filters(
             spark, docs, key_col="lang", text_col="text", id_col="doc_id",
-            build=BuildConfig(num_buckets=max(CPUS, 8), merge_groups=8),
         ).write.format("noop").mode("overwrite").save(),
     )
     if want is None or "bloom_categorize" in want:
         reg = build_filters(
             spark, docs, key_col="lang", text_col="text", id_col="doc_id",
-            build=BuildConfig(num_buckets=max(CPUS, 8), merge_groups=8),
         )
         filters = load_registry(reg)
         timed(

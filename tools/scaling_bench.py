@@ -216,7 +216,7 @@ def run_one(cores: int, reps: int, phases: str = "build,categorize") -> dict:
     # warm-up (codegen + python workers)
     warm = docs.limit(1000).cache()
     warm.count()
-    wreg = build_filters(spark, warm, id_col="url", build=BuildConfig(num_buckets=4, merge_groups=2))
+    wreg = build_filters(spark, warm, id_col="url")
     wf = load_registry(wreg)
     summarize(categorize(spark, warm, wf, id_col="url"), [f["filter_id"] for f in wf]).collect()
     warm.unpersist()
@@ -225,7 +225,7 @@ def run_one(cores: int, reps: int, phases: str = "build,categorize") -> dict:
     # work); it doubles as the registry for the categorize phase
     reg = build_filters(
         spark, docs, key_col="lang", text_col="text", id_col="url",
-        build=BuildConfig(num_buckets=64, merge_groups=8, coalesce_input=coalesce),
+        build=BuildConfig(coalesce_input=coalesce),
     )
     filters = load_registry(reg) if "categorize" in want else None
     if filters is not None:
@@ -246,7 +246,7 @@ def run_one(cores: int, reps: int, phases: str = "build,categorize") -> dict:
         # rep could silently reuse (logical-plan cache matching)
         build_filters(
             spark, docs, key_col="lang", text_col="text", id_col="url",
-            build=BuildConfig(num_buckets=64, merge_groups=8, coalesce_input=coalesce),
+            build=BuildConfig(coalesce_input=coalesce),
         ).write.format("noop").mode("overwrite").save()
 
     out = {"cores": cores, "n_docs": n}

@@ -75,10 +75,13 @@ def _make_sketches(filters: list[dict]) -> list[BloomSketch]:
 
 def _score_texts(texts: np.ndarray, filters: list[dict], cfg: CategorizerConfig,
                  cache: dict | None = None, sketches: list[BloomSketch] | None = None):
-    """One Arrow batch → (n_frames, scores[n_docs,n_filters], matches[...]).
+    """One Arrow batch → (batch, scores[n_docs,n_filters], matches[...]).
 
     The batch is tokenized+shingled *flat* in one pass and K-M probe-hashed
-    once; each filter then costs only its compacting probe sweeps.
+    once; each filter then costs only its compacting probe sweeps.  The
+    returned ``SegmentedBatch`` carries the flat (unmasked) frame hashes and
+    per-doc offsets, so a caller that inserts matched docs' frames slices
+    them instead of hashing the texts again.
     """
     w = filters[0]["shingle_w"]
     canonical = bool(filters[0].get("canonical", False))
@@ -122,7 +125,7 @@ def _score_texts(texts: np.ndarray, filters: list[dict], cfg: CategorizerConfig,
         s, m = score_batch(hit, batch, scoring, flt["fpr"], w)
         scores[:, j] = s
         matches[:, j] = m
-    return batch.frames(), scores, matches
+    return batch, scores, matches
 
 
 def _assign(scores: np.ndarray, matches: np.ndarray, filter_ids: list[str], cfg: CategorizerConfig):
@@ -410,10 +413,10 @@ def _categorize_sharded(
                 }
                 for m, tcol in enumerate(text_cols):
                     texts = pdf[tcol].fillna("").to_numpy()
-                    frames, scores, matches = _score_texts(
+                    batch, scores, matches = _score_texts(
                         texts, flts, cfg, cache, sketches
                     )
-                    out[f"n_frames{m}"] = frames
+                    out[f"n_frames{m}"] = batch.frames()
                     out[f"scores{m}"] = list(scores)
                     out[f"matches{m}"] = list(matches)
                     out[f"hitidx{m}"] = [None] * n
@@ -609,12 +612,12 @@ def categorize(
         cache: dict = {}  # worker-lifetime token-hash memo
         for pdf in batches:
             texts = pdf[text_col].to_numpy()
-            frames, scores, matches = _score_texts(texts, flts, cfg, cache, sketches)
+            batch, scores, matches = _score_texts(texts, flts, cfg, cache, sketches)
             hits, assigned, best, _sel = _assign(scores, matches, filter_ids, cfg)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
-                    "n_frames": frames,
+                    "n_frames": batch.frames(),
                     "scores": list(scores),
                     "hits": hits,
                     "assigned": assigned,
@@ -668,15 +671,15 @@ def categorize_pairs(
         sketches = _make_sketches(flts)
         cache: dict = {}
         for pdf in batches:
-            f1, s1, m1 = _score_texts(pdf[text1_col].to_numpy(), flts, cfg, cache, sketches)
-            f2, s2, m2 = _score_texts(pdf[text2_col].to_numpy(), flts, cfg, cache, sketches)
+            b1, s1, m1 = _score_texts(pdf[text1_col].to_numpy(), flts, cfg, cache, sketches)
+            b2, s2, m2 = _score_texts(pdf[text2_col].to_numpy(), flts, cfg, cache, sketches)
             matches = (m1 | m2) if cfg.inclusive_pairs else (m1 & m2)
             scores = (s1 + s2) / 2.0
             hits, assigned, best, _sel = _assign(scores, matches, filter_ids, cfg)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
-                    "n_frames": f1 + f2,
+                    "n_frames": b1.frames() + b2.frames(),
                     "scores": list(scores),
                     "hits": hits,
                     "assigned": assigned,

@@ -161,6 +161,19 @@ def _family_kwargs(params: BloomParams) -> dict:
     return {}
 
 
+def _veto_sketch(subtract: tuple, params: BloomParams) -> BloomSketch:
+    """The ``-s`` subtract filter as a probe sketch.  ``subtract`` =
+    (bitmap, m_bits, num_hashes[, block_bits[, seg_offsets]]); a frame it
+    contains is never inserted (the build and ``progressive_build`` both
+    apply it)."""
+    return BloomSketch.deserialize(
+        subtract[0], subtract[1], subtract[2],
+        block_bits=subtract[3] if len(subtract) > 3 else 0,
+        seg_offsets=subtract[4] if len(subtract) > 4 else None,
+        **_family_kwargs(params),
+    )
+
+
 def _seg_layout(params: BloomParams, build: BuildConfig) -> tuple[int, int, int]:
     """(num_hashes, block_bits, S) for the build.
     Hash-prefix segmentation requires the single-word layout (an item's
@@ -173,8 +186,9 @@ def _seg_layout(params: BloomParams, build: BuildConfig) -> tuple[int, int, int]
 
 def _pinned_seg_words(meta: dict, S: int) -> np.ndarray:
     """Equal-split per-segment word counts for an externally pinned m
-    (progressive mode rebuilds into a FIXED layout across iterations so
-    incremental OR-merge stays bitmap-compatible).  Deterministic; every
+    (builds with the same pinned sizing share one layout, so their bitmaps
+    OR-merge, and ``progressive_build``'s driver-side inserts land where a
+    rebuild would put them).  Deterministic; every
     segment gets >= 1 word (a zero-width segment would alias its probes
     onto its neighbour's words)."""
     total_words = meta["m_bits"] // 64
@@ -283,11 +297,7 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
                 return  # resumed build: this partition's partials exist
         sub = None
         if subtract_bits is not None:
-            sm, sh_, sb, sseg = subtract_meta
-            sub = BloomSketch.deserialize(
-                subtract_bits, sm, sh_, block_bits=sb, seg_offsets=sseg,
-                **_family_kwargs(params),
-            )
+            sub = _veto_sketch((subtract_bits, *subtract_meta), params)
         hashes_acc: dict[str, list] = {}
         state: dict[str, tuple] = {}
         n_docs: dict[str, int] = {}
@@ -541,8 +551,9 @@ def build_filters(
         docs = docs.filter(F.col(key_col).isin(keys))
     docs = docs.filter(F.col(key_col).isNotNull() & F.col(text_col).isNotNull())
 
-    # expected_sizing pins (m, h) externally — the progressive mode re-builds
-    # into a fixed-size bitmap across iterations so merges stay compatible
+    # expected_sizing pins (m, h) externally — builds sharing a pinned
+    # sizing share one layout (mergeable registries; progressive_build's
+    # seed build fixes the layout its later inserts go into)
     pinned = expected_sizing
 
     sub_bits, sub_meta = (
@@ -820,6 +831,10 @@ def load_registry(registry_df: DataFrame, order: Iterable[str] | None = None) ->
                 # per-filter FPR used by the binomial kernel
                 "fpr": float(max(r["occupancy_fpr"], 1e-300)),
                 "target_fpr": float(r["target_fpr"]),
+                # sizing input and distinct inserted frames, carried so a
+                # re-export (cli maker -r) writes the real counts
+                "expected_entries": int(r.get("expected_entries") or 0),
+                "num_entries": int(r.get("num_entries") or 0),
             }
         )
     return out

@@ -15,19 +15,119 @@ ALL newly-matching reads' frames at once.  Deterministic, produces a
 superset-per-iteration of any reference schedule, and converges to the
 same closure with enough iterations (SURVEY.md §7.4).
 
-Each iteration = one categorize (broadcast probe, zero shuffle) + one
-build over the matched subset (zero-shuffle partial build) — both already
-scale-shaped; the driver loop only moves sketch-sized state.
+Shape: one pinned-size ``build_filters`` over the seeds fixes the filter's
+layout, then each iteration is ONE fused ``mapInPandas`` pass over the
+still-untagged reads (``_tag_pass``) — the reference's single
+score-and-insert loop.  The pass scores every read against the broadcast
+filters, emits the ids of the tagged reads (checkpointed, they stay
+distributed) and one blob per task of the tagged reads' distinct frame
+hashes that the running filter lacks; the driver inserts those into its
+copy of the filter with ``BloomSketch.update_batch``.  That is the same
+``word_index64`` segmented layout the build's slice reducers write, so the
+bitmap is bit-identical to a pinned rebuild over seed ∪ tagged.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import BloomParams, BuildConfig, CategorizerConfig, ScoringConfig
 
 __all__ = ["progressive_build"]
+
+
+def _tag_pass(
+    spark: SparkSession,
+    docs: DataFrame,
+    filters: list[dict],
+    cfg: CategorizerConfig,
+    id_col: str,
+    text_cols: list[str],
+    subtract: tuple | None,
+    params: BloomParams,
+) -> tuple[DataFrame, int, np.ndarray]:
+    """One score-and-insert pass → (tagged ids, n tagged, new frame hashes).
+
+    ``filters[0]`` is the running filter (any bait filters follow it).  A
+    read is tagged when it hits any filter — with two ``text_cols`` when
+    its mates combine to a hit (AND, or OR under ``cfg.inclusive_pairs``,
+    the ``categorize_pairs`` rule).  For each tagged read the kernel keeps
+    the frames of every mate, unmasked (the dust mask only affects
+    scoring), drops the ones ``subtract`` vetoes, deduplicates per task and
+    keeps only frames the running filter lacks: the rest cannot set a bit.
+    The driver therefore receives at most 8 B per distinct new frame per
+    task, rather than the full m-bit bitmap a per-iteration delta build
+    would ship.
+    """
+    from .categorizer import _assign, _make_sketches, _score_texts
+    from .maker import _veto_sketch
+
+    filter_ids = [f["filter_id"] for f in filters]
+    bc = spark.sparkContext.broadcast((filters, subtract))
+    id_type = docs.schema[id_col].dataType
+    schema = T.StructType([
+        T.StructField(id_col, id_type, True),
+        T.StructField("__n", T.LongType(), True),
+        T.StructField("__frames", T.BinaryType(), True),
+    ])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        flts, sub = bc.value
+        sketches = _make_sketches(flts)
+        cache: dict = {}
+        picked, n_tagged = [], 0
+        for pdf in batches:
+            mates = [
+                _score_texts(pdf[c].to_numpy(), flts, cfg, cache, sketches)
+                for c in text_cols
+            ]
+            if len(mates) == 1:
+                _b, scores, matches = mates[0]
+            else:
+                (_b1, s1, m1), (_b2, s2, m2) = mates
+                matches = (m1 | m2) if cfg.inclusive_pairs else (m1 & m2)
+                scores = (s1 + s2) / 2.0
+            sel = _assign(scores, matches, filter_ids, cfg)[3]
+            hit = sel.any(axis=1)
+            if not hit.any():
+                continue
+            n_tagged += int(hit.sum())
+            for batch, _s, _m in mates:
+                picked.append(batch.hashes[np.repeat(hit, batch.frames())])
+            yield pd.DataFrame({
+                id_col: pdf[id_col].to_numpy()[hit], "__n": None, "__frames": None,
+            })
+        if not n_tagged:
+            return
+        fresh = np.unique(np.concatenate(picked))
+        if sub is not None:
+            fresh = fresh[~_veto_sketch(sub, params).contains_batch(fresh)]
+        fresh = fresh[~sketches[0].contains_batch(fresh)]
+        yield pd.DataFrame({
+            id_col: [None], "__n": [n_tagged], "__frames": [fresh.tobytes()],
+        })
+
+    # lazily checkpointed: the collect below materializes it in the same
+    # job, and the tagged ids then feed `tagged` and the next anti-join
+    # without rescoring
+    out = (
+        docs.select(id_col, *text_cols)
+        .mapInPandas(run, schema=schema)
+        .localCheckpoint(eager=False)
+    )
+    blobs = out.filter(F.col("__frames").isNotNull()).select("__n", "__frames").collect()
+    n_tagged = sum(int(r["__n"]) for r in blobs)
+    fresh = np.unique(np.concatenate(
+        [np.empty(0, dtype=np.uint64)]
+        + [np.frombuffer(r["__frames"], dtype=np.uint64) for r in blobs]
+    ))
+    return out.filter(F.col("__frames").isNull()).select(id_col), n_tagged, fresh
 
 
 def progressive_build(
@@ -53,20 +153,27 @@ def progressive_build(
     present there are never inserted (-d).  ``text2_col`` enables the
     paired variant: a pair is tagged when either/both mates match per
     ``inclusive_pairs`` (PROG_INC vs PROG_STD,
-    BloomFilterGenerator.cpp:184-241).
+    BloomFilterGenerator.cpp:184-241), and both mates' frames are inserted.
 
     Sizing note: the filter is sized ONCE from seed+reads expected frames
-    (upper bound of the closure) so iterations merge into a fixed-size
-    bitmap — the reference sizes from -n expected entries similarly.
+    (upper bound of the closure) so every insert lands in one fixed-size
+    bitmap — the reference sizes from -n expected entries similarly.  The
+    returned filter dict carries that ``expected_entries`` and a
+    ``num_entries`` grown by each iteration's new-entry count (the
+    reference's insertAndCheck counter).
+
+    Driver cost: the driver holds the running filter (it broadcasts it to
+    every pass anyway) and receives each iteration's new frame hashes
+    (``_tag_pass``).
     """
     from ..sketch import BloomSketch
-    from .categorizer import categorize, categorize_pairs
-    from .maker import build_filters, load_registry
+    from .maker import _family_kwargs, build_filters, load_registry, size_filters
 
     params = params or BloomParams()
     build = build or BuildConfig()
     scoring = scoring or ScoringConfig()
     cfg = CategorizerConfig(scoring=scoring, inclusive_pairs=inclusive_pairs)
+    text_cols = [text_col, text2_col] if text2_col else [text_col]
 
     key = F.lit(filter_id).alias("__fkey")
 
@@ -84,37 +191,34 @@ def progressive_build(
     union_all = both_mates(seed_docs).unionByName(both_mates(read_docs))
 
     # fixed sizing over the maximal possible closure (both mates included)
-    from .maker import size_filters
-
     sizing_probe = size_filters(
         union_all.withColumn("__fkey", key), "__fkey", text_col, params
     )[filter_id]
-
-    def build_from(docs: DataFrame) -> DataFrame:
-        return build_filters(
-            spark,
-            both_mates(docs).withColumn("__fkey", key),
-            key_col="__fkey",
-            text_col=text_col,
-            id_col=id_col,
-            params=params,
-            build=build,
-            subtract=subtract,
-            expected_sizing={filter_id: sizing_probe},
-        )
-
     tagged = seed_docs.select(F.col(id_col)).withColumn("iteration", F.lit(0))
-    reg = build_from(seed_docs)
-    filters = load_registry(reg)
-    # incremental state: the running OR-merged bitmap (fixed m/h across
-    # iterations); Bloom insert is set-union idempotent, so inserting only
-    # the newly matched docs and OR-merging equals the rebuild-from-scratch
-    # of seed ∪ matched — the reference inserts incrementally too
-    # (BloomFilterGenerator.cpp:149-270)
+    reg = build_filters(
+        spark,
+        both_mates(seed_docs).withColumn("__fkey", key),
+        key_col="__fkey",
+        text_col=text_col,
+        id_col=id_col,
+        params=params,
+        build=build,
+        subtract=subtract,
+        expected_sizing={filter_id: sizing_probe},
+    )
+    filters = [
+        {**load_registry(reg)[0], "expected_entries": sizing_probe["expected_entries"]}
+    ]
+    # the driver's copy of the filter, in the seed build's pinned layout;
+    # each iteration's new frames go straight into it (Bloom insert is
+    # set-union idempotent, so this equals a rebuild of seed ∪ tagged —
+    # the reference inserts incrementally too,
+    # BloomFilterGenerator.cpp:149-270)
     running = BloomSketch.deserialize(
         filters[0]["bitmap"], filters[0]["m_bits"], filters[0]["num_hashes"],
         block_bits=filters[0]["block_bits"],
         seg_offsets=filters[0].get("seg_offsets"),
+        **_family_kwargs(params),
     )
 
     bait_filters = []
@@ -138,50 +242,32 @@ def progressive_build(
     remaining = read_docs
     matched_all = None
     for it in range(1, max_iterations + 1):
-        if text2_col:
-            res = categorize_pairs(
-                spark, remaining, filters + bait_filters, cfg,
-                id_col=id_col, text1_col=text_col, text2_col=text2_col,
-            )
-        else:
-            res = categorize(
-                spark, remaining, filters + bait_filters, cfg,
-                id_col=id_col, text_col=text_col,
-            )
-        # checkpointed, and `remaining` is ONE anti-join against the union
-        # of these id sets: iteration k's plan never re-evaluates an
-        # earlier iteration's categorize, so every iteration after the
-        # first runs the same jobs
-        matched_ids = res.filter(F.size("hits") > 0).select(id_col).localCheckpoint()
-        n_matched = matched_ids.count()
+        matched_ids, n_matched, fresh = _tag_pass(
+            spark, remaining, filters + bait_filters, cfg, id_col, text_cols,
+            subtract, params,
+        )
         if n_matched == 0:
             break
         tagged = tagged.unionByName(
             matched_ids.withColumn("iteration", F.lit(it))
         )
-        matched_docs = remaining.join(matched_ids, on=id_col)
-        # build ONLY the newly matched docs and OR-merge into the running
-        # fixed-size bitmap: per-iteration cost stays O(newly matched), not
-        # O(closure) — at 100 TB the rebuild-from-scratch variant is
-        # iteration-quadratic
-        delta_filters = load_registry(build_from(matched_docs))
-        delta = BloomSketch.deserialize(
-            delta_filters[0]["bitmap"], running.m_bits, running.num_hashes,
-            block_bits=running.block_bits,
-            seg_offsets=delta_filters[0].get("seg_offsets"),
-        )
-        running = running.merge(delta)
+        new_entries = fresh.size - running.update_batch(fresh, assume_unique=True)
+        if new_entries == 0:
+            # totalEntries fixpoint (BloomFilterGenerator.cpp:176,402): the
+            # filter did not change, so another pass could tag nothing
+            break
         filters = [
             {
                 **filters[0],
                 "bitmap": running.serialize(),
                 "fpr": max(running.fpr_from_occupancy(), 1e-300),
+                "num_entries": filters[0]["num_entries"] + new_entries,
             }
         ]
+        # `remaining` is ONE anti-join against the union of the checkpointed
+        # id sets: no iteration's plan re-evaluates an earlier pass
         matched_all = (
             matched_ids if matched_all is None else matched_all.unionByName(matched_ids)
         )
         remaining = read_docs.join(matched_all, on=id_col, how="left_anti")
-        # stop when the filter stopped growing (totalEntries fixpoint,
-        # BloomFilterGenerator.cpp:176,402 analog)
     return filters, tagged

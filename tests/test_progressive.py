@@ -130,57 +130,217 @@ def test_progressive_bait_under_nthash(spark):
     assert tagged.filter(F.col("iteration") > 0).count() >= 1
 
 
-def test_incremental_equals_rebuild_from_scratch(spark, genome_reads):
-    """The incremental OR-merge (insert only newly matched docs per
-    iteration) must produce the exact bitmap of a from-scratch build over
-    seed ∪ tagged — Bloom insert is set-union idempotent, so the closures
-    coincide (U1 associativity end-to-end)."""
+@pytest.fixture(scope="module")
+def walk_reads(spark):
+    """A 400-token genome with short low-complexity runs (dust-masked
+    frames) past the seed, its 80-token head as the seed, and reads every
+    20 tokens as one 60-token text plus two overlapping 40-token mates."""
+    rng = np.random.default_rng(7)
+    genome = [f"g{int(x)}" for x in rng.integers(0, 5000, 400)]
+    for j, p in enumerate(range(90, 340, 25)):
+        genome[p : p + 4] = [f"d{j}"] * 4
+    seeds = spark.createDataFrame(
+        [("seed0", " ".join(genome[:80]))], "doc_id string, text string"
+    )
+    rows = [
+        (f"r{i:03d}", " ".join(genome[s : s + 60]), " ".join(genome[s : s + 40]),
+         " ".join(genome[s + 20 : s + 60]), s)
+        for i, s in enumerate(range(0, 340, 20))
+    ]
+    reads = spark.createDataFrame(
+        rows, "doc_id string, text string, text1 string, text2 string, start int"
+    ).cache()
+    return seeds, reads, " ".join(genome[150:210])
+
+
+def _pinned_build(spark, docs, sizing_docs, params, subtract=None):
+    """Registry row of a from-scratch build over ``docs`` (doc_id, text)
+    with the layout progressive_build pins from ``sizing_docs``."""
     from biobloom_spark.operators.maker import build_filters, load_registry, size_filters
+
+    sizing = size_filters(
+        sizing_docs.withColumn("__fkey", F.lit("progressive")), "__fkey", "text", params
+    )
+    reg = build_filters(
+        spark, docs.withColumn("__fkey", F.lit("progressive")),
+        key_col="__fkey", text_col="text", id_col="doc_id", params=params,
+        subtract=subtract, expected_sizing=sizing,
+    )
+    return load_registry(reg)[0]
+
+
+@pytest.mark.parametrize(
+    "variant", ["single", "paired", "paired_inclusive", "subtract", "dust"]
+)
+def test_incremental_equals_rebuild_from_scratch(spark, walk_reads, variant):
+    """Inserting each iteration's new frames into the running filter must
+    produce the exact bitmap of a from-scratch build over seed ∪ tagged
+    (every mate of a tagged pair) with the same subtract veto — Bloom
+    insert is set-union idempotent, so the closures coincide (U1
+    associativity end-to-end).  The dust mask only changes scoring: masked
+    frames of a tagged read are still inserted."""
+    from biobloom_spark.operators.maker import build_filters, load_registry
+
+    seeds, reads, veto_text = walk_reads
+    params = BloomParams()
+    paired = variant.startswith("paired")
+    mates = ["text1", "text2"] if paired else ["text"]
+    kw = {}
+    if paired:
+        kw = {"text_col": "text1", "text2_col": "text2",
+              "inclusive_pairs": variant == "paired_inclusive"}
+    if variant == "subtract":
+        veto = load_registry(build_filters(
+            spark,
+            spark.createDataFrame([("v", "veto", veto_text)], "doc_id string, k string, text string"),
+            key_col="k", id_col="doc_id", params=params,
+        ))[0]
+        kw["subtract"] = (veto["bitmap"], veto["m_bits"], veto["num_hashes"],
+                          veto["block_bits"], veto["seg_offsets"])
+    filters, tagged = progressive_build(
+        spark, seeds.select("doc_id", F.col("text").alias(mates[0])),
+        reads.select("doc_id", *mates),
+        max_iterations=8, params=params,
+        scoring=ScoringConfig(method="simple", threshold=0.3, dust=variant == "dust"),
+        **kw,
+    )
+    # the walk went past the seed's reach, so later passes inserted frames
+    assert tagged.filter(F.col("iteration") >= 2).count() > 0
+
+    def mate_rows(df):
+        out = None
+        for m in mates:
+            one = df.select("doc_id", F.col(m).alias("text"))
+            out = one if out is None else out.unionByName(one)
+        return out
+
+    closure = seeds.unionByName(
+        mate_rows(reads.join(tagged.filter(F.col("iteration") > 0), on="doc_id"))
+    )
+    scratch = _pinned_build(
+        spark, closure, seeds.unionByName(mate_rows(reads)), params,
+        subtract=kw.get("subtract"),
+    )
+    assert filters[0]["bitmap"] == scratch["bitmap"]
+    assert filters[0]["num_entries"] <= scratch["num_entries"]
+
+
+def test_exported_counts_track_inserts(spark, genome_reads, tmp_path):
+    """The registry written for a progressive filter (cli maker -r) carries
+    the pinned sizing's expected entries and a num_entries grown by every
+    iteration's new entries: above the seed's own count, at most the
+    distinct frames of a from-scratch build over seed ∪ tagged."""
+    from biobloom_spark.cli import _write_filter_dicts_as_registry
+    from biobloom_spark.operators.maker import size_filters
+    from biobloom_spark.sources.bf_format import registry_row_to_bf
 
     seeds, read_df = genome_reads
     params = BloomParams()
+    reads = read_df.select("doc_id", "text")
     filters, tagged = progressive_build(
-        spark, seeds, read_df.select("doc_id", "text"),
-        max_iterations=8, params=params,
+        spark, seeds, reads, max_iterations=8, params=params,
         scoring=ScoringConfig(method="simple", threshold=0.3),
     )
-    closure = seeds.select("doc_id", "text").unionByName(
-        read_df.join(tagged.filter(F.col("iteration") > 0), on="doc_id")
-        .select("doc_id", "text")
+    path = str(tmp_path / "progressive_registry.parquet")
+    _write_filter_dicts_as_registry(spark, filters, path)
+    row = spark.read.parquet(path).collect()[0].asDict()
+
+    union_all = seeds.unionByName(reads)
+    sizing = size_filters(
+        union_all.withColumn("__fkey", F.lit("progressive")), "__fkey", "text", params
+    )["progressive"]
+    seed_only = _pinned_build(spark, seeds, union_all, params)
+    closure = seeds.unionByName(
+        reads.join(tagged.filter(F.col("iteration") > 0).select("doc_id"), on="doc_id")
     )
-    # rebuild from scratch with the progressive run's pinned sizing
-    union_all = seeds.select("doc_id", "text").unionByName(
-        read_df.select("doc_id", "text")
-    ).withColumn("__fkey", F.lit("progressive"))
-    sizing = size_filters(union_all, "__fkey", "text", params)
-    reg = build_filters(
-        spark, closure.withColumn("__fkey", F.lit("progressive")),
-        key_col="__fkey", text_col="text", id_col="doc_id", params=params,
-        expected_sizing=sizing,
+    scratch = _pinned_build(spark, closure, union_all, params)
+    assert row["expected_entries"] == sizing["expected_entries"] > 0
+    assert seed_only["num_entries"] < row["num_entries"] <= scratch["num_entries"]
+    _bf, txt = registry_row_to_bf(row, str(tmp_path))
+    info = open(txt).read()
+    assert f"expected_num_entries={sizing['expected_entries']}" in info
+    assert f"num_entries={row['num_entries']}" in info
+
+
+def test_progressive_stops_at_fixpoint(spark, genome_reads, monkeypatch):
+    """Reads whose frames the seed already holds are tagged in iteration 1
+    and set no new bit, so the loop stops there instead of running a second
+    scoring pass that could tag nothing (the totalEntries fixpoint)."""
+    import biobloom_spark.operators.progressive as prog
+
+    seeds, _reads = genome_reads
+    toks = seeds.collect()[0]["text"].split()
+    reads = spark.createDataFrame(
+        [(f"in{i}", " ".join(toks[s : s + 40])) for i, s in enumerate((0, 20, 40))],
+        "doc_id string, text string",
     )
-    scratch = load_registry(reg)[0]
-    assert filters[0]["bitmap"] == scratch["bitmap"]
+    passes = []
+    real = prog._tag_pass
+
+    def counted(*a, **k):
+        passes.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(prog, "_tag_pass", counted)
+    params = BloomParams()
+    filters, tagged = progressive_build(
+        spark, seeds, reads, max_iterations=4, params=params,
+        scoring=ScoringConfig(method="simple", threshold=0.3),
+    )
+    assert len(passes) == 1
+    rows = {(r["doc_id"], r["iteration"]) for r in tagged.collect()}
+    assert rows == {("seed0", 0), ("in0", 1), ("in1", 1), ("in2", 1)}
+    seed_only = _pinned_build(spark, seeds, seeds.unionByName(reads), params)
+    assert filters[0]["bitmap"] == seed_only["bitmap"]
+    assert filters[0]["num_entries"] == seed_only["num_entries"]
+
+
+def _python_stages(sc, job_ids) -> int:
+    """Stages of these jobs that ran tasks and hold a Python UDF operator
+    (read from the stage's operator graph in Spark's status store)."""
+    import re
+
+    st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    ran = set()
+    for j in job_ids:
+        for s in st.getJobInfo(j).stageIds:
+            info = st.getStageInfo(s)
+            if info is not None and info.numCompletedTasks > 0:  # not skipped
+                ran.add(s)
+
+    def names(cluster):
+        yield cluster.name()
+        it = cluster.childClusters().iterator()
+        while it.hasNext():
+            yield from names(it.next())
+
+    python_op = re.compile(r"Pandas|Python|MapInArrow")
+    return sum(
+        any(python_op.search(n) for n in names(store.operationGraphForStage(s).rootCluster()))
+        for s in ran
+    )
 
 
 def test_progressive_lineage_stays_flat(spark, genome_reads, monkeypatch):
-    """Each iteration's matched ids are checkpointed and the unmatched
-    reads are one anti-join against their union, so iteration 3 runs the
-    same Spark jobs as iteration 2 instead of re-evaluating every earlier
-    iteration's categorize plan.  Iteration 1 categorizes the reads as
+    """Each iteration is one fused score-and-insert pass: its tagged ids
+    are checkpointed and the untagged reads are one anti-join against
+    their union, so every iteration after the first runs the same few
+    jobs with exactly one Python stage, instead of re-evaluating earlier
+    passes or rebuilding a delta filter.  Iteration 1 scores the reads as
     given, without that anti-join."""
-    import biobloom_spark.operators.categorizer as cat
+    import biobloom_spark.operators.progressive as prog
 
     seeds, read_df = genome_reads
     sc = spark.sparkContext
-    real = cat.categorize
+    real = prog._tag_pass
     iters = []
 
-    def tagged_categorize(*a, **k):
+    def marked(*a, **k):
         iters.append(f"progressive-lineage-{len(iters) + 1}")
         sc.setJobGroup(iters[-1], iters[-1])
         return real(*a, **k)
 
-    monkeypatch.setattr(cat, "categorize", tagged_categorize)
+    monkeypatch.setattr(prog, "_tag_pass", marked)
     try:
         progressive_build(
             spark, seeds, read_df.select("doc_id", "text"), max_iterations=3,
@@ -195,3 +355,6 @@ def test_progressive_lineage_stays_flat(spark, genome_reads, monkeypatch):
     jobs = [st.getJobIdsForGroup(g) for g in iters]
     assert len(iters) == 3
     assert len(jobs[2]) == len(jobs[1])
+    for later in jobs[1:]:
+        assert len(later) <= 3
+        assert _python_stages(sc, later) == 1

@@ -220,9 +220,12 @@ def q_minhash_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive duplicate-cluster collapse: LSH candidates → exact
-    verification → alternating large-star/small-star connected components
-    (Kiveris et al. 2014) → every doc labeled (cluster = min reachable doc
-    id, canonical = the survivor a keep-one dedup retains).
+    verification → connected components → every doc labeled (cluster =
+    min reachable doc id, canonical = the survivor a keep-one dedup
+    retains).  The verified edges fit the driver budget, so components
+    are labeled on the driver from one bounded collect; an edge set over
+    budget runs alternating large-star/small-star rounds (Kiveris et al.
+    2014) to the same labels.
 
     Oracle-checkable end to end because the verified pair set equals the
     exact twin (see q_minhash_lsh_dups) and the DuckDB twin computes

@@ -1,7 +1,8 @@
-"""Connected-components / dedup-cluster tests: the Spark large-star/
-small-star implementation vs a driver-side union-find oracle, plus the
-two-phase (LSH proposes, exact verifies) pipeline equivalence that makes
-the gate queries oracle-checkable."""
+"""Connected-components / dedup-cluster tests: both routes (numpy labels
+on the driver, and the Spark large-star/small-star loop forced by a zero
+driver budget) vs a driver-side union-find oracle and vs each other, plus
+the two-phase (LSH proposes, exact verifies) pipeline equivalence that
+makes the gate queries oracle-checkable."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from collections import defaultdict
 import numpy as np
 import pytest
 
+import biobloom_spark.operators.cluster as cluster
 from biobloom_spark.corpus import generate_corpus_pandas
 from biobloom_spark.operators.cluster import connected_components, dedup_clusters
 from biobloom_spark.operators.dedup import (
@@ -66,32 +68,116 @@ def _cc_spark(spark, edges):
     return {r["node"]: r["component"] for r in rows}
 
 
+def _no_star_round(*_):
+    raise AssertionError("star round on an edge set within the driver budget")
+
+
+def _force(monkeypatch, route):
+    """Pin ``connected_components`` to one route: ``star`` zeroes the
+    driver budget; ``driver`` makes any star round fail the test."""
+    if route == "star":
+        monkeypatch.setattr(cluster, "_driver_edge_cap", lambda spark: 0)
+    else:
+        monkeypatch.setattr(cluster, "_large_star", _no_star_round)
+
+
+@pytest.fixture(params=["driver", "star"])
+def route(request, monkeypatch):
+    _force(monkeypatch, request.param)
+    return request.param
+
+
+def _random_graphs():
+    """The graphs ``test_random_graphs_match_union_find`` draws."""
+    rng = random.Random(0xC0FFEE)
+    for _ in range(4):
+        n = rng.randrange(10, 60)
+        m = rng.randrange(5, 80)
+        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+        yield [(a, b) for a, b in edges if a != b]
+
+
+def _giant_component(n=1200, seed=5):
+    """A random spanning tree over n shuffled, spread-out ids plus extra
+    chords: one component of n nodes whose minimum is not a tree root."""
+    rng = random.Random(seed)
+    ids = rng.sample(range(10**6), n)
+    edges = [(ids[i], ids[rng.randrange(i)]) for i in range(1, n)]
+    edges += [(rng.choice(ids), rng.choice(ids)) for _ in range(n // 4)]
+    return edges
+
+
+# (SQL id type, edges): every shape the two routes must agree on
+ROUTE_CASES = {
+    "long": ("long", [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (3, 10), (20, 21)]),
+    "int": ("int", [(7, -3), (-3, 2**31 - 1), (5, 6), (6, 5), (9, 9)]),
+    # code-point (= UTF-8 byte) order, not UTF-16 or locale order:
+    # U+FF21 < U+1D538 though its UTF-16 lead unit is larger, "Z" < "a" < "é"
+    "string": (
+        "string",
+        [("b", "a"), ("c", "b"), ("x", "y"), ("é", "z"), ("z", "Z"),
+         ("\uff21", "\U0001d538"), ("日本", "中文"), ("中文", "ß")],
+    ),
+    "chain200": ("long", [(i + 1, i) for i in range(199)]),
+    "giant": ("long", _giant_component()),
+    "empty": ("long", []),
+    **{f"random{i}": ("long", edges) for i, edges in enumerate(_random_graphs())},
+}
+
+
+def test_driver_budget_follows_max_result_size(spark):
+    """The route's budget comes from session conf alone: 1/16 of
+    spark.driver.maxResultSize (unset here, so the 1g default) at 16 B
+    per edge."""
+    assert cluster._driver_edge_cap(spark) == (1 << 30) // 16 // 16
+
+
+@pytest.mark.parametrize("case", ROUTE_CASES)
+def test_routes_return_identical_rows_and_schema(spark, monkeypatch, case):
+    """The driver route and the forced star route return the same
+    (node, component) rows, and the same schema: both columns of the id
+    type, nullable, as the star loop's union emits them."""
+    id_type, edges = ROUTE_CASES[case]
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    got = {}
+    for r in ("driver", "star"):
+        with monkeypatch.context() as m:
+            _force(m, r)
+            out = connected_components(pairs)
+            got[r] = (out.schema, sorted(out.collect()))
+    assert got["driver"] == got["star"]
+    schema, rows = got["driver"]
+    assert schema == spark.createDataFrame([], f"node {id_type}, component {id_type}").schema
+    want = _union_find_labels([(a, b) for a, b in edges if a != b])
+    assert dict(rows) == want
+    assert len(rows) == len(want)
+
+
 class TestConnectedComponents:
     def test_two_triangles_and_bridge(self, spark):
         edges = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (3, 10), (20, 21)]
         assert _cc_spark(spark, edges) == _union_find_labels(edges)
 
-    def test_long_chain_converges_in_log_rounds(self, spark):
+    def test_long_chain_converges_in_log_rounds(self, spark, monkeypatch):
         # a 64-node path: naive min-propagation needs 63 rounds; the
         # star algorithm must finish well inside max_iter=12
+        _force(monkeypatch, "star")
         edges = [(i, i + 1) for i in range(63)]
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         rows = connected_components(df, max_iter=12).collect()
         assert {r["component"] for r in rows} == {0}
         assert {r["node"] for r in rows} == set(range(64))
 
+    def test_star_loop_raises_when_rounds_run_out(self, spark, monkeypatch):
+        _force(monkeypatch, "star")
+        df = spark.createDataFrame([(i, i + 1) for i in range(63)], "id_a long, id_b long")
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            connected_components(df, max_iter=1)
+
     def test_random_graphs_match_union_find(self, spark):
-        rng = random.Random(0xC0FFEE)
-        for _ in range(4):
-            n = rng.randrange(10, 60)
-            m = rng.randrange(5, 80)
-            edges = [
-                (rng.randrange(n), rng.randrange(n)) for _ in range(m)
-            ]
-            edges = [(a, b) for a, b in edges if a != b]
-            if not edges:
-                continue
-            assert _cc_spark(spark, edges) == _union_find_labels(edges)
+        for edges in _random_graphs():
+            if edges:
+                assert _cc_spark(spark, edges) == _union_find_labels(edges)
 
     def test_string_ids(self, spark):
         edges = [("b", "a"), ("c", "b"), ("x", "y")]
@@ -240,3 +326,44 @@ class TestBucketPairs:
         want = _local_lsh_pairs(keys, texts, w=3, num_perm=128, bands=32)
         assert set(got) == want
         assert len(want) >= 30 * 29 // 2 + 1
+
+
+class TestLazyUnionInputs:
+    """A lazy union whose sides have different partition counts, fed
+    straight into LSH → exact verify → dedup_clusters on both routes.
+    (Such a union once failed in the star loop's first localCheckpoint
+    with "Can't zip RDDs with unequal numbers of partitions"; it is
+    kept as a guard.)"""
+
+    @pytest.fixture(scope="class")
+    def halves(self, spark, tmp_path_factory):
+        """60 corpus docs and 3 planted dups: 100 copies doc 0, 101 is
+        doc 0 with one token changed, 102 copies doc 1."""
+        texts = list(generate_corpus_pandas(60, seed=31, langs=("en", "de"), mean_tokens=60)["text"])
+        toks = texts[0].split()
+        toks[5] = "MUTATED"
+        dups = [(100, texts[0]), (101, " ".join(toks)), (102, texts[1])]
+        schema = "doc_id long, text string"
+        base = spark.createDataFrame(list(enumerate(texts)), schema)
+        planted = spark.createDataFrame(dups, schema)
+        root = tmp_path_factory.mktemp("lazy_union")
+        base.write.parquet(str(root / "base"))
+        planted.write.parquet(str(root / "planted"))
+        return base, planted, str(root)
+
+    @pytest.mark.parametrize("shape", ["parquet", "frames"])
+    def test_union_of_unequal_partitionings(self, spark, halves, route, shape):
+        base, planted, root = halves
+        if shape == "parquet":
+            docs = spark.read.parquet(f"{root}/base").coalesce(4).union(
+                spark.read.parquet(f"{root}/planted").repartition(8)
+            )
+        else:
+            docs = base.repartition(4).union(planted.repartition(8))
+        cand = minhash_lsh_pairs(
+            docs, w=3, num_perm=128, bands=64, threshold=0.5, verify=False
+        )
+        pairs = exact_jaccard_on_pairs(docs, cand, w=3, threshold=0.5)
+        got = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(docs, pairs).collect()}
+        planted_clusters = {100: 0, 101: 0, 102: 1}
+        assert got == {i: planted_clusters.get(i, i) for i in [*range(60), 100, 101, 102]}

@@ -221,8 +221,8 @@ def test_connected_components_rounds_are_bucket_joins(spark):
     equi-joins (no cartesian), bounded exchanges — the per-round cost the
     O(log^2 n) convergence multiplies.
 
-    Measured on the shape production executes: ``connected_components``
-    localCheckpoints the edge set every round, so a round's lineage
+    Measured on the shape production executes: ``connected_components``'
+    star route localCheckpoints the edge set every round, so a round's lineage
     starts at a checkpoint.  (The static plan string of the
     un-checkpointed composite inlines the upstream subtree once per
     reference and over-counts wildly — 25+ nodes for the same 9 executed
@@ -244,6 +244,32 @@ def test_connected_components_rounds_are_bucket_joins(spark):
     # here multiplies per ROUND, so pin an upper bound on what executes
     assert n_shuffles <= 10, (n_shuffles, executed)
     assert "CartesianProduct" not in executed
+
+
+def test_small_edge_set_skips_star_rounds(spark, monkeypatch):
+    """An edge set within the session's driver budget is labeled from one
+    bounded collect: no star round runs, and the whole call, result
+    included, takes at most 3 Spark jobs (the star loop takes two per
+    round plus its first checkpoint and probe).  Job counts do not
+    depend on the host, so this is a gate, not a timing."""
+    import biobloom_spark.operators.cluster as cluster
+
+    def no_star_round(*_):
+        raise AssertionError("star round on an edge set within the driver budget")
+
+    monkeypatch.setattr(cluster, "_large_star", no_star_round)
+    pairs = spark.range(300).selectExpr("id AS id_a", "id DIV 3 AS id_b")
+    sc = spark.sparkContext
+    group = "cc-small-edge-set"
+    sc.setJobGroup(group, group)
+    try:
+        rows = cluster.connected_components(pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert {r["node"]: r["component"] for r in rows} == {i: 0 for i in range(300)}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
 def test_stratified_sample_uses_window_group_limit(spark, pq_corpus):

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from ..config import MULTI_MATCH, NO_MATCH, CategorizerConfig
 from ..functions.text import batch_frames, flat_dust_mask
+from ..session import local_frame
 from ..sketch import BloomSketch
 from ..sketch.hashing import km_probe
 from .scoring import SegmentedBatch, score_batch
@@ -729,11 +730,7 @@ def summarize(
         rows.append((fid, hits, uniq, hits - uniq, hits / total, uniq / total, (hits - uniq) / total))
     rows.append((MULTI_MATCH, int(g["multi"]), int(g["multi"]), 0, g["multi"] / total, g["multi"] / total, 0.0))
     rows.append((NO_MATCH, int(g["nomatch"]), int(g["nomatch"]), 0, g["nomatch"] / total, g["nomatch"] / total, 0.0))
-    spark = result.sparkSession
-    return spark.createDataFrame(
-        rows,
-        _SUMMARY_SCHEMA,
-    )
+    return local_frame(result.sparkSession, rows, _SUMMARY_SCHEMA)
 
 
 _SUMMARY_SCHEMA = T.StructType(
@@ -780,7 +777,7 @@ def _summarize_exploded(result: DataFrame, filter_ids: list[str]) -> DataFrame:
     for special in (MULTI_MATCH, NO_MATCH):
         n = counts.get(f"a:{special}", 0)
         rows.append((special, n, n, 0, n / total, n / total, 0.0))
-    return result.sparkSession.createDataFrame(rows, _SUMMARY_SCHEMA)
+    return local_frame(result.sparkSession, rows, _SUMMARY_SCHEMA)
 
 
 def summarize_fused(
@@ -870,10 +867,7 @@ def summarize_fused(
         rows.append(
             (fid, hits, uniq, shared, hits / total, uniq / total, shared / total)
         )
-    return spark.createDataFrame(
-        rows,
-        _SUMMARY_SCHEMA,
-    )
+    return local_frame(spark, rows, _SUMMARY_SCHEMA)
 
 
 def write_demultiplexed_reads(

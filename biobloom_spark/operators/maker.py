@@ -15,16 +15,21 @@ Spark lifecycle here:
    No sizing pre-scan: the reference's calcExpectedEntries counts every
    k-mer occurrence (BloomFilterGenerator.h:108-141) and that exact count
    rides along per slice, so sizing happens where the data already is.
-2. **Segmented merge** — one reducer per (key, slice): sorted-set union of
-   the slice's hash blobs, slice bitmap sized from the slice's own insert
-   total (published formulas, BloomFilterInfo.h:57-76), sequential
-   fastrange + reduceat-OR scatter.  Merge parallelism is keys × S; no
-   single-reducer 10^7-hash sort/scatter hotspot.
+2. **Segmented merge** — one reduce group per (key, slice): sorted-set
+   union of the slice's hash blobs, slice bitmap sized from the slice's
+   own insert total (published formulas, BloomFilterInfo.h:57-76),
+   sequential fastrange + reduceat-OR scatter.  Merge parallelism is
+   keys × S; no single-reducer 10^7-hash sort/scatter hotspot.
 3. **Assembly** — one row per filter: memcpy the S slices into the final
    bitmap, compute registry stats, attach the slice word-offset table
    (storeFilter/printInfoFile analog, BloomFilterGenerator.cpp:71,
    BloomFilterInfo.cpp:81-116); per-partition lineage rows make a killed
    job resume from completed partitions (SURVEY.md §7.3).
+
+Stages 2 and 3 are each one exchange plus one sorted ``mapInPandas`` walk
+(``_sorted_map``) that finds group boundaries with numpy and runs the
+group kernel per boundary run — not a per-group ``applyInPandas``, whose
+Arrow/pandas round trip per group dominated many-filter builds.
 
 At 100 TB: the corpus is read once and never shuffled; everything that
 moves is sketch-sized.
@@ -367,8 +372,62 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
     return fn
 
 
+def _sorted_map(df: DataFrame, key_cols, group_fn, schema) -> DataFrame:
+    """Grouped map as one sorted walk: ``repartition(*key_cols)
+    .sortWithinPartitions(*key_cols).mapInPandas``, calling
+    ``group_fn(key, pdf)`` (the ``applyInPandas`` kernel contract) once per
+    run of equal ``key_cols`` values.
+
+    Same exchange and same in-partition sort as ``groupBy(*key_cols)
+    .applyInPandas``, but each task pays one Arrow/pandas round trip per
+    batch instead of one per group — at filters x slices small groups the
+    per-group round trip, not the kernel, was the stage's cost.  Group
+    boundaries come from numpy comparisons of the key columns; a group
+    that runs past the end of an Arrow batch is carried into the next, so
+    a task holds at most one group plus one batch, like ``applyInPandas``.
+    Key values must be non-NaN (NaN never equals itself, so it would split
+    its group).
+    """
+    cols = list(key_cols)
+
+    def run(batches):
+        pending: list[pd.DataFrame] = []
+        pending_key = None
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            keys = [pdf[c].to_numpy() for c in cols]
+            starts = np.zeros(n, dtype=bool)
+            for v in keys:
+                starts[1:] |= v[1:] != v[:-1]
+            first = tuple(v[0] for v in keys)
+            starts[0] = not pending or first != pending_key
+            cuts = np.flatnonzero(starts).tolist()
+            if not cuts:  # the whole batch continues the pending group
+                pending.append(pdf)
+                continue
+            out = []
+            if pending:
+                if cuts[0] > 0:
+                    pending.append(pdf.iloc[: cuts[0]])
+                out.append(group_fn(pending_key, pd.concat(pending, ignore_index=True)))
+            for a, b in zip(cuts[:-1], cuts[1:]):
+                out.append(group_fn(tuple(v[a] for v in keys), pdf.iloc[a:b]))
+            pending = [pdf.iloc[cuts[-1]:]]
+            pending_key = tuple(v[cuts[-1]] for v in keys)
+            if out:
+                yield pd.concat(out, ignore_index=True)
+        if pending:
+            yield group_fn(pending_key, pd.concat(pending, ignore_index=True))
+
+    return (
+        df.repartition(*cols).sortWithinPartitions(*cols).mapInPandas(run, schema)
+    )
+
+
 def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None):
-    """applyInPandas kernel per (filter_id, seg) group.
+    """Grouped kernel per (filter_id, seg) group (run by ``_sorted_map``).
 
     ``seg >= 0``: union the group's sorted hash blobs, size the slice from
     the group's exact insert total (or the pinned equal-split), scatter the
@@ -440,10 +499,10 @@ def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None)
 
 
 def _assemble_fn(params: BloomParams, build: BuildConfig, pinned: dict | None):
-    """applyInPandas kernel per filter: order the S slice bitmaps, memcpy
-    them into the final bitmap, compute registry stats, attach the word
-    offsets.  Pure assembly — the heavy lifting happened in parallel in
-    the slice reducers."""
+    """Grouped kernel per filter (run by ``_sorted_map``): order the S
+    slice bitmaps, memcpy them into the final bitmap, compute registry
+    stats, attach the word offsets.  Pure assembly — the heavy lifting
+    happened in parallel in the slice reducers."""
     h, bb, S = _seg_layout(params, build)
 
     def fn(key, pdf):
@@ -654,17 +713,21 @@ def build_filters(
         partials = new_partials
 
     # --- stages 2-3: segmented merge, then per-filter assembly -------------
-    # one reducer per (filter, hash-prefix slice) — merge parallelism is
-    # filters x S, each task a small sorted-set union + one sequential
+    # one reduce group per (filter, hash-prefix slice) — merge parallelism
+    # is filters x S, each group a small sorted-set union + one sequential
     # slice scatter; the per-filter assembly is memcpy + stats.  The old
     # shape (one reducer per filter doing a 10^7-hash sort + random
     # scatter) was the build's non-scaling bottleneck (BENCH.md round-2
-    # profile).
-    reduced = partials.groupBy("filter_id", "seg").applyInPandas(
-        _seg_reduce_fn(params, build, pinned), schema=PARTIAL_SCHEMA
+    # profile).  Both run as one sorted walk per task (``_sorted_map``):
+    # a per-group applyInPandas paid an Arrow/pandas round trip per group,
+    # ~10 ms each, which at filters x S groups outweighed the kernels.
+    reduced = _sorted_map(
+        partials, ("filter_id", "seg"), _seg_reduce_fn(params, build, pinned),
+        PARTIAL_SCHEMA,
     )
-    registry = reduced.groupBy("filter_id").applyInPandas(
-        _assemble_fn(params, build, pinned), schema=REGISTRY_SCHEMA
+    registry = _sorted_map(
+        reduced, ("filter_id",), _assemble_fn(params, build, pinned),
+        REGISTRY_SCHEMA,
     )
 
     if registry_path:

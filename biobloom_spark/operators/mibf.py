@@ -21,9 +21,9 @@ over the corpus partitions (zero shuffle — only sparse claim blobs move),
 ownership resolves by an associative min-tiebreak merge in one reducer
 per slot-range segment (the driver only memcpy-assembles resolved uint16
 slices — claim-cardinality data never lands on the driver), saturation is
-one lost-pair scan (``_lost_slot_scan``, a corpus pass per label group)
-with per-segment dedup, and classification is one broadcast + mapInPandas
-pass over the (much larger) query corpus.
+one lost-pair scan (``_lost_slot_scan``, a map-only corpus pass per label
+group whose rows the SAT_BIT OR consumes directly), and classification
+is one broadcast + mapInPandas pass over the (much larger) query corpus.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 from ..config import MULTI_MATCH, NO_MATCH
 from ..functions.stats import log_binom_sf
 from ..functions.text import batch_doc_shingles, batch_frames
+from ..session import local_frame
 from ..sketch.mibf import (
     ID_MASK,
     MAX_LABELS,
@@ -322,8 +323,8 @@ def build_mibf(
     3. saturation: frames whose label lost every slot mark those slots
        saturated (insertSaturation analog) — ``_lost_slot_scan`` tests
        each frame against its own label's lost-slot set from the resolve
-       stage, one corpus pass per label group, and dedups the slots per
-       segment in reducers before the driver ORs the bit.  A corpus whose
+       stage, one map-only corpus pass per label group, and the driver
+       ORs the bit into every slot the scan tasks report.  A corpus whose
        claims never collide skips this pass.
     The corpus is read twice and never shuffled; only sparse claim blobs
     move, and no claim-cardinality data structure ever lands on the
@@ -386,10 +387,15 @@ def _lost_slot_scan(
 ) -> DataFrame:
     """The saturation scan (insertSaturation, MIBFGen.hpp:196-223) of both
     ``build_mibf`` and ``mibf_store.build_mibf_store`` → DataFrame
-    (seg, slots): per slot-range segment of ``bounds``, the sorted distinct
-    int64 slots to mark saturated.  Segments with nothing to mark emit no
-    row; when no claim lost its slot (disjoint label vocabularies) there
-    are no groups and the corpus is not scanned at all.
+    (seg, slots): per scan task and slot-range segment of ``bounds``, the
+    sorted distinct int64 slots that task found saturated.  Segments with
+    nothing to mark emit no row; when no claim lost its slot (disjoint
+    label vocabularies) there are no groups and the result is an empty
+    local relation — the corpus is not scanned at all.  A segment may
+    have rows from several tasks or legs, and their slots may overlap:
+    both consumers (``MIBFSketch.apply_saturation`` and the store's
+    ``finalize`` cogroup) OR ``SAT_BIT`` into every row's slots, which is
+    idempotent, so no dedup reducer (and no exchange) runs here.
 
     A frame is saturated iff its label lost EVERY probe slot.  Each probed
     slot was claimed by the frame's label in the claims pass, so 'lost' ==
@@ -399,8 +405,8 @@ def _lost_slot_scan(
     whose lost sets total at most ``budget`` bytes at 8 B per slot; each
     group is one mapInPandas leg over ``base`` filtered to its labels,
     broadcasting only that group's sets.  Frames never span legs, so no
-    row surrogate, stitch or pin is needed; the legs union into one
-    per-segment dedup reducer.
+    row surrogate, stitch or pin is needed; the result is the plain union
+    of the legs.
 
     ``lost_payloads()`` yields the resolve stage's packed ``lost`` values.
     It is read once to size the groups and once per group, so the driver
@@ -429,7 +435,7 @@ def _lost_slot_scan(
         groups[-1].append(li)
         used += 8 * sizes[li]
     if not groups:
-        return spark.createDataFrame([], _SAT_SCHEMA)
+        return local_frame(spark, [], _SAT_SCHEMA)
     probe = MIBFSketch(
         m_slots, h, w, [], np.zeros(0, dtype=np.uint16), seeds, family, canonical
     )
@@ -478,18 +484,10 @@ def _lost_slot_scan(
             run, schema=_SAT_SCHEMA
         )
 
-    def dedup(key, pdf):
-        u = np.unique(
-            np.concatenate(
-                [np.frombuffer(bytes(p), dtype=np.int64) for p in pdf["slots"]]
-            )
-        )
-        return pd.DataFrame({"seg": [int(key[0])], "slots": [u.tobytes()]})
-
     scan = leg(groups[0])
     for g in groups[1:]:
         scan = scan.unionByName(leg(g))
-    return scan.groupBy("seg").applyInPandas(dedup, schema=_SAT_SCHEMA)
+    return scan
 
 
 def _sketch_meta(sketch: MIBFSketch) -> tuple:

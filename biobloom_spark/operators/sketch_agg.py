@@ -16,15 +16,19 @@ Shape (the UDAF pattern used everywhere in this engine):
    shuffle; the corpus is read once and never leaves its partitions, and
    the partial count is O(partitions x keys) — independent of corpus
    rows, so a hot key's merge group does NOT grow with corpus size.
-2. Salted two-level ``applyInPandas`` merge — partials carry a
-   deterministic ``salt = partition_id % fanout`` (fanout ~
-   sqrt(n_partitions) by default), so level 1 merges ``(key, salt)``
-   groups of <= n_partitions/fanout rows and level 2 merges the fanout
-   survivors per key.  No single reducer ever receives more than
-   ~sqrt(n_partitions) sketch rows for any key, however skewed the key
-   distribution.  Only sketch-sized rows ride either exchange (HLL 2^p
-   registers, CMS w*d counters, KLL/TD compactor state: KBs per key
-   against a corpus of any size).
+2. ``applyInPandas`` merge, one level while partials are few, salted two
+   levels past that.  Partials carry a deterministic ``salt =
+   partition_id % fanout``.  The default fanout (``_default_fanout``) is
+   1 — one merge per key — while a key's partial rows (n_partitions x
+   the HLL + CMS row bytes, ~344 KB each at the defaults) fit
+   ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: up to 195
+   partitions at the 64 MiB default.  Past that it is ~sqrt(n_partitions):
+   level 1 merges ``(key, salt)`` groups of <= n_partitions/fanout rows
+   and level 2 merges the fanout survivors per key, so no single reducer
+   receives more than ~sqrt(n_partitions) sketch rows for any key,
+   however skewed the key distribution.  Only sketch-sized rows ride
+   either exchange (HLL 2^p registers, CMS w*d counters, KLL/TD
+   compactor state: KBs per key against a corpus of any size).
 
 Memory note: a task holds one sketch set (~hundreds of KB at the default
 parameters) per distinct key it sees.  For low-cardinality keys (lang,
@@ -226,10 +230,12 @@ def sketch_by_key(
 
     ``merge_fanout`` bounds any single merge task's input to roughly
     n_partitions / fanout sketch rows via a deterministic two-level salted
-    merge; the default ~sqrt(n_partitions) balances the two levels.  Pass
-    1 to force a single-level merge (small inputs / tests).  HLL and CMS
-    results are bit-identical under every fanout (commutative merges);
-    the quantile sketches stay inside their published bounds.
+    merge.  The default merges in one level while a key's partial rows
+    fit the session's AQE advisory partition size, and uses
+    ~sqrt(n_partitions) (balancing the two levels) above it — see
+    ``_default_fanout``.  Pass 1 to force a single-level merge.  HLL and
+    CMS results are bit-identical under every fanout (commutative
+    merges); the quantile sketches stay inside their published bounds.
 
     Null keys/texts are dropped (same contract as ``build_filters``).
     """
@@ -239,10 +245,7 @@ def sketch_by_key(
 
     ensure_workers(docs.sparkSession)
     if merge_fanout is None:
-        import math
-
-        n_parts = docs.rdd.getNumPartitions()
-        merge_fanout = max(1, math.isqrt(max(int(n_parts), 1)))
+        merge_fanout = _default_fanout(docs, sketch_params)
     part = _partials_df(
         docs, key_col, text_col, distinct, shingle_w, merge_fanout,
         sketch_params=sketch_params,
@@ -250,18 +253,35 @@ def sketch_by_key(
     return _merge_partials(part, merge_fanout, sketch_params)
 
 
-def _default_fanout(docs: DataFrame) -> int:
+def _default_fanout(docs: DataFrame, sketch_params: tuple | None = None) -> int:
+    """The merge fanout when the caller passes none — the one place it is
+    decided.  1 (a single merge level) while one key's partial rows,
+    ``n_parts`` x the fixed row bytes of the resolved ``sketch_params``
+    (HLL registers + CMS counters), fit the session's
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: a reducer then
+    takes no more than one AQE target partition per key, and a second
+    level would only add a Python stage.  At the defaults (~344 KB a row,
+    64 MiB) that is up to 195 partitions.  Above it, ~sqrt(n_parts), so
+    neither level's merge groups exceed ~sqrt(n_parts) rows."""
     import math
 
-    n_parts = docs.rdd.getNumPartitions()
-    return max(1, math.isqrt(max(int(n_parts), 1)))
+    spark = docs.sparkSession
+    n_parts = max(int(docs.rdd.getNumPartitions()), 1)
+    p, w, d = _resolve_params(sketch_params)
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    if n_parts * (2**p + 8 * w * d) <= advisory:
+        return 1
+    return math.isqrt(n_parts)
 
 
 def _merge_partials(
     part: DataFrame, merge_fanout: int, sketch_params: tuple | None = None
 ) -> DataFrame:
-    """The salted two-level merge tail shared by the one-shot and
-    checkpointed builds (partials → one sketch-row per key)."""
+    """The merge tail shared by the one-shot and checkpointed builds
+    (partials → one sketch-row per key): one level at ``merge_fanout``
+    1, the salted two levels above it."""
     if merge_fanout > 1:
         part = part.groupBy("key", "salt").applyInPandas(
             _merge_fn(keep_salt=True, sketch_params=sketch_params), _PARTIAL_SCHEMA
@@ -295,9 +315,10 @@ def sketch_by_key_checkpointed(
     checkpointed row and appends them.  A companion
     ``<partials_path>_lineage`` parquet records one row per (partition,
     key) with the exact doc/token counters — the per-partition lineage +
-    metrics the rule names.  The final salted two-level merge always runs
-    from the (cheap, sketch-sized) checkpoint, so the merged result is the
-    same DataFrame ``sketch_by_key`` would have produced.
+    metrics the rule names.  The final merge (one level or salted two,
+    as in ``sketch_by_key``) always runs from the (cheap, sketch-sized)
+    checkpoint, so the merged result is the same DataFrame
+    ``sketch_by_key`` would have produced.
 
     Resume safety follows ``build_filters``: the checkpoint carries a
     fingerprint over the input snapshot (``snapshot_id`` or the scan's
@@ -319,7 +340,7 @@ def sketch_by_key_checkpointed(
     ensure_workers(spark)
     job_id = job_id or uuid.uuid4().hex[:12]
     if merge_fanout is None:
-        merge_fanout = _default_fanout(docs)
+        merge_fanout = _default_fanout(docs, sketch_params)
 
     n_parts = docs.rdd.getNumPartitions()
     snap = snapshot_id or ";".join(sorted(docs.inputFiles()))

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import BloomParams
+from ..session import local_frame
 
 __all__ = ["sketch_error_report"]
 
@@ -192,4 +193,4 @@ def sketch_error_report(
                 round(cms_over, 9),
             )
         )
-    return spark.createDataFrame(rows, _REPORT_SCHEMA)
+    return local_frame(spark, rows, _REPORT_SCHEMA)

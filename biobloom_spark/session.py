@@ -61,6 +61,28 @@ def ensure_workers(spark: SparkSession) -> None:
     _SHIPPED.add(app_id)
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """Driver-side rows → a DataFrame over a ``LocalRelation``.
+
+    ``spark.createDataFrame(list_of_tuples, schema)`` plans a
+    ``LogicalRDD`` over a Python RDD, so every action on a 10-row summary
+    runs a Python stage (~0.4 s); so does a pandas frame when Arrow is
+    off or the frame is empty.  An Arrow table with ``schema``'s Arrow
+    twin becomes a ``LocalRelation`` in every case: it collects with no
+    job and keeps ``schema`` exactly, nullability included.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table)
+
+
 def pin_rows(df, pin: bool = True):
     """Materialize a DataFrame once so multi-pass evaluation sees ONE row
     set with stable surrogate ids.

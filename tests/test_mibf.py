@@ -51,6 +51,40 @@ def _saturation_corpus(spark, request, name):
     return df, {"shingle_w": TestHashFamilies.K, "hash_family": "nthash"}
 
 
+def _saturation_reference(df, kw):
+    """(reference sketch, frame count, lost-set bytes per label) of a
+    saturation corpus, all in local numpy: ownership from
+    ``MIBFSketch.from_claims``, saturation from ``lost_elements`` per
+    label, sized as ``build_mibf(occupancy=0.5, expected_entries=frames)``."""
+    from biobloom_spark.functions.text import batch_frames
+
+    w, family = kw.get("shingle_w", 3), kw.get("hash_family", "poly")
+    rows = df.select("lang", "text").collect()
+    labels = sorted({r["lang"] for r in rows})
+    pos_by: dict[int, np.ndarray] = {}
+    for li, lab in enumerate(labels, start=1):
+        texts = np.array([r["text"] for r in rows if r["lang"] == lab])
+        pos_by[li] = batch_frames(texts, w, {}, hash_family=family)[0]
+    n_frames = sum(f.size for f in pos_by.values())
+    m_slots = mibf_size_slots(n_frames, 3, 0.5)
+    probe = MIBFSketch(m_slots, 3, w, [], np.zeros(0, dtype=np.uint16),
+                       hash_family=family)
+    acc = MIBFClaims()
+    for li in pos_by:
+        pos_by[li] = probe.positions_for(pos_by[li])
+        acc = acc.merge(MIBFClaims.from_positions(pos_by[li], li))
+    ref = MIBFSketch.from_claims(acc, m_slots, 3, w, labels, hash_family=family)
+    lost_bytes = []
+    for li, pos in pos_by.items():
+        lost_bytes.append(
+            8 * int(((ref.ids[np.unique(pos)] & ID_MASK) != li).sum())
+        )
+        lost = ref.lost_elements(pos, li)
+        ref.apply_saturation(pos[:, lost].ravel())
+    assert ref.saturation_rate() > 0  # the scan has real work
+    return ref, n_frames, lost_bytes
+
+
 @pytest.fixture(scope="module")
 def labeled_corpus(spark):
     rng = np.random.default_rng(5)
@@ -891,34 +925,11 @@ class TestLostPairSaturation:
         array, and two thirds of the lost sets' total (groups of one and of
         two labels side by side); the scan's plan has one MapInPandas leg
         per label group."""
-        from biobloom_spark.functions.text import batch_frames
         from biobloom_spark.operators import mibf as M
 
         df, kw = _saturation_corpus(spark, request, corpus)
-        w, family = kw.get("shingle_w", 3), kw.get("hash_family", "poly")
-        rows = df.select("lang", "text").collect()
-        labels = sorted({r["lang"] for r in rows})
-        pos_by: dict[int, np.ndarray] = {}
-        for li, lab in enumerate(labels, start=1):
-            texts = np.array([r["text"] for r in rows if r["lang"] == lab])
-            pos_by[li] = batch_frames(texts, w, {}, hash_family=family)[0]
-        n_frames = sum(f.size for f in pos_by.values())
-        m_slots = mibf_size_slots(n_frames, 3, 0.5)
-        probe = MIBFSketch(m_slots, 3, w, [], np.zeros(0, dtype=np.uint16),
-                           hash_family=family)
-        acc = MIBFClaims()
-        for li in pos_by:
-            pos_by[li] = probe.positions_for(pos_by[li])
-            acc = acc.merge(MIBFClaims.from_positions(pos_by[li], li))
-        ref = MIBFSketch.from_claims(acc, m_slots, 3, w, labels, hash_family=family)
-        lost_bytes = []
-        for li, pos in pos_by.items():
-            lost_bytes.append(
-                8 * int(((ref.ids[np.unique(pos)] & ID_MASK) != li).sum())
-            )
-            lost = ref.lost_elements(pos, li)
-            ref.apply_saturation(pos[:, lost].ravel())
-        assert ref.saturation_rate() > 0  # the scan has real work
+        ref, n_frames, lost_bytes = _saturation_reference(df, kw)
+        m_slots = ref.m_slots
 
         cap = {
             "ids_third": 2 * m_slots // 3,
@@ -947,3 +958,42 @@ class TestLostPairSaturation:
         assert sk.serialize() == ref.serialize()
         plan = scans[0]._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count("MapInPandas") == groups
+
+    @pytest.mark.parametrize("corpus", ["identical", "shared", "nthash"])
+    def test_saturation_scan_is_map_only(
+        self, spark, request, monkeypatch, tmp_path, corpus
+    ):
+        """The saturation scan is the union of its map-only legs — no
+        Exchange and no per-segment dedup reducer — because both consumers
+        OR ``SAT_BIT`` idempotently over overlapping rows.  The ids of
+        ``build_mibf`` and of the ``build_mibf_store`` segments both equal
+        the local reference."""
+        from biobloom_spark.operators import mibf as M
+        from biobloom_spark.operators import mibf_store as MS
+
+        df, kw = _saturation_corpus(spark, request, corpus)
+        ref, n_frames, _lost = _saturation_reference(df, kw)
+        scans = []
+        real = M._lost_slot_scan
+
+        def spy(*a, **k):
+            scans.append(real(*a, **k))
+            return scans[-1]
+
+        monkeypatch.setattr(M, "_lost_slot_scan", spy)
+        monkeypatch.setattr(MS, "_lost_slot_scan", spy)
+        sk = M.build_mibf(
+            spark, df, key_col="lang", occupancy=0.5, expected_entries=n_frames,
+            **kw,
+        )
+        store = MS.build_mibf_store(
+            spark, df, str(tmp_path / "store"), key_col="lang", occupancy=0.5,
+            expected_entries=n_frames, min_segments=3, segment_bytes=1, **kw,
+        )
+        assert len(scans) == 2
+        for scan in scans:
+            plan = scan._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan
+            assert "FlatMapGroupsInPandas" not in plan, plan
+        np.testing.assert_array_equal(sk.ids, ref.ids)
+        np.testing.assert_array_equal(store.to_sketch(spark).ids, ref.ids)

@@ -74,14 +74,17 @@ def test_build_shuffles_only_partials(spark, pq_corpus):
     """The Bloom build never moves the corpus: the partial pass is a
     map-side ``MapInPandas`` straight over the scan, and the plan's only
     two exchanges carry sketch-sized partial rows — (filter_id, seg) into
-    the slice reducers, then filter_id into the per-filter assembly."""
+    the slice reducers, then filter_id into the per-filter assembly.  Both
+    reducers are sorted ``MapInPandas`` walks (``_sorted_map``), not
+    per-group ``FlatMapGroupsInPandas``."""
     from biobloom_spark.plans import plan_string
 
     reg = build_filters(spark, pq_corpus, id_col="url")
     assert count_exchanges(reg) == 2, count_exchanges(reg)
     plan = plan_string(reg, "simple")
-    assert plan.count("MapInPandas") == 1, plan
-    below_map = plan[plan.index("MapInPandas"):]
+    assert plan.count("MapInPandas") == 3, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    below_map = plan[plan.rindex("MapInPandas"):]
     assert "FileScan" in below_map, plan
     assert "Exchange" not in below_map[:below_map.index("FileScan")], plan
 
@@ -307,3 +310,141 @@ def test_resume_skip_keeps_arrow_scan(spark, pq_corpus):
     )
     all_parts = {r["part_id"] for r in full.select("part_id").distinct().collect()}
     assert parts == all_parts - {0}
+
+
+def _jobs_to_collect(df, group: str) -> tuple[list, int]:
+    """(rows, Spark jobs run) of one ``collect`` under its own job group."""
+    sc = df.sparkSession.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def lang_web_partials(spark):
+    """Build partials of an 8-language corpus with shared vocabulary (the
+    benchmark's ``lang-web`` shape), materialized once so every reducer
+    under test reads the same rows."""
+    from pyspark.sql import functions as F
+
+    from biobloom_spark.config import BuildConfig
+    from biobloom_spark.corpus import generate_corpus
+    from biobloom_spark.operators.maker import _build_partition_fn
+    from biobloom_spark.sources.tables import PARTIAL_SCHEMA
+
+    docs = generate_corpus(spark, 300, seed=701, num_partitions=4)
+    part_fn = _build_partition_fn(
+        BloomParams(), BuildConfig(), "text", "filter_id", None, None
+    )
+    return (
+        docs.select(F.col("lang").alias("filter_id"), "text")
+        .mapInPandas(part_fn, schema=PARTIAL_SCHEMA)
+        .localCheckpoint(eager=True)
+    )
+
+
+def test_sorted_map_matches_apply_in_pandas(spark, lang_web_partials):
+    """``_sorted_map`` runs a grouped kernel exactly as ``groupBy(...)
+    .applyInPandas`` does: the same rows for the slice reduce and for the
+    per-filter assembly.  Two- and three-row Arrow batches make most
+    groups span batches, so the carried-group path runs both with and
+    without a batch that opens on a group's tail; an empty input yields
+    no rows."""
+    from biobloom_spark.config import BuildConfig
+    from biobloom_spark.operators.maker import (
+        _assemble_fn,
+        _seg_reduce_fn,
+        _sorted_map,
+    )
+    from biobloom_spark.sources.tables import PARTIAL_SCHEMA, REGISTRY_SCHEMA
+
+    params, build = BloomParams(), BuildConfig()
+    seg_key, fid_key = ("filter_id", "seg"), ("filter_id",)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    try:
+        for batch, partials in (
+            ("2", lang_web_partials),
+            ("3", lang_web_partials),
+            ("2", lang_web_partials.limit(0)),
+        ):
+            spark.conf.set(key, batch)
+            seg_fn = _seg_reduce_fn(params, build, None)
+            walked = _sorted_map(partials, seg_key, seg_fn, PARTIAL_SCHEMA)
+            grouped = partials.groupBy(*seg_key).applyInPandas(seg_fn, PARTIAL_SCHEMA)
+            reduced = sorted(tuple(r) for r in walked.collect())
+            assert reduced == sorted(tuple(r) for r in grouped.collect())
+            asm_fn = _assemble_fn(params, build, None)
+            reg_walked = _sorted_map(walked, fid_key, asm_fn, REGISTRY_SCHEMA)
+            reg_grouped = walked.groupBy(*fid_key).applyInPandas(asm_fn, REGISTRY_SCHEMA)
+            registry = sorted(tuple(r) for r in reg_walked.collect())
+            assert registry == sorted(tuple(r) for r in reg_grouped.collect())
+            if partials is lang_web_partials:
+                assert len({r[0] for r in reduced}) == 8  # 8 languages
+                assert len(registry) == 8
+            else:
+                assert reduced == [] and registry == []
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize(
+    "which", ["summarize", "summarize_exploded", "summarize_fused",
+              "sketch_error_report", "sketch_error_report_empty"],
+)
+def test_summaries_are_local_relations(spark, pq_corpus, which):
+    """Driver-assembled summaries come back as a ``LocalRelation``:
+    collecting one runs no Spark job, and the schema, nullability
+    included, is the declared one.  (A ``createDataFrame`` over Python
+    tuples plans a Python RDD instead: one Python stage per action.)"""
+    from biobloom_spark.operators.categorizer import (
+        _SUMMARY_SCHEMA,
+        summarize,
+        summarize_fused,
+    )
+    from biobloom_spark.operators.sketch_audit import (
+        _REPORT_SCHEMA,
+        sketch_error_report,
+    )
+
+    if which.startswith("sketch_error_report"):
+        docs = pq_corpus.limit(0) if which.endswith("_empty") else pq_corpus
+        df = sketch_error_report(spark, docs, key_col="lang", id_col="url")
+        schema, n_rows = _REPORT_SCHEMA, 0 if which.endswith("_empty") else 2
+    else:
+        flt = load_registry(build_filters(spark, pq_corpus, id_col="url"))
+        ids = [f["filter_id"] for f in flt]
+        if which == "summarize_fused":
+            df = summarize_fused(spark, pq_corpus, flt, id_col="url")
+        else:
+            res = categorize(spark, pq_corpus, flt, id_col="url")
+            threshold = 0 if which == "summarize_exploded" else 10**9
+            df = summarize(res, ids, explode_threshold=threshold)
+        schema, n_rows = _SUMMARY_SCHEMA, len(ids) + 2
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    rows, jobs = _jobs_to_collect(df, f"local-relation-{which}")
+    assert jobs == 0
+    assert len(rows) == n_rows
+    assert df.schema == schema
+
+
+def test_local_frame_empty_rows(spark):
+    """No rows (the saturation scan's result when no claim lost its slot)
+    still gives a ``LocalRelation`` with the declared schema."""
+    from biobloom_spark.operators.mibf import _SAT_SCHEMA
+    from biobloom_spark.session import local_frame
+
+    df = local_frame(spark, [], _SAT_SCHEMA)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    assert _jobs_to_collect(df, "local-frame-empty") == ([], 0)
+    assert df.schema == _SAT_SCHEMA

@@ -92,6 +92,39 @@ class TestSketchByKey:
             assert a[k]["n_docs"] == b[k]["n_docs"] == c[k]["n_docs"]
             assert a[k]["n_tokens"] == b[k]["n_tokens"] == c[k]["n_tokens"]
 
+    def test_merge_route_follows_advisory_size(self, spark, corpus):
+        """The default merge is one level while a key's partial rows fit
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` and the salted
+        two levels past it.  Forcing two levels (a 1-byte advisory size)
+        keeps the HLL and CMS bytes identical and the quantile sketches
+        inside their published bounds."""
+        from biobloom_spark.plans import plan_string
+
+        four = corpus.repartition(4)
+        one = sketch_by_key(four, key_col="lang")
+        assert plan_string(one, "simple").count("FlatMapGroupsInPandas") == 1
+        a = _rows(one)
+        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, "1")
+        try:
+            two = sketch_by_key(four, key_col="lang")
+            assert plan_string(two, "simple").count("FlatMapGroupsInPandas") == 2
+            b = _rows(two)
+            report = sketch_bounds_report(spark, four, key_col="lang").collect()
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
+        assert a.keys() == b.keys() == {r["key"] for r in report}
+        for k in a:
+            assert bytes(a[k]["hll"]) == bytes(b[k]["hll"])
+            assert bytes(a[k]["cms"]) == bytes(b[k]["cms"])
+            assert a[k]["n_docs"] == b[k]["n_docs"]
+        for r in report:
+            assert r["kll_ok"] and r["tdigest_ok"], r
+
     def test_counters_exact(self, spark, corpus):
         got = _rows(sketch_by_key(corpus, key_col="lang"))
         exact = {

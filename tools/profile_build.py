@@ -32,6 +32,7 @@ def main() -> None:
         _assemble_fn,
         _build_partition_fn,
         _seg_reduce_fn,
+        _sorted_map,
         build_filters,
         size_filters,
     )
@@ -77,11 +78,13 @@ def main() -> None:
     partials.count()
 
     t0 = time.perf_counter()
-    reduced = partials.groupBy("filter_id", "seg").applyInPandas(
-        _seg_reduce_fn(params, build, None), schema=PARTIAL_SCHEMA
+    reduced = _sorted_map(
+        partials, ("filter_id", "seg"), _seg_reduce_fn(params, build, None),
+        PARTIAL_SCHEMA,
     )
-    reg = reduced.groupBy("filter_id").applyInPandas(
-        _assemble_fn(params, build, None), schema=REGISTRY_SCHEMA
+    reg = _sorted_map(
+        reduced, ("filter_id",), _assemble_fn(params, build, None),
+        REGISTRY_SCHEMA,
     )
     reg.write.format("noop").mode("overwrite").save()
     out["merge_seg_s"] = round(time.perf_counter() - t0, 2)

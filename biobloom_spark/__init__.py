@@ -27,3 +27,9 @@ Layers
 """
 
 __version__ = "0.1.0"
+
+from biobloom_spark import _zipcache
+
+# in a Spark Python worker: make PySpark's per-task import-cache reset skip
+# unchanged zip archives (no-op on the driver and on lazy interpreters)
+_zipcache.install()

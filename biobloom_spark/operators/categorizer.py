@@ -52,6 +52,21 @@ def _result_schema(id_field: T.StructField) -> T.StructType:
     )
 
 
+def _result_frame(ids, frames, scores, matches, filter_ids, cfg) -> pd.DataFrame:
+    """One batch of ``_result_schema`` rows from its score/match matrices."""
+    hits, assigned, best, _sel = _assign(scores, matches, filter_ids, cfg)
+    return pd.DataFrame(
+        {
+            ids.name: ids.to_numpy(),
+            "n_frames": frames,
+            "scores": list(scores),
+            "hits": hits,
+            "assigned": assigned,
+            "best_score": best,
+        }
+    )
+
+
 def _make_sketches(filters: list[dict]) -> list[BloomSketch]:
     """Zero-copy probe sketches over the broadcast bitmaps — built once per
     task, shared across Arrow batches."""
@@ -170,6 +185,18 @@ def _assign(scores: np.ndarray, matches: np.ndarray, filter_ids: list[str], cfg:
         np.where(counts == 1, fid_np[sel.argmax(axis=1)] if sel.size else NO_MATCH, MULTI_MATCH),
     ).astype(object)
     return hits_out, assigned, best, sel
+
+
+def _combine_mates(mates: list[tuple], inclusive: bool):
+    """The paired-read rule over per-mate ``(frames, scores, matches)``:
+    a pair hits a filter iff both mates hit (AND, ResultsManager.hpp:
+    153-175), or either one under ``-i`` (OR, ResultsManager.hpp:95-152);
+    its score is the mates' mean (used only for besthit ranking) and its
+    frame count their sum.  A single read passes through unchanged."""
+    if len(mates) == 1:
+        return mates[0]
+    (f1, s1, m1), (f2, s2, m2) = mates
+    return f1 + f2, (s1 + s2) / 2.0, (m1 | m2) if inclusive else (m1 & m2)
 
 
 def _shard_filters(filters: list[dict], max_bytes: int) -> list[list[dict]]:
@@ -332,7 +359,6 @@ def _categorize_sharded(
     cfg: CategorizerConfig,
     id_col: str,
     text_cols: list[str],
-    pin_source: bool = True,
 ) -> DataFrame:
     """Multi-pass evaluation for registries beyond the broadcast budget.
 
@@ -360,14 +386,13 @@ def _categorize_sharded(
     every pass reads the SAME stored row set: the surrogate stays stable
     even for non-deterministic sources (``orderBy(rand())``, unseeded
     ``sample()``), where per-pass re-evaluation would silently stitch
-    partials from different documents together.  ``pin_source=False``
-    re-scans instead — valid only for deterministic sources (see
-    ``pin_rows``); the corpus-scale storage trade is documented there.
+    partials from different documents together; the storage trade is
+    documented there.
 
     ``text_cols``: one column = single-read mode; two = paired mode —
     each mate is scored independently per pass, the stitch reassembles
-    per-mate score/match rows, and the pair combine (AND / ``-i`` OR,
-    mean score — ``categorize_pairs`` semantics) runs before ``_assign``.
+    per-mate score/match rows, and ``_combine_mates`` runs before
+    ``_assign``.
     """
     all_ids = [f["filter_id"] for f in filters]
     nF = len(filters)
@@ -378,8 +403,7 @@ def _categorize_sharded(
     keyed = pin_rows(
         docs.select(id_col, *text_cols).withColumn(
             "__row", F.monotonically_increasing_id()
-        ),
-        pin=pin_source,
+        )
     )
     tail = []
     for m in range(M):
@@ -502,12 +526,9 @@ def _categorize_sharded(
     def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
-            frames_total = np.zeros(n, dtype=np.int64)
-            mate_scores = []
-            mate_matches = []
+            mates = []
             for m in range(M):
                 frames_arr = pdf[f"n_frames{m}"].to_numpy().astype(np.int64)
-                frames_total += frames_arr
                 offsets = np.zeros(n + 1, dtype=np.int64)
                 np.cumsum(frames_arr, out=offsets[1:])
                 scores = np.zeros((n, nF))
@@ -535,30 +556,59 @@ def _categorize_sharded(
                         )
                         scores[:, gi] = s
                         matches[:, gi] = mm
-                mate_scores.append(scores)
-                mate_matches.append(matches)
-            if M == 1:
-                scores, matches = mate_scores[0], mate_matches[0]
-            else:  # categorize_pairs combine semantics
-                matches = (
-                    (mate_matches[0] | mate_matches[1])
-                    if inclusive
-                    else (mate_matches[0] & mate_matches[1])
-                )
-                scores = (mate_scores[0] + mate_scores[1]) / 2.0
-            hits, assigned, best, _sel = _assign(scores, matches, all_ids, cfg)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "n_frames": frames_total,
-                    "scores": list(scores),
-                    "hits": hits,
-                    "assigned": assigned,
-                    "best_score": best,
-                }
-            )
+                mates.append((frames_arr, scores, matches))
+            frames, scores, matches = _combine_mates(mates, inclusive)
+            yield _result_frame(pdf[id_col], frames, scores, matches, all_ids, cfg)
 
     return agg.mapInPandas(combine, schema=schema)
+
+
+def _categorize(
+    spark: SparkSession,
+    docs: DataFrame,
+    filters: list[dict],
+    cfg: CategorizerConfig | None,
+    id_col: str,
+    text_cols: list[str],
+) -> DataFrame:
+    """The classify body of ``categorize`` (one text column) and
+    ``categorize_pairs`` (two): every mate is scored against every filter
+    and ``_combine_mates`` merges them before ``_assign``.
+
+    A registry within ``session._broadcast_budget`` is broadcast whole
+    and scored in one shuffle-free ``mapInPandas`` pass.  Past it,
+    ``_plan_passes`` splits the registry into filter shards, and a single
+    filter larger than the budget into word-range chunks (blocked layouts
+    only), evaluated by ``_categorize_sharded`` — the executor-memory
+    escape for very large filter sets (SURVEY §7.4 risk): no filter has
+    to fit in one broadcast.
+    """
+    from ..session import _broadcast_budget, ensure_workers
+
+    ensure_workers(spark)
+    cfg = cfg or CategorizerConfig()
+    passes = _plan_passes(filters, _broadcast_budget(spark))
+    if len(passes) > 1:
+        return _categorize_sharded(spark, docs, filters, passes, cfg, id_col, text_cols)
+    filter_ids = [f["filter_id"] for f in filters]
+    bc = spark.sparkContext.broadcast(filters)
+    schema = _result_schema(docs.schema[id_col])
+    inclusive = bool(cfg.inclusive_pairs)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        flts = bc.value
+        sketches = _make_sketches(flts)
+        cache: dict = {}  # worker-lifetime token-hash memo
+        for pdf in batches:
+            mates = []
+            for c in text_cols:
+                texts = pdf[c].fillna("").to_numpy()
+                batch, scores, matches = _score_texts(texts, flts, cfg, cache, sketches)
+                mates.append((batch.frames(), scores, matches))
+            frames, scores, matches = _combine_mates(mates, inclusive)
+            yield _result_frame(pdf[id_col], frames, scores, matches, filter_ids, cfg)
+
+    return docs.select(id_col, *text_cols).mapInPandas(run, schema=schema)
 
 
 def categorize(
@@ -568,8 +618,6 @@ def categorize(
     cfg: CategorizerConfig | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_broadcast_bytes: int | None = None,
-    pin_source: bool = True,
 ) -> DataFrame:
     """Score + classify every document against every filter.
 
@@ -577,56 +625,10 @@ def categorize(
     order for ordered mode).  Returns (id, n_frames, scores, hits,
     assigned, best_score); join back to the input on ``id_col`` for
     pass-through columns (scoring itself never shuffles the corpus).
-
-    ``max_broadcast_bytes`` caps the bitmap bytes broadcast per pass: a
-    registry larger than the cap is evaluated in filter shards (each pass
-    broadcasts one shard, scores it shuffle-free, and a single groupBy on
-    a per-row surrogate stitches the per-shard score vectors back together
-    before mode assignment) — the executor-memory escape hatch for very
-    large filter sets (SURVEY §7.4 risk).  A single filter larger than the
-    cap is itself split into word-range chunks (blocked layouts only), so
-    no filter has to fit in one broadcast.  None = single pass (default).
-
-    ``pin_source`` (sharded mode only): pin the projected corpus once so
-    all passes stitch one consistent row set; set False only for sources
-    that re-evaluate deterministically (see ``session.pin_rows``).
+    Registries past the session's broadcast budget are evaluated in
+    filter shards or word-range chunks (``_categorize``).
     """
-    from ..session import ensure_workers
-
-    ensure_workers(spark)
-    cfg = cfg or CategorizerConfig()
-    if max_broadcast_bytes is not None:
-        passes = _plan_passes(filters, max_broadcast_bytes)
-        if len(passes) > 1:
-            return _categorize_sharded(
-                spark, docs, filters, passes, cfg, id_col, [text_col],
-                pin_source=pin_source,
-            )
-    filter_ids = [f["filter_id"] for f in filters]
-    bc = spark.sparkContext.broadcast(filters)
-    id_field = docs.schema[id_col]
-    schema = _result_schema(id_field)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        flts = bc.value
-        sketches = _make_sketches(flts)
-        cache: dict = {}  # worker-lifetime token-hash memo
-        for pdf in batches:
-            texts = pdf[text_col].to_numpy()
-            batch, scores, matches = _score_texts(texts, flts, cfg, cache, sketches)
-            hits, assigned, best, _sel = _assign(scores, matches, filter_ids, cfg)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "n_frames": batch.frames(),
-                    "scores": list(scores),
-                    "hits": hits,
-                    "assigned": assigned,
-                    "best_score": best,
-                }
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return _categorize(spark, docs, filters, cfg, id_col, [text_col])
 
 
 def categorize_pairs(
@@ -637,63 +639,22 @@ def categorize_pairs(
     id_col: str = "doc_id",
     text1_col: str = "text1",
     text2_col: str = "text2",
-    max_broadcast_bytes: int | None = None,
-    pin_source: bool = True,
 ) -> DataFrame:
     """Paired classification: both mates scored, hit sets combined.
 
     Default AND combine — a pair hits a filter iff *both* sides hit
     (ResultsManager.hpp:153-175); ``cfg.inclusive_pairs`` switches to OR
     (``-i``, ResultsManager.hpp:95-152).  Pair score = mean of side scores
-    (used only for besthit ranking).
-
-    ``max_broadcast_bytes``: same sharded/chunked escape hatch as
-    ``categorize`` — per-mate partials stitch on a row surrogate and the
-    pair combine runs before assignment.
+    (used only for besthit ranking); ``n_frames`` sums both mates.
     """
-    from ..session import ensure_workers
-
-    ensure_workers(spark)
-    cfg = cfg or CategorizerConfig()
-    if max_broadcast_bytes is not None:
-        passes = _plan_passes(filters, max_broadcast_bytes)
-        if len(passes) > 1:
-            return _categorize_sharded(
-                spark, docs, filters, passes, cfg, id_col,
-                [text1_col, text2_col], pin_source=pin_source,
-            )
-    filter_ids = [f["filter_id"] for f in filters]
-    bc = spark.sparkContext.broadcast(filters)
-    id_field = docs.schema[id_col]
-    schema = _result_schema(id_field)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        flts = bc.value
-        sketches = _make_sketches(flts)
-        cache: dict = {}
-        for pdf in batches:
-            b1, s1, m1 = _score_texts(pdf[text1_col].to_numpy(), flts, cfg, cache, sketches)
-            b2, s2, m2 = _score_texts(pdf[text2_col].to_numpy(), flts, cfg, cache, sketches)
-            matches = (m1 | m2) if cfg.inclusive_pairs else (m1 & m2)
-            scores = (s1 + s2) / 2.0
-            hits, assigned, best, _sel = _assign(scores, matches, filter_ids, cfg)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "n_frames": b1.frames() + b2.frames(),
-                    "scores": list(scores),
-                    "hits": hits,
-                    "assigned": assigned,
-                    "best_score": best,
-                }
-            )
-
-    return docs.select(id_col, text1_col, text2_col).mapInPandas(run, schema=schema)
+    return _categorize(spark, docs, filters, cfg, id_col, [text1_col, text2_col])
 
 
-def summarize(
-    result: DataFrame, filter_ids: list[str], explode_threshold: int = 64
-) -> DataFrame:
+#: filter count from which ``summarize`` takes the exploded plan
+_EXPLODE_MIN_FILTERS = 64
+
+
+def summarize(result: DataFrame, filter_ids: list[str]) -> DataFrame:
     """Per-filter summary counters — the ``_summary.tsv`` sink
     (ResultsManager.hpp:191-237; column semantics README.md:149-155).
 
@@ -702,7 +663,7 @@ def summarize(
     ``unique`` = sole-filter hits, ``shared`` = hits - unique; rates over
     the total document count.
 
-    Below ``explode_threshold`` filters: one wide aggregation (2F+2
+    Below ``_EXPLODE_MIN_FILTERS`` filters: one wide aggregation (2F+2
     expressions, map-side partial, zero shuffle of doc rows).  At or
     above it: the hits arrays explode into tagged keys and one small
     groupBy counts them — the wide plan's 2F+2 Catalyst expressions blow
@@ -710,7 +671,7 @@ def summarize(
     supports, while the exploded plan is O(1) expressions at any F.
     Identical output (property-tested both ways).
     """
-    if len(filter_ids) >= explode_threshold:
+    if len(filter_ids) >= _EXPLODE_MIN_FILTERS:
         return _summarize_exploded(result, filter_ids)
     aggs = [F.count(F.lit(1)).alias("total")]
     for fid in filter_ids:
@@ -787,7 +748,6 @@ def summarize_fused(
     cfg: CategorizerConfig | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_broadcast_bytes: int | None = None,
 ) -> DataFrame:
     """Categorize + summary in one fused map-side-combined pass.
 
@@ -798,23 +758,21 @@ def summarize_fused(
     counter rows per task.  Use when only the summary sink is needed;
     ``categorize`` remains the per-document operator.
 
-    ``max_broadcast_bytes``: registries beyond the budget route through
-    the sharded categorize (word-range chunking included) + the exploded
+    Registries past the session's broadcast budget route through the
+    sharded categorize (word-range chunking included) + the exploded
     summary — the fused single-pass shape needs every bitmap resident at
     once, so past the budget correctness of the memory bound wins over
     the fused plan.
     """
-    from ..session import ensure_workers
+    from ..session import _broadcast_budget, ensure_workers
 
     ensure_workers(spark)
     cfg = cfg or CategorizerConfig()
-    if max_broadcast_bytes is not None and len(_plan_passes(filters, max_broadcast_bytes)) > 1:
-        res = categorize(
-            spark, docs, filters, cfg, id_col=id_col, text_col=text_col,
-            max_broadcast_bytes=max_broadcast_bytes,
-        )
-        return summarize(res, [f["filter_id"] for f in filters], explode_threshold=0)
     filter_ids = [f["filter_id"] for f in filters]
+    passes = _plan_passes(filters, _broadcast_budget(spark))
+    if len(passes) > 1:
+        res = _categorize_sharded(spark, docs, filters, passes, cfg, id_col, [text_col])
+        return _summarize_exploded(res, filter_ids)
     bc = spark.sparkContext.broadcast(filters)
     schema = T.StructType(
         [

@@ -103,10 +103,6 @@ def _decode_lost(payloads, keep: set[int]) -> dict[int, np.ndarray]:
     return {li: np.unique(np.concatenate(parts)) for li, parts in acc.items()}
 
 
-#: default ``_lost_slot_scan`` budget: lost-slot bytes one saturation leg
-#: broadcasts when the caller passes no ``max_broadcast_bytes``
-_LOST_BROADCAST_CAP = 64 << 20
-
 _SAT_SCHEMA = T.StructType(
     [
         T.StructField("seg", T.IntegerType(), False),
@@ -120,9 +116,9 @@ _MAX_SHARD_SEGMENTS = 128
 
 def _clamp_segments(n_seg: int) -> int:
     """Plan-size guard for the sharded passes: each slot-range segment is
-    its own mapInPandas leg in one union, so a degenerate
-    ``max_broadcast_bytes`` (e.g. 1) must not turn into a 100k-leg plan
-    that stalls Catalyst analysis.  128 passes x a rehash of the corpus is
+    its own mapInPandas leg in one union, so a degenerate broadcast
+    budget (e.g. 1 byte) must not turn into a 100k-leg plan that stalls
+    Catalyst analysis.  128 passes x a rehash of the corpus is
     already past the point where a larger per-pass budget is the right
     call; beyond the clamp the per-pass broadcast simply exceeds the cap
     (documented trade, never wrong results).
@@ -298,7 +294,6 @@ def build_mibf(
     seeds: list[str] | None = None,
     expected_entries: int | None = None,
     merge_segments: int | None = None,
-    max_broadcast_bytes: int | None = None,
     canonical: bool = False,
     hash_family: str = "poly",
 ) -> MIBFSketch:
@@ -330,9 +325,9 @@ def build_mibf(
     move, and no claim-cardinality data structure ever lands on the
     driver.  Labels are capped at 32767 (Doc/MultiIndex.md:165).
 
-    ``max_broadcast_bytes`` caps the lost-slot bytes (8 B per slot) one
-    saturation leg broadcasts; a larger lost-pair set splits into more
-    label groups.  None = ``_LOST_BROADCAST_CAP`` (64 MiB).
+    ``session._broadcast_budget`` caps the lost-slot bytes (8 B per
+    slot) one saturation leg broadcasts; a larger lost-pair set splits
+    into more label groups.
     """
     base, bc_map, labels, seed_arr, h, canonical, m_slots = _prep_build(
         spark, docs, key_col, text_col, shingle_w, num_hashes, occupancy,
@@ -367,9 +362,11 @@ def build_mibf(
     sketch = MIBFSketch(
         m_slots, h, shingle_w, labels, ids, seed_arr, hash_family, canonical
     )
-    budget = _LOST_BROADCAST_CAP if max_broadcast_bytes is None else max_broadcast_bytes
+    from ..session import _broadcast_budget
+
     scan = _lost_slot_scan(
-        spark, base, _sketch_meta(sketch), bc_map, lambda: lost, bounds, budget
+        spark, base, _sketch_meta(sketch), bc_map, lambda: lost, bounds,
+        _broadcast_budget(spark),
     )
     for r in scan.collect():
         sketch.apply_saturation(np.frombuffer(bytes(r["slots"]), dtype=np.int64))
@@ -570,7 +567,10 @@ def _count_from_gather(offsets: np.ndarray, lab: np.ndarray, sat: np.ndarray, L:
 
 
 def _merge_counts(parts: list[tuple]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Sum keyed (doc,label) count sets from several mates."""
+    """Sum keyed (doc,label) count sets from several mates; a single
+    read's set passes through unchanged."""
+    if len(parts) == 1:
+        return parts[0]
     keys = np.concatenate([p[0] for p in parts])
     if keys.size == 0:
         e = np.empty(0, dtype=np.int64)
@@ -643,23 +643,43 @@ def _decide_batch(
     return assigned, hits_out, best
 
 
-def _classify_batch(
-    texts: np.ndarray,
+def _result_schema(id_field: T.StructField) -> T.StructType:
+    return T.StructType(
+        [
+            id_field,
+            T.StructField("n_frames", T.LongType(), False),
+            T.StructField("hits", T.ArrayType(T.StringType()), False),
+            T.StructField("assigned", T.StringType(), False),
+            T.StructField("best_score", T.DoubleType(), False),
+        ]
+    )
+
+
+def _decide_frame(
+    ids: pd.Series,
+    frames: np.ndarray,
+    counts: tuple,
     sketch: MIBFSketch,
     per_frame_prob: np.ndarray,
     alpha_adj: float,
     multi_thresh: int,
-    cache: dict,
-):
-    """Vectorized single-read evalRead over one batch: count + decide.
-
-    Returns (n_frames, assigned, hits_lists, best_scores)."""
-    frames, keys_c, counts_c, full_i = _count_batch(texts, sketch, cache)
-    assigned, hits_out, best = _decide_batch(
-        frames.size, frames, keys_c, counts_c, full_i, sketch,
+) -> pd.DataFrame:
+    """One batch of ``_result_schema`` rows from its merged (keys, counts,
+    full) count set — ``_decide_batch`` over the combined frame count."""
+    keys, counts_c, full = counts
+    assigned, hits, best = _decide_batch(
+        frames.size, frames, keys, counts_c, full, sketch,
         per_frame_prob, alpha_adj, multi_thresh,
     )
-    return frames, assigned, hits_out, best
+    return pd.DataFrame(
+        {
+            ids.name: ids.to_numpy(),
+            "n_frames": frames,
+            "hits": hits,
+            "assigned": assigned,
+            "best_score": best,
+        }
+    )
 
 
 def _classify_mibf_sharded(
@@ -673,7 +693,6 @@ def _classify_mibf_sharded(
     multi_thresh: int,
     id_col: str,
     text_cols: list[str],
-    pin_source: bool = True,
 ) -> DataFrame:
     """Multi-pass miBF classification for id arrays beyond the broadcast
     budget — the MI twin of ``categorizer._categorize_sharded``.
@@ -709,13 +728,11 @@ def _classify_mibf_sharded(
     from ..session import pin_rows
 
     # pin the projected rows so the surrogate key is stable across the S
-    # passes even for non-deterministic sources (see session.pin_rows;
-    # pin_source=False = caller asserts a deterministic source, re-scan)
+    # passes even for non-deterministic sources (see session.pin_rows)
     keyed = pin_rows(
         docs.select(id_col, *text_cols).withColumn(
             "__row", F.monotonically_increasing_id()
-        ),
-        pin=pin_source,
+        )
     )
     id_field = docs.schema[id_col]
     tail = []
@@ -790,15 +807,6 @@ def _classify_mibf_sharded(
         *[F.first(f"n_frames{m}").alias(f"n_frames{m}") for m in range(M)],
         F.collect_list(F.struct(*blob_cols)).alias("parts"),
     )
-    out_schema = T.StructType(
-        [
-            id_field,
-            T.StructField("n_frames", T.LongType(), False),
-            T.StructField("hits", T.ArrayType(T.StringType()), False),
-            T.StructField("assigned", T.StringType(), False),
-            T.StructField("best_score", T.DoubleType(), False),
-        ]
-    )
     decide_sk = MIBFSketch(
         m_slots, h, w, list(labels), np.zeros(0, dtype=np.uint16), seeds,
         family, canonical,
@@ -844,24 +852,12 @@ def _classify_mibf_sharded(
                         offsets, raw_b & ID_MASK, (raw_b & SAT_BIT) != 0, L
                     )
                 )
-            keys, counts, full = (
-                mate_counts[0] if M == 1 else _merge_counts(mate_counts)
-            )
-            assigned, hits, best = _decide_batch(
-                n, frames_total, keys, counts, full, decide_sk,
-                per_frame_prob, alpha_adj, multi_thresh,
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "n_frames": frames_total,
-                    "hits": hits,
-                    "assigned": assigned,
-                    "best_score": best,
-                }
+            yield _decide_frame(
+                pdf[id_col], frames_total, _merge_counts(mate_counts),
+                decide_sk, per_frame_prob, alpha_adj, multi_thresh,
             )
 
-    return agg.mapInPandas(combine, schema=out_schema)
+    return agg.mapInPandas(combine, schema=_result_schema(id_field))
 
 
 #: id(sketch) → ((applicationId, content-fp), Broadcast).  Keyed off the
@@ -915,62 +911,41 @@ def _sketch_broadcast(spark: SparkSession, sketch: MIBFSketch):
     return bc
 
 
-def classify_mibf(
+def _classify_mibf(
     spark: SparkSession,
     docs: DataFrame,
     sketch: MIBFSketch,
-    alpha: float = 1e-10,
-    multi_thresh: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_broadcast_bytes: int | None = None,
-    pin_source: bool = True,
+    alpha: float,
+    multi_thresh: int,
+    id_col: str,
+    text_cols: list[str],
 ) -> DataFrame:
-    """Classify every document against the miBF — broadcast + one
-    mapInPandas pass, zero shuffle (the MI twin of ``categorize``).
+    """The classify body of ``classify_mibf`` (one text column) and
+    ``classify_mibf_pairs`` (two): each mate's per-ID counts are summed
+    (``_merge_counts``) before one significance test on the combined
+    frame count.
 
-    ``alpha`` is the ``-s`` significance (min_FPR=100 → 1e-10,
-    MIBFClassifier defaults); Bonferroni-adjusted by the label count.
-    Output: (id, n_frames, hits ranked best-first, assigned, best_score
-    = -10*log10 p of the best hit).
-
-    ``max_broadcast_bytes`` caps the id-array bytes broadcast per pass:
-    a sketch larger than the cap is evaluated in slot-range segments
-    (``_classify_mibf_sharded``) — the executor-memory escape hatch for
-    very large id arrays.  None = single pass (default).
-
-    ``pin_source`` (sharded mode only): pin the projected corpus once so
-    all segment passes stitch one consistent row set; set False only for
-    sources that re-evaluate deterministically (see ``session.pin_rows``).
+    An id array within ``session._broadcast_budget`` is broadcast once per
+    (sketch, app) and classified in one shuffle-free ``mapInPandas``
+    pass; past it, ``_classify_mibf_sharded`` evaluates it in slot-range
+    segments of at most the budget — the executor-memory escape for very
+    large id arrays.
     """
-    from ..session import ensure_workers
+    from ..session import _broadcast_budget, ensure_workers
 
     ensure_workers(spark)
     per_frame_prob = sketch.per_frame_prob()
     alpha_adj = alpha / max(1, len(sketch.labels))
-    if (
-        max_broadcast_bytes is not None
-        and sketch.ids.nbytes > max_broadcast_bytes
-    ):
-        n_seg = _clamp_segments(-(-sketch.ids.nbytes // max_broadcast_bytes))
+    budget = _broadcast_budget(spark)
+    if sketch.ids.nbytes > budget:
         ids = sketch.ids
         return _classify_mibf_sharded(
             spark, docs, _sketch_meta(sketch),
             lambda s, lo, hi: ids[lo:hi].tobytes(),
-            n_seg, per_frame_prob, alpha_adj, multi_thresh, id_col, [text_col],
-            pin_source=pin_source,
+            _clamp_segments(-(-ids.nbytes // budget)), per_frame_prob,
+            alpha_adj, multi_thresh, id_col, text_cols,
         )
     bc = _sketch_broadcast(spark, sketch)
-    id_field = docs.schema[id_col]
-    schema = T.StructType(
-        [
-            id_field,
-            T.StructField("n_frames", T.LongType(), False),
-            T.StructField("hits", T.ArrayType(T.StringType()), False),
-            T.StructField("assigned", T.StringType(), False),
-            T.StructField("best_score", T.DoubleType(), False),
-        ]
-    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pl, (m, h, w, labels, fam, canon), sd = bc.value
@@ -979,21 +954,41 @@ def classify_mibf(
         )
         cache: dict = {}
         for pdf in batches:
-            frames, assigned, hits, best = _classify_batch(
-                pdf[text_col].to_numpy(), sk, per_frame_prob, alpha_adj,
-                multi_thresh, cache,
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "n_frames": frames,
-                    "hits": hits,
-                    "assigned": assigned,
-                    "best_score": best,
-                }
+            mates = [
+                _count_batch(pdf[c].fillna("").to_numpy(), sk, cache)
+                for c in text_cols
+            ]
+            frames = sum(p[0] for p in mates)
+            yield _decide_frame(
+                pdf[id_col], frames, _merge_counts([p[1:] for p in mates]),
+                sk, per_frame_prob, alpha_adj, multi_thresh,
             )
 
-    return docs.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return docs.select(id_col, *text_cols).mapInPandas(
+        run, schema=_result_schema(docs.schema[id_col])
+    )
+
+
+def classify_mibf(
+    spark: SparkSession,
+    docs: DataFrame,
+    sketch: MIBFSketch,
+    alpha: float = 1e-10,
+    multi_thresh: int = 2,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Classify every document against the miBF — broadcast + one
+    mapInPandas pass, zero shuffle (the MI twin of ``categorize``); id
+    arrays past the session's broadcast budget are evaluated in
+    slot-range segments (``_classify_mibf``).
+
+    ``alpha`` is the ``-s`` significance (min_FPR=100 → 1e-10,
+    MIBFClassifier defaults); Bonferroni-adjusted by the label count.
+    Output: (id, n_frames, hits ranked best-first, assigned, best_score
+    = -10*log10 p of the best hit).
+    """
+    return _classify_mibf(spark, docs, sketch, alpha, multi_thresh, id_col, [text_col])
 
 
 def classify_mibf_pairs(
@@ -1005,8 +1000,6 @@ def classify_mibf_pairs(
     id_col: str = "doc_id",
     text1_col: str = "text1",
     text2_col: str = "text2",
-    max_broadcast_bytes: int | None = None,
-    pin_source: bool = True,
 ) -> DataFrame:
     """Paired miBF classification (``-e``): both mates' per-ID counts SUM
     and the binomial test runs on the combined frame count — the
@@ -1014,68 +1007,10 @@ def classify_mibf_pairs(
     ``filterPairedRead`` (MIBFClassifier.hpp:753-835), where
     ``support.query(itr1, itr2, minCount)`` accumulates one count set
     over both reads.  A null/short mate contributes zero frames.
-
-    ``max_broadcast_bytes``: same sharded escape hatch as
-    ``classify_mibf`` (per-mate gather matrices reassembled, counts
-    summed before the significance test).
     """
-    from ..session import ensure_workers
-
-    ensure_workers(spark)
-    per_frame_prob = sketch.per_frame_prob()
-    alpha_adj = alpha / max(1, len(sketch.labels))
-    if (
-        max_broadcast_bytes is not None
-        and sketch.ids.nbytes > max_broadcast_bytes
-    ):
-        n_seg = _clamp_segments(-(-sketch.ids.nbytes // max_broadcast_bytes))
-        ids = sketch.ids
-        return _classify_mibf_sharded(
-            spark, docs, _sketch_meta(sketch),
-            lambda s, lo, hi: ids[lo:hi].tobytes(),
-            n_seg, per_frame_prob, alpha_adj, multi_thresh, id_col,
-            [text1_col, text2_col], pin_source=pin_source,
-        )
-    bc = _sketch_broadcast(spark, sketch)
-    id_field = docs.schema[id_col]
-    schema = T.StructType(
-        [
-            id_field,
-            T.StructField("n_frames", T.LongType(), False),
-            T.StructField("hits", T.ArrayType(T.StringType()), False),
-            T.StructField("assigned", T.StringType(), False),
-            T.StructField("best_score", T.DoubleType(), False),
-        ]
+    return _classify_mibf(
+        spark, docs, sketch, alpha, multi_thresh, id_col, [text1_col, text2_col]
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl, (m, h, w, labels, fam, canon), sd = bc.value
-        sk = MIBFSketch.deserialize(
-            pl, m, h, w, labels, sd, hash_family=fam, canonical=canon
-        )
-        cache: dict = {}
-        for pdf in batches:
-            t1 = pdf[text1_col].fillna("").to_numpy()
-            t2 = pdf[text2_col].fillna("").to_numpy()
-            f1, k1, c1, fu1 = _count_batch(t1, sk, cache)
-            f2, k2, c2, fu2 = _count_batch(t2, sk, cache)
-            keys, counts, full = _merge_counts([(k1, c1, fu1), (k2, c2, fu2)])
-            frames = f1 + f2
-            assigned, hits, best = _decide_batch(
-                frames.size, frames, keys, counts, full, sk,
-                per_frame_prob, alpha_adj, multi_thresh,
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "n_frames": frames,
-                    "hits": hits,
-                    "assigned": assigned,
-                    "best_score": best,
-                }
-            )
-
-    return docs.select(id_col, text1_col, text2_col).mapInPandas(run, schema=schema)
 
 
 _MIBF_SCHEMA = T.StructType(

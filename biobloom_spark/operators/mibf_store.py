@@ -48,7 +48,6 @@ from ..sketch.mibf import (
     seed_masks_to_arrays,
 )
 from .mibf import (
-    _LOST_BROADCAST_CAP,
     _classify_mibf_sharded,
     _clamp_segments,
     _lost_slot_scan,
@@ -296,11 +295,13 @@ def build_mibf_store(
                 canonical, bounds, S,
             ).write.mode("overwrite").parquet(resolved_path)
 
+        from ..session import _broadcast_budget
+
         resolved = spark.read.parquet(resolved_path)
         sat = _lost_slot_scan(
             spark, base, meta7, bc_map,
             lambda: (bytes(r["lost"]) for r in resolved.select("lost").toLocalIterator()),
-            bounds, _LOST_BROADCAST_CAP,
+            bounds, _broadcast_budget(spark),
         )
 
         def finalize(key, seg_pdf, sat_pdf):
@@ -386,20 +387,15 @@ def classify_mibf_store(
     multi_thresh: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    pin_source: bool = True,
 ) -> DataFrame:
     """``classify_mibf`` against a parquet store: always sharded, one
     segment broadcast per pass, ids fetched from disk — executor AND
     driver memory bounded by one segment (MIBFClassifier.hpp:773-939
-    semantics, identical outputs to the in-memory path).
-
-    ``pin_source=False``: re-scan instead of pinning the projected corpus
-    between segment passes — only for deterministic sources (see
-    ``session.pin_rows``)."""
+    semantics, identical outputs to the in-memory path)."""
     return _classify_mibf_sharded(
         spark, docs, store.meta, store.seg_fetch(spark), store.n_segments,
         store.per_frame_prob(), alpha / max(1, len(store.labels)),
-        multi_thresh, id_col, [text_col], pin_source=pin_source,
+        multi_thresh, id_col, [text_col],
     )
 
 
@@ -412,7 +408,6 @@ def classify_mibf_store_pairs(
     id_col: str = "doc_id",
     text1_col: str = "text1",
     text2_col: str = "text2",
-    pin_source: bool = True,
 ) -> DataFrame:
     """Paired (-e) classification against a parquet store — counts sum
     across mates before the combined-frame binomial test
@@ -420,5 +415,5 @@ def classify_mibf_store_pairs(
     return _classify_mibf_sharded(
         spark, docs, store.meta, store.seg_fetch(spark), store.n_segments,
         store.per_frame_prob(), alpha / max(1, len(store.labels)),
-        multi_thresh, id_col, [text1_col, text2_col], pin_source=pin_source,
+        multi_thresh, id_col, [text1_col, text2_col],
     )

@@ -56,8 +56,8 @@ def _tag_pass(
 
     ``filters[0]`` is the running filter (any bait filters follow it).  A
     read is tagged when it hits any filter — with two ``text_cols`` when
-    its mates combine to a hit (AND, or OR under ``cfg.inclusive_pairs``,
-    the ``categorize_pairs`` rule).  For each tagged read the kernel keeps
+    its mates combine to a hit (``categorizer._combine_mates``: AND, or OR
+    under ``cfg.inclusive_pairs``).  For each tagged read the kernel keeps
     the frames of every mate, unmasked (the dust mask only affects
     scoring), drops the ones ``subtract`` vetoes, deduplicates per task and
     keeps only frames the running filter lacks: the rest cannot set a bit.
@@ -65,7 +65,7 @@ def _tag_pass(
     task, rather than the full m-bit bitmap a per-iteration delta build
     would ship.
     """
-    from .categorizer import _assign, _make_sketches, _score_texts
+    from .categorizer import _assign, _combine_mates, _make_sketches, _score_texts
     from .maker import _veto_sketch
 
     filter_ids = [f["filter_id"] for f in filters]
@@ -87,12 +87,9 @@ def _tag_pass(
                 _score_texts(pdf[c].to_numpy(), flts, cfg, cache, sketches)
                 for c in text_cols
             ]
-            if len(mates) == 1:
-                _b, scores, matches = mates[0]
-            else:
-                (_b1, s1, m1), (_b2, s2, m2) = mates
-                matches = (m1 | m2) if cfg.inclusive_pairs else (m1 & m2)
-                scores = (s1 + s2) / 2.0
+            _f, scores, matches = _combine_mates(
+                [(b.frames(), s, m) for b, s, m in mates], cfg.inclusive_pairs
+            )
             sel = _assign(scores, matches, filter_ids, cfg)[3]
             hit = sel.any(axis=1)
             if not hit.any():

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import tempfile
 import zipfile
 
@@ -86,7 +87,7 @@ def local_frame(spark: SparkSession, rows, schema):
     return spark.createDataFrame(table)
 
 
-def pin_rows(df, pin: bool = True):
+def pin_rows(df):
     """Materialize a DataFrame once so multi-pass evaluation sees ONE row
     set with stable surrogate ids.
 
@@ -107,21 +108,29 @@ def pin_rows(df, pin: bool = True):
     plan is garbage-collected.  The miBF saturation scan
     (`mibf._lost_slot_scan`) needs no pin: each of its label-group legs
     sees whole frames, so no pass's output is stitched to another's.
-
-    ``pin=False`` skips the checkpoint — the scale escape for sources the
-    caller KNOWS re-evaluate identically (a plain parquet/file scan with no
-    upstream shuffle or nondeterministic expression: partition ids and
-    within-partition row order are reproduced from the file listing).
-    There each pass re-scans the source instead of storing a full extra
-    copy of the projected corpus on executor storage — at the 10^12-page
-    target that copy is the difference between S cheap columnar scans and
-    ~corpus-sized cluster storage held for the operator's lifetime.
-    Correct-by-default stays pinned; opting out is an explicit assertion
-    about the source's determinism.
     """
-    if not pin:
-        return df
     return df.localCheckpoint(eager=True)
+
+
+#: byte-string suffix → power-of-two shift (Spark's ``byteStringAs`` units)
+_UNIT_SHIFT = {"": 20, "b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _broadcast_budget(spark: SparkSession) -> int:
+    """Bytes one operator pass may broadcast: ``spark.executor.memory``
+    (Spark's 1g default when unset) // 16, so 64 MiB at the default.
+
+    Every size-guarded route reads it at call time: a Bloom registry over
+    it is evaluated in filter shards or word-range chunks
+    (``categorizer._plan_passes``), a miBF id array over it in slot-range
+    segments (``mibf._classify_mibf_sharded``), and ``build_mibf``'s
+    saturation scan packs label groups up to it.  A bare number is MiB,
+    as in ``SparkContext.executorMemory``.  Parsed in Python: a py4j
+    ``JavaUtils`` lookup measured ~17 ms a call on a 4-CPU host.
+    """
+    mem = spark.sparkContext.getConf().get("spark.executor.memory", "1g")
+    num, unit = re.fullmatch(r"(\d+)\s*([bkmgtp]?)b?", mem.strip().lower()).groups()
+    return (int(num) << _UNIT_SHIFT[unit]) // 16
 
 
 def get_spark(

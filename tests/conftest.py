@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -41,3 +42,20 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def documents(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+
+
+@pytest.fixture
+def force_budget():
+    """``with force_budget(cap):`` runs the operators called inside as if
+    ``session._broadcast_budget`` were ``cap`` bytes — the one place every
+    size-guarded route (filter shards, word-range chunks, miBF segments,
+    saturation label groups) reads its budget."""
+    from biobloom_spark import session
+
+    @contextlib.contextmanager
+    def force(cap: int):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(session, "_broadcast_budget", lambda spark: cap)
+            yield
+
+    return force

@@ -182,32 +182,42 @@ class TestCategorizer:
         misses = joined.filter(~F.array_contains("hits", F.col("lang"))).count()
         assert misses == 0
 
-    def test_sharded_evaluation_matches_single_pass(self, spark, corpus, registry):
-        """A broadcast cap small enough to force multiple passes must give
-        byte-identical assignments/hits/scores (the executor-memory escape
-        hatch for very large registries)."""
+    def test_sharded_evaluation_matches_single_pass(
+        self, spark, corpus, registry, force_budget
+    ):
+        """A broadcast budget small enough to force multiple passes must
+        give byte-identical assignments/hits/scores (the executor-memory
+        escape hatch for very large registries), null texts included: 0
+        frames and noMatch on both routes."""
         from biobloom_spark.operators.categorizer import _shard_filters
 
         cap = max(len(f["bitmap"]) for f in registry)
         assert len(_shard_filters(registry, cap)) >= 2
+        docs = corpus.select("url", "text").unionByName(spark.createDataFrame(
+            [("null-a", None), ("null-b", None)], "url string, text string"
+        ))
         for mode in ("std", "besthit"):
             cfg = CategorizerConfig(mode=mode)
             one = {
                 r["url"]: (r["assigned"], tuple(r["hits"]), r["n_frames"],
                            tuple(round(s, 9) for s in r["scores"]))
-                for r in categorize(spark, corpus, registry, cfg, id_col="url").collect()
+                for r in categorize(spark, docs, registry, cfg, id_col="url").collect()
             }
-            sharded = {
-                r["url"]: (r["assigned"], tuple(r["hits"]), r["n_frames"],
-                           tuple(round(s, 9) for s in r["scores"]))
-                for r in categorize(
-                    spark, corpus, registry, cfg, id_col="url",
-                    max_broadcast_bytes=cap,
-                ).collect()
-            }
+            with force_budget(cap):
+                sharded = {
+                    r["url"]: (r["assigned"], tuple(r["hits"]), r["n_frames"],
+                               tuple(round(s, 9) for s in r["scores"]))
+                    for r in categorize(
+                        spark, docs, registry, cfg, id_col="url"
+                    ).collect()
+                }
             assert one == sharded
+            for u in ("null-a", "null-b"):
+                assert sharded[u][:3] == ("noMatch", (), 0)
 
-    def test_sharded_nondeterministic_source_consistent(self, spark, corpus, registry):
+    def test_sharded_nondeterministic_source_consistent(
+        self, spark, corpus, registry, force_budget
+    ):
         """The multi-pass stitch must survive a source whose row order
         changes between plan evaluations (pin_rows materializes ONE row
         set): every url's sharded result equals its single-pass result —
@@ -226,39 +236,15 @@ class TestCategorizer:
             for r in rows
         }
         one = key(categorize(spark, corpus, registry, cfg, id_col="url").collect())
-        sharded = key(
-            categorize(
-                spark, shuffled, registry, cfg, id_col="url",
-                max_broadcast_bytes=cap,
-            ).collect()
-        )
+        with force_budget(cap):
+            sharded = key(
+                categorize(spark, shuffled, registry, cfg, id_col="url").collect()
+            )
         assert one == sharded
 
-    def test_sharded_pin_optout_deterministic_source(self, spark, corpus, registry):
-        """pin_source=False (the 100 TB storage escape for sources the
-        caller knows re-evaluate identically, e.g. a plain file scan) must
-        produce the same results as the pinned default on such a source."""
-        cap = max(len(f["bitmap"]) for f in registry)  # >= 2 passes
-        cfg = CategorizerConfig(mode="std")
-        key = lambda rows: {
-            r["url"]: (r["assigned"], tuple(r["hits"]), r["n_frames"])
-            for r in rows
-        }
-        pinned = key(
-            categorize(
-                spark, corpus, registry, cfg, id_col="url",
-                max_broadcast_bytes=cap,
-            ).collect()
-        )
-        unpinned = key(
-            categorize(
-                spark, corpus, registry, cfg, id_col="url",
-                max_broadcast_bytes=cap, pin_source=False,
-            ).collect()
-        )
-        assert pinned == unpinned
-
-    def test_sharded_duplicate_ids_one_row_per_input(self, spark, corpus, registry):
+    def test_sharded_duplicate_ids_one_row_per_input(
+        self, spark, corpus, registry, force_budget
+    ):
         """Sharded mode must emit one output row per input row even when
         id_col is not unique (the stitch keys a per-row surrogate, not the
         doc id) — the single-pass equivalence contract."""
@@ -267,16 +253,17 @@ class TestCategorizer:
         cap = max(len(f["bitmap"]) for f in registry)
         assert len(_shard_filters(registry, cap)) >= 2
         dup = corpus.limit(20).withColumn("url", F.lit("same-id"))
-        res = categorize(
-            spark, dup, registry, id_col="url", max_broadcast_bytes=cap
-        ).collect()
+        with force_budget(cap):
+            res = categorize(spark, dup, registry, id_col="url").collect()
         assert len(res) == 20
         single = categorize(spark, dup, registry, id_col="url").collect()
         assert sorted(
             (r["assigned"], tuple(r["hits"]), r["n_frames"]) for r in res
         ) == sorted((r["assigned"], tuple(r["hits"]), r["n_frames"]) for r in single)
 
-    def test_chunked_single_filter_matches_single_pass(self, spark, corpus, registry):
+    def test_chunked_single_filter_matches_single_pass(
+        self, spark, corpus, registry, force_budget
+    ):
         """A cap smaller than every single bitmap forces word-range
         chunking of EVERY filter: each pass broadcasts one bitmap slice,
         per-frame hits OR-stitch across passes, and the reassembled hit
@@ -299,13 +286,13 @@ class TestCategorizer:
                 for r in rows
             }
             one = key(categorize(spark, corpus, registry, cfg, id_col="url").collect())
-            chunked = key(
-                categorize(spark, corpus, registry, cfg, id_col="url",
-                           max_broadcast_bytes=cap).collect()
-            )
+            with force_budget(cap):
+                chunked = key(
+                    categorize(spark, corpus, registry, cfg, id_col="url").collect()
+                )
             assert one == chunked
 
-    def test_chunked_mixed_with_full_shards(self, spark, corpus, registry):
+    def test_chunked_mixed_with_full_shards(self, spark, corpus, registry, force_budget):
         """A cap between the largest and smallest bitmap chunks only the
         oversized filter(s) and groups the rest — the mixed plan must still
         match single-pass output exactly."""
@@ -322,13 +309,11 @@ class TestCategorizer:
             for r in rows
         }
         one = key(categorize(spark, corpus, registry, id_col="url").collect())
-        mixed = key(
-            categorize(spark, corpus, registry, id_col="url",
-                       max_broadcast_bytes=cap).collect()
-        )
+        with force_budget(cap):
+            mixed = key(categorize(spark, corpus, registry, id_col="url").collect())
         assert one == mixed
 
-    def test_chunked_cacheline_layout(self, spark, corpus):
+    def test_chunked_cacheline_layout(self, spark, corpus, force_budget):
         """Word-range chunking over the 512-bit cache-line layout (probe
         math differs from the 64-bit-word layout)."""
         reg512 = load_registry(build_filters(
@@ -342,13 +327,13 @@ class TestCategorizer:
             for r in rows
         }
         one = key(categorize(spark, corpus, reg512, id_col="url").collect())
-        chunked = key(
-            categorize(spark, corpus, reg512, id_col="url",
-                       max_broadcast_bytes=cap).collect()
-        )
+        with force_budget(cap):
+            chunked = key(categorize(spark, corpus, reg512, id_col="url").collect())
         assert one == chunked
 
-    def test_pairs_sharded_and_chunked_match_single_pass(self, spark, corpus, registry):
+    def test_pairs_sharded_and_chunked_match_single_pass(
+        self, spark, corpus, registry, force_budget
+    ):
         """categorize_pairs under a broadcast cap (filter shards AND
         word-range chunks) must match the single-pass pairs output,
         for both AND and inclusive-OR combines."""
@@ -372,10 +357,10 @@ class TestCategorizer:
             }
             one = key(categorize_pairs(spark, pairs, registry, cfg, id_col="url").collect())
             for cap in caps:
-                multi = key(categorize_pairs(
-                    spark, pairs, registry, cfg, id_col="url",
-                    max_broadcast_bytes=cap,
-                ).collect())
+                with force_budget(cap):
+                    multi = key(categorize_pairs(
+                        spark, pairs, registry, cfg, id_col="url"
+                    ).collect())
                 assert one == multi, (inclusive, cap)
 
     def test_chunked_classic_layout_degrades_whole(self, spark, corpus, registry):
@@ -400,7 +385,10 @@ class TestCategorizer:
         2F+2-expression wide plan would blow up Catalyst compilation."""
         import random
 
-        from biobloom_spark.operators.categorizer import summarize
+        from biobloom_spark.operators.categorizer import (
+            _summarize_exploded,
+            summarize,
+        )
 
         rng = random.Random(7)
         fids = [f"f{i:03d}" for i in range(600)]
@@ -422,9 +410,7 @@ class TestCategorizer:
         # both paths agree exactly at a width the wide agg still handles
         ids, res = synth(80)
         key = lambda df: sorted(tuple(r) for r in df.collect())
-        assert key(summarize(res, ids, explode_threshold=10**9)) == key(
-            summarize(res, ids, explode_threshold=0)
-        )
+        assert key(summarize(res, ids)) == key(_summarize_exploded(res, ids))
         # the exploded path handles 600 filters and matches a driver twin
         ids, res = synth(600)
         got = {r["filter_id"]: r for r in summarize(res, ids).collect()}
@@ -553,7 +539,7 @@ class TestFusedSummary:
         }
         assert classic == fused
 
-    def test_fused_sharded_escape_hatch(self, spark, corpus, registry):
+    def test_fused_sharded_escape_hatch(self, spark, corpus, registry, force_budget):
         """Past the broadcast budget the fused summary must route through
         the sharded (chunking) categorize and still match exactly."""
         from biobloom_spark.operators.categorizer import summarize_fused
@@ -563,12 +549,11 @@ class TestFusedSummary:
             r["filter_id"]: (r["hits"], r["unique"], r["shared"])
             for r in summarize_fused(spark, corpus, registry, id_col="url").collect()
         }
-        capped = {
-            r["filter_id"]: (r["hits"], r["unique"], r["shared"])
-            for r in summarize_fused(
-                spark, corpus, registry, id_col="url", max_broadcast_bytes=cap
-            ).collect()
-        }
+        with force_budget(cap):
+            capped = {
+                r["filter_id"]: (r["hits"], r["unique"], r["shared"])
+                for r in summarize_fused(spark, corpus, registry, id_col="url").collect()
+            }
         assert direct == capped
 
 

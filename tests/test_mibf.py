@@ -8,6 +8,8 @@ skip-gram (spaced-seed analog) miss tolerance.
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -252,7 +254,9 @@ class TestClassify:
         row0 = classify_mibf(spark, probe, sk, multi_thresh=0).collect()[0]
         assert row0["assigned"] in ("la", "lb") and len(row0["hits"]) == 1
 
-    def test_sharded_classify_matches_single_pass(self, spark, labeled_corpus, mibf):
+    def test_sharded_classify_matches_single_pass(
+        self, spark, labeled_corpus, mibf, force_budget
+    ):
         """A broadcast cap forcing >= 3 segment passes must reproduce the
         single-pass classification byte-for-byte (assigned, ranked hits,
         frame counts, scores) — including on noise docs where saturation
@@ -270,16 +274,17 @@ class TestClassify:
             round(r["best_score"], 9),
         )
         single = {r["doc_id"]: key(r) for r in classify_mibf(spark, probe, mibf).collect()}
-        sharded = {
-            r["doc_id"]: key(r)
-            for r in classify_mibf(
-                spark, probe, mibf, max_broadcast_bytes=cap
-            ).collect()
-        }
+        with force_budget(cap):
+            sharded = {
+                r["doc_id"]: key(r)
+                for r in classify_mibf(spark, probe, mibf).collect()
+            }
         assert single == sharded
         assert len(sharded) == probe.count()
 
-    def test_sharded_classify_nondeterministic_source(self, spark, labeled_corpus, mibf):
+    def test_sharded_classify_nondeterministic_source(
+        self, spark, labeled_corpus, mibf, force_budget
+    ):
         """Segment passes over a source whose row order changes between
         evaluations must still stitch each doc's own partials (pin_rows):
         per-doc results equal the single-pass results."""
@@ -295,12 +300,11 @@ class TestClassify:
             round(r["best_score"], 9),
         )
         single = {r["doc_id"]: key(r) for r in classify_mibf(spark, probe, mibf).collect()}
-        sharded = {
-            r["doc_id"]: key(r)
-            for r in classify_mibf(
-                spark, shuffled, mibf, max_broadcast_bytes=mibf.ids.nbytes // 3
-            ).collect()
-        }
+        with force_budget(mibf.ids.nbytes // 3):
+            sharded = {
+                r["doc_id"]: key(r)
+                for r in classify_mibf(spark, shuffled, mibf).collect()
+            }
         assert single == sharded
 
     def test_broadcast_cache_invalidated_on_mutation(self, spark, labeled_corpus, mibf):
@@ -439,7 +443,9 @@ class TestPairedClassify:
         correct = sum(r["assigned"] == r["lang"] for r in rows)
         assert correct / len(rows) >= 0.95
 
-    def test_sharded_pairs_match_single_pass(self, spark, labeled_corpus, mibf):
+    def test_sharded_pairs_match_single_pass(
+        self, spark, labeled_corpus, mibf, force_budget
+    ):
         """The sharded escape hatch must reproduce paired classification
         byte-for-byte, including null mates."""
         from biobloom_spark.operators.mibf import classify_mibf_pairs
@@ -458,12 +464,11 @@ class TestPairedClassify:
             round(r["best_score"], 9),
         )
         dense = {r["doc_id"]: key(r) for r in classify_mibf_pairs(spark, pairs, mibf).collect()}
-        sharded = {
-            r["doc_id"]: key(r)
-            for r in classify_mibf_pairs(
-                spark, pairs, mibf, max_broadcast_bytes=mibf.ids.nbytes // 3
-            ).collect()
-        }
+        with force_budget(mibf.ids.nbytes // 3):
+            sharded = {
+                r["doc_id"]: key(r)
+                for r in classify_mibf_pairs(spark, pairs, mibf).collect()
+            }
         assert dense == sharded
 
     def test_merge_counts_sums_keyed(self):
@@ -571,24 +576,34 @@ class TestHashFamilies:
         fw = [(r["doc_id"], r["text"], r["lang"]) for r in df.collect()]
         assert self._accuracy(spark, lo, fw) >= 0.95
 
-    def test_sharded_classify_matches_single_pass_nthash(self, spark, dna_corpus):
+    def test_sharded_classify_matches_single_pass_nthash(
+        self, spark, dna_corpus, force_budget
+    ):
+        """Broadcast and slot-segment routes agree on nthash reads, null
+        reads included (0 frames, noMatch on both routes)."""
         _, df = dna_corpus
         sk = build_mibf(
             spark, df, key_col="lang", shingle_w=self.K, hash_family="nthash",
         )
+        probe = df.select("doc_id", "text").unionByName(spark.createDataFrame(
+            [("null-a", None), ("null-b", None)], "doc_id string, text string"
+        ))
         key = lambda r: (
             r["assigned"], tuple(r["hits"]), r["n_frames"],
             round(r["best_score"], 9),
         )
-        dense = {r["doc_id"]: key(r) for r in classify_mibf(spark, df, sk, id_col="doc_id").collect()}
-        sharded = {
+        dense = {
             r["doc_id"]: key(r)
-            for r in classify_mibf(
-                spark, df, sk, id_col="doc_id",
-                max_broadcast_bytes=sk.ids.nbytes // 3,
-            ).collect()
+            for r in classify_mibf(spark, probe, sk, id_col="doc_id").collect()
         }
+        with force_budget(sk.ids.nbytes // 3):
+            sharded = {
+                r["doc_id"]: key(r)
+                for r in classify_mibf(spark, probe, sk, id_col="doc_id").collect()
+            }
         assert dense == sharded
+        for d in ("null-a", "null-b"):
+            assert sharded[d][:3] == (NO_MATCH, (), 0)
 
     def test_seed_mode_rejects_nonpoly(self, spark, dna_corpus):
         _, df = dna_corpus
@@ -916,7 +931,7 @@ class TestLostPairSaturation:
     @pytest.mark.parametrize("budget", [None, 1, "ids_third", "lost_two_thirds"])
     @pytest.mark.parametrize("corpus", ["identical", "shared", "nthash"])
     def test_lost_slot_scan_matches_local_reference(
-        self, spark, request, monkeypatch, corpus, budget
+        self, spark, request, monkeypatch, force_budget, corpus, budget
     ):
         """Every saturation route is byte-identical to a local numpy
         reference: ownership from ``MIBFSketch.from_claims`` and saturation
@@ -926,6 +941,7 @@ class TestLostPairSaturation:
         two labels side by side); the scan's plan has one MapInPandas leg
         per label group."""
         from biobloom_spark.operators import mibf as M
+        from biobloom_spark.session import _broadcast_budget
 
         df, kw = _saturation_corpus(spark, request, corpus)
         ref, n_frames, lost_bytes = _saturation_reference(df, kw)
@@ -938,7 +954,7 @@ class TestLostPairSaturation:
         # labels pack in index order; a group closes when the next set
         # would take it past the budget
         groups, used = 0, 0
-        limit = M._LOST_BROADCAST_CAP if cap is None else cap
+        limit = _broadcast_budget(spark) if cap is None else cap
         for b in (x for x in lost_bytes if x):
             if groups == 0 or used + b > limit:
                 groups, used = groups + 1, 0
@@ -951,10 +967,11 @@ class TestLostPairSaturation:
             return scans[-1]
 
         monkeypatch.setattr(M, "_lost_slot_scan", spy)
-        sk = M.build_mibf(
-            spark, df, key_col="lang", occupancy=0.5, expected_entries=n_frames,
-            max_broadcast_bytes=cap, **kw,
-        )
+        with contextlib.nullcontext() if cap is None else force_budget(cap):
+            sk = M.build_mibf(
+                spark, df, key_col="lang", occupancy=0.5,
+                expected_entries=n_frames, **kw,
+            )
         assert sk.serialize() == ref.serialize()
         plan = scans[0]._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count("MapInPandas") == groups

@@ -101,7 +101,7 @@ def test_mibf_classify_plan_is_shuffle_free(spark, pq_corpus):
     assert set(cols) == {"url", "text"}, cols
 
 
-def test_chunked_categorize_one_stitch_shuffle(spark, pq_corpus):
+def test_chunked_categorize_one_stitch_shuffle(spark, pq_corpus, force_budget):
     """The sharded/chunked path's only shuffle is the single row-keyed
     stitch (groupBy __row); each pass stays a map-side scan.  A refactor
     that adds a second corpus shuffle per pass would still pass the
@@ -112,11 +112,21 @@ def test_chunked_categorize_one_stitch_shuffle(spark, pq_corpus):
         build_filters(spark, pq_corpus, id_col="url")
     )
     cap = min(len(f["bitmap"]) for f in reg) // 2
-    result = categorize(spark, pq_corpus, reg, id_col="url",
-                        max_broadcast_bytes=cap)
+    with force_budget(cap):
+        result = categorize(spark, pq_corpus, reg, id_col="url")
     n = count_exchanges(result)
     assert n == 1, f"expected exactly the stitch exchange, found {n}"
     assert_no_cartesian(result, "chunked categorize")
+
+
+def test_broadcast_budget_follows_executor_memory(spark):
+    """Every size-guarded route reads one budget derived from the session:
+    the fixture leaves ``spark.executor.memory`` unset, so it is Spark's
+    1g default // 16."""
+    from biobloom_spark.session import _broadcast_budget
+
+    assert spark.sparkContext.getConf().get("spark.executor.memory") is None
+    assert _broadcast_budget(spark) == (1 << 30) // 16
 
 
 def test_merge_registries_single_exchange(spark, pq_corpus, tmp_path):
@@ -407,6 +417,7 @@ def test_summaries_are_local_relations(spark, pq_corpus, which):
     tuples plans a Python RDD instead: one Python stage per action.)"""
     from biobloom_spark.operators.categorizer import (
         _SUMMARY_SCHEMA,
+        _summarize_exploded,
         summarize,
         summarize_fused,
     )
@@ -426,8 +437,8 @@ def test_summaries_are_local_relations(spark, pq_corpus, which):
             df = summarize_fused(spark, pq_corpus, flt, id_col="url")
         else:
             res = categorize(spark, pq_corpus, flt, id_col="url")
-            threshold = 0 if which == "summarize_exploded" else 10**9
-            df = summarize(res, ids, explode_threshold=threshold)
+            plan = _summarize_exploded if which == "summarize_exploded" else summarize
+            df = plan(res, ids)
         schema, n_rows = _SUMMARY_SCHEMA, len(ids) + 2
     plan = df._jdf.queryExecution().optimizedPlan()
     assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import re
 import tempfile
 import zipfile
 
@@ -112,25 +111,23 @@ def pin_rows(df):
     return df.localCheckpoint(eager=True)
 
 
-#: byte-string suffix → power-of-two shift (Spark's ``byteStringAs`` units)
-_UNIT_SHIFT = {"": 20, "b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
-
-
 def _broadcast_budget(spark: SparkSession) -> int:
     """Bytes one operator pass may broadcast: ``spark.executor.memory``
-    (Spark's 1g default when unset) // 16, so 64 MiB at the default.
+    // 16, so 64 MiB at Spark's 1g default.
 
     Every size-guarded route reads it at call time: a Bloom registry over
     it is evaluated in filter shards or word-range chunks
     (``categorizer._plan_passes``), a miBF id array over it in slot-range
     segments (``mibf._classify_mibf_sharded``), and ``build_mibf``'s
-    saturation scan packs label groups up to it.  A bare number is MiB,
-    as in ``SparkContext.executorMemory``.  Parsed in Python: a py4j
-    ``JavaUtils`` lookup measured ~17 ms a call on a 4-CPU host.
+    saturation scan packs label groups up to it.  The MiB value is the
+    one ``SparkContext.executorMemory`` parsed at start-up, with Spark's
+    ``SPARK_EXECUTOR_MEMORY`` / ``SPARK_MEM`` fallbacks.  In local mode
+    the executor runs in the driver JVM, whose heap
+    ``spark.executor.memory`` does not size; the budget follows it all
+    the same (64 MiB when unset), so a registry or id array over that
+    takes the sharded route whatever ``spark.driver.memory`` is.
     """
-    mem = spark.sparkContext.getConf().get("spark.executor.memory", "1g")
-    num, unit = re.fullmatch(r"(\d+)\s*([bkmgtp]?)b?", mem.strip().lower()).groups()
-    return (int(num) << _UNIT_SHIFT[unit]) // 16
+    return (spark.sparkContext._jsc.sc().executorMemory() << 20) // 16
 
 
 def get_spark(

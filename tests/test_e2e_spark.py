@@ -379,12 +379,13 @@ class TestCategorizer:
         covered = [gi for p in passes for gi in range(p[1], p[2])]
         assert covered == list(range(len(classic)))
 
-    def test_summarize_exploded_equals_wide(self, spark):
+    def test_summarize_exploded_equals_wide(self, spark, monkeypatch):
         """The explode-based summary (large filter sets) must reproduce the
         wide-agg summary exactly, and stay cheap at 600 filters where the
         2F+2-expression wide plan would blow up Catalyst compilation."""
         import random
 
+        from biobloom_spark.operators import categorizer
         from biobloom_spark.operators.categorizer import (
             _summarize_exploded,
             summarize,
@@ -407,10 +408,17 @@ class TestCategorizer:
                 rows, "doc_id string, hits array<string>, assigned string"
             ).cache()
 
-        # both paths agree exactly at a width the wide agg still handles
+        # both paths agree exactly at a width the wide agg still handles;
+        # 80 filters is past _EXPLODE_MIN_FILTERS, so lift it for the wide
+        # side and make any fall-through to the exploded plan fail
         ids, res = synth(80)
         key = lambda df: sorted(tuple(r) for r in df.collect())
-        assert key(summarize(res, ids)) == key(_summarize_exploded(res, ids))
+        exploded = key(_summarize_exploded(res, ids))
+        with monkeypatch.context() as mp:
+            mp.setattr(categorizer, "_EXPLODE_MIN_FILTERS", len(ids) + 1)
+            mp.setattr(categorizer, "_summarize_exploded", None)
+            wide = key(summarize(res, ids))
+        assert wide == exploded
         # the exploded path handles 600 filters and matches a driver twin
         ids, res = synth(600)
         got = {r["filter_id"]: r for r in summarize(res, ids).collect()}

@@ -122,7 +122,7 @@ def _write_filter_dicts_as_registry(spark, filters: list[dict], path: str) -> No
                 float(f.get("approx_fpr", f.get("fpr", 0.0))),
                 float(f.get("fpr", 0.0)), 0.0,
                 so.tobytes() if so is not None and hasattr(so, "tobytes") else so,
-                bytes(f["bitmap"]), None, None, None, None,
+                bytes(f["bitmap"]), None,
             )
         )
     spark.createDataFrame(rows, REGISTRY_SCHEMA).write.mode("overwrite").parquet(path)

@@ -10,8 +10,10 @@ Spark lifecycle here:
 
 1. **Sparse partial pass** — ONE zero-shuffle ``mapInPandas`` over the
    corpus: each task shingles its own documents and emits, per filter key,
-   its unique frame hashes split into S hash-prefix slices (plus a
-   companion row with counters and the HLL/CMS/t-digest/KLL sketches).
+   its unique frame hashes split into S hash-prefix slices (plus one row
+   with the doc/frame counters and the distinct-frame HLL).  The build
+   emits Bloom bitmaps plus that HLL only; per-key count-min, t-digest and
+   KLL sketches are ``sketch_agg.sketch_by_key``'s job.
    No sizing pre-scan: the reference's calcExpectedEntries counts every
    k-mer occurrence (BloomFilterGenerator.h:108-141) and that exact count
    rides along per slice, so sizing happens where the data already is.
@@ -51,10 +53,7 @@ from ..config import BloomParams, BuildConfig
 from ..functions.text import batch_frames
 from ..sketch import (
     BloomSketch,
-    CountMinSketch,
     HLLSketch,
-    KLLSketch,
-    TDigestSketch,
     approx_fpr,
     blocked_size_bits,
     optimal_size_bits,
@@ -69,7 +68,6 @@ from ..sources.tables import (
 __all__ = ["size_filters", "build_filters", "load_registry", "merge_registries"]
 
 _HLL_P = 14
-_CMS_W, _CMS_D = 8192, 5
 
 
 #: every whitespace codepoint Python's str.split() honors (ASCII + unicode
@@ -152,10 +150,7 @@ def _write_snapshot(partials_path: str, fp: str) -> None:
         f.write(fp)
 
 
-_PARTIAL_COLS = [
-    "filter_id", "bucket", "seg", "n_docs", "n_inserted", "n_new",
-    "n_redundant", "bitmap", "hll", "cms", "tdigest", "kll",
-]
+_PARTIAL_COLS = [f.name for f in PARTIAL_SCHEMA.fields]
 
 
 def _family_kwargs(params: BloomParams) -> dict:
@@ -264,7 +259,7 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
                         subtract_meta: tuple | None,
                         skip_buckets: frozenset | None = None):
     """mapInPandas kernel: one *input partition* → S sparse slice rows +
-    one companion row per key.
+    one counter row per key.
 
     The zero-shuffle build: every task accumulates state for
     every filter key over the documents it already holds (like the
@@ -281,8 +276,9 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
       pre-dedup frame count (its sizing input).  No dense bitmap is ever allocated map-side — no
       100s-of-MB page-fault/scatter storms (measured: dense-per-task made
       16 cores *slower* than 4).
-    - one companion row (``seg`` -1): doc/frame counters + the HLL / CMS /
-      t-digest / KLL sketches.
+    - one counter row (``seg`` -1): doc/frame counters + the distinct-frame
+      HLL.  Nothing else: token-frequency and doc-length sketches are
+      ``sketch_agg.sketch_by_key``'s.
 
     No sizing pre-pass feeds this kernel: slice reducers size themselves
     from the exact per-slice counts they receive (the separate corpus
@@ -304,27 +300,21 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
         if subtract_bits is not None:
             sub = _veto_sketch((subtract_bits, *subtract_meta), params)
         hashes_acc: dict[str, list] = {}
-        state: dict[str, tuple] = {}
+        hlls: dict[str, HLLSketch] = {}
         n_docs: dict[str, int] = {}
         seg_counts: dict[str, np.ndarray] = {}
         for pdf in batches:
             for fid, grp in pdf.groupby(key_col):
                 fid = str(fid)
-                if fid not in state:
-                    state[fid] = (
-                        HLLSketch(p=_HLL_P),
-                        CountMinSketch(width=_CMS_W, depth=_CMS_D),
-                        TDigestSketch(),
-                        KLLSketch(),
-                    )
+                if fid not in hlls:
+                    hlls[fid] = HLLSketch(p=_HLL_P)
                     hashes_acc[fid] = []
                     n_docs[fid] = 0
                     seg_counts[fid] = np.zeros(S, dtype=np.int64)
-                hll, cms, td, kll = state[fid]
-                frames, _offs, tok_hashes, tok_counts = batch_frames(
+                frames = batch_frames(
                     grp[text_col].to_numpy(), w, canonical=params.canonical,
                     hash_family=params.hash_family,
-                )
+                )[0]
                 if sub is not None and frames.size:
                     frames = frames[~sub.contains_batch(frames)]
                 if k:
@@ -334,18 +324,14 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
                 else:
                     seg_counts[fid][0] += int(frames.size)
                 hashes_acc[fid].append(np.unique(frames))
-                hll.update_batch(frames)
-                cms.update_batch(tok_hashes)
-                lengths = tok_counts.astype(np.float64)
-                td.update_batch(lengths)
-                kll.update_batch(lengths)
+                hlls[fid].update_batch(frames)
                 n_docs[fid] += len(grp)
-        if not state:
+        if not hlls:
             return
         ctx = TaskContext.get()
         bucket = int(ctx.partitionId()) if ctx is not None else 0
         rows = []
-        for fid, (hll, cms, td, kll) in state.items():
+        for fid, hll in hlls.items():
             uniq = np.unique(np.concatenate(hashes_acc[fid]))
             counts = seg_counts[fid]
             if k:
@@ -360,12 +346,11 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
                 seg_base = (np.uint64(s) << shift) if k else np.uint64(0)
                 rows.append((
                     fid, bucket, s, 0, int(counts[s]), 0, 0,
-                    _pack_slice_hashes(uniq[lo:hi], seg_base),
-                    None, None, None, None,
+                    _pack_slice_hashes(uniq[lo:hi], seg_base), None,
                 ))
             rows.append((
                 fid, bucket, -1, n_docs[fid], int(counts.sum()), 0, 0, b"C",
-                hll.serialize(), cms.serialize(), td.serialize(), kll.serialize(),
+                hll.serialize(),
             ))
         yield pd.DataFrame(rows, columns=_PARTIAL_COLS)
 
@@ -432,7 +417,7 @@ def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None)
     ``seg >= 0``: union the group's sorted hash blobs, size the slice from
     the group's exact insert total (or the pinned equal-split), scatter the
     slice bitmap sequentially (monotone fastrange + reduceat-OR — see
-    sketch.bloom).  ``seg == -1``: merge the companion sketches.  All
+    sketch.bloom).  ``seg == -1``: add the counters, merge the HLLs.  All
     groups run in parallel: merge parallelism is filters x S.
     """
     from ..sketch.bloom import or_scatter_sorted, probe_words64
@@ -445,24 +430,14 @@ def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None)
         fid, seg = str(key[0]), int(key[1])
         if seg == -1:
             hll = HLLSketch(p=_HLL_P)
-            cms = CountMinSketch(width=_CMS_W, depth=_CMS_D)
-            td = TDigestSketch()
-            kll = KLLSketch()
             n_docs = n_ins = 0
             for _, row in pdf.iterrows():
                 n_docs += int(row["n_docs"])
                 n_ins += int(row["n_inserted"])
                 if row["hll"] is not None:
                     hll = hll.merge(HLLSketch.deserialize(bytes(row["hll"]), p=_HLL_P))
-                if row["cms"] is not None:
-                    cms = cms.merge(CountMinSketch.deserialize(bytes(row["cms"]), _CMS_W, _CMS_D))
-                if row["tdigest"] is not None:
-                    td = td.merge(TDigestSketch.deserialize(bytes(row["tdigest"])))
-                if row["kll"] is not None:
-                    kll = kll.merge(KLLSketch.deserialize(bytes(row["kll"])))
             return pd.DataFrame(
-                [(fid, 0, -1, n_docs, n_ins, 0, 0, b"C",
-                  hll.serialize(), cms.serialize(), td.serialize(), kll.serialize())],
+                [(fid, 0, -1, n_docs, n_ins, 0, 0, b"C", hll.serialize())],
                 columns=_PARTIAL_COLS,
             )
         n_ins_seg = int(pdf["n_inserted"].sum())
@@ -491,7 +466,7 @@ def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None)
             payload = b"S" + sk.serialize()
         return pd.DataFrame(
             [(fid, 0, seg, 0, n_ins_seg, int(uniq.size),
-              n_ins_seg - int(uniq.size), payload, None, None, None, None)],
+              n_ins_seg - int(uniq.size), payload, None)],
             columns=_PARTIAL_COLS,
         )
 
@@ -563,9 +538,6 @@ def _assemble_fn(params: BloomParams, build: BuildConfig, pinned: dict | None):
                 "seg_offsets": [offsets.tobytes() if seg_off is not None else None],
                 "bitmap": [bitmap],
                 "hll": [comp["hll"]],
-                "cms": [comp["cms"]],
-                "tdigest": [comp["tdigest"]],
-                "kll": [comp["kll"]],
             }
         )[[f.name for f in REGISTRY_SCHEMA.fields]]
 
@@ -588,9 +560,11 @@ def build_filters(
     expected_sizing: dict | None = None,
     snapshot_id: str | None = None,
 ) -> DataFrame:
-    """Build one Bloom filter (+ companion sketches) per value of key_col.
+    """Build one Bloom filter per value of key_col.
 
-    Returns the registry DataFrame (one row per filter).  When
+    Returns the registry DataFrame (one row per filter): the bitmap, its
+    sizing and counters, and the distinct-frame HLL.  Per-key count-min,
+    t-digest and KLL sketches come from ``sketch_agg.sketch_by_key``.  When
     ``partials_path`` is set, per-partition partials are checkpointed there
     and a re-invocation over the same input resumes, recomputing only the
     missing input partitions — the north rule's mid-build resumability.
@@ -697,7 +671,7 @@ def build_filters(
         if snap_fp is not None:
             _write_snapshot(partials_path, snap_fp)
         partials = spark.read.parquet(partials_path)
-        # one lineage row per (filter, source partition): the companion
+        # one lineage row per (filter, source partition): the counter
         # rows carry the per-partition counters exactly once
         lineage = partials.filter(F.col("seg") == -1).select(
             F.lit(job_id).alias("job_id"),
@@ -770,9 +744,6 @@ def _merge_registry_fn():
         bb = int(first["block_bits"])
         bits = np.zeros(m // 8, dtype=np.uint8)
         hll = HLLSketch(p=_HLL_P)
-        cms = CountMinSketch(width=_CMS_W, depth=_CMS_D)
-        td = TDigestSketch()
-        kll = KLLSketch()
         n_docs = n_ins = sum_entries = max_entries = 0
         for _, row in pdf.iterrows():
             bits |= np.frombuffer(bytes(row["bitmap"]), dtype=np.uint8)
@@ -783,14 +754,6 @@ def _merge_registry_fn():
             max_entries = max(max_entries, ne)
             if row["hll"] is not None:
                 hll = hll.merge(HLLSketch.deserialize(bytes(row["hll"]), p=_HLL_P))
-            if row["cms"] is not None:
-                cms = cms.merge(
-                    CountMinSketch.deserialize(bytes(row["cms"]), _CMS_W, _CMS_D)
-                )
-            if row["tdigest"] is not None:
-                td = td.merge(TDigestSketch.deserialize(bytes(row["tdigest"])))
-            if row["kll"] is not None:
-                kll = kll.merge(KLLSketch.deserialize(bytes(row["kll"])))
         so = first["seg_offsets"]
         seg_off = np.frombuffer(bytes(so), dtype=np.int64) if so is not None else None
         sk = BloomSketch(
@@ -811,9 +774,6 @@ def _merge_registry_fn():
         out["occupancy_fpr"] = [sk.fpr_from_occupancy()]
         out["distinct_frames_hll"] = [est]
         out["hll"] = [hll.serialize()]
-        out["cms"] = [cms.serialize()]
-        out["tdigest"] = [td.serialize()]
-        out["kll"] = [kll.serialize()]
         return out[cols]
 
     return fn
@@ -826,9 +786,11 @@ def merge_registries(*registries: DataFrame) -> DataFrame:
 
     Rows with the same ``filter_id`` merge associatively: bitmaps OR
     (Bloom union — the reference's filter-union semantics over identical
-    (m, h) layouts), companion sketches (HLL/CMS/t-digest/KLL) merge by
-    their own published merge rules, counters add.  Layout columns must
-    agree per filter_id (build the parts with the same pinned
+    (m, h) layouts), the distinct-frame HLLs merge (register max), counters
+    add.  Each input is projected onto ``REGISTRY_SCHEMA``'s columns
+    first, so a registry written when the build also stored count-min,
+    t-digest and KLL columns still merges with a current one.  Layout
+    columns must agree per filter_id (build the parts with the same pinned
     ``expected_sizing``); a mismatch raises rather than silently probing
     wrong positions.  Filter ids present in only some registries pass
     through unchanged.
@@ -838,9 +800,10 @@ def merge_registries(*registries: DataFrame) -> DataFrame:
     """
     if not registries:
         raise ValueError("merge_registries needs at least one registry")
-    uni = registries[0]
+    cols = [f.name for f in REGISTRY_SCHEMA.fields]
+    uni = registries[0].select(*cols)
     for r in registries[1:]:
-        uni = uni.unionByName(r)
+        uni = uni.unionByName(r.select(*cols))
     return uni.groupBy("filter_id").applyInPandas(
         _merge_registry_fn(), schema=REGISTRY_SCHEMA
     )

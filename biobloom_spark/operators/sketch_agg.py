@@ -1,11 +1,11 @@
 """Standalone mergeable sketch aggregation — the library surface.
 
-The registry build (``maker.build_filters``) fuses HLL / count-min /
-t-digest / KLL companions into every Bloom filter row.  This module
-exposes the same four sketches as a *standalone* approximate-aggregation
-API over any DataFrame, per the north rule's framing of the engine as a
-distributed sketch library: per-key cardinality (HLL over token or
-shingle hashes), token frequency (count-min), and document-length
+The Bloom build (``maker.build_filters``) emits bitmaps plus one
+distinct-frame HLL per filter; it builds no other sketch.  This module is
+the engine's one per-key sketch path: a *standalone* approximate-
+aggregation API over any DataFrame, per the north rule's framing of the
+engine as a distributed sketch library: per-key cardinality (HLL over
+token or shingle hashes), token frequency (count-min), and document-length
 quantiles (KLL + t-digest), all built as mergeable partials.
 
 Shape (the UDAF pattern used everywhere in this engine):
@@ -35,7 +35,7 @@ parameters) per distinct key it sees.  For low-cardinality keys (lang,
 bucket) this is trivial; for very high-cardinality keys (url host),
 (a) pass ``sketch_params=(hll_p, cms_width, cms_depth)`` sized to the
 audit's tolerance (see ``_resolve_params`` — ~18 KB/key at (10, 512, 4)
-vs ~340 KB at registry defaults), and (b) pre-repartition the corpus by
+vs ~340 KB at the defaults), and (b) pre-repartition the corpus by
 the key so each task sees ~total_keys / n_partitions of them — that
 trades one corpus shuffle for bounded task state and single-row merge
 groups (``tests/test_sketch_agg.py`` pins the 20k-key audit end-to-end).
@@ -58,6 +58,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .maker import _HLL_P
 
 __all__ = [
     "SKETCH_ROW_SCHEMA",
@@ -96,17 +98,13 @@ _CKPT_PARTIAL_SCHEMA = T.StructType(
 )
 
 
-def _sketch_params():
-    # single source of truth: the registry companions' parameters
-    from .maker import _CMS_D, _CMS_W, _HLL_P
-
-    return _HLL_P, _CMS_W, _CMS_D
+_CMS_W, _CMS_D = 8192, 5
 
 
 def _resolve_params(sketch_params):
     """``sketch_params`` is the high-cardinality-key memory knob: a task
     holds one sketch set per distinct key it sees, and the default
-    registry-grade parameters cost ~340 KB/key (CMS 8192x5 counters
+    parameters cost ~340 KB/key (CMS 8192x5 counters
     dominate) — right for tens of keys (lang, domain-bucket), prohibitive
     for 10^5+ keys (url host).  Pass ``(hll_p, cms_width, cms_depth)``
     sized to the audit's tolerance instead (e.g. ``(10, 512, 4)`` ≈ 18
@@ -114,9 +112,9 @@ def _resolve_params(sketch_params):
     pre-repartition by key).  Every reader of the serialized rows
     (merge, estimates, CMS queries, bounds report) must receive the same
     tuple — the bytes don't self-describe, exactly like the registry's
-    companion sketches."""
+    HLL."""
     if sketch_params is None:
-        return _sketch_params()
+        return _HLL_P, _CMS_W, _CMS_D
     p, w, d = (int(x) for x in sketch_params)
     if not (4 <= p <= 18) or w < 16 or d < 1:
         raise ValueError(f"implausible sketch_params {sketch_params!r}")
@@ -556,34 +554,18 @@ _REPORT_SCHEMA = T.StructType(
 )
 
 
-def sketch_bounds_report(
-    spark,
-    docs: DataFrame,
-    key_col: str = "lang",
-    text_col: str = "text",
-    top_tokens: int = 5,
-    sketch_params: tuple | None = None,
+def _with_exact_sides(
+    rows: DataFrame, docs: DataFrame, key_col: str, text_col: str, top_tokens: int
 ) -> DataFrame:
-    """Published-bound audit of a ``sketch_by_key`` result against exact
-    Spark aggregates of the same corpus — the standalone-library analog of
-    ``sketch_audit.sketch_error_report`` (same bounds, same tolerances;
-    see that module's docstring for the citations).  Exact + boolean
-    columns, so the gate oracle is exact counts plus ``true`` per cell.
-
-    Fully distributed: the exact aggregates (distinct count, doc-length
-    histogram, top tokens) are joined to the sketch rows on key and the
-    flags are evaluated where the rows live (mapInPandas), so the audited
-    key space can be arbitrarily large — only the report rows the caller
-    collects ever reach the driver.  (``spark`` is kept in the signature
-    for API stability; the plan is derived from ``docs``.)
-    """
-    import math
+    """``sketch_by_key`` rows joined on key to exact Spark aggregates of
+    ``docs``: ``exact_distinct`` (distinct tokens), ``hist`` (doc-length
+    histogram as (n, c) structs) and ``top_toks`` (the ``top_tokens``
+    most frequent tokens as (token, cnt) structs, ties to the smaller
+    token) — the exact sides ``sketch_audit._audit_row`` checks the
+    sketches against."""
+    from pyspark.sql import Window
 
     from ..sources.tables import tokens_col
-    from .sketch_audit import _QS as AUDIT_QS
-
-    p, cw, cd = _resolve_params(sketch_params)
-    rows = sketch_by_key(docs, key_col, text_col, sketch_params=sketch_params)
 
     base = docs.filter(
         F.col(key_col).isNotNull() & F.col(text_col).isNotNull()
@@ -597,8 +579,6 @@ def sketch_bounds_report(
         .groupBy("key")
         .agg(F.collect_list(F.struct("n", "c")).alias("hist"))
     )
-    from pyspark.sql import Window
-
     wnd = Window.partitionBy("key").orderBy(F.desc("cnt"), F.asc("token"))
     top = (
         tok.groupBy("key", "token")
@@ -608,58 +588,46 @@ def sketch_bounds_report(
         .groupBy("key")
         .agg(F.collect_list(F.struct("token", "cnt")).alias("top_toks"))
     )
-    joined = (
-        rows.join(exact_d, "key", "left").join(hist, "key", "left").join(top, "key", "left")
+    return rows.join(exact_d, "key", "left").join(hist, "key", "left").join(top, "key", "left")
+
+
+def sketch_bounds_report(
+    spark,
+    docs: DataFrame,
+    key_col: str = "lang",
+    text_col: str = "text",
+    top_tokens: int = 5,
+    sketch_params: tuple | None = None,
+) -> DataFrame:
+    """Published-bound audit of a ``sketch_by_key`` result against exact
+    Spark aggregates of the same corpus (bounds and tolerances in
+    ``sketch_audit``'s module docstring).  Exact + boolean columns, so
+    the gate oracle is exact counts plus ``true`` per cell.
+
+    Fully distributed: the exact aggregates (``_with_exact_sides``) are
+    joined to the sketch rows on key and the flags are evaluated where the
+    rows live (mapInPandas), so the audited key space can be arbitrarily
+    large — only the report rows the caller collects ever reach the
+    driver.  (``spark`` is kept in the signature for API stability; the
+    plan is derived from ``docs``.)
+    """
+    p, cw, cd = _resolve_params(sketch_params)
+    joined = _with_exact_sides(
+        sketch_by_key(docs, key_col, text_col, sketch_params=sketch_params),
+        docs, key_col, text_col, top_tokens,
     )
 
-    hll_tol = 3 * 1.04 / math.sqrt(2**p)
-    cms_eps = math.e / cw
-    td_tol = 2.0 / 200.0
-    qs = tuple(AUDIT_QS)
-
     def audit(batches):
-        from ..sketch import CountMinSketch, HLLSketch, KLLSketch, TDigestSketch
-        from ..sketch.hashing import hash_tokens
-        from .sketch_audit import _rank_err
+        from ..sketch import HLLSketch
+        from .sketch_audit import _audit_row
 
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                hll = HLLSketch.deserialize(bytes(r.hll), p=p)
-                cms = CountMinSketch.deserialize(bytes(r.cms), cw, cd)
-                kll = KLLSketch.deserialize(bytes(r.kll))
-                td = TDigestSketch.deserialize(bytes(r.tdigest))
                 exact = 0 if r.exact_distinct is None or pd.isna(r.exact_distinct) else int(r.exact_distinct)
-                hll_ok = abs(hll.estimate() - exact) <= hll_tol * max(exact, 1)
-                h = r.hist
-                hist_pairs = (
-                    [(float(e["n"]), int(e["c"])) for e in h]
-                    if h is not None and len(h)
-                    else [(0.0, 1)]
-                )
-                kll_ok = (
-                    max(_rank_err(hist_pairs, kll.quantile(q), q) for q in qs)
-                    <= kll.error_bound()
-                )
-                td_ok = max(_rank_err(hist_pairs, td.quantile(q), q) for q in qs) <= td_tol
-                cms_ok = True
-                n_tok = max(int(r.n_tokens), 1)
-                pairs = (
-                    [(e["token"], int(e["cnt"])) for e in r.top_toks]
-                    if r.top_toks is not None and len(r.top_toks)
-                    else []
-                )
-                if pairs:
-                    ests = cms.query_batch(
-                        np.asarray(hash_tokens([t for t, _ in pairs]), dtype=np.uint64)
-                    )
-                    for (_t, true_c), e in zip(pairs, ests):
-                        if e < true_c or (float(e) - true_c) / n_tok > cms_eps:
-                            cms_ok = False
-                out.append(
-                    (str(r.key), int(r.n_docs), int(r.n_tokens), exact,
-                     bool(hll_ok), bool(cms_ok), bool(kll_ok), bool(td_ok))
-                )
+                hll_est = HLLSketch.deserialize(bytes(r.hll), p=p).estimate()
+                flags = _audit_row(r, hll_est, exact, p, cw, cd)[:4]
+                out.append((str(r.key), int(r.n_docs), int(r.n_tokens), exact, *flags))
             yield pd.DataFrame(out, columns=[f.name for f in _REPORT_SCHEMA.fields])
 
     return joined.mapInPandas(audit, _REPORT_SCHEMA)

@@ -127,15 +127,6 @@ def pii_scrub(
     return docs.withColumns({**counts, out_col: cur})
 
 
-def _ngrams_col(toks, n: int):
-    """Word n-grams of a token-array column, space-joined (JVM-side)."""
-    n_frames = F.greatest(F.lit(0), F.size(toks) - F.lit(n - 1))
-    idx = F.when(n_frames > 0, F.sequence(F.lit(1), n_frames)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-
-
 def _top_run(sorted_grams):
     """struct(cnt, gram) of the most frequent gram in a *sorted* array.
 
@@ -195,12 +186,14 @@ def repetition_stats(
     ``__spark_entry__.oracle_sql``).
     """
     from ..sources.tables import tokens_col
+    from .exact import shingle_array_col
 
     # null text => empty doc (n_tokens 0, fractions 0), not -1/null stats
     d = docs.withColumn("__text", F.coalesce(F.col(text_col).cast("string"), F.lit("")))
     d = d.withColumn("__toks", tokens_col("__text"))
-    d = d.withColumn("__bi", F.array_sort(_ngrams_col(F.col("__toks"), 2)))
-    d = d.withColumn("__tri", F.array_sort(_ngrams_col(F.col("__toks"), 3)))
+    joined = F.array_join("__toks", " ")
+    d = d.withColumn("__bi", F.array_sort(shingle_array_col(joined, 2)))
+    d = d.withColumn("__tri", F.array_sort(shingle_array_col(joined, 3)))
     d = d.withColumn("__top2", _top_run(F.col("__bi")))
     d = d.withColumn("__top3", _top_run(F.col("__tri")))
     n_bi = F.size("__bi")
@@ -232,20 +225,15 @@ def doc_fingerprints(
 
     Containment-robust document identity (two docs sharing most content
     share most fingerprint slots), unlike a whole-text hash.  JVM-side:
-    shingles via transform/slice, hashes via xxhash64, bottom-k via
-    array_sort + slice — no Python.
+    shingles via ``exact.shingle_array_col``, hashes via xxhash64, bottom-k
+    via array_sort + slice — no Python.
     """
-    from ..sources.tables import tokens_col
+    from .exact import shingle_array_col
 
-    d = docs.withColumn("__toks", tokens_col(text_col))
-    n_frames = F.greatest(F.lit(0), F.size("__toks") - F.lit(w - 1))
-    idx = F.when(n_frames > 0, F.sequence(F.lit(1), n_frames)).otherwise(
-        F.array().cast("array<int>")
-    )
-    hashes = F.transform(
-        idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i, w)))
-    )
-    return d.select(
+    # null text => empty fingerprint, not null
+    text = F.coalesce(F.col(text_col), F.lit(""))
+    hashes = F.transform(shingle_array_col(text, w), lambda s: F.xxhash64(s))
+    return docs.select(
         id_col,
         F.slice(F.array_sort(F.array_distinct(hashes)), 1, k).alias("fingerprint"),
     )
@@ -264,19 +252,12 @@ def doc_fingerprints_exploded(
     fingerprint slot (sortable / hashable by the driver's canonicalizer).
     Still fully JVM-side.
     """
-    from ..sources.tables import tokens_col
+    from .exact import shingle_array_col
 
-    d = docs.withColumn("__toks", tokens_col(text_col))
-    n_frames = F.greatest(F.lit(0), F.size("__toks") - F.lit(w - 1))
-    idx = F.when(n_frames > 0, F.sequence(F.lit(1), n_frames)).otherwise(
-        F.array().cast("array<int>")
-    )
-    fps = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice("__toks", i, w)))
-    )
+    fps = F.transform(shingle_array_col(text_col, w), lambda s: F.md5(s))
     bottomk = F.slice(F.array_sort(F.array_distinct(fps)), 1, k)
     return (
-        d.select(id_col, F.posexplode(bottomk).alias("pos", "fp"))
+        docs.select(id_col, F.posexplode(bottomk).alias("pos", "fp"))
         .select(id_col, (F.col("pos") + 1).cast("int").alias("slot"), "fp")
     )
 

@@ -69,12 +69,10 @@ REGISTRY_SCHEMA = T.StructType(
         # segmented 64-bit layout: int64[S+1] word offsets (little-endian
         # bytes; NULL = unsegmented) — see sketch.bloom.word_index64
         T.StructField("seg_offsets", T.BinaryType(), True),
-        # the .bf payload + companion sketches
+        # the .bf payload + the distinct-frame HLL behind
+        # distinct_frames_hll (merge_registries clamps num_entries with it)
         T.StructField("bitmap", T.BinaryType(), False),
         T.StructField("hll", T.BinaryType(), True),
-        T.StructField("cms", T.BinaryType(), True),
-        T.StructField("tdigest", T.BinaryType(), True),
-        T.StructField("kll", T.BinaryType(), True),
     ]
 )
 
@@ -83,8 +81,10 @@ PARTIAL_SCHEMA = T.StructType(
         T.StructField("filter_id", T.StringType(), False),
         # source input partition id: the unit a resumed build skips
         T.StructField("bucket", T.IntegerType(), False),
-        # bitmap segment this row belongs to; -1 = companion row (counters
-        # + HLL/CMS/t-digest/KLL, no bloom payload)
+        # bitmap segment this row belongs to; -1 = per-key row (doc/frame
+        # counters + the distinct-frame HLL, no bloom payload).  Token
+        # frequency and doc-length sketches come from sketch_agg.sketch_by_key
+        # and are not built here.
         T.StructField("seg", T.IntegerType(), False),
         T.StructField("n_docs", T.LongType(), False),
         T.StructField("n_inserted", T.LongType(), False),
@@ -92,9 +92,6 @@ PARTIAL_SCHEMA = T.StructType(
         T.StructField("n_redundant", T.LongType(), False),
         T.StructField("bitmap", T.BinaryType(), False),
         T.StructField("hll", T.BinaryType(), True),
-        T.StructField("cms", T.BinaryType(), True),
-        T.StructField("tdigest", T.BinaryType(), True),
-        T.StructField("kll", T.BinaryType(), True),
     ]
 )
 

@@ -2,8 +2,10 @@
 
 The reference builds filters in one batch pass over fixed input files
 (BioBloomMaker).  A crawl pipeline instead sees pages *arrive*; because
-the engine's filters and companion sketches are mergeable UDAF state
-(bitmap OR + HLL/CMS/t-digest/KLL merges), the build extends to a stream
+the engine's filters are mergeable UDAF state (bitmap OR + the
+distinct-frame HLL's register max — the build makes no other sketch; per-key
+count-min, t-digest and KLL come from ``sketch_agg.sketch_by_key``, whose
+own stream is ``streaming.sketch_stream``), the build extends to a stream
 for free: each micro-batch builds a normal batch registry over its pages
 with pinned (m, h) sizing, then ``maker.merge_registries`` folds it into
 the running registry — associativity makes the result independent of how
@@ -155,6 +157,11 @@ def build_stream_writer(
     dropped (count them upstream if that matters); sizing from a sample
     only under-sizes the filter's FPR, never its correctness (no false
     negatives regardless).
+
+    Each committed version is a registry of bitmaps plus the
+    distinct-frame HLL.  A stream restarted over a version written when
+    registries also stored count-min, t-digest and KLL columns still
+    folds: ``merge_registries`` drops those columns.
     """
     from ..operators.maker import build_filters, merge_registries
     from ..operators.mibf_store import _stage_done

@@ -96,6 +96,33 @@ class TestMergeRegistries:
         assert sorted(r["filter_id"] for r in merged.collect()) == ["de", "en"]
         assert _bitmaps(merged) == {**_bitmaps(en), **_bitmaps(de)}
 
+    def test_legacy_sketch_columns_merge(self, spark, tmp_path, corpus, sizing):
+        """A registry persisted when the build also stored count-min,
+        t-digest and KLL columns (the previous version a restarted
+        ``build_stream`` merges into) merges with a current one into the
+        same rows as two current registries, and ``load_registry`` reads
+        it."""
+        half = F.pmod(F.xxhash64("url"), F.lit(2))
+        a, b = (
+            build_filters(spark, corpus.filter(half == i), id_col="url",
+                          expected_sizing=sizing)
+            for i in range(2)
+        )
+        path = str(tmp_path / "legacy_registry")
+        blob = F.lit(bytearray(b"\x01\x02"))
+        a.withColumns({c: blob for c in ("cms", "tdigest", "kll")}).write.parquet(path)
+        legacy = spark.read.parquet(path)
+        assert {"cms", "tdigest", "kll"} <= set(legacy.columns)
+
+        def rows(df):
+            return sorted(tuple(r) for r in df.collect())
+
+        assert rows(merge_registries(legacy, b)) == rows(merge_registries(a, b))
+        got, want = load_registry(legacy), load_registry(a)
+        assert [(f["filter_id"], f["bitmap"], f["num_entries"]) for f in got] == [
+            (f["filter_id"], f["bitmap"], f["num_entries"]) for f in want
+        ]
+
     def test_layout_mismatch_raises(self, spark, corpus, sizing):
         a = build_filters(spark, corpus, id_col="url", expected_sizing=sizing)
         other = {

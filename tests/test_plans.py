@@ -158,6 +158,23 @@ def test_key_distribution_no_global_window(spark, pq_corpus):
     assert "Window" not in plan_string(dist, "simple")
 
 
+@pytest.mark.parametrize(
+    "which", ["repetition_stats", "doc_fingerprints", "doc_fingerprints_exploded"]
+)
+def test_textstats_shingles_without_sequence_slice(spark, pq_corpus, which):
+    """Shingles come from ``exact.shingle_array_col``'s one regex pass, not
+    an interpreted ``transform(sequence(1, n), i -> concat_ws(' ',
+    slice(toks, i, w)))`` over the token array."""
+    import re
+
+    from biobloom_spark.operators import textstats
+    from biobloom_spark.plans import plan_string
+
+    plan = plan_string(getattr(textstats, which)(pq_corpus, id_col="url"), "simple")
+    assert "regexp_extract_all(" in plan, plan
+    assert not re.search(r"sequence\(.*slice\(", plan), plan
+
+
 def test_exact_verify_stage_not_cartesian(spark, pq_corpus):
     """The two-phase dedup verify (candidates → exact Jaccard) must stay
     equi-join shaped: each candidate doc's shingle array joins the

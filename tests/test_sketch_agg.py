@@ -141,16 +141,31 @@ class TestSketchByKey:
             assert r["n_tokens"] == exact[k]["n_tokens"]
 
     def test_merge_rows_equals_one_shot(self, spark, corpus):
+        """Merged rows equal the one-shot rows where the merge is exact
+        (HLL, CMS, counters) and hold every published bound where it is
+        order-sensitive (KLL, t-digest)."""
+        from biobloom_spark.operators.maker import _HLL_P
+        from biobloom_spark.operators.sketch_agg import _CMS_D, _CMS_W, _with_exact_sides
+        from biobloom_spark.operators.sketch_audit import _audit_row
+        from biobloom_spark.sketch import HLLSketch
+
         whole = _rows(sketch_by_key(corpus, key_col="lang"))
         half = F.pmod(F.xxhash64("url"), F.lit(2))
         h1 = sketch_by_key(corpus.filter(half == 0), key_col="lang")
         h2 = sketch_by_key(corpus.filter(half == 1), key_col="lang")
-        merged = _rows(merge_sketch_rows(h1, h2))
+        merged_df = merge_sketch_rows(h1, h2)
+        merged = _rows(merged_df)
         for k in whole:
             assert bytes(merged[k]["hll"]) == bytes(whole[k]["hll"])
             assert bytes(merged[k]["cms"]) == bytes(whole[k]["cms"])
             assert merged[k]["n_docs"] == whole[k]["n_docs"]
             assert merged[k]["n_tokens"] == whole[k]["n_tokens"]
+        audited = _with_exact_sides(merged_df, corpus, "lang", "text", 5).collect()
+        assert len(audited) == len(whole)
+        for r in audited:
+            est = HLLSketch.deserialize(bytes(r["hll"]), p=_HLL_P).estimate()
+            flags = _audit_row(r, est, int(r["exact_distinct"]), _HLL_P, _CMS_W, _CMS_D)[:4]
+            assert flags == (True, True, True, True), (r["key"], flags)
 
     def test_estimates_within_bounds(self, spark, corpus):
         from biobloom_spark.operators.maker import _HLL_P

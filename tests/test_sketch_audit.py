@@ -53,8 +53,11 @@ class TestSketchErrorReport:
             )
 
     def test_bounds_hold_after_merge(self, spark, documents):
-        """Merged companion sketches must satisfy the same bounds — the
-        mergeability contract is about estimates, not just bytes."""
+        """A merged registry's HLL must satisfy the same bound — the
+        mergeability contract is about estimates, not just bytes.  (The
+        count-min, KLL and t-digest audited here are ``sketch_by_key``'s;
+        their post-merge bounds are
+        ``test_sketch_agg.py::TestSketchByKey::test_merge_rows_equals_one_shot``'s.)"""
         from biobloom_spark.operators.maker import (
             _HLL_P,
             build_filters,
@@ -76,12 +79,10 @@ class TestSketchErrorReport:
             for i in range(2)
         ]
         merged = merge_registries(*parts)
-        rep = {
-            r["filter_id"]: r
-            for r in sketch_error_report(spark, documents, registry=merged).collect()
-        }
-        for fid, r in rep.items():
-            assert r["cms_ok"] and r["kll_ok"] and r["tdigest_ok"], r.asDict()
+        rep = sketch_error_report(spark, documents, registry=merged).collect()
+        assert len(rep) == 5
+        for r in rep:
+            assert r["hll_ok"], r.asDict()
         # merged HLL vs the one-shot build's EXACT distinct count
         full = build_filters(spark, documents, key_col="lang", id_col="doc_id",
                              expected_sizing=sizing)

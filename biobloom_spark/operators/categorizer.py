@@ -650,10 +650,6 @@ def categorize_pairs(
     return _categorize(spark, docs, filters, cfg, id_col, [text1_col, text2_col])
 
 
-#: filter count from which ``summarize`` takes the exploded plan
-_EXPLODE_MIN_FILTERS = 64
-
-
 def summarize(result: DataFrame, filter_ids: list[str]) -> DataFrame:
     """Per-filter summary counters — the ``_summary.tsv`` sink
     (ResultsManager.hpp:191-237; column semantics README.md:149-155).
@@ -663,35 +659,29 @@ def summarize(result: DataFrame, filter_ids: list[str]) -> DataFrame:
     ``unique`` = sole-filter hits, ``shared`` = hits - unique; rates over
     the total document count.
 
-    Below ``_EXPLODE_MIN_FILTERS`` filters: one wide aggregation (2F+2
-    expressions, map-side partial, zero shuffle of doc rows).  At or
-    above it: the hits arrays explode into tagged keys and one small
-    groupBy counts them — the wide plan's 2F+2 Catalyst expressions blow
-    up plan compilation at the thousands of labels the engine otherwise
-    supports, while the exploded plan is O(1) expressions at any F.
-    Identical output (property-tested both ways).
+    One scan: each doc emits 'h:<fid>' per hit plus one 'a:<assigned>',
+    and a single groupBy counts the tags (a small shuffle — at most 2F+2
+    keyed partial rows per task).  The plan has O(1) expressions at any
+    filter count F.  total = the sum of the 'a:' counts (every doc has
+    exactly one assignment).
     """
-    if len(filter_ids) >= _EXPLODE_MIN_FILTERS:
-        return _summarize_exploded(result, filter_ids)
-    aggs = [F.count(F.lit(1)).alias("total")]
-    for fid in filter_ids:
-        aggs.append(
-            F.sum(F.array_contains("hits", fid).cast("long")).alias(f"hits_{fid}")
-        )
-        aggs.append(
-            F.sum((F.col("assigned") == fid).cast("long")).alias(f"unique_{fid}")
-        )
-    aggs.append(F.sum((F.col("assigned") == MULTI_MATCH).cast("long")).alias("multi"))
-    aggs.append(F.sum((F.col("assigned") == NO_MATCH).cast("long")).alias("nomatch"))
-    g = result.agg(*aggs).collect()[0]
-    total = g["total"] or 1
-    rows = []
-    for fid in filter_ids:
-        hits, uniq = int(g[f"hits_{fid}"] or 0), int(g[f"unique_{fid}"] or 0)
-        rows.append((fid, hits, uniq, hits - uniq, hits / total, uniq / total, (hits - uniq) / total))
-    rows.append((MULTI_MATCH, int(g["multi"]), int(g["multi"]), 0, g["multi"] / total, g["multi"] / total, 0.0))
-    rows.append((NO_MATCH, int(g["nomatch"]), int(g["nomatch"]), 0, g["nomatch"] / total, g["nomatch"] / total, 0.0))
-    return local_frame(result.sparkSession, rows, _SUMMARY_SCHEMA)
+    tags = F.concat(
+        F.expr("transform(hits, h -> concat('h:', h))"),
+        F.array(F.concat(F.lit("a:"), F.col("assigned"))),
+    )
+    counts = {"h:": {}, "a:": {}}
+    for r in (
+        result.select(F.explode(tags).alias("k"))
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    ):
+        counts[r["k"][:2]][r["k"][2:]] = int(r["cnt"])
+    unique = counts["a:"]
+    return _summary_frame(
+        result.sparkSession, filter_ids, counts["h:"], unique,
+        sum(unique.values()),
+    )
 
 
 _SUMMARY_SCHEMA = T.StructType(
@@ -707,38 +697,24 @@ _SUMMARY_SCHEMA = T.StructType(
 )
 
 
-def _summarize_exploded(result: DataFrame, filter_ids: list[str]) -> DataFrame:
-    """Large-filter-set summary: tag-explode instead of a 2F+2-column agg.
-
-    One scan: each doc emits 'h:<fid>' per hit plus one 'a:<assigned>',
-    a single groupBy counts the tags (small shuffle — at most 2F+2 keyed
-    partial rows per task), and the driver assembles the same rows the
-    wide path produces.  total = sum of 'a:' counts (every doc has
-    exactly one assignment)."""
-    tags = F.concat(
-        F.expr("transform(hits, h -> concat('h:', h))"),
-        F.array(F.concat(F.lit("a:"), F.col("assigned"))),
-    )
-    counts = {
-        r["k"]: int(r["cnt"])
-        for r in result.select(F.explode(tags).alias("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    total = sum(v for k, v in counts.items() if k.startswith("a:")) or 1
+def _summary_frame(
+    spark: SparkSession, filter_ids: list[str], hits: dict, unique: dict,
+    total: int,
+) -> DataFrame:
+    """The ``_SUMMARY_SCHEMA`` rows of ``summarize`` and
+    ``summarize_fused``: one per filter (``shared = hits - unique``), then
+    ``multiMatch`` and ``noMatch``, whose hits are their unique count.
+    ``hits``/``unique`` map an id to its count (absent = 0); rates are
+    over ``total`` (1 when there are no documents)."""
+    total = total or 1
     rows = []
     for fid in filter_ids:
-        hits = counts.get(f"h:{fid}", 0)
-        uniq = counts.get(f"a:{fid}", 0)
-        rows.append(
-            (fid, hits, uniq, hits - uniq, hits / total, uniq / total,
-             (hits - uniq) / total)
-        )
+        h, u = hits.get(fid, 0), unique.get(fid, 0)
+        rows.append((fid, h, u, h - u, h / total, u / total, (h - u) / total))
     for special in (MULTI_MATCH, NO_MATCH):
-        n = counts.get(f"a:{special}", 0)
+        n = unique.get(special, 0)
         rows.append((special, n, n, 0, n / total, n / total, 0.0))
-    return local_frame(result.sparkSession, rows, _SUMMARY_SCHEMA)
+    return local_frame(spark, rows, _SUMMARY_SCHEMA)
 
 
 def summarize_fused(
@@ -759,8 +735,8 @@ def summarize_fused(
     ``categorize`` remains the per-document operator.
 
     Registries past the session's broadcast budget route through the
-    sharded categorize (word-range chunking included) + the exploded
-    summary — the fused single-pass shape needs every bitmap resident at
+    sharded categorize (word-range chunking included) + ``summarize`` —
+    the fused single-pass shape needs every bitmap resident at
     once, so past the budget correctness of the memory bound wins over
     the fused plan.
     """
@@ -772,7 +748,7 @@ def summarize_fused(
     passes = _plan_passes(filters, _broadcast_budget(spark))
     if len(passes) > 1:
         res = _categorize_sharded(spark, docs, filters, passes, cfg, id_col, [text_col])
-        return _summarize_exploded(res, filter_ids)
+        return summarize(res, filter_ids)
     bc = spark.sparkContext.broadcast(filters)
     schema = T.StructType(
         [
@@ -814,18 +790,12 @@ def summarize_fused(
         )
         .collect()
     )
-    by_id = {r["filter_id"]: r for r in agg}
-    total = int(by_id.get("__total", {"total": 0})["total"]) or 1
-    rows = []
-    for fid in filter_ids + [MULTI_MATCH, NO_MATCH]:
-        r = by_id.get(fid)
-        hits = int(r["hits"]) if r else 0
-        uniq = int(r["unique"]) if r else 0
-        shared = hits - uniq if fid in filter_ids else 0
-        rows.append(
-            (fid, hits, uniq, shared, hits / total, uniq / total, shared / total)
-        )
-    return local_frame(spark, rows, _SUMMARY_SCHEMA)
+    return _summary_frame(
+        spark, filter_ids,
+        {r["filter_id"]: int(r["hits"]) for r in agg},
+        {r["filter_id"]: int(r["unique"]) for r in agg},
+        sum(int(r["total"]) for r in agg),
+    )
 
 
 def write_demultiplexed_reads(

@@ -14,7 +14,8 @@ Three roles:
    vs. the Bloom path's zero-shuffle broadcast probe — the scale
    trade-off documented in SURVEY.md §2.3-J1).
 
-All shingling is JVM-side (split/transform/slice/concat_ws) — no Python.
+All shingling is JVM-side — one ``regexp_extract_all`` per document
+(``shingle_array_col``), no Python.
 
 Round-6 plan shape (optimization guide §2.3-2.4, §3.1): the old plan
 evaluated the shingle explode THREE times (refsets branch, per-doc frame
@@ -39,9 +40,10 @@ left-join back to the corpus.  The rewritten plan:
 Explodes: 2 evaluations (reference agg + probe) instead of 3; exchanges
 on the frame volume: 0 (the old plan had the distinct refsets exchange).
 The per-label column pivot needs the label list at plan time (one tiny
-distinct-collect job, same as every build path) and is the right shape
-up to hundreds of labels; beyond ``_PIVOT_MAX_LABELS`` the generic
-join-shaped plan (kept below) takes over.
+distinct-collect job, same as every build path) and packs each shingle's
+labels into one long mask, so it serves up to ``_PIVOT_MAX_LABELS`` (64)
+labels; beyond that the generic join-shaped plan (kept below) takes over.
+Both plans broadcast the reference side.
 """
 
 from __future__ import annotations
@@ -57,12 +59,6 @@ __all__ = ["shingle_frames", "exact_classify", "exact_classify_summary",
 #: beyond this many labels the per-label bitmask pivot no longer fits one
 #: long column; fall back to the generic join shape
 _PIVOT_MAX_LABELS = 64
-
-
-def _tokens(text_col: str):
-    from ..sources.tables import tokens_col
-
-    return tokens_col(text_col)
 
 
 def shingle_array_col(text_col, w: int = 3):
@@ -134,7 +130,6 @@ def exact_hit_matrix(
     text_col: str = "text",
     w: int = 3,
     labels: list | None = None,
-    broadcast_refs: bool = True,
 ) -> tuple[DataFrame, list]:
     """Per-doc hit matrix: one row per document with ``__frames`` and one
     ``__hits_<i>`` column per label = # frame occurrences (with
@@ -144,7 +139,7 @@ def exact_hit_matrix(
     side aggregates each shingle's key set into ONE long bitmask via
     ``bit_or`` (a declarative aggregate — whole-stage codegen, unlike the
     object-hash ``collect_set``, which measured 4x slower here); frame
-    rows join 1:1 against it and collapse map-side into per-doc
+    rows join 1:1 against it (broadcast) and collapse map-side into per-doc
     conditional sums over the mask bits, so the only exchange after the
     reference build carries ~|docs| rows.  Requires
     ``len(labels) <= 64`` (callers fall back to the join plan beyond).
@@ -156,16 +151,16 @@ def exact_hit_matrix(
     sh = _frame_rows(docs, key_col, id_col, text_col, w)
     bit = None
     for i, lab in enumerate(labels):
-        c = F.when(F.col("__key") == F.lit(lab), F.lit(1 << i).cast("long"))
-        bit = c if bit is None else bit.when(F.col("__key") == F.lit(lab), F.lit(1 << i).cast("long"))
+        # bit i of a signed long: label 63's bit is the sign bit
+        val = F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
+        cond = F.col("__key") == F.lit(lab)
+        bit = F.when(cond, val) if bit is None else bit.when(cond, val)
     refs = (
         sh.where(F.col("shingle").isNotNull() & F.col("__key").isNotNull())
         .groupBy("shingle")
         .agg(F.bit_or(bit if bit is not None else F.lit(None).cast("long")).alias("__mask"))
     )
-    if broadcast_refs:
-        refs = F.broadcast(refs)
-    j = sh.join(refs, on="shingle", how="left")
+    j = sh.join(F.broadcast(refs), on="shingle", how="left")
     aggs = [
         F.sum(
             F.when(
@@ -187,7 +182,6 @@ def exact_classify(
     text_col: str = "text",
     w: int = 3,
     threshold: float = 0.5,
-    broadcast_refs: bool = True,
 ) -> DataFrame:
     """Per-document exact classification: (id, assigned).
 
@@ -195,19 +189,15 @@ def exact_classify(
     (and it shares at least one frame with refset(L) — the join semantics
     of the relational formulation) where refset(L) = distinct shingles of
     all docs with key L; frame occurrences count with multiplicity,
-    mirroring the Bloom kernels' hit counting.  ``broadcast_refs``
-    broadcasts the ``shingle -> keys`` reference aggregate — right when
-    the corpus vocabulary fits executors; disable for a shuffle join at
-    larger reference corpora.
+    mirroring the Bloom kernels' hit counting.  Up to
+    ``_PIVOT_MAX_LABELS`` labels it scores ``exact_hit_matrix``'s pivot,
+    past it ``_exact_classify_joinplan``; both broadcast the reference
+    side.
     """
     labels = _sorted_labels(docs, key_col)
     if len(labels) > _PIVOT_MAX_LABELS:
-        return _exact_classify_joinplan(
-            docs, key_col, id_col, text_col, w, threshold, broadcast_refs
-        )
-    per_doc, labels = exact_hit_matrix(
-        docs, key_col, id_col, text_col, w, labels, broadcast_refs
-    )
+        return _exact_classify_joinplan(docs, key_col, id_col, text_col, w, threshold)
+    per_doc, labels = exact_hit_matrix(docs, key_col, id_col, text_col, w, labels)
     hit = [
         (F.col(f"__hits_{i}") > 0)
         & (F.col(f"__hits_{i}") >= F.lit(threshold) * F.col("__frames"))
@@ -237,15 +227,14 @@ def _exact_classify_joinplan(
     text_col: str,
     w: int,
     threshold: float,
-    broadcast_refs: bool,
 ) -> DataFrame:
     """Generic join-shaped plan (the pre-round-6 formulation) — kept for
     label cardinalities where a per-label column pivot is the wrong
     shape.  Identical results."""
     sh = shingle_frames(docs.select(id_col, key_col, text_col), text_col, w)
-    refsets = sh.select(F.col(key_col).alias("ref_key"), "shingle").distinct()
-    if broadcast_refs:
-        refsets = F.broadcast(refsets)
+    refsets = F.broadcast(
+        sh.select(F.col(key_col).alias("ref_key"), "shingle").distinct()
+    )
     frames = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("frames"))
     hits = (
         sh.join(refsets, on="shingle")

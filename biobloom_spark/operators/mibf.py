@@ -133,6 +133,22 @@ def _seg_bounds(m_slots: int, n_segments: int) -> np.ndarray:
     return (np.arange(n_segments + 1, dtype=np.int64) * m_slots) // n_segments
 
 
+def _mibf_segments(spark: SparkSession, m_slots: int) -> int:
+    """Slot-range segment count of the resolve stage, the one rule for
+    ``build_mibf`` and ``mibf_store.build_mibf_store``: one ownership
+    reducer per task slot (at least 16), and enough segments that one
+    segment's ids (2 B per slot) fit ``session._broadcast_budget`` — the
+    unit a store classify pass broadcasts — under the ``_clamp_segments``
+    plan-size guard.  Resolved ids do not depend on the count (pinned by
+    test_segmented_resolution_matches_local_twin)."""
+    from ..session import _broadcast_budget
+
+    return _clamp_segments(max(
+        16, spark.sparkContext.defaultParallelism,
+        -(-(2 * m_slots) // _broadcast_budget(spark)),
+    ))
+
+
 def _resolved_segments(
     base: DataFrame,
     bc_map,
@@ -293,7 +309,6 @@ def build_mibf(
     occupancy: float = 0.5,
     seeds: list[str] | None = None,
     expected_entries: int | None = None,
-    merge_segments: int | None = None,
     canonical: bool = False,
     hash_family: str = "poly",
 ) -> MIBFSketch:
@@ -311,7 +326,7 @@ def build_mibf(
        (``-b``, default 0.5) — the reference's ``-n``/file-size estimate;
     2. claims: every (label, frame) claims its h probe slots with a
        deterministic pseudo-random tiebreak; map tasks split their sparse
-       claim sets by slot range into ``merge_segments`` segments and one
+       claim sets by slot range into ``_mibf_segments`` segments and one
        reducer per segment resolves ownership to a uint16 id slice — the
        driver only memcpy-assembles slices (never touches claim blobs),
        mirroring the Bloom build's segmented merge (maker._assemble_fn);
@@ -325,24 +340,16 @@ def build_mibf(
     move, and no claim-cardinality data structure ever lands on the
     driver.  Labels are capped at 32767 (Doc/MultiIndex.md:165).
 
-    ``session._broadcast_budget`` caps the lost-slot bytes (8 B per
-    slot) one saturation leg broadcasts; a larger lost-pair set splits
-    into more label groups.
+    ``session._broadcast_budget`` sets the segment count
+    (``_mibf_segments``) and caps the lost-slot bytes (8 B per slot) one
+    saturation leg broadcasts; a larger lost-pair set splits into more
+    label groups.
     """
     base, bc_map, labels, seed_arr, h, canonical, m_slots = _prep_build(
         spark, docs, key_col, text_col, shingle_w, num_hashes, occupancy,
         seeds, expected_entries, canonical, hash_family,
     )
-    if merge_segments is None:
-        # scale-adaptive: one ownership reducer per available task slot
-        # (resolved ids are segment-count-invariant — pinned by
-        # test_segmented_resolution_matches_local_twin); the fixed 16 left
-        # half the cores idle through the resolve stage on local[32] and
-        # under-parallelises any larger cluster
-        merge_segments = _clamp_segments(
-            max(16, spark.sparkContext.defaultParallelism)
-        )
-    S = max(1, int(merge_segments))
+    S = _mibf_segments(spark, m_slots)
     bounds = _seg_bounds(m_slots, S)
 
     resolved = _resolved_segments(

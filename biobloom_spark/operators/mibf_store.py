@@ -49,8 +49,8 @@ from ..sketch.mibf import (
 )
 from .mibf import (
     _classify_mibf_sharded,
-    _clamp_segments,
     _lost_slot_scan,
+    _mibf_segments,
     _prep_build,
     _resolved_segments,
     _seg_bounds,
@@ -200,8 +200,6 @@ def build_mibf_store(
     occupancy: float = 0.5,
     seeds: list[str] | None = None,
     expected_entries: int | None = None,
-    segment_bytes: int = 32 << 20,
-    min_segments: int = 16,
     canonical: bool = False,
     hash_family: str = "poly",
     resume: bool = False,
@@ -210,9 +208,11 @@ def build_mibf_store(
     """Build a miBF straight into a parquet store (MIBFGen.hpp:131-309
     semantics; byte-identical resolution+saturation to ``build_mibf``).
 
-    Segment count = enough that one segment's ids fit ``segment_bytes``
-    (but at least ``min_segments`` for reducer parallelism), clamped by
-    the same plan-size guard as the sharded passes.  The lifecycle:
+    The segment count is ``mibf._mibf_segments``, the rule
+    ``build_mibf`` resolves with: at least one segment per task slot
+    (and 16), and enough that one segment's ids fit the session's
+    broadcast budget, which is what each classify pass broadcasts.  The
+    lifecycle:
 
     1. sizing pass (shared ``_prep_build``);
     2. ``_resolved_segments`` writes resolved uint16 slices to
@@ -233,9 +233,12 @@ def build_mibf_store(
     (or ``snapshot_id`` for stable non-file identities, e.g. an Iceberg
     snapshot) and every sizing-relevant parameter is persisted at
     ``{path}/snapshot``; on mismatch the stale state is discarded and the
-    build restarts from scratch.  The expensive stage (resolution — the
-    corpus-wide claims shuffle) is never repeated once checkpointed; the
-    per-segment rows double as the build's partition-level lineage.
+    build restarts from scratch.  The segment count is persisted next to
+    the fingerprint, so a resumed build keeps the bounds its checkpoint
+    was written with whatever the resuming session's budget.  The
+    expensive stage (resolution — the corpus-wide claims shuffle) is
+    never repeated once checkpointed; the per-segment rows double as the
+    build's partition-level lineage.
     """
     snap_src = snapshot_id or ";".join(sorted(docs.inputFiles()))
     # "lost-pairs": the resolved/ checkpoint format, whose rows carry the
@@ -243,8 +246,7 @@ def build_mibf_store(
     # before that column existed fingerprints differently and rebuilds
     param_fp = repr((
         key_col, text_col, shingle_w, num_hashes, occupancy, seeds,
-        expected_entries, segment_bytes, min_segments, canonical, hash_family,
-        "lost-pairs",
+        expected_entries, canonical, hash_family, "lost-pairs",
     ))
     snap_fp = (
         hashlib.md5((snap_src + "|" + param_fp).encode()).hexdigest()
@@ -258,10 +260,11 @@ def build_mibf_store(
 
     state = "fresh"
     if resume and snap_fp is not None and _stage_done(spark, snap_path):
-        old_fp = spark.read.parquet(snap_path).collect()[0]["fp"]
-        if old_fp == snap_fp:
+        snap = spark.read.parquet(snap_path).collect()[0]
+        if snap["fp"] == snap_fp:
             if _stage_done(spark, meta_path):
                 return load_mibf_store(spark, path)
+            S = int(snap["n_segments"])
             if _stage_done(spark, seg_path):
                 state = "have_segments"
             elif _stage_done(spark, resolved_path):
@@ -269,22 +272,21 @@ def build_mibf_store(
     if state == "fresh":
         for p in (snap_path, resolved_path, seg_path, meta_path):
             _delete_dir(spark, p)
-        if snap_fp is not None:
-            spark.createDataFrame([(snap_fp,)], "fp string").write.mode(
-                "overwrite"
-            ).parquet(snap_path)
 
-    # deterministic re-derivation: same input + params => same labels,
-    # m_slots, and segment bounds, so a resumed invocation recomputes the
-    # cheap sizing pre-pass instead of persisting it
+    # deterministic re-derivation: same input + params => same labels and
+    # m_slots, so a resumed invocation recomputes the cheap sizing
+    # pre-pass instead of persisting it
     base, bc_map, labels, seed_arr, h, canonical, m_slots = _prep_build(
         spark, docs, key_col, text_col, shingle_w, num_hashes, occupancy,
         seeds, expected_entries, canonical, hash_family,
     )
     L = len(labels)
-    S = _clamp_segments(
-        max(int(min_segments), -(-(2 * m_slots) // int(segment_bytes)))
-    )
+    if state == "fresh":
+        S = _mibf_segments(spark, m_slots)
+        if snap_fp is not None:
+            spark.createDataFrame(
+                [(snap_fp, S)], "fp string, n_segments int"
+            ).write.mode("overwrite").parquet(snap_path)
     bounds = _seg_bounds(m_slots, S)
     meta7 = (m_slots, h, shingle_w, labels, seed_arr, hash_family, canonical)
 

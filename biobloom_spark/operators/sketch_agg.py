@@ -18,7 +18,7 @@ Shape (the UDAF pattern used everywhere in this engine):
    rows, so a hot key's merge group does NOT grow with corpus size.
 2. ``applyInPandas`` merge, one level while partials are few, salted two
    levels past that.  Partials carry a deterministic ``salt =
-   partition_id % fanout``.  The default fanout (``_default_fanout``) is
+   partition_id % fanout``.  The fanout (``_default_fanout``) is
    1 — one merge per key — while a key's partial rows (n_partitions x
    the HLL + CMS row bytes, ~344 KB each at the defaults) fit
    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: up to 195
@@ -214,7 +214,6 @@ def sketch_by_key(
     text_col: str = "text",
     distinct: str = "tokens",
     shingle_w: int = 3,
-    merge_fanout: int | None = None,
     sketch_params: tuple | None = None,
 ) -> DataFrame:
     """One sketch-row per key: (key, n_docs, n_tokens, hll, cms, kll,
@@ -226,14 +225,12 @@ def sketch_by_key(
     - ``kll`` / ``tdigest``: document-length (token-count) quantiles;
     - ``n_docs`` / ``n_tokens``: exact counters (merge by addition).
 
-    ``merge_fanout`` bounds any single merge task's input to roughly
-    n_partitions / fanout sketch rows via a deterministic two-level salted
-    merge.  The default merges in one level while a key's partial rows
-    fit the session's AQE advisory partition size, and uses
-    ~sqrt(n_partitions) (balancing the two levels) above it — see
-    ``_default_fanout``.  Pass 1 to force a single-level merge.  HLL and
-    CMS results are bit-identical under every fanout (commutative
-    merges); the quantile sketches stay inside their published bounds.
+    The merge runs in one level while a key's partial rows fit the
+    session's AQE advisory partition size, and above it in two salted
+    levels of ~sqrt(n_partitions) rows per merge task (``_default_fanout``
+    derives the fanout).  HLL and CMS results are bit-identical under
+    every fanout (commutative merges); the quantile sketches stay inside
+    their published bounds.
 
     Null keys/texts are dropped (same contract as ``build_filters``).
     """
@@ -242,8 +239,7 @@ def sketch_by_key(
     from ..session import ensure_workers
 
     ensure_workers(docs.sparkSession)
-    if merge_fanout is None:
-        merge_fanout = _default_fanout(docs, sketch_params)
+    merge_fanout = _default_fanout(docs, sketch_params)
     part = _partials_df(
         docs, key_col, text_col, distinct, shingle_w, merge_fanout,
         sketch_params=sketch_params,
@@ -252,9 +248,10 @@ def sketch_by_key(
 
 
 def _default_fanout(docs: DataFrame, sketch_params: tuple | None = None) -> int:
-    """The merge fanout when the caller passes none — the one place it is
-    decided.  1 (a single merge level) while one key's partial rows,
-    ``n_parts`` x the fixed row bytes of the resolved ``sketch_params``
+    """The merge fanout of ``sketch_by_key`` and
+    ``sketch_by_key_checkpointed`` — the one place it is decided.  1 (a
+    single merge level) while one key's partial rows, ``n_parts`` x the
+    fixed row bytes of the resolved ``sketch_params``
     (HLL registers + CMS counters), fit the session's
     ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: a reducer then
     takes no more than one AQE target partition per key, and a second
@@ -297,7 +294,6 @@ def sketch_by_key_checkpointed(
     text_col: str = "text",
     distinct: str = "tokens",
     shingle_w: int = 3,
-    merge_fanout: int | None = None,
     snapshot_id: str | None = None,
     job_id: str | None = None,
     sketch_params: tuple | None = None,
@@ -320,11 +316,12 @@ def sketch_by_key_checkpointed(
 
     Resume safety follows ``build_filters``: the checkpoint carries a
     fingerprint over the input snapshot (``snapshot_id`` or the scan's
-    file listing), the scan's partition count, and every parameter that
-    shapes partial content; any mismatch discards the stale state and
-    rebuilds from scratch rather than silently dropping or double-counting
-    partitions.  In-memory DataFrames with no file listing get no
-    fingerprint and never resume unless ``snapshot_id`` is given.
+    file listing), the scan's partition count, the derived merge fanout
+    (the partials' salt) and every parameter that shapes partial content;
+    any mismatch discards the stale state and rebuilds from scratch rather
+    than silently dropping or double-counting partitions.  In-memory
+    DataFrames with no file listing get no fingerprint and never resume
+    unless ``snapshot_id`` is given.
     """
     import hashlib
     import os
@@ -337,8 +334,7 @@ def sketch_by_key_checkpointed(
         raise ValueError("distinct must be 'tokens' or 'shingles'")
     ensure_workers(spark)
     job_id = job_id or uuid.uuid4().hex[:12]
-    if merge_fanout is None:
-        merge_fanout = _default_fanout(docs, sketch_params)
+    merge_fanout = _default_fanout(docs, sketch_params)
 
     n_parts = docs.rdd.getNumPartitions()
     snap = snapshot_id or ";".join(sorted(docs.inputFiles()))

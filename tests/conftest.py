@@ -44,7 +44,7 @@ def documents(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
-@pytest.fixture
+@pytest.fixture(scope="session")
 def force_budget():
     """``with force_budget(cap):`` runs the operators called inside as if
     ``session._broadcast_budget`` were ``cap`` bytes — the one place every

@@ -1,0 +1,49 @@
+"""Public operator signatures take no tuning knob the library derives.
+
+Broadcast budgets, pinning, miBF segment counts, sketch merge fanouts,
+broadcast hints and the summary plan switch are all decided from the
+session and the data; none of them may come back as a parameter.
+"""
+
+from __future__ import annotations
+
+import importlib
+import inspect
+
+#: parameter names the library derives instead of taking from the caller
+DERIVED = {
+    "max_broadcast_bytes", "pin_source", "pin", "explode_threshold",
+    "merge_segments", "segment_bytes", "min_segments", "merge_fanout",
+    "broadcast_refs",
+}
+
+MODULES = [
+    "biobloom_spark.operators",
+    "biobloom_spark.operators.mibf",
+    "biobloom_spark.operators.mibf_store",
+    "biobloom_spark.operators.sketch_agg",
+    "biobloom_spark.operators.exact",
+]
+
+
+def _public_callables():
+    for mod_name in MODULES:
+        mod = importlib.import_module(mod_name)
+        for name in mod.__all__:
+            obj = getattr(mod, name)
+            if inspect.isclass(obj):
+                for meth, fn in inspect.getmembers(obj, inspect.isfunction):
+                    if not meth.startswith("_") or meth == "__init__":
+                        yield f"{mod_name}.{name}.{meth}", fn
+            elif callable(obj):
+                yield f"{mod_name}.{name}", obj
+
+
+def test_no_derived_parameter():
+    found = dict(_public_callables())
+    assert "biobloom_spark.operators.mibf_store.build_mibf_store" in found
+    offenders = {
+        q: sorted(set(inspect.signature(fn).parameters) & DERIVED)
+        for q, fn in found.items()
+    }
+    assert {q: p for q, p in offenders.items() if p} == {}

@@ -379,17 +379,14 @@ class TestCategorizer:
         covered = [gi for p in passes for gi in range(p[1], p[2])]
         assert covered == list(range(len(classic)))
 
-    def test_summarize_exploded_equals_wide(self, spark, monkeypatch):
-        """The explode-based summary (large filter sets) must reproduce the
-        wide-agg summary exactly, and stay cheap at 600 filters where the
-        2F+2-expression wide plan would blow up Catalyst compilation."""
+    def test_summarize_matches_driver_twin(self, spark):
+        """``summarize`` (one tag-explode plan at any filter count) equals
+        a driver-side count of the same rows at 5, 80 and 600 filters —
+        600 is where a 2F+2-expression aggregate would blow up Catalyst
+        compilation."""
         import random
 
-        from biobloom_spark.operators import categorizer
-        from biobloom_spark.operators.categorizer import (
-            _summarize_exploded,
-            summarize,
-        )
+        from biobloom_spark.operators.categorizer import summarize
 
         rng = random.Random(7)
         fids = [f"f{i:03d}" for i in range(600)]
@@ -406,34 +403,23 @@ class TestCategorizer:
                 rows.append((f"d{d}", hits, assigned))
             return ids, spark.createDataFrame(
                 rows, "doc_id string, hits array<string>, assigned string"
-            ).cache()
+            )
 
-        # both paths agree exactly at a width the wide agg still handles;
-        # 80 filters is past _EXPLODE_MIN_FILTERS, so lift it for the wide
-        # side and make any fall-through to the exploded plan fail
-        ids, res = synth(80)
-        key = lambda df: sorted(tuple(r) for r in df.collect())
-        exploded = key(_summarize_exploded(res, ids))
-        with monkeypatch.context() as mp:
-            mp.setattr(categorizer, "_EXPLODE_MIN_FILTERS", len(ids) + 1)
-            mp.setattr(categorizer, "_summarize_exploded", None)
-            wide = key(summarize(res, ids))
-        assert wide == exploded
-        # the exploded path handles 600 filters and matches a driver twin
-        ids, res = synth(600)
-        got = {r["filter_id"]: r for r in summarize(res, ids).collect()}
-        rows = res.collect()
-        total = len(rows)
-        for fid in ids[:50] + ids[-5:]:
-            hits = sum(fid in r["hits"] for r in rows)
-            uniq = sum(r["assigned"] == fid for r in rows)
-            g = got[fid]
-            assert (g["hits"], g["unique"], g["shared"]) == (hits, uniq, hits - uniq)
-            assert g["rate_hit"] == hits / total
-        assert got["noMatch"]["hits"] == sum(r["assigned"] == "noMatch" for r in rows)
-        assert got["multiMatch"]["hits"] == sum(
-            r["assigned"] == "multiMatch" for r in rows
-        )
+        for n_filters in (5, 80, 600):
+            ids, res = synth(n_filters)
+            got = [tuple(r) for r in summarize(res, ids).collect()]
+            rows = res.collect()
+            total = len(rows)
+            want = []
+            for fid in ids:
+                hits = sum(fid in r["hits"] for r in rows)
+                uniq = sum(r["assigned"] == fid for r in rows)
+                want.append((fid, hits, uniq, hits - uniq, hits / total,
+                             uniq / total, (hits - uniq) / total))
+            for special in ("multiMatch", "noMatch"):
+                n = sum(r["assigned"] == special for r in rows)
+                want.append((special, n, n, 0, n / total, n / total, 0.0))
+            assert got == want, n_filters
 
     def test_assignment_accuracy(self, spark, corpus, registry):
         """With 15% shared vocabulary, most docs are uniquely assigned to

@@ -128,14 +128,24 @@ class TestSketch:
         b = build_mibf(spark, labeled_corpus.repartition(7), key_col="lang")
         assert a.serialize() == b.serialize()
 
-    def test_segmented_resolution_matches_local_twin(self, spark, labeled_corpus):
+    def test_segmented_resolution_matches_local_twin(
+        self, spark, labeled_corpus, force_budget
+    ):
         """Distributed per-segment ownership == single-machine from_claims
-        over the same claims (segment count must not affect the result)."""
+        over the same claims (segment count must not affect the result).
+        The default budget resolves in 16 segments; a budget of a 37th
+        of the id array forces at least 37."""
         from biobloom_spark.functions.text import batch_doc_shingles
+        from biobloom_spark.operators.mibf import _mibf_segments
         from biobloom_spark.sketch.mibf import MIBFSketch
 
-        sk1 = build_mibf(spark, labeled_corpus, key_col="lang", merge_segments=1)
-        sk5 = build_mibf(spark, labeled_corpus, key_col="lang", merge_segments=5)
+        sk1 = build_mibf(spark, labeled_corpus, key_col="lang")
+        assert _mibf_segments(spark, sk1.m_slots) == max(
+            16, spark.sparkContext.defaultParallelism
+        )
+        with force_budget(sk1.ids.nbytes // 37):
+            assert _mibf_segments(spark, sk1.m_slots) >= 37
+            sk5 = build_mibf(spark, labeled_corpus, key_col="lang")
         assert sk1.serialize() == sk5.serialize()
         # local twin: resolve every claim on the driver via from_claims
         rows = labeled_corpus.select("lang", "text").collect()
@@ -625,14 +635,16 @@ class TestStore:
     byte-identical to the in-memory build/classify at every step."""
 
     @pytest.fixture(scope="class")
-    def store_env(self, spark, labeled_corpus, mibf, tmp_path_factory):
+    def store_env(
+        self, spark, labeled_corpus, mibf, tmp_path_factory, force_budget
+    ):
         from biobloom_spark.operators.mibf_store import build_mibf_store
 
         path = str(tmp_path_factory.mktemp("mistore") / "mi")
-        store = build_mibf_store(
-            spark, labeled_corpus, path, key_col="lang", occupancy=0.5,
-            min_segments=5, segment_bytes=1,
-        )
+        with force_budget(1):
+            store = build_mibf_store(
+                spark, labeled_corpus, path, key_col="lang", occupancy=0.5,
+            )
         return store, path
 
     def test_store_build_matches_in_memory(self, spark, mibf, store_env):
@@ -644,7 +656,9 @@ class TestStore:
         assert store.occupancy() == pytest.approx(mibf.occupancy())
         assert store.saturation_rate() == pytest.approx(mibf.saturation_rate())
 
-    def test_store_build_with_saturation_matches(self, spark, tmp_path):
+    def test_store_build_with_saturation_matches(
+        self, spark, tmp_path, force_budget
+    ):
         """Same degenerate corpus as the saturation reference test: the
         store's cogrouped SAT update must set the same bits."""
         from biobloom_spark.operators.mibf_store import build_mibf_store
@@ -656,10 +670,10 @@ class TestStore:
         )
         dense = build_mibf(spark, df, key_col="lang", occupancy=0.5)
         assert dense.saturation_rate() > 0.05
-        store = build_mibf_store(
-            spark, df, str(tmp_path / "sat"), key_col="lang", occupancy=0.5,
-            min_segments=3, segment_bytes=1,
-        )
+        with force_budget(1):
+            store = build_mibf_store(
+                spark, df, str(tmp_path / "sat"), key_col="lang", occupancy=0.5,
+            )
         assert store.to_sketch(spark).serialize() == dense.serialize()
         assert store.sat_slots == int(((dense.ids & SAT_BIT) != 0).sum())
 
@@ -731,8 +745,7 @@ class TestStore:
 
         path = str(tmp_path / "resume")
         kw = dict(
-            key_col="lang", occupancy=0.5, min_segments=4, segment_bytes=1,
-            resume=True, snapshot_id="snap-a",
+            key_col="lang", occupancy=0.5, resume=True, snapshot_id="snap-a",
         )
         reference = build_mibf(spark, labeled_corpus, key_col="lang", occupancy=0.5)
 
@@ -766,10 +779,46 @@ class TestStore:
         # (stale state discarded, not resumed)
         store2 = ms.build_mibf_store(
             spark, labeled_corpus, path,
-            key_col="lang", occupancy=0.5, min_segments=4, segment_bytes=1,
-            resume=True, snapshot_id="snap-b",
+            key_col="lang", occupancy=0.5, resume=True, snapshot_id="snap-b",
         )
         assert store2.to_sketch(spark).serialize() == reference.serialize()
+
+    def test_store_resume_keeps_checkpoint_segments(
+        self, spark, labeled_corpus, mibf, tmp_path, monkeypatch, force_budget
+    ):
+        """A build checkpointed under one broadcast budget and resumed
+        under another whose segment count differs finishes with the
+        checkpoint's segment bounds, and equals a fresh build."""
+        import biobloom_spark.operators.mibf_store as ms
+        from biobloom_spark.operators.mibf import _mibf_segments
+
+        path = str(tmp_path / "rebudget")
+        kw = dict(key_col="lang", occupancy=0.5, resume=True, snapshot_id="s")
+        s_first = _mibf_segments(spark, mibf.m_slots)
+
+        def boom(*a, **k):
+            raise RuntimeError("killed mid-build")
+
+        with monkeypatch.context() as mp:
+            mp.setattr(ms, "_lost_slot_scan", boom)
+            with pytest.raises(RuntimeError, match="killed"):
+                ms.build_mibf_store(spark, labeled_corpus, path, **kw)
+        assert ms._stage_done(spark, f"{path}/resolved")
+        with force_budget(mibf.ids.nbytes // 40):
+            assert _mibf_segments(spark, mibf.m_slots) >= 40 > s_first
+            with monkeypatch.context() as mp:
+                mp.setattr(ms, "_resolved_segments", boom)
+                store = ms.build_mibf_store(spark, labeled_corpus, path, **kw)
+            fresh = ms.build_mibf_store(
+                spark, labeled_corpus, str(tmp_path / "fresh"),
+                key_col="lang", occupancy=0.5,
+            )
+        assert store.n_segments == s_first
+        assert ms.load_mibf_store(spark, path).n_segments == s_first
+        assert fresh.n_segments >= 40
+        assert store.to_sketch(spark).serialize() == fresh.to_sketch(spark).serialize()
+        np.testing.assert_array_equal(store.label_counts, fresh.label_counts)
+        assert store.sat_slots == fresh.sat_slots
 
     def test_store_old_fingerprint_rebuilds(
         self, spark, labeled_corpus, mibf, tmp_path, monkeypatch
@@ -783,8 +832,7 @@ class TestStore:
 
         path = str(tmp_path / "oldfp")
         kw = dict(
-            key_col="lang", occupancy=0.5, min_segments=4, segment_bytes=1,
-            resume=True, snapshot_id="snap-old",
+            key_col="lang", occupancy=0.5, resume=True, snapshot_id="snap-old",
         )
         old_params = repr((
             "lang", "text", 3, 3, 0.5, None, None, 1, 4, False, "poly",
@@ -978,7 +1026,7 @@ class TestLostPairSaturation:
 
     @pytest.mark.parametrize("corpus", ["identical", "shared", "nthash"])
     def test_saturation_scan_is_map_only(
-        self, spark, request, monkeypatch, tmp_path, corpus
+        self, spark, request, monkeypatch, tmp_path, force_budget, corpus
     ):
         """The saturation scan is the union of its map-only legs — no
         Exchange and no per-segment dedup reducer — because both consumers
@@ -1003,10 +1051,11 @@ class TestLostPairSaturation:
             spark, df, key_col="lang", occupancy=0.5, expected_entries=n_frames,
             **kw,
         )
-        store = MS.build_mibf_store(
-            spark, df, str(tmp_path / "store"), key_col="lang", occupancy=0.5,
-            expected_entries=n_frames, min_segments=3, segment_bytes=1, **kw,
-        )
+        with force_budget(1):
+            store = MS.build_mibf_store(
+                spark, df, str(tmp_path / "store"), key_col="lang",
+                occupancy=0.5, expected_entries=n_frames, **kw,
+            )
         assert len(scans) == 2
         for scan in scans:
             plan = scan._jdf.queryExecution().executedPlan().toString()

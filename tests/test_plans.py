@@ -424,8 +424,8 @@ def test_sorted_map_matches_apply_in_pandas(spark, lang_web_partials):
 
 
 @pytest.mark.parametrize(
-    "which", ["summarize", "summarize_exploded", "summarize_fused",
-              "sketch_error_report", "sketch_error_report_empty"],
+    "which", ["summarize", "summarize_fused", "sketch_error_report",
+              "sketch_error_report_empty"],
 )
 def test_summaries_are_local_relations(spark, pq_corpus, which):
     """Driver-assembled summaries come back as a ``LocalRelation``:
@@ -434,7 +434,6 @@ def test_summaries_are_local_relations(spark, pq_corpus, which):
     tuples plans a Python RDD instead: one Python stage per action.)"""
     from biobloom_spark.operators.categorizer import (
         _SUMMARY_SCHEMA,
-        _summarize_exploded,
         summarize,
         summarize_fused,
     )
@@ -454,8 +453,7 @@ def test_summaries_are_local_relations(spark, pq_corpus, which):
             df = summarize_fused(spark, pq_corpus, flt, id_col="url")
         else:
             res = categorize(spark, pq_corpus, flt, id_col="url")
-            plan = _summarize_exploded if which == "summarize_exploded" else summarize
-            df = plan(res, ids)
+            df = summarize(res, ids)
         schema, n_rows = _SUMMARY_SCHEMA, len(ids) + 2
     plan = df._jdf.queryExecution().optimizedPlan()
     assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()

@@ -8,6 +8,7 @@ for the order-sensitive quantile sketches).
 
 from __future__ import annotations
 
+import contextlib
 import math
 
 import numpy as np
@@ -34,6 +35,22 @@ def corpus(spark):
 
 def _rows(df):
     return {r["key"]: r for r in df.collect()}
+
+
+@contextlib.contextmanager
+def _advisory_size(spark, size: str):
+    """Run the body with ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    = ``size``; at "1" ``_default_fanout`` derives isqrt(n_partitions)."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, size)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 class TestSketchByKey:
@@ -81,10 +98,17 @@ class TestSketchByKey:
 
     def test_fanout_invariance(self, spark, corpus):
         """HLL/CMS bytes are identical whatever the merge topology
-        (single-level, salted two-level, extreme fanout)."""
-        a = _rows(sketch_by_key(corpus, key_col="lang", merge_fanout=1))
-        b = _rows(sketch_by_key(corpus, key_col="lang", merge_fanout=4))
-        c = _rows(sketch_by_key(corpus.repartition(16), key_col="lang"))
+        (single-level, salted two-level at the fanout a 1-byte advisory
+        size derives for 16 partitions, single-level over 16)."""
+        from biobloom_spark.operators.sketch_agg import _default_fanout
+
+        a = _rows(sketch_by_key(corpus, key_col="lang"))
+        sixteen = corpus.repartition(16)
+        assert _default_fanout(corpus) == _default_fanout(sixteen) == 1
+        with _advisory_size(spark, "1"):
+            assert _default_fanout(sixteen) == 4
+            b = _rows(sketch_by_key(sixteen, key_col="lang"))
+        c = _rows(sketch_by_key(sixteen, key_col="lang"))
         assert a.keys() == b.keys() == c.keys()
         for k in a:
             assert bytes(a[k]["hll"]) == bytes(b[k]["hll"]) == bytes(c[k]["hll"])
@@ -240,7 +264,14 @@ class TestSketchCheckpoint:
     """Checkpoint + resume for the standalone sketch build — the north
     rule's mid-build resumability, at the sketch surface's per-partition
     grain (the filter build's analog: tests/test_e2e_spark.py resume
-    suite)."""
+    suite).  A 1-byte AQE advisory size makes ``_default_fanout`` derive
+    isqrt(8) = 2 for the 8-partition inputs, so every build, resume and
+    one-shot reference here merges in two salted levels."""
+
+    @pytest.fixture(autouse=True)
+    def _two_level_merge(self, spark):
+        with _advisory_size(spark, "1"):
+            yield
 
     def _assert_same(self, a, b):
         assert a.keys() == b.keys()
@@ -256,11 +287,11 @@ class TestSketchCheckpoint:
         eight = corpus.repartition(8).cache()
         eight.count()
         try:
-            want = _rows(sketch_by_key(eight, key_col="lang", merge_fanout=2))
+            want = _rows(sketch_by_key(eight, key_col="lang"))
             got = _rows(
                 sketch_by_key_checkpointed(
                     spark, eight, str(tmp_path / "ck"), key_col="lang",
-                    merge_fanout=2, snapshot_id="s1",
+                    snapshot_id="s1",
                 )
             )
             self._assert_same(got, want)
@@ -284,8 +315,7 @@ class TestSketchCheckpoint:
             p_full = str(tmp_path / "full")
             want = _rows(
                 sketch_by_key_checkpointed(
-                    spark, eight, p_full, key_col="lang", merge_fanout=2,
-                    snapshot_id="s1",
+                    spark, eight, p_full, key_col="lang", snapshot_id="s1",
                 )
             )
             full = spark.read.parquet(p_full)
@@ -299,8 +329,7 @@ class TestSketchCheckpoint:
 
             got = _rows(
                 sketch_by_key_checkpointed(
-                    spark, eight, p_part, key_col="lang", merge_fanout=2,
-                    snapshot_id="s1",
+                    spark, eight, p_part, key_col="lang", snapshot_id="s1",
                 )
             )
             self._assert_same(got, want)
@@ -321,15 +350,14 @@ class TestSketchCheckpoint:
             # stale state: a complete build over the WRONG subset
             sketch_by_key_checkpointed(
                 spark, eight.limit(300).repartition(8), path, key_col="lang",
-                merge_fanout=2, snapshot_id="v1",
+                snapshot_id="v1",
             ).collect()
             got = _rows(
                 sketch_by_key_checkpointed(
-                    spark, eight, path, key_col="lang", merge_fanout=2,
-                    snapshot_id="v2",
+                    spark, eight, path, key_col="lang", snapshot_id="v2",
                 )
             )
-            want = _rows(sketch_by_key(eight, key_col="lang", merge_fanout=2))
+            want = _rows(sketch_by_key(eight, key_col="lang"))
             self._assert_same(got, want)
         finally:
             eight.unpersist()
@@ -342,13 +370,13 @@ class TestSketchCheckpoint:
 
         path = str(tmp_path / "ck")
         first = _rows(
-            sketch_by_key_checkpointed(spark, corpus, path, key_col="lang", merge_fanout=2)
+            sketch_by_key_checkpointed(spark, corpus, path, key_col="lang")
         )
         again = _rows(
-            sketch_by_key_checkpointed(spark, corpus, path, key_col="lang", merge_fanout=2)
+            sketch_by_key_checkpointed(spark, corpus, path, key_col="lang")
         )
         self._assert_same(first, again)
-        want = _rows(sketch_by_key(corpus, key_col="lang", merge_fanout=2))
+        want = _rows(sketch_by_key(corpus, key_col="lang"))
         self._assert_same(again, want)
 
 

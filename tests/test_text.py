@@ -50,6 +50,22 @@ class TestTokenizeShingle:
         assert tokenize("a b  c\t d ") == ["a", "b", "c", "d"]
         assert tokenize("") == []
 
+    def test_tokens_col_matches_str_split(self, spark):
+        """The JVM tokenizer drops the empty tokens that a leading or
+        trailing tab, newline or space leaves, as ``str.split()`` does.
+        Java's ``\\s`` is ASCII whitespace only, so a no-break space
+        stays inside a token where ``str.split()`` splits on it."""
+        from biobloom_spark.sources.tables import tokens_col
+
+        texts = ["\ta b c", "a b c\n", "\n", "", "  ", "a b  c\t d ",
+                 " x ", "\r\n lead\ttab \x0b\f"]
+        df = spark.createDataFrame([(t,) for t in texts + [None]], "text string")
+        got = [r["t"] for r in df.select(tokens_col("text").alias("t")).collect()]
+        assert got == [t.split() for t in texts] + [None]
+        nbsp = spark.createDataFrame([("a\xa0b c",)], "text string")
+        assert nbsp.select(tokens_col("text")).first()[0] == ["a\xa0b", "c"]
+        assert "a\xa0b c".split() == ["a", "b", "c"]
+
     def test_frame_count(self):
         assert frame_count(10, 3) == 8
         assert frame_count(2, 3) == 0

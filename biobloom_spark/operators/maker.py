@@ -115,22 +115,27 @@ def size_filters(
         .agg(F.sum(frames_ub).alias("frames"), F.count(F.lit(1)).alias("docs"))
         .collect()
     )
-    h, block_bits = resolve_block_layout(params.fpr, params.num_hashes, params.block_bits)
-    out = {}
-    for row in agg:
-        n = int(row["frames"] or 0)
-        if block_bits:
-            m = min(blocked_size_bits(n, params.fpr, h, block_bits), params.max_bits)
-        else:
-            m = min(optimal_size_bits(n, params.fpr, h), params.max_bits)
-        out[str(row[key_col])] = {
-            "expected_entries": n,
+    return {
+        str(row[key_col]): {
+            "expected_entries": int(row["frames"] or 0),
             "n_docs": int(row["docs"]),
-            "m_bits": m,
-            "num_hashes": h,
-            "block_bits": block_bits,
+            **_sizing(int(row["frames"] or 0), params),
         }
-    return out
+        for row in agg
+    }
+
+
+def _sizing(n: int, params: BloomParams) -> dict:
+    """(m, h, block layout) of one filter sized for ``n`` expected entries
+    by the published formulas (BloomFilterInfo.h:57-76), m capped at
+    ``params.max_bits``.  ``size_filters`` applies it per key,
+    ``progressive_build`` to the frame bound its seed pass sums."""
+    h, block_bits = resolve_block_layout(params.fpr, params.num_hashes, params.block_bits)
+    if block_bits:
+        m = min(blocked_size_bits(n, params.fpr, h, block_bits), params.max_bits)
+    else:
+        m = min(optimal_size_bits(n, params.fpr, h), params.max_bits)
+    return {"m_bits": m, "num_hashes": h, "block_bits": block_bits}
 
 
 def _snapshot_path(partials_path: str) -> str:

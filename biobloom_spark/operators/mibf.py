@@ -226,7 +226,15 @@ def _resolved_segments(
             }
         )
 
-    return partials.groupBy("seg").applyInPandas(resolve_seg, schema=_SEG_IDS_SCHEMA)
+    # one reducer per task slot: left to AQE, the small claims exchange
+    # coalesces into one task that resolves every segment serially; an
+    # explicit count is kept, and the grouping reuses its hash partitioning
+    n_tasks = min(S, base.sparkSession.sparkContext.defaultParallelism)
+    return (
+        partials.repartition(n_tasks, "seg")
+        .groupBy("seg")
+        .applyInPandas(resolve_seg, schema=_SEG_IDS_SCHEMA)
+    )
 
 
 def _frame_hash_rows(

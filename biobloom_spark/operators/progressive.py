@@ -15,16 +15,19 @@ ALL newly-matching reads' frames at once.  Deterministic, produces a
 superset-per-iteration of any reference schedule, and converges to the
 same closure with enough iterations (SURVEY.md §7.4).
 
-Shape: one pinned-size ``build_filters`` over the seeds fixes the filter's
-layout, then each iteration is ONE fused ``mapInPandas`` pass over the
-still-untagged reads (``_tag_pass``) — the reference's single
-score-and-insert loop.  The pass scores every read against the broadcast
-filters, emits the ids of the tagged reads (checkpointed, they stay
-distributed) and one blob per task of the tagged reads' distinct frame
-hashes that the running filter lacks; the driver inserts those into its
-copy of the filter with ``BloomSketch.update_batch``.  That is the same
-``word_index64`` segmented layout the build's slice reducers write, so the
-bitmap is bit-identical to a pinned rebuild over seed ∪ tagged.
+Shape: ONE map-only pass over seeds ∪ reads (``_seed_pass``) sums the
+closure's frame upper bound and collects the seeds' distinct frames; the
+driver sizes the filter from that bound, lays it out as a pinned
+``build_filters`` would and inserts the seed frames.  Then each iteration
+is ONE fused ``mapInPandas`` pass over the still-untagged reads
+(``_tag_pass``) — the reference's single score-and-insert loop.  The
+pass scores every read against the broadcast filters, emits the ids of
+the tagged reads (checkpointed, they stay distributed) and one blob per
+task of the tagged reads' distinct frame hashes that the running filter
+lacks; the driver inserts those into its copy of the filter with
+``BloomSketch.update_batch``, as it did the seed frames.  That is the
+same ``word_index64`` segmented layout the build's slice reducers write,
+so the bitmap is bit-identical to a pinned rebuild over seed ∪ tagged.
 """
 
 from __future__ import annotations
@@ -38,8 +41,75 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import BloomParams, BuildConfig, CategorizerConfig, ScoringConfig
+from ..functions.text import batch_frames
 
 __all__ = ["progressive_build"]
+
+def _new_frames(
+    picked: list[np.ndarray], subtract: tuple | None, params: BloomParams,
+    running: "BloomSketch | None" = None,
+) -> np.ndarray:
+    """Distinct frames of ``picked`` that ``subtract`` does not veto and
+    the ``running`` filter (if given) lacks: the only frames whose insert
+    can set a bit.  A task ships them as one blob of 8 B per frame."""
+    from .maker import _veto_sketch
+
+    fresh = np.unique(np.concatenate(picked)) if picked else np.empty(0, np.uint64)
+    if subtract is not None:
+        fresh = fresh[~_veto_sketch(subtract, params).contains_batch(fresh)]
+    if running is not None:
+        fresh = fresh[~running.contains_batch(fresh)]
+    return fresh
+
+
+def _gather(blobs) -> tuple[int, np.ndarray]:
+    """Driver side of ``_new_frames``: (sum of the tasks' ``__n``, union of
+    their ``__frames`` blobs)."""
+    n = sum(int(r["__n"]) for r in blobs)
+    fresh = np.unique(np.concatenate(
+        [np.empty(0, dtype=np.uint64)]
+        + [np.frombuffer(r["__frames"], dtype=np.uint64) for r in blobs]
+    ))
+    return n, fresh
+
+
+def _seed_pass(
+    seeds: DataFrame, reads: DataFrame, text_col: str, subtract: tuple | None,
+    params: BloomParams,
+) -> tuple[int, np.ndarray]:
+    """Sizing input and seed frames in ONE map-only pass over seeds ∪ reads
+    → (Σ ``maker.frames_upper_bound_col``, distinct seed frames).
+
+    Every row carries its JVM-computed frame upper bound, which each task
+    sums: the closure's sizing input, ``size_filters``'s aggregate without
+    its exchange.  Only seed rows carry their text; each task hashes it,
+    drops the frames ``subtract`` vetoes and ships the distinct rest
+    (``_new_frames``), so the driver receives at most 8 B per distinct
+    seed frame per task.
+    """
+    from .maker import frames_upper_bound_col
+
+    w = params.shingle_w
+    ub = frames_upper_bound_col(text_col, w).alias("__ub")
+    rows = seeds.select(ub, F.col(text_col).alias("__text")).unionByName(
+        reads.select(ub, F.lit(None).cast("string").alias("__text"))
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        n_ub, picked = 0, []
+        for pdf in batches:
+            n_ub += int(pdf["__ub"].sum())
+            texts = pdf["__text"].dropna().to_numpy()
+            if texts.size:
+                picked.append(batch_frames(
+                    texts, w, canonical=params.canonical,
+                    hash_family=params.hash_family,
+                )[0])
+        fresh = _new_frames(picked, subtract, params)
+        yield pd.DataFrame({"__n": [n_ub], "__frames": [fresh.tobytes()]})
+
+    blobs = rows.mapInPandas(run, schema="__n long, __frames binary").collect()
+    return _gather(blobs)
 
 
 def _tag_pass(
@@ -66,7 +136,6 @@ def _tag_pass(
     would ship.
     """
     from .categorizer import _assign, _combine_mates, _make_sketches, _score_texts
-    from .maker import _veto_sketch
 
     filter_ids = [f["filter_id"] for f in filters]
     bc = spark.sparkContext.broadcast((filters, subtract))
@@ -102,10 +171,7 @@ def _tag_pass(
             })
         if not n_tagged:
             return
-        fresh = np.unique(np.concatenate(picked))
-        if sub is not None:
-            fresh = fresh[~_veto_sketch(sub, params).contains_batch(fresh)]
-        fresh = fresh[~sketches[0].contains_batch(fresh)]
+        fresh = _new_frames(picked, sub, params, sketches[0])
         yield pd.DataFrame({
             id_col: [None], "__n": [n_tagged], "__frames": [fresh.tobytes()],
         })
@@ -118,12 +184,9 @@ def _tag_pass(
         .mapInPandas(run, schema=schema)
         .localCheckpoint(eager=False)
     )
-    blobs = out.filter(F.col("__frames").isNotNull()).select("__n", "__frames").collect()
-    n_tagged = sum(int(r["__n"]) for r in blobs)
-    fresh = np.unique(np.concatenate(
-        [np.empty(0, dtype=np.uint64)]
-        + [np.frombuffer(r["__frames"], dtype=np.uint64) for r in blobs]
-    ))
+    n_tagged, fresh = _gather(
+        out.filter(F.col("__frames").isNotNull()).select("__n", "__frames").collect()
+    )
     return out.filter(F.col("__frames").isNull()).select(id_col), n_tagged, fresh
 
 
@@ -153,70 +216,79 @@ def progressive_build(
     BloomFilterGenerator.cpp:184-241), and both mates' frames are inserted.
 
     Sizing note: the filter is sized ONCE from seed+reads expected frames
-    (upper bound of the closure) so every insert lands in one fixed-size
-    bitmap — the reference sizes from -n expected entries similarly.  The
-    returned filter dict carries that ``expected_entries`` and a
-    ``num_entries`` grown by each iteration's new-entry count (the
-    reference's insertAndCheck counter).
+    (upper bound of the closure, ``maker.frames_upper_bound_col`` summed
+    by the seed pass and sized by ``size_filters``'s formula) so every
+    insert lands in one fixed-size bitmap — the reference sizes from -n
+    expected entries similarly.  The returned filter dict carries that
+    ``expected_entries`` and a ``num_entries`` that starts at the distinct
+    seed frames and grows by each iteration's new-entry count (the
+    reference's insertAndCheck counter).  Seeds without text give the
+    empty filter of that size, which only ``bait`` matches can grow.
 
     Driver cost: the driver holds the running filter (it broadcasts it to
-    every pass anyway) and receives each iteration's new frame hashes
-    (``_tag_pass``).
+    every pass anyway) and receives at most 8 B per distinct frame per
+    task: the seeds' frames once (``_seed_pass``), then each iteration's
+    new frame hashes (``_tag_pass``).  Before iteration 1 the call runs 1
+    Spark job.
     """
+    from ..session import ensure_workers
     from ..sketch import BloomSketch
-    from .maker import _family_kwargs, build_filters, load_registry, size_filters
+    from .maker import _family_kwargs, _pinned_seg_words, _seg_layout, _sizing
 
+    ensure_workers(spark)
     params = params or BloomParams()
     build = build or BuildConfig()
     scoring = scoring or ScoringConfig()
     cfg = CategorizerConfig(scoring=scoring, inclusive_pairs=inclusive_pairs)
     text_cols = [text_col, text2_col] if text2_col else [text_col]
 
-    key = F.lit(filter_id).alias("__fkey")
-
     def both_mates(docs: DataFrame) -> DataFrame:
-        """(id, text) rows covering BOTH mates when paired — the reference
-        inserts rec1 AND rec2 of a tagged pair (PROG_STD/PROG_INC,
+        """One text row per mate when paired — the reference inserts rec1
+        AND rec2 of a tagged pair (PROG_STD/PROG_INC,
         BloomFilterGenerator.cpp:207-262)."""
-        one = docs.select(F.col(id_col), F.col(text_col).alias(text_col))
+        one = docs.select(F.col(text_col))
         if not text2_col or text2_col not in docs.columns:
             return one
-        return one.unionByName(
-            docs.select(F.col(id_col), F.col(text2_col).alias(text_col))
-        )
-
-    union_all = both_mates(seed_docs).unionByName(both_mates(read_docs))
+        return one.unionByName(docs.select(F.col(text2_col).alias(text_col)))
 
     # fixed sizing over the maximal possible closure (both mates included)
-    sizing_probe = size_filters(
-        union_all.withColumn("__fkey", key), "__fkey", text_col, params
-    )[filter_id]
-    tagged = seed_docs.select(F.col(id_col)).withColumn("iteration", F.lit(0))
-    reg = build_filters(
-        spark,
-        both_mates(seed_docs).withColumn("__fkey", key),
-        key_col="__fkey",
-        text_col=text_col,
-        id_col=id_col,
-        params=params,
-        build=build,
-        subtract=subtract,
-        expected_sizing={filter_id: sizing_probe},
+    n_ub, seed_frames = _seed_pass(
+        both_mates(seed_docs), both_mates(read_docs), text_col, subtract, params
     )
-    filters = [
-        {**load_registry(reg)[0], "expected_entries": sizing_probe["expected_entries"]}
-    ]
-    # the driver's copy of the filter, in the seed build's pinned layout;
-    # each iteration's new frames go straight into it (Bloom insert is
-    # set-union idempotent, so this equals a rebuild of seed ∪ tagged —
+    sizing = _sizing(n_ub, params)
+    # the driver's copy of the filter, in the pinned layout a build over
+    # seed ∪ tagged would write (``maker._pinned_seg_words``); the seeds'
+    # frames and then each iteration's new frames go straight into it
+    # (Bloom insert is set-union idempotent, so this equals that build —
     # the reference inserts incrementally too,
     # BloomFilterGenerator.cpp:149-270)
-    running = BloomSketch.deserialize(
-        filters[0]["bitmap"], filters[0]["m_bits"], filters[0]["num_hashes"],
-        block_bits=filters[0]["block_bits"],
-        seg_offsets=filters[0].get("seg_offsets"),
+    h, bb, S = _seg_layout(params, build)
+    offsets = np.concatenate(([0], np.cumsum(_pinned_seg_words(sizing, S))))
+    running = BloomSketch(
+        m_bits=int(offsets[-1]) * 64, num_hashes=h, block_bits=bb,
+        seg_offsets=offsets if (bb == 64 and S > 1) else None,
         **_family_kwargs(params),
     )
+    running.update_batch(seed_frames, assume_unique=True)
+    filters = [
+        {
+            "filter_id": filter_id,
+            "m_bits": running.m_bits,
+            "num_hashes": h,
+            "block_bits": bb,
+            "shingle_w": params.shingle_w,
+            "canonical": params.canonical,
+            "hash_family": params.hash_family,
+            "bitmap": running.serialize(),
+            "seg_offsets": running.seg_offsets,
+            "fpr": max(running.fpr_from_occupancy(), 1e-300),
+            "target_fpr": params.fpr,
+            "expected_entries": n_ub,
+            # distinct seed frames, as the build's slice reducers count them
+            "num_entries": int(seed_frames.size),
+        }
+    ]
+    tagged = seed_docs.select(F.col(id_col)).withColumn("iteration", F.lit(0))
 
     bait_filters = []
     if bait is not None:

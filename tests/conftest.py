@@ -14,6 +14,40 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 SMOKE_DIR = "/root/testdata/sf0.001"
 
 
+@contextlib.contextmanager
+def job_group(sc, group: str):
+    """Run the block's Spark jobs under job group ``group`` (read them back
+    with ``sc.statusTracker().getJobIdsForGroup(group)``)."""
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
+def ran_stages(sc, job_ids) -> dict[int, tuple[int, list[str]]]:
+    """Stages of these jobs that ran tasks (not skipped) → (task count,
+    operator names of the stage's graph in Spark's status store)."""
+    st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+
+    def names(cluster):
+        yield cluster.name()
+        it = cluster.childClusters().iterator()
+        while it.hasNext():
+            yield from names(it.next())
+
+    out = {}
+    for j in job_ids:
+        for s in st.getJobInfo(j).stageIds:
+            info = st.getStageInfo(s)
+            if info is not None and info.numCompletedTasks > 0:
+                graph = store.operationGraphForStage(s).rootCluster()
+                out[s] = (info.numTasks, list(names(graph)))
+    return out
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

@@ -128,6 +128,26 @@ class TestSketch:
         b = build_mibf(spark, labeled_corpus.repartition(7), key_col="lang")
         assert a.serialize() == b.serialize()
 
+    def test_resolve_uses_every_task_slot(self, spark, labeled_corpus):
+        """The ownership reducers run on min(S, defaultParallelism) tasks:
+        left to AQE, the small claims exchange coalesced into one task
+        that resolved all S segments serially."""
+        from conftest import job_group, ran_stages
+
+        from biobloom_spark.operators.mibf import _mibf_segments
+
+        sc = spark.sparkContext
+        group = "mibf-resolve-tasks"
+        with job_group(sc, group):
+            sketch = build_mibf(spark, labeled_corpus, key_col="lang")
+        stages = ran_stages(sc, sc.statusTracker().getJobIdsForGroup(group))
+        resolve = [
+            tasks for tasks, ops in stages.values()
+            if any("FlatMapGroupsInPandas" in n for n in ops)
+        ]
+        S = _mibf_segments(spark, sketch.m_slots)
+        assert resolve == [min(S, sc.defaultParallelism)] and resolve[0] > 1
+
     def test_segmented_resolution_matches_local_twin(
         self, spark, labeled_corpus, force_budget
     ):

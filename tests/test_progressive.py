@@ -153,7 +153,7 @@ def walk_reads(spark):
     return seeds, reads, " ".join(genome[150:210])
 
 
-def _pinned_build(spark, docs, sizing_docs, params, subtract=None):
+def _pinned_build(spark, docs, sizing_docs, params, subtract=None, build=None):
     """Registry row of a from-scratch build over ``docs`` (doc_id, text)
     with the layout progressive_build pins from ``sizing_docs``."""
     from biobloom_spark.operators.maker import build_filters, load_registry, size_filters
@@ -164,7 +164,7 @@ def _pinned_build(spark, docs, sizing_docs, params, subtract=None):
     reg = build_filters(
         spark, docs.withColumn("__fkey", F.lit("progressive")),
         key_col="__fkey", text_col="text", id_col="doc_id", params=params,
-        subtract=subtract, expected_sizing=sizing,
+        build=build, subtract=subtract, expected_sizing=sizing,
     )
     return load_registry(reg)[0]
 
@@ -223,6 +223,89 @@ def test_incremental_equals_rebuild_from_scratch(spark, walk_reads, variant):
     )
     assert filters[0]["bitmap"] == scratch["bitmap"]
     assert filters[0]["num_entries"] <= scratch["num_entries"]
+
+
+_DNA = "ACGTTGCAACGGTTAACCGGTTAACCGTACGTACGGATCCGGAAT" * 3
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["block_bits_0", "block_bits_64", "block_bits_512", "nthash", "subtract",
+     "paired", "one_segment"],
+)
+def test_seed_filter_equals_pinned_build(spark, walk_reads, case):
+    """Before any read is tagged, the filter is the seed filter: every field
+    equals a from-scratch build over the seeds (every mate) with the same
+    subtract veto, pinned to the sizing over seeds ∪ reads.  The seed
+    pass sizes, lays out and inserts where the build's slice reducers
+    write; the reads here match nothing, so the returned filter is it."""
+    from biobloom_spark.config import BuildConfig
+    from biobloom_spark.operators.maker import build_filters, load_registry
+
+    seeds, _reads, _veto = walk_reads
+    seed_text = seeds.collect()[0]["text"]
+    rng = np.random.default_rng(3)
+    params = {
+        "block_bits_0": BloomParams(block_bits=0),
+        "block_bits_512": BloomParams(block_bits=512),
+        "nthash": BloomParams(shingle_w=11, hash_family="nthash", block_bits=0),
+    }.get(case, BloomParams())
+    build = BuildConfig(merge_segments=1) if case == "one_segment" else None
+    vocab = list("ACGT") if case == "nthash" else [f"x{v}" for v in range(5000)]
+    if case == "nthash":
+        seed_text = " ".join(_DNA[:90])
+    noise = [" ".join(rng.choice(vocab, 60)) for _ in range(6)]
+    mates = ["text1", "text2"] if case == "paired" else ["text"]
+    kw = {"text_col": "text1", "text2_col": "text2"} if case == "paired" else {}
+    schema = ", ".join(["doc_id string"] + [f"{m} string" for m in mates])
+    seed_mates = [seed_text, noise[0]][: len(mates)]
+    seed_df = spark.createDataFrame([("seed0", *seed_mates)], schema)
+    read_df = spark.createDataFrame(
+        [(f"n{i}", *([t] * len(mates))) for i, t in enumerate(noise[1:])], schema
+    )
+    if case == "subtract":
+        veto = load_registry(build_filters(
+            spark,
+            spark.createDataFrame(
+                [("v", "veto", " ".join(seed_text.split()[40:]))],
+                "doc_id string, k string, text string",
+            ),
+            key_col="k", id_col="doc_id", params=params,
+        ))[0]
+        kw["subtract"] = (veto["bitmap"], veto["m_bits"], veto["num_hashes"],
+                          veto["block_bits"], veto["seg_offsets"])
+    filters, tagged = progressive_build(
+        spark, seed_df, read_df, max_iterations=3, params=params, build=build,
+        scoring=ScoringConfig(method="simple", threshold=0.3), **kw,
+    )
+    assert tagged.filter(F.col("iteration") > 0).count() == 0
+
+    def mate_rows(df):
+        out = None
+        for m in mates:
+            one = df.select("doc_id", F.col(m).alias("text"))
+            out = one if out is None else out.unionByName(one)
+        return out
+
+    want = _pinned_build(
+        spark, mate_rows(seed_df), mate_rows(seed_df).unionByName(mate_rows(read_df)),
+        params, subtract=kw.get("subtract"), build=build,
+    )
+    got = filters[0]
+    assert want["num_entries"] > 0
+    assert list(got) == list(want)
+    for k, v in want.items():
+        if k == "seg_offsets":
+            assert (got[k] is None) == (v is None), k
+            assert v is None or np.array_equal(got[k], v), k
+        else:
+            assert type(got[k]) is type(v) and got[k] == v, k
+    if case == "subtract":
+        full = _pinned_build(
+            spark, mate_rows(seed_df), mate_rows(seed_df).unionByName(mate_rows(read_df)),
+            params,
+        )
+        assert got["num_entries"] < full["num_entries"]  # the veto dropped frames
 
 
 def test_exported_counts_track_inserts(spark, genome_reads, tmp_path):
@@ -295,29 +378,76 @@ def test_progressive_stops_at_fixpoint(spark, genome_reads, monkeypatch):
     assert filters[0]["num_entries"] == seed_only["num_entries"]
 
 
+@pytest.mark.parametrize("with_bait", [False, True], ids=["no_bait", "bait"])
+@pytest.mark.parametrize(
+    "seed_rows", [[], [("seed0", None)]], ids=["no_seed_rows", "null_text_seed"]
+)
+def test_empty_seed_set(spark, genome_reads, seed_rows, with_bait):
+    """Seeds without text (no rows, or a null text) give the empty filter
+    pinned to the reads' sizing: ``num_entries`` 0, and only reads a bait
+    filter matches are tagged (then inserted like any tagged read)."""
+    from biobloom_spark.config import CategorizerConfig
+    from biobloom_spark.operators.categorizer import categorize
+    from biobloom_spark.operators.maker import build_filters, load_registry, size_filters
+
+    _seeds, read_df = genome_reads
+    reads = read_df.select("doc_id", "text")
+    seeds = spark.createDataFrame(seed_rows, "doc_id string, text string")
+    params = BloomParams()
+    scoring = ScoringConfig(method="simple", threshold=0.3)
+    kw = {}
+    if with_bait:
+        bait = load_registry(build_filters(
+            spark,
+            read_df.filter(F.col("start") >= 200).select("doc_id", "text")
+            .withColumn("k", F.lit("bait")),
+            key_col="k", id_col="doc_id", params=params,
+        ))[0]
+        kw["bait"] = (bait["bitmap"], bait["m_bits"], bait["num_hashes"],
+                      bait["block_bits"], bait["seg_offsets"])
+    filters, tagged = progressive_build(
+        spark, seeds, reads, max_iterations=1, params=params, scoring=scoring, **kw,
+    )
+    sizing = size_filters(
+        reads.withColumn("__fkey", F.lit("progressive")), "__fkey", "text", params
+    )["progressive"]
+    got = filters[0]
+    assert got["expected_entries"] == sizing["expected_entries"] > 0
+    assert got["m_bits"] == sizing["m_bits"]
+    assert {r["doc_id"] for r in tagged.filter(F.col("iteration") == 0).collect()} == {
+        r[0] for r in seed_rows
+    }
+    ids = {r["doc_id"] for r in tagged.filter(F.col("iteration") > 0).collect()}
+    if not with_bait:
+        assert got["num_entries"] == 0
+        assert not any(got["bitmap"])
+        assert ids == set()
+        return
+    bait_hits = {
+        r["doc_id"]
+        for r in categorize(spark, reads, [bait], CategorizerConfig(scoring=scoring))
+        .filter(F.array_contains("hits", "bait"))
+        .collect()
+    }
+    assert ids == bait_hits and ids
+    scratch = _pinned_build(
+        spark, reads.filter(F.col("doc_id").isin(sorted(ids))), reads, params
+    )
+    assert got["bitmap"] == scratch["bitmap"]
+    assert 0 < got["num_entries"] <= scratch["num_entries"]
+
+
 def _python_stages(sc, job_ids) -> int:
     """Stages of these jobs that ran tasks and hold a Python UDF operator
     (read from the stage's operator graph in Spark's status store)."""
     import re
 
-    st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    ran = set()
-    for j in job_ids:
-        for s in st.getJobInfo(j).stageIds:
-            info = st.getStageInfo(s)
-            if info is not None and info.numCompletedTasks > 0:  # not skipped
-                ran.add(s)
-
-    def names(cluster):
-        yield cluster.name()
-        it = cluster.childClusters().iterator()
-        while it.hasNext():
-            yield from names(it.next())
+    from conftest import ran_stages
 
     python_op = re.compile(r"Pandas|Python|MapInArrow")
     return sum(
-        any(python_op.search(n) for n in names(store.operationGraphForStage(s).rootCluster()))
-        for s in ran
+        any(python_op.search(n) for n in ops)
+        for _tasks, ops in ran_stages(sc, job_ids).values()
     )
 
 
@@ -358,3 +488,33 @@ def test_progressive_lineage_stays_flat(spark, genome_reads, monkeypatch):
     for later in jobs[1:]:
         assert len(later) <= 3
         assert _python_stages(sc, later) == 1
+
+
+def test_seed_setup_is_one_map_only_job(spark, genome_reads, monkeypatch):
+    """Sizing and seeding the filter is one map-only pass over seeds ∪
+    reads: the work before the first ``_tag_pass`` is 1 job with 1 Python
+    stage (a ``size_filters`` aggregate plus a pinned ``build_filters``
+    and its ``load_registry`` collect took 5 jobs and 3 Python stages)."""
+    import biobloom_spark.operators.progressive as prog
+    from conftest import job_group
+
+    seeds, read_df = genome_reads
+    reads = read_df.select("doc_id", "text")
+    reads.count()  # the cached fixture is materialized outside the group
+    sc = spark.sparkContext
+    group = "progressive-seed-setup"
+    real, before = prog._tag_pass, []
+
+    def first(*a, **k):
+        if not before:
+            before.append(sc.statusTracker().getJobIdsForGroup(group))
+        return real(*a, **k)
+
+    monkeypatch.setattr(prog, "_tag_pass", first)
+    with job_group(sc, group):
+        progressive_build(
+            spark, seeds, reads, max_iterations=1, params=BloomParams(),
+            scoring=ScoringConfig(method="simple", threshold=0.3),
+        )
+    assert len(before[0]) == 1
+    assert _python_stages(sc, before[0]) == 1

@@ -355,6 +355,7 @@ def q_sketch_ckpt_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(
         tempfile.gettempdir(), "entry_sketch_ckpt_" + os.path.basename(sf_dir.rstrip("/"))
     )
+    # the fingerprint record lives inside the checkpoint directory
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(path + "_lineage", ignore_errors=True)
     sketch_by_key_checkpointed(spark, docs, path, key_col="lang").count()

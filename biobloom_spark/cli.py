@@ -181,7 +181,7 @@ def _cmd_maker(argv: list[str]) -> int:
     from pyspark.sql import functions as F
 
     from .config import BloomParams, ScoringConfig
-    from .operators.maker import build_filters, load_registry
+    from .operators.maker import _sizing, build_filters, load_registry
     from .operators.progressive import progressive_build
     from .sources.bf_format import registry_row_to_bf
 
@@ -247,16 +247,8 @@ def _cmd_maker(argv: list[str]) -> int:
             key_col = "__fkey"
         expected = None
         if args.num_ele:
-            from .sketch import resolve_block_layout
-
-            h, bb = resolve_block_layout(params.fpr, params.num_hashes, params.block_bits)
-            from .sketch import blocked_size_bits, optimal_size_bits
-
-            m = (blocked_size_bits(args.num_ele, params.fpr, h, bb) if bb
-                 else optimal_size_bits(args.num_ele, params.fpr, h))
             expected = {args.file_prefix: {
-                "expected_entries": args.num_ele, "m_bits": m,
-                "num_hashes": h, "block_bits": bb,
+                "expected_entries": args.num_ele, **_sizing(args.num_ele, params),
             }}
         reg = build_filters(
             spark, docs, key_col=key_col, id_col=docs.columns[0],
@@ -461,7 +453,7 @@ def _cmd_mimaker(argv: list[str]) -> int:
         from .operators.mibf_store import build_mibf_store
 
         path = os.path.join(args.output_dir, f"{args.file_prefix}_mibf_store")
-        sk = build_mibf_store(spark, docs, path, resume=True, **common)
+        sk = build_mibf_store(spark, docs, path, **common)
     else:
         sk = build_mibf(spark, docs, **common)
         path = os.path.join(args.output_dir, f"{args.file_prefix}_mibf.parquet")

@@ -113,11 +113,6 @@ class BuildConfig:
     hash-prefix slices), one reducer per (filter, slice), then a
     per-filter assembly.  The corpus is read once and never shuffled."""
 
-    #: segmented merge width (64-bit blocked layout): each filter's bitmap
-    #: is built as S independent hash-prefix slices in parallel — merge
-    #: parallelism is filters x S instead of filters.  Power of two.  Raise
-    #: at larger cluster/filter scale.
-    merge_segments: int = 16
     #: coalesce the input to this many partitions before the partial pass.
     #: The partials exchange ships one unique-hash set per map task, and
     #: zipfian web corpora overlap heavily across tasks — so its volume is
@@ -129,7 +124,3 @@ class BuildConfig:
     #: resume partition ids stay deterministic for a fixed value.  None =
     #: leave input as-is.
     coalesce_input: int | None = None
-
-    def __post_init__(self) -> None:
-        if self.merge_segments < 1 or self.merge_segments & (self.merge_segments - 1):
-            raise ValueError("merge_segments must be a power of two")

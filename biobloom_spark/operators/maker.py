@@ -39,9 +39,6 @@ moves is sketch-sized.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import uuid
 from typing import Iterable
 
 import numpy as np
@@ -49,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..checkpoint import fingerprint, resume_partials, skip_done, write_lineage
 from ..config import BloomParams, BuildConfig
 from ..functions.text import batch_frames
 from ..sketch import (
@@ -138,23 +136,6 @@ def _sizing(n: int, params: BloomParams) -> dict:
     return {"m_bits": m, "num_hashes": h, "block_bits": block_bits}
 
 
-def _snapshot_path(partials_path: str) -> str:
-    return partials_path.rstrip("/") + "_snapshot"
-
-
-def _read_snapshot(partials_path: str) -> str | None:
-    try:
-        with open(_snapshot_path(partials_path)) as f:
-            return f.read().strip()
-    except OSError:
-        return None
-
-
-def _write_snapshot(partials_path: str, fp: str) -> None:
-    with open(_snapshot_path(partials_path), "w") as f:
-        f.write(fp)
-
-
 _PARTIAL_COLS = [f.name for f in PARTIAL_SCHEMA.fields]
 
 
@@ -179,13 +160,19 @@ def _veto_sketch(subtract: tuple, params: BloomParams) -> BloomSketch:
     )
 
 
-def _seg_layout(params: BloomParams, build: BuildConfig) -> tuple[int, int, int]:
+#: segmented merge width (64-bit blocked layout): each filter's bitmap is
+#: built as this many independent hash-prefix slices in parallel, so merge
+#: parallelism is filters x S instead of filters.  A power of two.
+_MERGE_SEGMENTS = 16
+
+
+def _seg_layout(params: BloomParams) -> tuple[int, int, int]:
     """(num_hashes, block_bits, S) for the build.
     Hash-prefix segmentation requires the single-word layout (an item's
     whole footprint lives in the word picked by its hash); other layouts
     run with S=1 (one slice = the whole bitmap)."""
     h, bb = resolve_block_layout(params.fpr, params.num_hashes, params.block_bits)
-    S = build.merge_segments if bb == 64 else 1
+    S = _MERGE_SEGMENTS if bb == 64 else 1
     return h, bb, S
 
 
@@ -243,8 +230,8 @@ def _pack_slice_hashes(u: np.ndarray, base) -> bytes:
 
 
 def _unpack_slice_hashes(payload: bytes, base) -> np.ndarray:
-    """Inverse of ``_pack_slice_hashes`` (also accepts legacy raw ``b"R"``
-    rows, e.g. a resume checkpoint written by an older build)."""
+    """Inverse of ``_pack_slice_hashes``: ``b"Q"`` delta rows and the raw
+    ``b"R"`` rows it writes for sparse slices."""
     tag, body = payload[:1], payload[1:]
     if tag == b"R":
         return np.frombuffer(body, dtype=np.uint64)
@@ -259,10 +246,8 @@ def _unpack_slice_hashes(payload: bytes, base) -> np.ndarray:
     return vals
 
 
-def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
-                        key_col: str, subtract_bits: bytes | None,
-                        subtract_meta: tuple | None,
-                        skip_buckets: frozenset | None = None):
+def _build_partition_fn(params: BloomParams, text_col: str, key_col: str,
+                        subtract_bits: bytes | None, subtract_meta: tuple | None):
     """mapInPandas kernel: one *input partition* → S sparse slice rows +
     one counter row per key.
 
@@ -292,15 +277,11 @@ def _build_partition_fn(params: BloomParams, build: BuildConfig, text_col: str,
     from pyspark import TaskContext
 
     w = params.shingle_w
-    h, bb, S = _seg_layout(params, build)
+    h, bb, S = _seg_layout(params)
     k = S.bit_length() - 1
     shift = np.uint64(64 - k) if k else None
 
     def fn(batches):
-        if skip_buckets:
-            ctx0 = TaskContext.get()
-            if ctx0 is not None and int(ctx0.partitionId()) in skip_buckets:
-                return  # resumed build: this partition's partials exist
         sub = None
         if subtract_bits is not None:
             sub = _veto_sketch((subtract_bits, *subtract_meta), params)
@@ -416,7 +397,7 @@ def _sorted_map(df: DataFrame, key_cols, group_fn, schema) -> DataFrame:
     )
 
 
-def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None):
+def _seg_reduce_fn(params: BloomParams, pinned: dict | None):
     """Grouped kernel per (filter_id, seg) group (run by ``_sorted_map``).
 
     ``seg >= 0``: union the group's sorted hash blobs, size the slice from
@@ -428,7 +409,7 @@ def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None)
     from ..sketch.bloom import or_scatter_sorted, probe_words64
     from ..sketch.hashing import km_probe, mulhigh64
 
-    h, bb, S = _seg_layout(params, build)
+    h, bb, S = _seg_layout(params)
     k = S.bit_length() - 1
 
     def fn(key, pdf):
@@ -478,12 +459,12 @@ def _seg_reduce_fn(params: BloomParams, build: BuildConfig, pinned: dict | None)
     return fn
 
 
-def _assemble_fn(params: BloomParams, build: BuildConfig, pinned: dict | None):
+def _assemble_fn(params: BloomParams, pinned: dict | None):
     """Grouped kernel per filter (run by ``_sorted_map``): order the S
     slice bitmaps, memcpy them into the final bitmap, compute registry
     stats, attach the word offsets.  Pure assembly — the heavy lifting
     happened in parallel in the slice reducers."""
-    h, bb, S = _seg_layout(params, build)
+    h, bb, S = _seg_layout(params)
 
     def fn(key, pdf):
         fid = str(key[0])
@@ -573,6 +554,8 @@ def build_filters(
     ``partials_path`` is set, per-partition partials are checkpointed there
     and a re-invocation over the same input resumes, recomputing only the
     missing input partitions — the north rule's mid-build resumability.
+    The input's identity is ``snapshot_id`` or its file listing; with
+    neither the build never resumes (``checkpoint`` holds the rule).
     ``subtract`` = (bitmap_bytes, m_bits, num_hashes[, block_bits]) veto filter.
     ``id_col`` is accepted for call-site compatibility; the build does not
     read it (documents are never keyed or shuffled by id).
@@ -582,7 +565,6 @@ def build_filters(
     ensure_workers(spark)
     params = params or BloomParams()
     build = build or BuildConfig()
-    job_id = job_id or uuid.uuid4().hex[:12]
 
     if keys is not None:
         keys = list(keys)
@@ -608,41 +590,6 @@ def build_filters(
         else (None, None)
     )
 
-    # resume is only safe against the SAME input snapshot: partition ids /
-    # doc membership shift when the file listing changes, silently dropping
-    # or double-counting data.  Fingerprint the scan's file listing; on
-    # mismatch (or unknowable, e.g. in-memory test DataFrames with no files)
-    # discard stale partials and rebuild from scratch.
-    # ``snapshot_id`` lets callers with a stable non-file input identity
-    # (e.g. an Iceberg snapshot id) opt into resume explicitly.
-    # The fingerprint covers every parameter that shapes partial CONTENT or
-    # partition identity — not just the input listing: resuming with a
-    # different coalesce_input (different partition ids), key/text column,
-    # sizing, subtract filter, or hash family against same-listing partials
-    # would silently drop or mis-hash data (build_mibf_store fingerprints
-    # its params for the same reason).  Only a checkpointed build reads it.
-    resume, snap_fp = False, None
-    if partials_path:
-        snap = snapshot_id or ";".join(sorted(docs.inputFiles()))
-        param_fp = repr((
-            key_col, text_col, params, build,
-            sorted(keys) if keys is not None else None,
-            sorted(expected_sizing.items()) if expected_sizing else None,
-            (hashlib.md5(sub_bits).hexdigest(), sub_meta) if sub_bits is not None else None,
-        ))
-        if snap:
-            snap_fp = hashlib.md5((snap + "|" + param_fp).encode()).hexdigest()
-        if snap_fp is not None and os.path.exists(partials_path):
-            resume = _read_snapshot(partials_path) == snap_fp
-        if resume:
-            # a checkpoint from an older engine version (pre-segmentation
-            # schema) is stale state, not resumable state — rebuild
-            try:
-                have_cols = set(spark.read.parquet(partials_path).columns)
-            except Exception:
-                have_cols = set()
-            resume = {f.name for f in PARTIAL_SCHEMA.fields} <= have_cols
-
     # --- stage 1: sparse partials, zero shuffle ---------------------------
     # every task accumulates sparse hash partials for every key over the
     # documents it already holds — the corpus never moves, no sizing
@@ -653,43 +600,29 @@ def build_filters(
     )
     if build.coalesce_input:
         base = base.coalesce(build.coalesce_input)
-    done_buckets: frozenset = frozenset()
-    if resume:
-        done_buckets = frozenset(
-            int(r["bucket"])
-            for r in spark.read.parquet(partials_path).select("bucket").distinct().collect()
-        )
-    # same snapshot → same listing → deterministic partition ids;
-    # recompute only missing partitions.  The skip lives inside the
-    # Arrow kernel (TaskContext) so a resumed build keeps the
-    # vectorized scan — the old rdd.mapPartitionsWithIndex filter
-    # pickled every surviving row through a Python RDD round-trip.
-    part_fn = _build_partition_fn(
-        params, build, text_col, "filter_id", sub_bits, sub_meta,
-        skip_buckets=done_buckets or None,
-    )
-    new_partials = base.mapInPandas(part_fn, schema=PARTIAL_SCHEMA)
+    part_fn = _build_partition_fn(params, text_col, "filter_id", sub_bits, sub_meta)
 
     if partials_path:
-        mode = "append" if resume else "overwrite"
-        new_partials.write.mode(mode).parquet(partials_path)
-        if snap_fp is not None:
-            _write_snapshot(partials_path, snap_fp)
-        partials = spark.read.parquet(partials_path)
-        # one lineage row per (filter, source partition): the counter
-        # rows carry the per-partition counters exactly once
-        lineage = partials.filter(F.col("seg") == -1).select(
-            F.lit(job_id).alias("job_id"),
-            F.lit("partial_build").alias("stage"),
-            "filter_id",
-            "bucket",
-            F.lit("done").alias("status"),
-            "n_docs",
-            "n_inserted",
+        # bucket = source partition id of ``base``: the fingerprint covers
+        # the input, its partition count and every parameter that shapes
+        # partial content, so a resume recomputes only missing buckets
+        fp = fingerprint(
+            base, snapshot_id, key_col, text_col, params, build,
+            sorted(keys) if keys is not None else None,
+            sorted(expected_sizing.items()) if expected_sizing else None,
+            sub_bits, sub_meta,
         )
-        lineage.write.mode("overwrite").parquet(partials_path.rstrip("/") + "_lineage")
+        partials = resume_partials(
+            spark, partials_path, fp, "bucket",
+            lambda done: base.mapInPandas(skip_done(part_fn, done), schema=PARTIAL_SCHEMA),
+        )
+        # the counter rows carry each (filter, bucket)'s counters once
+        write_lineage(
+            partials.filter(F.col("seg") == -1), partials_path, job_id,
+            "partial_build", ("filter_id", "bucket"), ("n_docs", "n_inserted"),
+        )
     else:
-        partials = new_partials
+        partials = base.mapInPandas(part_fn, schema=PARTIAL_SCHEMA)
 
     # --- stages 2-3: segmented merge, then per-filter assembly -------------
     # one reduce group per (filter, hash-prefix slice) — merge parallelism
@@ -701,11 +634,11 @@ def build_filters(
     # a per-group applyInPandas paid an Arrow/pandas round trip per group,
     # ~10 ms each, which at filters x S groups outweighed the kernels.
     reduced = _sorted_map(
-        partials, ("filter_id", "seg"), _seg_reduce_fn(params, build, pinned),
+        partials, ("filter_id", "seg"), _seg_reduce_fn(params, pinned),
         PARTIAL_SCHEMA,
     )
     registry = _sorted_map(
-        reduced, ("filter_id",), _assemble_fn(params, build, pinned),
+        reduced, ("filter_id",), _assemble_fn(params, pinned),
         REGISTRY_SCHEMA,
     )
 

@@ -32,7 +32,6 @@ are all-empty (all-zero) by construction.
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass
 
 import numpy as np
@@ -41,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..checkpoint import committed, delete, fingerprint, matching_record, write_record
 from ..sketch.mibf import (
     ID_MASK,
     MIBFSketch,
@@ -170,25 +170,6 @@ class MIBFStore:
         )
 
 
-def _delete_dir(spark: SparkSession, path: str) -> None:
-    """Remove an intermediate directory through the Hadoop FileSystem API
-    (works for any configured FS, not just file://)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-
-
-def _stage_done(spark: SparkSession, path: str) -> bool:
-    """A parquet stage counts as checkpointed only when its committer
-    marker exists — a killed mid-write job leaves no ``_SUCCESS`` and the
-    stage reruns from scratch (no partial-output resume)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def build_mibf_store(
     spark: SparkSession,
     docs: DataFrame,
@@ -202,7 +183,6 @@ def build_mibf_store(
     expected_entries: int | None = None,
     canonical: bool = False,
     hash_family: str = "poly",
-    resume: bool = False,
     snapshot_id: str | None = None,
 ) -> MIBFStore:
     """Build a miBF straight into a parquet store (MIBFGen.hpp:131-309
@@ -225,53 +205,32 @@ def build_mibf_store(
        ``{path}/segments``; the tiny per-segment stats aggregate into
        ``{path}/meta``.
 
-    ``resume=True`` makes each stage a checkpoint (the north rule's
-    mid-build resumability, same contract as ``build_filters``): a killed
-    job re-invoked with the same path restarts at the first stage whose
-    ``_SUCCESS`` marker is missing.  Resume is only offered against the
-    SAME input + parameters — a fingerprint of the scan's file listing
-    (or ``snapshot_id`` for stable non-file identities, e.g. an Iceberg
-    snapshot) and every sizing-relevant parameter is persisted at
-    ``{path}/snapshot``; on mismatch the stale state is discarded and the
-    build restarts from scratch.  The segment count is persisted next to
-    the fingerprint, so a resumed build keeps the bounds its checkpoint
-    was written with whatever the resuming session's budget.  The
-    expensive stage (resolution — the corpus-wide claims shuffle) is
-    never repeated once checkpointed; the per-segment rows double as the
-    build's partition-level lineage.
+    Each stage is a checkpoint (the north rule's mid-build resumability,
+    same contract as ``build_filters``): a killed job re-invoked with the
+    same path restarts at the first stage with no commit marker
+    (``checkpoint.committed``).  Resume is only offered against the SAME
+    input + parameters — ``checkpoint.fingerprint`` over the scan's file
+    listing (or ``snapshot_id`` for stable non-file identities, e.g. an
+    Iceberg snapshot), its partition count and every sizing-relevant
+    parameter; on mismatch the stale state is discarded and the build
+    restarts from scratch.  The segment count is kept in the fingerprint
+    record, so a resumed build keeps the bounds its checkpoint was written
+    with whatever the resuming session's budget.  The expensive stage
+    (resolution — the corpus-wide claims shuffle) is never repeated once
+    checkpointed; the per-segment rows double as the build's
+    partition-level lineage.
     """
-    snap_src = snapshot_id or ";".join(sorted(docs.inputFiles()))
-    # "lost-pairs": the resolved/ checkpoint format, whose rows carry the
-    # lost-pair column the saturation scan reads; a checkpoint written
-    # before that column existed fingerprints differently and rebuilds
-    param_fp = repr((
-        key_col, text_col, shingle_w, num_hashes, occupancy, seeds,
-        expected_entries, canonical, hash_family, "lost-pairs",
-    ))
-    snap_fp = (
-        hashlib.md5((snap_src + "|" + param_fp).encode()).hexdigest()
-        if snap_src
-        else None
+    fp = fingerprint(
+        docs, snapshot_id, key_col, text_col, shingle_w, num_hashes, occupancy,
+        seeds, expected_entries, canonical, hash_family,
     )
-    snap_path = f"{path}/snapshot"
     resolved_path = f"{path}/resolved"
     seg_path = f"{path}/segments"
     meta_path = f"{path}/meta"
-
-    state = "fresh"
-    if resume and snap_fp is not None and _stage_done(spark, snap_path):
-        snap = spark.read.parquet(snap_path).collect()[0]
-        if snap["fp"] == snap_fp:
-            if _stage_done(spark, meta_path):
-                return load_mibf_store(spark, path)
-            S = int(snap["n_segments"])
-            if _stage_done(spark, seg_path):
-                state = "have_segments"
-            elif _stage_done(spark, resolved_path):
-                state = "have_resolved"
-    if state == "fresh":
-        for p in (snap_path, resolved_path, seg_path, meta_path):
-            _delete_dir(spark, p)
+    # a stale or absent record discards every stage under path
+    record = matching_record(spark, path, fp)
+    if record is not None and committed(spark, meta_path):
+        return load_mibf_store(spark, path)
 
     # deterministic re-derivation: same input + params => same labels and
     # m_slots, so a resumed invocation recomputes the cheap sizing
@@ -281,17 +240,16 @@ def build_mibf_store(
         seeds, expected_entries, canonical, hash_family,
     )
     L = len(labels)
-    if state == "fresh":
+    if record is not None:
+        S = int(record["n_segments"])
+    else:
         S = _mibf_segments(spark, m_slots)
-        if snap_fp is not None:
-            spark.createDataFrame(
-                [(snap_fp, S)], "fp string, n_segments int"
-            ).write.mode("overwrite").parquet(snap_path)
+        write_record(spark, path, fp, n_segments=S)
     bounds = _seg_bounds(m_slots, S)
     meta7 = (m_slots, h, shingle_w, labels, seed_arr, hash_family, canonical)
 
-    if state != "have_segments":
-        if state != "have_resolved":
+    if not committed(spark, seg_path):
+        if not committed(spark, resolved_path):
             _resolved_segments(
                 base, bc_map, m_slots, h, shingle_w, seed_arr, hash_family,
                 canonical, bounds, S,
@@ -335,8 +293,8 @@ def build_mibf_store(
         final.write.mode("overwrite").parquet(seg_path)
     # idempotent cleanup OUTSIDE the build branch: a kill between the
     # segments commit and this delete leaves an orphaned resolved/ dir
-    # that the have_segments resume path would otherwise never reap
-    _delete_dir(spark, resolved_path)
+    # that a resume from committed segments would otherwise never reap
+    delete(spark, resolved_path)
 
     # O(S) rows of O(L) stats — the only thing the driver aggregates
     stat_rows = (

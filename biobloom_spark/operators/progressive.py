@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import BloomParams, BuildConfig, CategorizerConfig, ScoringConfig
+from ..config import BloomParams, CategorizerConfig, ScoringConfig
 from ..functions.text import batch_frames
 
 __all__ = ["progressive_build"]
@@ -198,7 +198,6 @@ def progressive_build(
     id_col: str = "doc_id",
     text_col: str = "text",
     params: BloomParams | None = None,
-    build: BuildConfig | None = None,
     scoring: ScoringConfig | None = None,
     max_iterations: int = 5,
     bait: "tuple | None" = None,  # (bitmap, m_bits, num_hashes[, block_bits[, seg_offsets]])
@@ -237,7 +236,6 @@ def progressive_build(
 
     ensure_workers(spark)
     params = params or BloomParams()
-    build = build or BuildConfig()
     scoring = scoring or ScoringConfig()
     cfg = CategorizerConfig(scoring=scoring, inclusive_pairs=inclusive_pairs)
     text_cols = [text_col, text2_col] if text2_col else [text_col]
@@ -262,7 +260,7 @@ def progressive_build(
     # (Bloom insert is set-union idempotent, so this equals that build —
     # the reference inserts incrementally too,
     # BloomFilterGenerator.cpp:149-270)
-    h, bb, S = _seg_layout(params, build)
+    h, bb, S = _seg_layout(params)
     offsets = np.concatenate(([0], np.cumsum(_pinned_seg_words(sizing, S))))
     running = BloomSketch(
         m_bits=int(offsets[-1]) * 64, num_hashes=h, block_bits=bb,

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..checkpoint import fingerprint, resume_partials, skip_done, write_lineage
 from .maker import _HLL_P
 
 __all__ = [
@@ -135,7 +136,7 @@ def _partials_df(
     shingle_w: int,
     fanout: int,
     with_part_id: bool = False,
-    skip_partitions: set[int] | None = None,
+    skip_partitions: frozenset = frozenset(),
     sketch_params: tuple | None = None,
 ) -> DataFrame:
     """The zero-shuffle partial stage of ``sketch_by_key``: one sketch-row
@@ -145,27 +146,16 @@ def _partials_df(
 
     ``with_part_id`` adds the source partition id column the checkpointed
     build stores for resume; ``skip_partitions`` makes those partitions'
-    tasks emit nothing (partition ids and count are preserved, so the
-    remaining tasks keep their original ids — the resume contract).  The
-    skip happens INSIDE the Arrow pass via TaskContext — the pre-round-6
-    ``rdd.mapPartitionsWithIndex`` filter forced a pickled Python-RDD
-    round-trip of every surviving row on resume (guide §4: keep the
-    vectorized scan)."""
+    tasks emit nothing (``checkpoint.skip_done``)."""
     p, cw, cd = _resolve_params(sketch_params)
     from ..functions.text import batch_doc_shingles
 
     sel = docs.filter(
         F.col(key_col).isNotNull() & F.col(text_col).isNotNull()
     ).select(F.col(key_col).cast("string").alias("__key"), F.col(text_col).alias("__text"))
-    done = frozenset(skip_partitions) if skip_partitions else frozenset()
 
     def partials(batches):
         from pyspark import TaskContext
-
-        if done:
-            ctx0 = TaskContext.get()
-            if ctx0 is not None and int(ctx0.partitionId()) in done:
-                return
 
         cache: dict = {}
         acc: dict[str, list] = {}  # key -> [hll, cms, kll, td, n_docs, n_tokens]
@@ -205,7 +195,7 @@ def _partials_df(
         yield pd.DataFrame(out)
 
     schema = _CKPT_PARTIAL_SCHEMA if with_part_id else _PARTIAL_SCHEMA
-    return sel.mapInPandas(partials, schema)
+    return sel.mapInPandas(skip_done(partials, frozenset(skip_partitions)), schema)
 
 
 def sketch_by_key(
@@ -314,73 +304,34 @@ def sketch_by_key_checkpointed(
     checkpoint, so the merged result is the same DataFrame
     ``sketch_by_key`` would have produced.
 
-    Resume safety follows ``build_filters``: the checkpoint carries a
-    fingerprint over the input snapshot (``snapshot_id`` or the scan's
-    file listing), the scan's partition count, the derived merge fanout
-    (the partials' salt) and every parameter that shapes partial content;
-    any mismatch discards the stale state and rebuilds from scratch rather
-    than silently dropping or double-counting partitions.  In-memory
-    DataFrames with no file listing get no fingerprint and never resume
-    unless ``snapshot_id`` is given.
+    Resume safety is ``checkpoint``'s: the fingerprint covers the input
+    snapshot (``snapshot_id`` or the scan's file listing), the scan's
+    partition count, the derived merge fanout (the partials' salt) and
+    every parameter that shapes partial content; any mismatch discards the
+    stale state and rebuilds from scratch.  In-memory DataFrames with no
+    file listing never resume unless ``snapshot_id`` is given.
     """
-    import hashlib
-    import os
-    import uuid
-
     from ..session import ensure_workers
-    from .maker import _read_snapshot, _write_snapshot
 
     if distinct not in ("tokens", "shingles"):
         raise ValueError("distinct must be 'tokens' or 'shingles'")
     ensure_workers(spark)
-    job_id = job_id or uuid.uuid4().hex[:12]
     merge_fanout = _default_fanout(docs, sketch_params)
-
-    n_parts = docs.rdd.getNumPartitions()
-    snap = snapshot_id or ";".join(sorted(docs.inputFiles()))
-    param_fp = repr(
-        (key_col, text_col, distinct, shingle_w, merge_fanout, n_parts,
-         _resolve_params(sketch_params))
+    fp = fingerprint(
+        docs, snapshot_id, key_col, text_col, distinct, shingle_w, merge_fanout,
+        _resolve_params(sketch_params),
     )
-    snap_fp = (
-        hashlib.md5((snap + "|" + param_fp).encode()).hexdigest() if snap else None
+    partials = resume_partials(
+        spark, partials_path, fp, "part_id",
+        lambda done: _partials_df(
+            docs, key_col, text_col, distinct, shingle_w, merge_fanout,
+            with_part_id=True, skip_partitions=done, sketch_params=sketch_params,
+        ),
     )
-
-    resume = False
-    if os.path.exists(partials_path):
-        resume = snap_fp is not None and _read_snapshot(partials_path) == snap_fp
-        if resume:
-            try:
-                have_cols = set(spark.read.parquet(partials_path).columns)
-            except Exception:
-                have_cols = set()
-            resume = {f.name for f in _CKPT_PARTIAL_SCHEMA.fields} <= have_cols
-
-    skip: set[int] = set()
-    if resume:
-        skip = {
-            int(r["part_id"])
-            for r in spark.read.parquet(partials_path).select("part_id").distinct().collect()
-        }
-    new_partials = _partials_df(
-        docs, key_col, text_col, distinct, shingle_w, merge_fanout,
-        with_part_id=True, skip_partitions=skip, sketch_params=sketch_params,
+    write_lineage(
+        partials, partials_path, job_id, "sketch_partials",
+        ("part_id", "key"), ("n_docs", "n_tokens"),
     )
-    new_partials.write.mode("append" if resume else "overwrite").parquet(partials_path)
-    if snap_fp is not None:
-        _write_snapshot(partials_path, snap_fp)
-
-    partials = spark.read.parquet(partials_path)
-    partials.select(
-        F.lit(job_id).alias("job_id"),
-        F.lit("sketch_partials").alias("stage"),
-        "part_id",
-        "key",
-        F.lit("done").alias("status"),
-        "n_docs",
-        "n_tokens",
-    ).write.mode("overwrite").parquet(partials_path.rstrip("/") + "_lineage")
-
     return _merge_partials(
         partials.select(*[f.name for f in _PARTIAL_SCHEMA.fields]),
         merge_fanout,

@@ -12,125 +12,33 @@ the running registry — associativity makes the result independent of how
 the stream was chopped into batches (property-tested against the
 one-shot batch build).
 
-Registry persistence is versioned: batch N writes
-``<registry_path>/v=<N>``; the "latest" registry is the highest version
-directory carrying the parquet committer's ``_SUCCESS`` marker — derived
-by listing through the Hadoop FileSystem API (works for any configured
-FS: file://, hdfs://, s3a://…; a driver restart on another host sees the
-same state).
-
-Exactly-once under replay: after committing ``v=<N>`` the fold drops an
-empty, never-reaped fold marker ``<registry_path>/_folded/b=<N>`` (O(1)
-bytes per batch).  A replayed batch — whether the single-batch replay a
-streaming checkpoint produces after a crash, or a full replay from a
-fresh checkpoint over the same source — is skipped on its marker, so no
-batch is ever folded twice.  A kill mid-write leaves neither ``_SUCCESS``
-nor marker and the batch re-runs (``mode="overwrite"`` clobbers the
-partial output); a kill in the marker gap (after ``_SUCCESS``, before
-the marker) is healed by the replay detecting the committed directory,
-writing the missing marker, and skipping the rebuild — the same
-versioned-commit contract as the miBF store stages.
-
-Retention: each fold rewrites the full state, so without reaping a
-long-running stream accumulates O(batches x keys) parquet copies.  After
-each commit the fold deletes every version directory older than the
-``retain_versions`` (default 2) highest *committed* ones — keeping N and
-N-1 means a kill mid-write of N always re-runs against an intact N-1
-pointer.  Marker-less version directories older than the kept window are
-dead partial writes and are reaped too.  The ``_folded`` markers are the
-durable exactly-once record and are never reaped.
+Registry persistence is versioned, exactly once under replay and bounded
+on disk: ``checkpoint.fold_writer``, the fold ``streaming.sketch_stream``
+shares (its docstring has the crash-window analysis).
 """
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame, SparkSession
 
+from ..checkpoint import (
+    batch_folded,
+    fold_writer,
+    latest_version,
+    load_latest,
+    mark_folded,
+    reap_versions,
+)
 from ..config import BloomParams, BuildConfig
 
-__all__ = ["build_stream_writer", "load_latest_registry", "latest_version", "reap_versions"]
+__all__ = [
+    "build_stream_writer", "load_latest_registry", "latest_version",
+    "reap_versions", "batch_folded", "mark_folded",
+]
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _list_versions(spark: SparkSession, path: str) -> list[tuple[int, bool]]:
-    """(version, committed) for every ``v=<N>`` directory under path."""
-    jvm, fs = _fs(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith("v=")):
-            continue
-        try:
-            v = int(name[2:])
-        except ValueError:
-            continue
-        marker = jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")
-        out.append((v, bool(fs.exists(marker))))
-    return out
-
-
-def batch_folded(spark: SparkSession, path: str, batch_id: int) -> bool:
-    """True iff batch ``batch_id`` was fully folded (its ``_folded/b=<id>``
-    marker exists)."""
-    jvm, fs = _fs(spark, path)
-    return bool(
-        fs.exists(jvm.org.apache.hadoop.fs.Path(posixpath.join(path, "_folded", f"b={batch_id}")))
-    )
-
-
-def mark_folded(spark: SparkSession, path: str, batch_id: int) -> None:
-    """Drop the empty, never-reaped exactly-once marker for a batch."""
-    jvm, fs = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(posixpath.join(path, "_folded", f"b={batch_id}"))
-    fs.mkdirs(p.getParent())
-    fs.create(p, True).close()
-
-
-def reap_versions(spark: SparkSession, path: str, retain: int = 2) -> list[int]:
-    """Delete version directories superseded by the ``retain`` highest
-    committed ones (module docstring: why 2 preserves the crash contract).
-    Marker-less directories older than the kept window are dead partial
-    writes and go too.  Returns the reaped version numbers."""
-    if retain < 1:
-        raise ValueError("retain must be >= 1")
-    entries = _list_versions(spark, path)
-    committed = sorted((v for v, ok in entries if ok), reverse=True)
-    if len(committed) == 0:
-        return []
-    floor = committed[min(retain, len(committed)) - 1]
-    jvm, fs = _fs(spark, path)
-    reaped = []
-    for v, _ok in entries:
-        if v < floor:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(posixpath.join(path, f"v={v}")), True)
-            reaped.append(v)
-    return sorted(reaped)
-
-
-def latest_version(spark: SparkSession, registry_path: str) -> int | None:
-    """Highest committed registry version (micro-batch id), or None before
-    the first commit.  A version counts as committed only when its
-    ``_SUCCESS`` marker exists — partial output from a killed write is
-    invisible here."""
-    committed = [v for v, ok in _list_versions(spark, registry_path) if ok]
-    return max(committed) if committed else None
-
-
-def load_latest_registry(spark: SparkSession, registry_path: str) -> DataFrame | None:
-    """The current merged registry DataFrame, or None before any commit."""
-    v = latest_version(spark, registry_path)
-    if v is None:
-        return None
-    return spark.read.parquet(posixpath.join(registry_path, f"v={v}"))
+#: the current merged registry DataFrame, or None before any commit
+load_latest_registry = load_latest
 
 
 def build_stream_writer(
@@ -164,33 +72,18 @@ def build_stream_writer(
     folds: ``merge_registries`` drops those columns.
     """
     from ..operators.maker import build_filters, merge_registries
-    from ..operators.mibf_store import _stage_done
 
     if not stream_docs.isStreaming:
         raise ValueError("build_stream_writer expects a streaming DataFrame")
     keys = list(sizing)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_folded(spark, registry_path, batch_id):
-            return  # replayed batch — already folded, exactly-once
-        vdir = posixpath.join(registry_path, f"v={batch_id}")
-        if not _stage_done(spark, vdir):
-            batch_reg = build_filters(
-                spark,
-                batch_df,
-                key_col=key_col,
-                text_col=text_col,
-                id_col=id_col,
-                params=params,
-                build=build,
-                keys=keys,
-                expected_sizing=sizing,
-            )
-            prev = load_latest_registry(spark, registry_path)
-            merged = merge_registries(prev, batch_reg) if prev is not None else batch_reg
-            merged.write.mode("overwrite").parquet(vdir)
-        # else: kill in the marker gap — the commit exists, just heal the marker
-        mark_folded(spark, registry_path, batch_id)
-        reap_versions(spark, registry_path, retain=retain_versions)
+    def batch_registry(batch_df: DataFrame) -> DataFrame:
+        return build_filters(
+            spark, batch_df, key_col=key_col, text_col=text_col, id_col=id_col,
+            params=params, build=build, keys=keys, expected_sizing=sizing,
+        )
 
-    return stream_docs.writeStream.foreachBatch(fold)
+    return fold_writer(
+        spark, stream_docs, registry_path, batch_registry, merge_registries,
+        retain_versions,
+    )

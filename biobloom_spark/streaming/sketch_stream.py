@@ -9,33 +9,21 @@ the result is independent of how the stream was chopped (bit-identical
 for HLL/CMS, inside the published bound for the quantile sketches —
 property-tested against the one-shot batch aggregation).
 
-Persistence + exactly-once + retention contracts are shared with
-``build_stream``: batch N writes ``<sketch_path>/v=<N>`` and then a
-never-reaped ``_folded/b=<N>`` marker (the durable exactly-once record —
-replays skip on it); the latest state is the highest version directory
-carrying the parquet committer's ``_SUCCESS`` marker; a kill mid-write
-re-runs the batch; after each commit, versions older than the
-``retain_versions`` newest committed ones are reaped (see
-``build_stream`` for the full crash-window analysis).
+Persistence, exactly-once replay and retention are ``build_stream``'s,
+through the same fold (``checkpoint.fold_writer``).
 """
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame, SparkSession
 
-from .build_stream import latest_version
+from ..checkpoint import fold_writer, load_latest
 
 __all__ = ["sketch_stream_writer", "load_latest_sketch_rows"]
 
 
-def load_latest_sketch_rows(spark: SparkSession, sketch_path: str) -> DataFrame | None:
-    """The current merged sketch-row DataFrame, or None before any commit."""
-    v = latest_version(spark, sketch_path)
-    if v is None:
-        return None
-    return spark.read.parquet(posixpath.join(sketch_path, f"v={v}"))
+#: the current merged sketch-row DataFrame, or None before any commit
+load_latest_sketch_rows = load_latest
 
 
 def sketch_stream_writer(
@@ -56,24 +44,12 @@ def sketch_stream_writer(
     is parameter-fixed (HLL p, CMS w×d, KLL/t-digest k) and mergeable at
     any cardinality, so arbitrary keys may appear mid-stream and simply
     add rows."""
-    from ..operators.mibf_store import _stage_done
     from ..operators.sketch_agg import merge_sketch_rows, sketch_by_key
-    from .build_stream import batch_folded, mark_folded, reap_versions
 
     if not stream_docs.isStreaming:
         raise ValueError("sketch_stream_writer expects a streaming DataFrame")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_folded(spark, sketch_path, batch_id):
-            return  # replayed batch — already folded, exactly-once
-        vdir = posixpath.join(sketch_path, f"v={batch_id}")
-        if not _stage_done(spark, vdir):
-            batch_rows = sketch_by_key(batch_df, key_col, text_col, distinct, shingle_w)
-            prev = load_latest_sketch_rows(spark, sketch_path)
-            merged = merge_sketch_rows(prev, batch_rows) if prev is not None else batch_rows
-            merged.write.mode("overwrite").parquet(vdir)
-        # else: kill in the marker gap — commit exists, just heal the marker
-        mark_folded(spark, sketch_path, batch_id)
-        reap_versions(spark, sketch_path, retain=retain_versions)
-
-    return stream_docs.writeStream.foreachBatch(fold)
+    return fold_writer(
+        spark, stream_docs, sketch_path,
+        lambda batch_df: sketch_by_key(batch_df, key_col, text_col, distinct, shingle_w),
+        merge_sketch_rows, retain_versions,
+    )

@@ -1,8 +1,10 @@
 """Public operator signatures take no tuning knob the library derives.
 
-Broadcast budgets, pinning, miBF segment counts, sketch merge fanouts,
-broadcast hints and the summary plan switch are all decided from the
-session and the data; none of them may come back as a parameter.
+Broadcast budgets, pinning, miBF segment counts, Bloom merge segments,
+sketch merge fanouts, broadcast hints and the summary plan switch are
+all decided from the session and the data, and a checkpointed build
+resumes whenever its fingerprint matches; none of them may come back as
+a parameter or a ``BuildConfig`` field.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ import inspect
 DERIVED = {
     "max_broadcast_bytes", "pin_source", "pin", "explode_threshold",
     "merge_segments", "segment_bytes", "min_segments", "merge_fanout",
-    "broadcast_refs",
+    "broadcast_refs", "resume",
 }
 
 MODULES = [
@@ -40,7 +42,11 @@ def _public_callables():
 
 
 def test_no_derived_parameter():
+    from biobloom_spark.config import BuildConfig
+
     found = dict(_public_callables())
+    # a dataclass's signature is its fields
+    found["biobloom_spark.config.BuildConfig"] = BuildConfig
     assert "biobloom_spark.operators.mibf_store.build_mibf_store" in found
     offenders = {
         q: sorted(set(inspect.signature(fn).parameters) & DERIVED)

@@ -140,3 +140,20 @@ def test_mimaker_store_roundtrip(spark, tmp_path, capsys):
         dense.sort_values("assigned").reset_index(drop=True),
         store.sort_values("assigned").reset_index(drop=True),
     )
+
+
+def test_maker_num_ele_sizes_with_maker_sizing(spark, fasta_fixtures, tmp_path):
+    """-n N pins the filter to ``maker._sizing(N, params)``, the formula
+    every other build path sizes with."""
+    from biobloom_spark.config import BloomParams
+    from biobloom_spark.operators.maker import _sizing
+
+    d, _ref = fasta_fixtures
+    out = tmp_path / "num_ele"
+    assert main(["maker", "-p", "chr1", "-o", str(out), "-k", "25",
+                 "-n", "5000", str(d / "ref.fa")]) == 0
+    (row,) = spark.read.parquet(str(out / "chr1_registry.parquet")).collect()
+    want = _sizing(5000, BloomParams(shingle_w=25))
+    assert (row["m_bits"], row["num_hashes"], row["expected_entries"]) == (
+        want["m_bits"], want["num_hashes"], 5000
+    )

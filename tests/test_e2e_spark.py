@@ -137,6 +137,27 @@ class TestMaker:
         want = {r["filter_id"]: bytes(r["bitmap"]) for r in ref.collect()}
         assert got == want
 
+    def test_resume_rejects_changed_partition_count(self, spark, corpus, tmp_path):
+        """Bucket ids are partition ids: a checkpoint holding buckets 0-1
+        of a 4-partition build (a build killed after two tasks) must not
+        be resumed by a 2-partition build of the same snapshot, whose
+        buckets 0-1 hold other documents."""
+        ppath = str(tmp_path / "partials")
+        four = corpus.repartition(4)
+        build_filters(
+            spark, four.filter(F.spark_partition_id() < 2), id_col="url",
+            partials_path=ppath, snapshot_id="corpus-v1",
+        ).collect()
+        two = corpus.repartition(2)
+        reg = build_filters(
+            spark, two, id_col="url", partials_path=ppath, snapshot_id="corpus-v1",
+        )
+        ref = build_filters(spark, two, id_col="url")
+        cols = ("filter_id", "n_docs", "bitmap")
+        got = sorted((r[0], r[1], bytes(r[2])) for r in reg.select(*cols).collect())
+        want = sorted((r[0], r[1], bytes(r[2])) for r in ref.select(*cols).collect())
+        assert got == want
+
     def test_input_listing_read_only_for_checkpointed_builds(
         self, spark, corpus, tmp_path, monkeypatch
     ):

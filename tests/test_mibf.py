@@ -762,10 +762,11 @@ class TestStore:
         without repeating it; later stages checkpoint too; a param change
         invalidates the snapshot and rebuilds from scratch."""
         import biobloom_spark.operators.mibf_store as ms
+        from biobloom_spark.checkpoint import committed
 
         path = str(tmp_path / "resume")
         kw = dict(
-            key_col="lang", occupancy=0.5, resume=True, snapshot_id="snap-a",
+            key_col="lang", occupancy=0.5, snapshot_id="snap-a",
         )
         reference = build_mibf(spark, labeled_corpus, key_col="lang", occupancy=0.5)
 
@@ -778,8 +779,8 @@ class TestStore:
         with pytest.raises(RuntimeError, match="killed"):
             ms.build_mibf_store(spark, labeled_corpus, path, **kw)
         monkeypatch.undo()
-        assert ms._stage_done(spark, f"{path}/resolved")
-        assert not ms._stage_done(spark, f"{path}/segments")
+        assert committed(spark, f"{path}/resolved")
+        assert not committed(spark, f"{path}/segments")
 
         # run 2: resumes past resolution (which would now raise) and
         # completes identically to the dense build
@@ -799,7 +800,7 @@ class TestStore:
         # (stale state discarded, not resumed)
         store2 = ms.build_mibf_store(
             spark, labeled_corpus, path,
-            key_col="lang", occupancy=0.5, resume=True, snapshot_id="snap-b",
+            key_col="lang", occupancy=0.5, snapshot_id="snap-b",
         )
         assert store2.to_sketch(spark).serialize() == reference.serialize()
 
@@ -810,10 +811,11 @@ class TestStore:
         under another whose segment count differs finishes with the
         checkpoint's segment bounds, and equals a fresh build."""
         import biobloom_spark.operators.mibf_store as ms
+        from biobloom_spark.checkpoint import committed
         from biobloom_spark.operators.mibf import _mibf_segments
 
         path = str(tmp_path / "rebudget")
-        kw = dict(key_col="lang", occupancy=0.5, resume=True, snapshot_id="s")
+        kw = dict(key_col="lang", occupancy=0.5, snapshot_id="s")
         s_first = _mibf_segments(spark, mibf.m_slots)
 
         def boom(*a, **k):
@@ -823,7 +825,7 @@ class TestStore:
             mp.setattr(ms, "_lost_slot_scan", boom)
             with pytest.raises(RuntimeError, match="killed"):
                 ms.build_mibf_store(spark, labeled_corpus, path, **kw)
-        assert ms._stage_done(spark, f"{path}/resolved")
+        assert committed(spark, f"{path}/resolved")
         with force_budget(mibf.ids.nbytes // 40):
             assert _mibf_segments(spark, mibf.m_slots) >= 40 > s_first
             with monkeypatch.context() as mp:
@@ -843,16 +845,17 @@ class TestStore:
     def test_store_old_fingerprint_rebuilds(
         self, spark, labeled_corpus, mibf, tmp_path, monkeypatch
     ):
-        """A snapshot fingerprinted by the formula used before resolved/
-        checkpoints carried the lost-pair column is discarded: the
-        resolution stage reruns instead of resuming from that checkpoint."""
+        """A checkpoint from an older format — its fingerprint in a
+        ``{path}/snapshot`` parquet, a committed resolved/ stage without
+        the lost-pair column — is discarded: the resolution stage reruns
+        instead of resuming from that checkpoint."""
         import hashlib
 
         import biobloom_spark.operators.mibf_store as ms
 
         path = str(tmp_path / "oldfp")
         kw = dict(
-            key_col="lang", occupancy=0.5, resume=True, snapshot_id="snap-old",
+            key_col="lang", occupancy=0.5, snapshot_id="snap-old",
         )
         old_params = repr((
             "lang", "text", 3, 3, 0.5, None, None, 1, 4, False, "poly",

@@ -359,15 +359,12 @@ def lang_web_partials(spark):
     under test reads the same rows."""
     from pyspark.sql import functions as F
 
-    from biobloom_spark.config import BuildConfig
     from biobloom_spark.corpus import generate_corpus
     from biobloom_spark.operators.maker import _build_partition_fn
     from biobloom_spark.sources.tables import PARTIAL_SCHEMA
 
     docs = generate_corpus(spark, 300, seed=701, num_partitions=4)
-    part_fn = _build_partition_fn(
-        BloomParams(), BuildConfig(), "text", "filter_id", None, None
-    )
+    part_fn = _build_partition_fn(BloomParams(), "text", "filter_id", None, None)
     return (
         docs.select(F.col("lang").alias("filter_id"), "text")
         .mapInPandas(part_fn, schema=PARTIAL_SCHEMA)
@@ -382,7 +379,6 @@ def test_sorted_map_matches_apply_in_pandas(spark, lang_web_partials):
     groups span batches, so the carried-group path runs both with and
     without a batch that opens on a group's tail; an empty input yields
     no rows."""
-    from biobloom_spark.config import BuildConfig
     from biobloom_spark.operators.maker import (
         _assemble_fn,
         _seg_reduce_fn,
@@ -390,7 +386,7 @@ def test_sorted_map_matches_apply_in_pandas(spark, lang_web_partials):
     )
     from biobloom_spark.sources.tables import PARTIAL_SCHEMA, REGISTRY_SCHEMA
 
-    params, build = BloomParams(), BuildConfig()
+    params = BloomParams()
     seg_key, fid_key = ("filter_id", "seg"), ("filter_id",)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key, None)
@@ -401,12 +397,12 @@ def test_sorted_map_matches_apply_in_pandas(spark, lang_web_partials):
             ("2", lang_web_partials.limit(0)),
         ):
             spark.conf.set(key, batch)
-            seg_fn = _seg_reduce_fn(params, build, None)
+            seg_fn = _seg_reduce_fn(params, None)
             walked = _sorted_map(partials, seg_key, seg_fn, PARTIAL_SCHEMA)
             grouped = partials.groupBy(*seg_key).applyInPandas(seg_fn, PARTIAL_SCHEMA)
             reduced = sorted(tuple(r) for r in walked.collect())
             assert reduced == sorted(tuple(r) for r in grouped.collect())
-            asm_fn = _assemble_fn(params, build, None)
+            asm_fn = _assemble_fn(params, None)
             reg_walked = _sorted_map(walked, fid_key, asm_fn, REGISTRY_SCHEMA)
             reg_grouped = walked.groupBy(*fid_key).applyInPandas(asm_fn, REGISTRY_SCHEMA)
             registry = sorted(tuple(r) for r in reg_walked.collect())

@@ -153,7 +153,7 @@ def walk_reads(spark):
     return seeds, reads, " ".join(genome[150:210])
 
 
-def _pinned_build(spark, docs, sizing_docs, params, subtract=None, build=None):
+def _pinned_build(spark, docs, sizing_docs, params, subtract=None):
     """Registry row of a from-scratch build over ``docs`` (doc_id, text)
     with the layout progressive_build pins from ``sizing_docs``."""
     from biobloom_spark.operators.maker import build_filters, load_registry, size_filters
@@ -164,7 +164,7 @@ def _pinned_build(spark, docs, sizing_docs, params, subtract=None, build=None):
     reg = build_filters(
         spark, docs.withColumn("__fkey", F.lit("progressive")),
         key_col="__fkey", text_col="text", id_col="doc_id", params=params,
-        build=build, subtract=subtract, expected_sizing=sizing,
+        subtract=subtract, expected_sizing=sizing,
     )
     return load_registry(reg)[0]
 
@@ -231,7 +231,7 @@ _DNA = "ACGTTGCAACGGTTAACCGGTTAACCGTACGTACGGATCCGGAAT" * 3
 @pytest.mark.parametrize(
     "case",
     ["block_bits_0", "block_bits_64", "block_bits_512", "nthash", "subtract",
-     "paired", "one_segment"],
+     "paired"],
 )
 def test_seed_filter_equals_pinned_build(spark, walk_reads, case):
     """Before any read is tagged, the filter is the seed filter: every field
@@ -239,7 +239,6 @@ def test_seed_filter_equals_pinned_build(spark, walk_reads, case):
     subtract veto, pinned to the sizing over seeds ∪ reads.  The seed
     pass sizes, lays out and inserts where the build's slice reducers
     write; the reads here match nothing, so the returned filter is it."""
-    from biobloom_spark.config import BuildConfig
     from biobloom_spark.operators.maker import build_filters, load_registry
 
     seeds, _reads, _veto = walk_reads
@@ -250,7 +249,6 @@ def test_seed_filter_equals_pinned_build(spark, walk_reads, case):
         "block_bits_512": BloomParams(block_bits=512),
         "nthash": BloomParams(shingle_w=11, hash_family="nthash", block_bits=0),
     }.get(case, BloomParams())
-    build = BuildConfig(merge_segments=1) if case == "one_segment" else None
     vocab = list("ACGT") if case == "nthash" else [f"x{v}" for v in range(5000)]
     if case == "nthash":
         seed_text = " ".join(_DNA[:90])
@@ -275,7 +273,7 @@ def test_seed_filter_equals_pinned_build(spark, walk_reads, case):
         kw["subtract"] = (veto["bitmap"], veto["m_bits"], veto["num_hashes"],
                           veto["block_bits"], veto["seg_offsets"])
     filters, tagged = progressive_build(
-        spark, seed_df, read_df, max_iterations=3, params=params, build=build,
+        spark, seed_df, read_df, max_iterations=3, params=params,
         scoring=ScoringConfig(method="simple", threshold=0.3), **kw,
     )
     assert tagged.filter(F.col("iteration") > 0).count() == 0
@@ -289,7 +287,7 @@ def test_seed_filter_equals_pinned_build(spark, walk_reads, case):
 
     want = _pinned_build(
         spark, mate_rows(seed_df), mate_rows(seed_df).unionByName(mate_rows(read_df)),
-        params, subtract=kw.get("subtract"), build=build,
+        params, subtract=kw.get("subtract"),
     )
     got = filters[0]
     assert want["num_entries"] > 0

@@ -304,9 +304,10 @@ class TestSketchCheckpoint:
             eight.unpersist()
 
     def test_resume_recomputes_only_missing_partitions(self, spark, corpus, tmp_path):
+        import os
         import shutil
 
-        from biobloom_spark.operators.maker import _snapshot_path
+        from biobloom_spark.checkpoint import RECORD
         from biobloom_spark.operators.sketch_agg import sketch_by_key_checkpointed
 
         eight = corpus.repartition(8).cache()
@@ -325,7 +326,7 @@ class TestSketchCheckpoint:
             # carve a killed-mid-build checkpoint: only partitions 0-2 landed
             p_part = str(tmp_path / "partial")
             full.filter(F.col("part_id") < 3).write.parquet(p_part)
-            shutil.copy(_snapshot_path(p_full), _snapshot_path(p_part))
+            shutil.copy(os.path.join(p_full, RECORD), os.path.join(p_part, RECORD))
 
             got = _rows(
                 sketch_by_key_checkpointed(

@@ -112,10 +112,10 @@ def _child_build(langs, texts, lo, hi, barrier, q):
     materializes the sparse slice rows exactly as the Arrow bridge would."""
     import pandas as pd
 
-    from biobloom_spark.config import BloomParams, BuildConfig
+    from biobloom_spark.config import BloomParams
     from biobloom_spark.operators.maker import _build_partition_fn
 
-    fn = _build_partition_fn(BloomParams(), BuildConfig(), "text", "filter_id", None, None)
+    fn = _build_partition_fn(BloomParams(), "text", "filter_id", None, None)
 
     def run_slice(a, b):
         pdf = pd.DataFrame({"filter_id": langs[a:b], "text": texts[a:b]})

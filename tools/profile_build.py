@@ -65,7 +65,7 @@ def main() -> None:
     base = docs.filter(F.col("lang").isNotNull() & F.col("text").isNotNull()).select(
         F.col("lang").cast("string").alias("filter_id"), F.col("text")
     ).coalesce(coalesce)
-    part_fn = _build_partition_fn(params, build, "text", "filter_id", None, None)
+    part_fn = _build_partition_fn(params, "text", "filter_id", None, None)
 
     t0 = time.perf_counter()
     base.mapInPandas(part_fn, schema=PARTIAL_SCHEMA).write.format("noop").mode("overwrite").save()
@@ -79,11 +79,11 @@ def main() -> None:
 
     t0 = time.perf_counter()
     reduced = _sorted_map(
-        partials, ("filter_id", "seg"), _seg_reduce_fn(params, build, None),
+        partials, ("filter_id", "seg"), _seg_reduce_fn(params, None),
         PARTIAL_SCHEMA,
     )
     reg = _sorted_map(
-        reduced, ("filter_id",), _assemble_fn(params, build, None),
+        reduced, ("filter_id",), _assemble_fn(params, None),
         REGISTRY_SCHEMA,
     )
     reg.write.format("noop").mode("overwrite").save()

@@ -146,7 +146,10 @@ def _cmd_maker(argv: list[str]) -> int:
                     help=".bf prefix or registry parquet to veto k-mers from")
     ap.add_argument("-r", "--progressive", default=None, metavar="N",
                     help="progressive build score threshold (float) or min match length (int)")
-    ap.add_argument("-a", "--streak", type=int, default=3)
+    ap.add_argument("-a", "--streak", type=int, default=3,
+                    help="kept so the CLI accepts the reference's options; only "
+                    "the skip-ahead test reference reads it, and it does not "
+                    "change exhaustive scoring")
     ap.add_argument("-e", "--iterations", type=int, default=10)
     ap.add_argument("-i", "--inclusive", action="store_true")
     ap.add_argument("-b", "--baitScore", default=None,
@@ -285,7 +288,10 @@ def _cmd_categorizer(argv: list[str]) -> int:
     ap.add_argument("-d", "--stdout_filter", action="store_true",
                     help="print reads matching the first filter to stdout")
     ap.add_argument("-n", "--inverse", action="store_true")
-    ap.add_argument("-r", "--streak", type=int, default=3)
+    ap.add_argument("-r", "--streak", type=int, default=3,
+                    help="kept so the CLI accepts the reference's options; only "
+                    "the skip-ahead test reference reads it, and it does not "
+                    "change exhaustive scoring")
     ap.add_argument("-D", "--dust", action="store_true")
     ap.add_argument("-t", "--threads", type=int, default=0)
     ap.add_argument("-k", "--kmer_size", type=int, default=None,
@@ -493,15 +499,10 @@ def _cmd_micategorizer(argv: list[str]) -> int:
     )
 
     spark = _spark(args.threads)
-    # store layout ({path}/meta + {path}/segments) vs single-array parquet:
-    # a store classifies shard-by-shard with ids fetched from disk
-    is_store = os.path.isdir(os.path.join(args.filter, "meta"))
-    if is_store:
-        from .operators.mibf_store import (
-            classify_mibf_store,
-            classify_mibf_store_pairs,
-            load_mibf_store,
-        )
+    # store layout ({path}/meta + {path}/segments) vs single-array parquet;
+    # classify_mibf takes either and picks its route from the id bytes
+    if os.path.isdir(os.path.join(args.filter, "meta")):
+        from .operators.mibf_store import load_mibf_store
 
         sk = load_mibf_store(spark, args.filter)
     else:
@@ -519,14 +520,12 @@ def _cmd_micategorizer(argv: list[str]) -> int:
             .withColumn("path", F.lit(""))
         )
         id_col = "pair_key"
-        pair_fn = classify_mibf_store_pairs if is_store else classify_mibf_pairs
-        res = pair_fn(
+        res = classify_mibf_pairs(
             spark, paired, sk, alpha=alpha, multi_thresh=int(args.multi),
             id_col=id_col,
         ).cache()
     else:
-        one_fn = classify_mibf_store if is_store else classify_mibf
-        res = one_fn(
+        res = classify_mibf(
             spark, docs, sk, alpha=alpha,
             multi_thresh=int(args.multi), id_col=id_col,
         ).cache()

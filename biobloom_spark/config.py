@@ -78,9 +78,6 @@ class ScoringConfig:
     min_fpr: float = DEFAULT_BINOMIAL_MIN_FPR  # binomial significance
     min_match_len: int = 0  # minmatchlen: tokens a run must cover
     streak_threshold: int = DEFAULT_STREAK_THRESHOLD
-    #: replicate the reference's skip-ahead-on-miss heuristic
-    #: (SeqEval.h:94-110) instead of exhaustive scoring
-    reference_skip_mode: bool = False
     dust: bool = False  # mask low-complexity shingles (sdust analog)
     dust_min_distinct: int = 2
 

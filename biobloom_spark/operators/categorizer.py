@@ -31,6 +31,7 @@ from ..functions.text import batch_frames, flat_dust_mask
 from ..session import local_frame
 from ..sketch import BloomSketch
 from ..sketch.hashing import km_probe
+from . import multipass
 from .scoring import SegmentedBatch, score_batch
 
 __all__ = [
@@ -199,24 +200,6 @@ def _combine_mates(mates: list[tuple], inclusive: bool):
     return f1 + f2, (s1 + s2) / 2.0, (m1 | m2) if inclusive else (m1 & m2)
 
 
-def _shard_filters(filters: list[dict], max_bytes: int) -> list[list[dict]]:
-    """Greedy contiguous sharding by bitmap bytes (contiguity preserves
-    filter order, so concatenated shard scores == single-pass scores)."""
-    shards: list[list[dict]] = [[]]
-    used = 0
-    for f in filters:
-        b = len(f["bitmap"])
-        if shards[-1] and used + b > max_bytes:
-            shards.append([])
-            used = 0
-        shards[-1].append(f)
-        used += b
-    return shards
-
-
-_MAX_CHUNK_PASSES = 128  # per oversized filter; see _plan_passes guard
-
-
 def _chunkable(f: dict) -> bool:
     """A single filter can shard by word range iff a frame's whole probe
     footprint lives in one block: the 64-bit-word layout (default) and the
@@ -274,11 +257,8 @@ def _plan_passes(filters: list[dict], max_bytes: int) -> list[tuple]:
             wpb = f.get("block_bits", 0) // 64  # words per block (1 or 8)
             n_words = f["m_bits"] // 64
             cw = max(wpb, (max_bytes // 8) // wpb * wpb)  # chunk words
-            # plan-size guard (mibf._clamp_segments twin): each chunk is a
-            # mapInPandas leg in one union — a degenerate budget must not
-            # turn into a 100k-leg plan; beyond the clamp the per-pass
-            # broadcast simply exceeds the cap (never wrong results)
-            min_cw = -(-n_words // _MAX_CHUNK_PASSES)
+            # at most multipass.MAX_PASSES chunks (the plan-size guard)
+            min_cw = -(-n_words // multipass.MAX_PASSES)
             cw = max(cw, -(-min_cw // wpb) * wpb)
             for lo in range(0, n_words, cw):
                 passes.append(("chunk", gi, lo, min(lo + cw, n_words)))
@@ -360,207 +340,117 @@ def _categorize_sharded(
     id_col: str,
     text_cols: list[str],
 ) -> DataFrame:
-    """Multi-pass evaluation for registries beyond the broadcast budget.
+    """Multi-pass evaluation for registries beyond the broadcast budget,
+    over the shared protocol of ``multipass.stitch``.
 
     A ``("full", g_lo, g_hi)`` pass broadcasts whole bitmaps and emits raw
     per-filter (scores, matches) vectors — no assignment yet, because
     every mode's decision (besthit argmax, multiMatch counting, ordered
     priority) needs the FULL score row.  A ``("chunk", gi, lo_w, hi_w)``
     pass broadcasts one word-range slice of a single oversized filter and
-    emits the sparse per-row frame indices that hit inside that range
-    (blocked layouts confine a frame's footprint to one chunk, so the OR
-    of per-pass hits IS the full hit vector — no cross-pass AND needed).
-    One groupBy on a per-row surrogate key stitches both kinds back into
-    full rows; chunked filters are then scored by the normal
-    ``score_batch`` kernel on the reassembled hit bits, and ``_assign``
-    decides.  Cost vs single-pass: the corpus is scanned once per pass and
-    the partials ride one row-keyed shuffle — the standard memory/IO
-    trade.  With chunking, NO single filter has to fit in executor (or
-    Spark's 8 GB broadcast) memory — the last per-object memory ceiling in
-    the plain-Bloom path.
-
-    The stitch keys on ``monotonically_increasing_id()`` attached before
-    the shard passes, NOT on ``id_col`` — duplicate doc ids must yield one
-    output row per input row (the single-pass contract).  The projected
-    rows are pinned once (``session.pin_rows`` — eager localCheckpoint) so
-    every pass reads the SAME stored row set: the surrogate stays stable
-    even for non-deterministic sources (``orderBy(rand())``, unseeded
-    ``sample()``), where per-pass re-evaluation would silently stitch
-    partials from different documents together; the storage trade is
-    documented there.
-
-    ``text_cols``: one column = single-read mode; two = paired mode —
-    each mate is scored independently per pass, the stitch reassembles
-    per-mate score/match rows, and ``_combine_mates`` runs before
-    ``_assign``.
+    emits the per-row frame indices that hit inside that range (blocked
+    layouts confine a frame's footprint to one chunk, so the OR of
+    per-pass hits IS the full hit vector — no cross-pass AND needed).
+    The combine scores each chunked filter with the normal ``score_batch``
+    kernel on its reassembled hit bits, runs ``_combine_mates`` over the
+    mates and lets ``_assign`` decide.  With chunking, NO single filter
+    has to fit in executor (or Spark's 8 GB broadcast) memory — the last
+    per-object memory ceiling in the plain-Bloom path.
     """
-    all_ids = [f["filter_id"] for f in filters]
-    nF = len(filters)
-    M = len(text_cols)
-    id_field = docs.schema[id_col]
-    from ..session import pin_rows
+    scoring = cfg.scoring
 
-    keyed = pin_rows(
-        docs.select(id_col, *text_cols).withColumn(
-            "__row", F.monotonically_increasing_id()
-        )
-    )
-    tail = []
-    for m in range(M):
-        tail += [
-            T.StructField(f"n_frames{m}", T.LongType(), False),
-            T.StructField(f"scores{m}", T.ArrayType(T.DoubleType()), True),
-            T.StructField(f"matches{m}", T.ArrayType(T.BooleanType()), True),
-            T.StructField(f"hitidx{m}", T.BinaryType(), True),
-        ]
-    part_schema = T.StructType(
-        [
-            T.StructField("__row", T.LongType(), False),
-            id_field,
-            T.StructField("__shard", T.IntegerType(), False),
-        ]
-        + tail
-    )
+    def leg(si: int):
+        p = passes[si]
+        if p[0] == "full":
 
-    def score_pass(shard: list[dict], si: int):
-        bc = spark.sparkContext.broadcast(shard)
+            def open_full(flts: list[dict]):
+                sketches = _make_sketches(flts)
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            flts = bc.value
-            sketches = _make_sketches(flts)
-            cache: dict = {}
-            for pdf in batches:
-                n = len(pdf)
-                out = {
-                    "__row": pdf["__row"].to_numpy(),
-                    id_col: pdf[id_col].to_numpy(),
-                    "__shard": si,
-                }
-                for m, tcol in enumerate(text_cols):
-                    texts = pdf[tcol].fillna("").to_numpy()
-                    batch, scores, matches = _score_texts(
-                        texts, flts, cfg, cache, sketches
-                    )
-                    out[f"n_frames{m}"] = batch.frames()
-                    out[f"scores{m}"] = list(scores)
-                    out[f"matches{m}"] = list(matches)
-                    out[f"hitidx{m}"] = [None] * n
-                yield pd.DataFrame(out)
+                def score(texts, cache):
+                    batch, s, m = _score_texts(texts, flts, cfg, cache, sketches)
+                    return batch.frames(), {
+                        "scores": list(s), "matches": list(m), "hitidx": None,
+                    }
 
-        return keyed.mapInPandas(run, schema=part_schema)
+                return score
 
-    def chunk_pass(gi: int, lo_w: int, hi_w: int, si: int):
-        f = filters[gi]
-        meta = {k: v for k, v in f.items() if k != "bitmap"}  # no bitmap in closure
-        bc = spark.sparkContext.broadcast(f["bitmap"][lo_w * 8 : hi_w * 8])
+            return filters[p[1] : p[2]], open_full
+        _, gi, lo_w, hi_w = p
+        meta = {k: v for k, v in filters[gi].items() if k != "bitmap"}
         w = int(meta["shingle_w"])
         canonical = bool(meta.get("canonical", False))
-        scoring = cfg.scoring
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sl = bc.value
-            cache: dict = {}
-            for pdf in batches:
-                n = len(pdf)
-                out = {
-                    "__row": pdf["__row"].to_numpy(),
-                    id_col: pdf[id_col].to_numpy(),
-                    "__shard": si,
+        def open_chunk(sl: bytes):
+            def score(texts, cache):
+                hashes, offsets, tok_h, tok_counts = batch_frames(
+                    texts, w, cache, canonical=canonical
+                )
+                mask = (
+                    flat_dust_mask(tok_h, tok_counts, w, scoring.dust_min_distinct)
+                    if scoring.dust
+                    else None
+                )
+                h1, h2 = km_probe(hashes)
+                hidx = np.flatnonzero(_chunk_hits(h1, h2, mask, meta, sl, lo_w, hi_w))
+                doc = np.searchsorted(offsets, hidx, side="right") - 1
+                (blobs,) = multipass.cut_blobs(
+                    doc, offsets.size - 1, (hidx - offsets[doc]).astype(np.uint32)
+                )
+                return np.diff(offsets), {
+                    "scores": None, "matches": None, "hitidx": blobs,
                 }
-                for m, tcol in enumerate(text_cols):
-                    texts = pdf[tcol].fillna("").to_numpy()
-                    hashes, offsets, tok_h, tok_counts = batch_frames(
-                        texts, w, cache, canonical=canonical
-                    )
-                    mask = (
-                        flat_dust_mask(tok_h, tok_counts, w, scoring.dust_min_distinct)
-                        if scoring.dust
-                        else None
-                    )
-                    h1, h2 = km_probe(hashes)
-                    hit = _chunk_hits(h1, h2, mask, meta, sl, lo_w, hi_w)
-                    hidx = np.flatnonzero(hit)
-                    doc = np.searchsorted(offsets, hidx, side="right") - 1
-                    local = (hidx - offsets[doc]).astype(np.uint32)
-                    cut = np.searchsorted(doc, np.arange(n + 1))
-                    out[f"n_frames{m}"] = np.diff(offsets)
-                    out[f"scores{m}"] = [None] * n
-                    out[f"matches{m}"] = [None] * n
-                    out[f"hitidx{m}"] = [
-                        local[cut[d] : cut[d + 1]].tobytes() for d in range(n)
-                    ]
-                yield pd.DataFrame(out)
 
-        return keyed.mapInPandas(run, schema=part_schema)
+            return score
 
-    def one_pass(p: tuple, si: int):
-        if p[0] == "full":
-            return score_pass(filters[p[1] : p[2]], si)
-        return chunk_pass(p[1], p[2], p[3], si)
+        return filters[gi]["bitmap"][lo_w * 8 : hi_w * 8], open_chunk
 
-    parts = one_pass(passes[0], 0)
-    for si in range(1, len(passes)):
-        parts = parts.unionByName(one_pass(passes[si], si))
-
-    mate_cols = [c for m in range(M) for c in (f"scores{m}", f"matches{m}", f"hitidx{m}")]
-    agg = parts.groupBy("__row").agg(
-        F.first(id_col).alias(id_col),
-        *[F.max(f"n_frames{m}").alias(f"n_frames{m}") for m in range(M)],
-        F.collect_list(F.struct("__shard", *mate_cols)).alias("parts"),
-    )
-    schema = _result_schema(id_field)
-    # pass si → target filter-index range (full) or filter index (chunk);
-    # chunked filters keep only scoring metadata in the closure
-    pass_kind = [(p[0], p[1], p[2] if p[0] == "full" else None) for p in passes]
+    fields = [
+        T.StructField("scores", T.ArrayType(T.DoubleType()), True),
+        T.StructField("matches", T.ArrayType(T.BooleanType()), True),
+        T.StructField("hitidx", T.BinaryType(), True),
+    ]
+    all_ids = [f["filter_id"] for f in filters]
+    n_filters = len(filters)
+    # pass si → filter-index range of a full pass; chunked filters keep
+    # only their scoring metadata, each in one row of the hit matrix
+    full = {si: p[1:] for si, p in enumerate(passes) if p[0] == "full"}
     chunked = sorted({p[1] for p in passes if p[0] == "chunk"})
-    light = {
-        gi: {
-            "fpr": float(filters[gi]["fpr"]),
-            "shingle_w": int(filters[gi]["shingle_w"]),
-        }
-        for gi in chunked
-    }
-    scoring_cfg = cfg.scoring
+    hit_row = np.array([chunked.index(p[1]) if p[0] == "chunk" else -1 for p in passes])
+    light = [(float(filters[gi]["fpr"]), int(filters[gi]["shingle_w"])) for gi in chunked]
     inclusive = bool(cfg.inclusive_pairs)
 
-    def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            mates = []
-            for m in range(M):
-                frames_arr = pdf[f"n_frames{m}"].to_numpy().astype(np.int64)
-                offsets = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(frames_arr, out=offsets[1:])
-                scores = np.zeros((n, nF))
-                matches = np.zeros((n, nF), dtype=bool)
-                chunk_hits = {
-                    gi: np.zeros(int(offsets[-1]), dtype=bool) for gi in chunked
-                }
-                for i, row_parts in enumerate(pdf["parts"]):
+    def combine(ids, parts, mates):
+        scored = []
+        for m, (frames, offsets) in enumerate(mates):
+            scores = np.zeros((frames.size, n_filters))
+            matches = np.zeros((frames.size, n_filters), dtype=bool)
+            if full:
+                for i, row_parts in enumerate(parts):
                     for p in row_parts:
-                        kind, a, b = pass_kind[int(p["__shard"])]
-                        if kind == "full":
-                            scores[i, a:b] = p[f"scores{m}"]
-                            matches[i, a:b] = p[f"matches{m}"]
-                        elif len(p[f"hitidx{m}"]):
-                            loc = np.frombuffer(
-                                p[f"hitidx{m}"], dtype=np.uint32
-                            ).astype(np.int64)
-                            chunk_hits[a][offsets[i] + loc] = True
-                if chunked:
-                    batch = SegmentedBatch(np.empty(0, dtype=np.uint64), offsets)
-                    for gi in chunked:
-                        s, mm = score_batch(
-                            chunk_hits[gi], batch, scoring_cfg,
-                            light[gi]["fpr"], light[gi]["shingle_w"],
-                        )
-                        scores[:, gi] = s
-                        matches[:, gi] = mm
-                mates.append((frames_arr, scores, matches))
-            frames, scores, matches = _combine_mates(mates, inclusive)
-            yield _result_frame(pdf[id_col], frames, scores, matches, all_ids, cfg)
+                        ab = full.get(int(p["__pass"]))
+                        if ab is not None:
+                            scores[i, ab[0] : ab[1]] = p[f"scores{m}"]
+                            matches[i, ab[0] : ab[1]] = p[f"matches{m}"]
+            if chunked:
+                hits = np.zeros((len(chunked), int(offsets[-1])), dtype=bool)
+                multipass.scatter(
+                    hits, parts,
+                    lambda row, loc, si: (hit_row[si], offsets[row] + loc),
+                    f"hitidx{m}",
+                )
+                batch = SegmentedBatch(np.empty(0, dtype=np.uint64), offsets)
+                for k, gi in enumerate(chunked):
+                    scores[:, gi], matches[:, gi] = score_batch(
+                        hits[k], batch, scoring, *light[k]
+                    )
+            scored.append((frames, scores, matches))
+        frames, scores, matches = _combine_mates(scored, inclusive)
+        return _result_frame(ids, frames, scores, matches, all_ids, cfg)
 
-    return agg.mapInPandas(combine, schema=schema)
+    return multipass.stitch(
+        spark, docs, id_col, text_cols, len(passes), leg, fields, combine,
+        _result_schema(docs.schema[id_col]), by_pass=True,
+    )
 
 
 def _categorize(

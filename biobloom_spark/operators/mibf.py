@@ -29,7 +29,7 @@ is one broadcast + mapInPandas pass over the (much larger) query corpus.
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from typing import TYPE_CHECKING, Iterator
 
 import numpy as np
 import pandas as pd
@@ -41,6 +41,7 @@ from ..config import MULTI_MATCH, NO_MATCH
 from ..functions.stats import log_binom_sf
 from ..functions.text import batch_doc_shingles, batch_frames
 from ..session import local_frame
+from . import multipass
 from ..sketch.mibf import (
     ID_MASK,
     MAX_LABELS,
@@ -51,6 +52,9 @@ from ..sketch.mibf import (
     mibf_size_slots,
     seed_masks_to_arrays,
 )
+
+if TYPE_CHECKING:
+    from .mibf_store import MIBFStore
 
 __all__ = [
     "build_mibf", "classify_mibf", "classify_mibf_pairs", "mibf_summarize",
@@ -111,21 +115,6 @@ _SAT_SCHEMA = T.StructType(
 )
 
 
-_MAX_SHARD_SEGMENTS = 128
-
-
-def _clamp_segments(n_seg: int) -> int:
-    """Plan-size guard for the sharded passes: each slot-range segment is
-    its own mapInPandas leg in one union, so a degenerate broadcast
-    budget (e.g. 1 byte) must not turn into a 100k-leg plan that stalls
-    Catalyst analysis.  128 passes x a rehash of the corpus is
-    already past the point where a larger per-pass budget is the right
-    call; beyond the clamp the per-pass broadcast simply exceeds the cap
-    (documented trade, never wrong results).
-    """
-    return max(1, min(int(n_seg), _MAX_SHARD_SEGMENTS))
-
-
 def _seg_bounds(m_slots: int, n_segments: int) -> np.ndarray:
     """Slot-range segment boundaries: int64[n_segments+1], segment s spans
     ``[bounds[s], bounds[s+1])``.  Proportional split — claim slots are
@@ -138,12 +127,12 @@ def _mibf_segments(spark: SparkSession, m_slots: int) -> int:
     ``build_mibf`` and ``mibf_store.build_mibf_store``: one ownership
     reducer per task slot (at least 16), and enough segments that one
     segment's ids (2 B per slot) fit ``session._broadcast_budget`` — the
-    unit a store classify pass broadcasts — under the ``_clamp_segments``
-    plan-size guard.  Resolved ids do not depend on the count (pinned by
+    unit a store classify pass broadcasts — under the
+    ``multipass.clamp_passes`` plan-size guard.  Resolved ids do not depend on the count (pinned by
     test_segmented_resolution_matches_local_twin)."""
     from ..session import _broadcast_budget
 
-    return _clamp_segments(max(
+    return multipass.clamp_passes(max(
         16, spark.sparkContext.defaultParallelism,
         -(-(2 * m_slots) // _broadcast_budget(spark)),
     ))
@@ -426,8 +415,8 @@ def _lost_slot_scan(
 
     A single label whose lost set exceeds ``budget`` gets a group of its
     own and that leg's broadcast exceeds the cap; past
-    ``_MAX_SHARD_SEGMENTS`` groups the remaining labels join the last
-    group (the ``_clamp_segments`` plan-size guard).  Both are documented
+    ``multipass.MAX_PASSES`` groups the remaining labels join the last
+    group (the plan-size guard of ``multipass.clamp_passes``).  Both are documented
     trades, never wrong results.
     """
     m_slots, h, w, labels, seeds, family, canonical = meta
@@ -440,7 +429,7 @@ def _lost_slot_scan(
     used = 0
     for li in sorted(sizes):
         if not groups or (
-            used + 8 * sizes[li] > budget and len(groups) < _MAX_SHARD_SEGMENTS
+            used + 8 * sizes[li] > budget and len(groups) < multipass.MAX_PASSES
         ):
             groups.append([])
             used = 0
@@ -700,179 +689,101 @@ def _decide_frame(
 def _classify_mibf_sharded(
     spark: SparkSession,
     docs: DataFrame,
-    meta: tuple,
-    seg_fetch,
+    sketch: MIBFSketch | MIBFStore,
     n_segments: int,
-    per_frame_prob: np.ndarray,
+    seg_fetch,
     alpha_adj: float,
     multi_thresh: int,
     id_col: str,
     text_cols: list[str],
 ) -> DataFrame:
     """Multi-pass miBF classification for id arrays beyond the broadcast
-    budget — the MI twin of ``categorizer._categorize_sharded``.
+    budget, over the shared protocol of ``multipass.stitch``.
 
-    Pass s broadcasts ONLY slot-range segment s of the uint16 id array
-    (~``len(ids)/S`` bytes).  Each (probe, frame) entry of a document's
-    gather matrix lands in exactly one segment, so pass s emits the
-    non-empty entries it owns as a sparse (flat-index, raw-uint16) blob
-    per document; one groupBy on a per-row surrogate key reassembles the
+    Pass s broadcasts ONLY slot-range segment s of the uint16 id array,
+    ``seg_fetch(s, lo, hi)``: an in-memory slice of a sketch or a parquet
+    segment of a store, so the id array as a whole need not exist
+    anywhere.  Each (probe, frame) entry of a document's gather matrix
+    lands in exactly one segment, so pass s emits the non-empty entries it
+    owns as a sparse (flat-index, raw-uint16) blob per document.  Empty
+    slots (raw == 0) are never shipped — at the default 0.5 occupancy
+    half the matrix stays implicit.  The combine reassembles each mate's
     full (h, n_frames) matrix and runs the normal counting + significance
-    kernels (``_count_from_gather`` + ``_decide_batch``).  Empty slots
-    (raw == 0) are never shipped — at the default 0.5 occupancy half the
-    matrix stays implicit.  Cost vs single-pass: the corpus is hashed once
-    per segment and the gather matrix rides one shuffle — the standard
-    memory/IO trade, identical to the plain-Bloom sharded path.
-
-    ``text_cols``: one column = single-read classify; two = paired mode
-    (per-mate matrices reassembled separately, counts summed via
-    ``_merge_counts``, the binomial test on the combined frame count —
-    the ``classify(support, seq1, seq2)`` semantics).
-
-    ``meta`` = (m_slots, h, w, labels, seeds, hash_family, canonical);
-    ``seg_fetch(s, lo, hi)`` returns segment s's raw uint16 bytes — an
-    in-memory slice (``classify_mibf``) or a parquet segment read
-    (``mibf_store.classify_mibf_store``): the id array as a whole need
-    not exist anywhere.
+    kernels: ``_count_from_gather`` per mate, ``_merge_counts`` over the
+    mates and ``_decide_frame`` on the combined frame count (the
+    ``classify(support, seq1, seq2)`` semantics).
     """
-    S = int(n_segments)
-    m_slots, h, w, labels, seeds, family, canonical = meta
-    bounds = _seg_bounds(m_slots, S)
+    m_slots, h, w, labels, seeds, family, canonical = _sketch_meta(sketch)
+    bounds = _seg_bounds(m_slots, n_segments)
     L = len(labels)
-    M = len(text_cols)
-    from ..session import pin_rows
+    per_frame_prob = sketch.per_frame_prob()
 
-    # pin the projected rows so the surrogate key is stable across the S
-    # passes even for non-deterministic sources (see session.pin_rows)
-    keyed = pin_rows(
-        docs.select(id_col, *text_cols).withColumn(
-            "__row", F.monotonically_increasing_id()
-        )
-    )
-    id_field = docs.schema[id_col]
-    tail = []
-    for m in range(M):
-        tail += [
-            T.StructField(f"n_frames{m}", T.LongType(), False),
-            T.StructField(f"idx{m}", T.BinaryType(), False),
-            T.StructField(f"val{m}", T.BinaryType(), False),
-        ]
-    part_schema = T.StructType(
-        [T.StructField("__row", T.LongType(), False), id_field] + tail
-    )
-
-    def seg_pass(s: int):
+    def leg(s: int):
         lo, hi = int(bounds[s]), int(bounds[s + 1])
-        bc = spark.sparkContext.broadcast(seg_fetch(s, lo, hi))
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # NOTE: this closure must never reference `sketch` — cloudpickle
-            # would ship the full id array in every task, defeating the shard
-            seg = np.frombuffer(bc.value, dtype=np.uint16)
+        def open_seg(payload: bytes):
+            # must never reference `sketch`: cloudpickle would ship the
+            # full id array in every task, defeating the segments
+            seg = np.frombuffer(payload, dtype=np.uint16)
             probe = MIBFSketch(
                 m_slots, h, w, [], np.zeros(0, dtype=np.uint16), seeds,
                 family, canonical,
             )
-            cache: dict = {}
-            for pdf in batches:
-                out = {"__row": pdf["__row"].to_numpy(), id_col: pdf[id_col].to_numpy()}
-                for m, tcol in enumerate(text_cols):
-                    texts = pdf[tcol].fillna("").to_numpy()
-                    rows, offsets = _frame_hash_rows(
-                        texts, None, w, seeds, cache, canonical, family
-                    )
-                    n_docs = offsets.size - 1
-                    frames = np.diff(offsets)
-                    idx_blobs: list[bytes] = [b""] * n_docs
-                    val_blobs: list[bytes] = [b""] * n_docs
-                    if int(offsets[-1]):
-                        pos = probe.positions_for(rows)
-                        in_seg = (pos >= lo) & (pos < hi)
-                        raw = np.zeros(pos.shape, dtype=np.uint16)
-                        raw[in_seg] = seg[pos[in_seg] - lo]
-                        ii, gg = np.nonzero(in_seg & (raw != 0))
-                        if ii.size:
-                            doc = np.searchsorted(offsets, gg, side="right") - 1
-                            order = np.argsort(doc, kind="stable")
-                            ii, gg, doc = ii[order], gg[order], doc[order]
-                            # doc-local flat index: probe_row*frames[doc]+frame
-                            e = (ii * frames[doc] + (gg - offsets[doc])).astype(
-                                np.uint32
-                            )
-                            v = raw[ii, gg]
-                            cut = np.searchsorted(doc, np.arange(n_docs + 1))
-                            for d in range(n_docs):
-                                a, b = int(cut[d]), int(cut[d + 1])
-                                if b > a:
-                                    idx_blobs[d] = e[a:b].tobytes()
-                                    val_blobs[d] = v[a:b].tobytes()
-                    out[f"n_frames{m}"] = frames
-                    out[f"idx{m}"] = idx_blobs
-                    out[f"val{m}"] = val_blobs
-                yield pd.DataFrame(out)
 
-        return keyed.mapInPandas(run, schema=part_schema)
+            def score(texts, cache):
+                rows, offsets = _frame_hash_rows(
+                    texts, None, w, seeds, cache, canonical, family
+                )
+                frames = np.diff(offsets)
+                doc = e = v = np.empty(0, dtype=np.int64)
+                if int(offsets[-1]):
+                    pos = probe.positions_for(rows)
+                    in_seg = (pos >= lo) & (pos < hi)
+                    raw = np.zeros(pos.shape, dtype=np.uint16)
+                    raw[in_seg] = seg[pos[in_seg] - lo]
+                    ii, gg = np.nonzero(in_seg & (raw != 0))
+                    doc = np.searchsorted(offsets, gg, side="right") - 1
+                    # doc-local flat index: probe_row*frames[doc]+frame
+                    e = (ii * frames[doc] + (gg - offsets[doc])).astype(np.uint32)
+                    v = raw[ii, gg]
+                idx, val = multipass.cut_blobs(doc, frames.size, e, v)
+                return frames, {"idx": idx, "val": val}
 
-    parts = seg_pass(0)
-    for s in range(1, S):
-        parts = parts.unionByName(seg_pass(s))
-    blob_cols = [c for m in range(M) for c in (f"idx{m}", f"val{m}")]
-    agg = parts.groupBy("__row").agg(
-        F.first(id_col).alias(id_col),
-        *[F.first(f"n_frames{m}").alias(f"n_frames{m}") for m in range(M)],
-        F.collect_list(F.struct(*blob_cols)).alias("parts"),
-    )
+            return score
+
+        return seg_fetch(s, lo, hi), open_seg
+
+    fields = [
+        T.StructField("idx", T.BinaryType(), False),
+        T.StructField("val", T.BinaryType(), False),
+    ]
     decide_sk = MIBFSketch(
         m_slots, h, w, list(labels), np.zeros(0, dtype=np.uint16), seeds,
         family, canonical,
     )
 
-    def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            mate_counts = []
-            frames_total = np.zeros(n, dtype=np.int64)
-            for m in range(M):
-                frames = pdf[f"n_frames{m}"].to_numpy().astype(np.int64)
-                frames_total += frames
-                offsets = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(frames, out=offsets[1:])
-                raw_b = np.zeros((h, int(offsets[-1])), dtype=np.uint16)
-                # gather every segment blob of every row, then scatter the
-                # whole batch in ONE fancy-index write: the doc-local flat
-                # index e encodes (probe, frame) as probe*frames[row]+frame,
-                # so global coords derive arithmetically — no per-row
-                # (h x frames) temp allocation/copy in a Python loop
-                idx_c: list[np.ndarray] = []
-                val_c: list[np.ndarray] = []
-                row_c: list[np.ndarray] = []
-                for i, row_parts in enumerate(pdf["parts"]):
-                    if frames[i] == 0:
-                        continue
-                    for p in row_parts:
-                        bi = p[f"idx{m}"]
-                        if len(bi):
-                            e = np.frombuffer(bi, dtype=np.uint32)
-                            idx_c.append(e)
-                            val_c.append(np.frombuffer(p[f"val{m}"], dtype=np.uint16))
-                            row_c.append(np.full(e.size, i, dtype=np.int64))
-                if idx_c:
-                    e = np.concatenate(idx_c).astype(np.int64)
-                    v = np.concatenate(val_c)
-                    ri = np.concatenate(row_c)
-                    fc = frames[ri]
-                    raw_b[e // fc, offsets[ri] + e % fc] = v
-                mate_counts.append(
-                    _count_from_gather(
-                        offsets, raw_b & ID_MASK, (raw_b & SAT_BIT) != 0, L
-                    )
-                )
-            yield _decide_frame(
-                pdf[id_col], frames_total, _merge_counts(mate_counts),
-                decide_sk, per_frame_prob, alpha_adj, multi_thresh,
+    def combine(ids, parts, mates):
+        counts = []
+        for m, (frames, offsets) in enumerate(mates):
+            raw = np.zeros((h, int(offsets[-1])), dtype=np.uint16)
+            # e encodes (probe, frame) as probe*frames[row]+frame
+            multipass.scatter(
+                raw, parts,
+                lambda row, e, _: (e // frames[row], offsets[row] + e % frames[row]),
+                f"idx{m}", f"val{m}",
             )
+            counts.append(
+                _count_from_gather(offsets, raw & ID_MASK, (raw & SAT_BIT) != 0, L)
+            )
+        return _decide_frame(
+            ids, sum(f for f, _ in mates), _merge_counts(counts),
+            decide_sk, per_frame_prob, alpha_adj, multi_thresh,
+        )
 
-    return agg.mapInPandas(combine, schema=_result_schema(id_field))
+    return multipass.stitch(
+        spark, docs, id_col, text_cols, n_segments, leg, fields, combine,
+        _result_schema(docs.schema[id_col]),
+    )
 
 
 #: id(sketch) → ((applicationId, content-fp), Broadcast).  Keyed off the
@@ -929,7 +840,7 @@ def _sketch_broadcast(spark: SparkSession, sketch: MIBFSketch):
 def _classify_mibf(
     spark: SparkSession,
     docs: DataFrame,
-    sketch: MIBFSketch,
+    sketch: MIBFSketch | MIBFStore,
     alpha: float,
     multi_thresh: int,
     id_col: str,
@@ -940,26 +851,36 @@ def _classify_mibf(
     (``_merge_counts``) before one significance test on the combined
     frame count.
 
-    An id array within ``session._broadcast_budget`` is broadcast once per
-    (sketch, app) and classified in one shuffle-free ``mapInPandas``
-    pass; past it, ``_classify_mibf_sharded`` evaluates it in slot-range
-    segments of at most the budget — the executor-memory escape for very
-    large id arrays.
+    The route follows the id array's size against
+    ``session._broadcast_budget``.  Within it, the id array (a store's
+    assembled by ``MIBFStore.to_sketch``) is broadcast once per (sketch,
+    app) and classified in one shuffle-free ``mapInPandas`` pass.  Past
+    it, ``_classify_mibf_sharded`` evaluates it in slot-range segments: a
+    sketch's in at most the budget each, a store's in its own parquet
+    segments, fetched one pass at a time — the executor-memory escape for
+    very large id arrays.
     """
     from ..session import _broadcast_budget, ensure_workers
 
     ensure_workers(spark)
-    per_frame_prob = sketch.per_frame_prob()
     alpha_adj = alpha / max(1, len(sketch.labels))
     budget = _broadcast_budget(spark)
-    if sketch.ids.nbytes > budget:
-        ids = sketch.ids
+    if sketch.ids_nbytes > budget:
+        if isinstance(sketch, MIBFSketch):
+            ids = sketch.ids
+            segments = (
+                multipass.clamp_passes(-(-ids.nbytes // budget)),
+                lambda s, lo, hi: ids[lo:hi].tobytes(),
+            )
+        else:
+            segments = (sketch.n_segments, sketch.seg_fetch(spark))
         return _classify_mibf_sharded(
-            spark, docs, _sketch_meta(sketch),
-            lambda s, lo, hi: ids[lo:hi].tobytes(),
-            _clamp_segments(-(-ids.nbytes // budget)), per_frame_prob,
-            alpha_adj, multi_thresh, id_col, text_cols,
+            spark, docs, sketch, *segments, alpha_adj, multi_thresh, id_col,
+            text_cols,
         )
+    if not isinstance(sketch, MIBFSketch):
+        sketch = sketch.to_sketch(spark)
+    per_frame_prob = sketch.per_frame_prob()
     bc = _sketch_broadcast(spark, sketch)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -987,16 +908,18 @@ def _classify_mibf(
 def classify_mibf(
     spark: SparkSession,
     docs: DataFrame,
-    sketch: MIBFSketch,
+    sketch: MIBFSketch | MIBFStore,
     alpha: float = 1e-10,
     multi_thresh: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Classify every document against the miBF — broadcast + one
-    mapInPandas pass, zero shuffle (the MI twin of ``categorize``); id
-    arrays past the session's broadcast budget are evaluated in
-    slot-range segments (``_classify_mibf``).
+    mapInPandas pass, zero shuffle (the MI twin of ``categorize``).
+    ``sketch`` is an in-memory ``MIBFSketch`` or a parquet
+    ``mibf_store.MIBFStore``; an id array past the session's broadcast
+    budget is evaluated in slot-range segments, a store's fetched from
+    disk one segment per pass (``_classify_mibf``).
 
     ``alpha`` is the ``-s`` significance (min_FPR=100 → 1e-10,
     MIBFClassifier defaults); Bonferroni-adjusted by the label count.
@@ -1009,7 +932,7 @@ def classify_mibf(
 def classify_mibf_pairs(
     spark: SparkSession,
     docs: DataFrame,
-    sketch: MIBFSketch,
+    sketch: MIBFSketch | MIBFStore,
     alpha: float = 1e-10,
     multi_thresh: int = 2,
     id_col: str = "doc_id",

@@ -18,10 +18,14 @@ table of slot-range segments:
   group at a time; the SAT_BIT update is a cogrouped ``applyInPandas``
   over (segment rows × the scan's per-segment slots).  Driver-side state
   is O(n_segments) metadata plus one label group's lost sets.
-- ``classify_mibf_store`` / ``classify_mibf_store_pairs``: the sharded
-  classification kernel (``_classify_mibf_sharded``) with segment bytes
-  fetched from parquet per pass — executor memory is bounded by one
-  segment regardless of filter size.
+- classification: ``mibf.classify_mibf`` / ``classify_mibf_pairs`` take
+  a store as they take a sketch and choose the route from
+  ``MIBFStore.ids_nbytes`` against the session's broadcast budget.  Past
+  it, each pass of the sharded route (``_classify_mibf_sharded``) fetches
+  one parquet segment and broadcasts it, so executor and driver memory
+  stay bounded by one segment whatever the filter's size; within it, the
+  store is assembled (``to_sketch``) and classified in one broadcast
+  pass.
 
 The on-disk layout is the product line's persistence contract at scale
 (the distributed analog of the reference's ``.bf`` + ``_ids.txt``
@@ -48,7 +52,6 @@ from ..sketch.mibf import (
     seed_masks_to_arrays,
 )
 from .mibf import (
-    _classify_mibf_sharded,
     _lost_slot_scan,
     _mibf_segments,
     _prep_build,
@@ -60,8 +63,6 @@ __all__ = [
     "MIBFStore",
     "build_mibf_store",
     "load_mibf_store",
-    "classify_mibf_store",
-    "classify_mibf_store_pairs",
 ]
 
 _META_SCHEMA = T.StructType(
@@ -127,13 +128,6 @@ class MIBFStore:
         return _seg_bounds(self.m_slots, self.n_segments)
 
     @property
-    def meta(self) -> tuple:
-        return (
-            self.m_slots, self.num_hashes, self.shingle_w, self.labels,
-            self.seeds, self.hash_family, self.canonical,
-        )
-
-    @property
     def ids_nbytes(self) -> int:
         return 2 * self.m_slots
 
@@ -156,9 +150,10 @@ class MIBFStore:
         return float(self.sat_slots / max(1, occ))
 
     def to_sketch(self, spark: SparkSession) -> MIBFSketch:
-        """Assemble the full in-memory MIBFSketch — test-scale escape
-        hatch (and the bridge to ``classify_mibf`` when the filter DOES
-        fit); defeats the store's point at target scale."""
+        """Assemble the full in-memory MIBFSketch: what ``classify_mibf``
+        broadcasts when the id array fits the session's broadcast budget
+        (and a test-scale escape hatch); past the budget it would defeat
+        the store's point."""
         ids = np.zeros(self.m_slots, dtype=np.uint16)
         bounds = self.bounds
         for r in spark.read.parquet(f"{self.path}/segments").select("seg", "ids").collect():
@@ -336,44 +331,4 @@ def load_mibf_store(spark: SparkSession, path: str) -> MIBFStore:
         int(r["n_segments"]),
         np.frombuffer(bytes(r["label_counts"]), dtype=np.int64).copy(),
         int(r["sat_slots"]),
-    )
-
-
-def classify_mibf_store(
-    spark: SparkSession,
-    docs: DataFrame,
-    store: MIBFStore,
-    alpha: float = 1e-10,
-    multi_thresh: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """``classify_mibf`` against a parquet store: always sharded, one
-    segment broadcast per pass, ids fetched from disk — executor AND
-    driver memory bounded by one segment (MIBFClassifier.hpp:773-939
-    semantics, identical outputs to the in-memory path)."""
-    return _classify_mibf_sharded(
-        spark, docs, store.meta, store.seg_fetch(spark), store.n_segments,
-        store.per_frame_prob(), alpha / max(1, len(store.labels)),
-        multi_thresh, id_col, [text_col],
-    )
-
-
-def classify_mibf_store_pairs(
-    spark: SparkSession,
-    docs: DataFrame,
-    store: MIBFStore,
-    alpha: float = 1e-10,
-    multi_thresh: int = 2,
-    id_col: str = "doc_id",
-    text1_col: str = "text1",
-    text2_col: str = "text2",
-) -> DataFrame:
-    """Paired (-e) classification against a parquet store — counts sum
-    across mates before the combined-frame binomial test
-    (MIBFClassifier.hpp:753-835), same as ``classify_mibf_pairs``."""
-    return _classify_mibf_sharded(
-        spark, docs, store.meta, store.seg_fetch(spark), store.n_segments,
-        store.per_frame_prob(), alpha / max(1, len(store.labels)),
-        multi_thresh, id_col, [text1_col, text2_col],
     )

@@ -20,8 +20,9 @@ Semantics parity map (kernel → reference):
 The early-exit branches of the reference are dropped: vectorized evaluation
 is exhaustive, and the exhaustive score crosses the same threshold, so the
 *decision* is identical (SURVEY.md §4).  The sensitivity-reducing
-skip-ahead heuristic (SeqEval.h:94-110) is replicated behind
-``reference_skip_mode`` for differential tests only.
+skip-ahead heuristic (SeqEval.h:94-110) is not applied:
+``score_with_skip_reference`` replicates it as a reference used only by
+tests, and it is the only reader of ``streak_threshold``.
 """
 
 from __future__ import annotations

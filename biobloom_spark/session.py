@@ -90,11 +90,13 @@ def pin_rows(df):
     """Materialize a DataFrame once so multi-pass evaluation sees ONE row
     set with stable surrogate ids.
 
-    The sharded/chunked paths (`_categorize_sharded`,
-    `_classify_mibf_sharded`) attach ``monotonically_increasing_id()``
-    and re-scan the plan once per segment pass; for a non-deterministic
-    source (``orderBy(rand())``, an unseeded ``sample()``, a shuffle whose
-    fetch order varies) each pass would re-evaluate the plan and assign the SAME surrogate to DIFFERENT
+    ``operators.multipass.stitch``, the one multi-pass protocol of the
+    over-budget classify routes (Bloom filter shards and word-range
+    chunks, miBF slot-range segments), attaches
+    ``monotonically_increasing_id()`` and re-scans the plan once per
+    pass; for a non-deterministic source (``orderBy(rand())``, an
+    unseeded ``sample()``, a shuffle whose fetch order varies) each pass
+    would re-evaluate the plan and assign the SAME surrogate to DIFFERENT
     rows, silently stitching partials from different documents together.
     An eager ``localCheckpoint`` computes the projected rows once, stores
     them on the executors (memory-and-disk) with lineage truncated, and
@@ -117,9 +119,11 @@ def _broadcast_budget(spark: SparkSession) -> int:
 
     Every size-guarded route reads it at call time: a Bloom registry over
     it is evaluated in filter shards or word-range chunks
-    (``categorizer._plan_passes``), a miBF id array over it in slot-range
-    segments (``mibf._classify_mibf_sharded``), and ``build_mibf``'s
-    saturation scan packs label groups up to it.  The MiB value is the
+    (``categorizer._plan_passes``), and a miBF id array over it, of a
+    sketch or of a parquet store alike, in slot-range segments
+    (``mibf._classify_mibf_sharded``) — both over the one stitch of
+    ``operators.multipass``; ``build_mibf``'s saturation scan packs label
+    groups up to it.  The MiB value is the
     one ``SparkContext.executorMemory`` parsed at start-up, with Spark's
     ``SPARK_EXECUTOR_MEMORY`` / ``SPARK_MEM`` fallbacks.  In local mode
     the executor runs in the driver JVM, whose heap

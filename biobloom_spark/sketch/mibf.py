@@ -378,6 +378,10 @@ class MIBFSketch:
         return cls(m_slots, num_hashes, shingle_w, labels, ids, seeds,
                    hash_family, canonical)
 
+    @property
+    def ids_nbytes(self) -> int:
+        return self.ids.nbytes
+
     # -- population --------------------------------------------------------
     def positions_for(self, frame_hashes_or_rows: np.ndarray) -> np.ndarray:
         """(h, n) probe positions: K-M in k-mer mode (poly family), NTM64

@@ -4,7 +4,8 @@ Broadcast budgets, pinning, miBF segment counts, Bloom merge segments,
 sketch merge fanouts, broadcast hints and the summary plan switch are
 all decided from the session and the data, and a checkpointed build
 resumes whenever its fingerprint matches; none of them may come back as
-a parameter or a ``BuildConfig`` field.
+a parameter or a ``BuildConfig`` field.  A switch no library code reads
+(``ScoringConfig.reference_skip_mode``) must not come back either.
 """
 
 from __future__ import annotations
@@ -17,6 +18,8 @@ DERIVED = {
     "max_broadcast_bytes", "pin_source", "pin", "explode_threshold",
     "merge_segments", "segment_bytes", "min_segments", "merge_fanout",
     "broadcast_refs", "resume",
+    # read by no library code: exhaustive scoring is the only scorer
+    "reference_skip_mode",
 }
 
 MODULES = [
@@ -42,11 +45,12 @@ def _public_callables():
 
 
 def test_no_derived_parameter():
-    from biobloom_spark.config import BuildConfig
+    from biobloom_spark.config import BuildConfig, ScoringConfig
 
     found = dict(_public_callables())
     # a dataclass's signature is its fields
     found["biobloom_spark.config.BuildConfig"] = BuildConfig
+    found["biobloom_spark.config.ScoringConfig"] = ScoringConfig
     assert "biobloom_spark.operators.mibf_store.build_mibf_store" in found
     offenders = {
         q: sorted(set(inspect.signature(fn).parameters) & DERIVED)

@@ -210,10 +210,10 @@ class TestCategorizer:
         give byte-identical assignments/hits/scores (the executor-memory
         escape hatch for very large registries), null texts included: 0
         frames and noMatch on both routes."""
-        from biobloom_spark.operators.categorizer import _shard_filters
+        from biobloom_spark.operators.categorizer import _plan_passes
 
         cap = max(len(f["bitmap"]) for f in registry)
-        assert len(_shard_filters(registry, cap)) >= 2
+        assert sum(p[0] == "full" for p in _plan_passes(registry, cap)) >= 2
         docs = corpus.select("url", "text").unionByName(spark.createDataFrame(
             [("null-a", None), ("null-b", None)], "url string, text string"
         ))
@@ -269,10 +269,10 @@ class TestCategorizer:
         """Sharded mode must emit one output row per input row even when
         id_col is not unique (the stitch keys a per-row surrogate, not the
         doc id) — the single-pass equivalence contract."""
-        from biobloom_spark.operators.categorizer import _shard_filters
+        from biobloom_spark.operators.categorizer import _plan_passes
 
         cap = max(len(f["bitmap"]) for f in registry)
-        assert len(_shard_filters(registry, cap)) >= 2
+        assert sum(p[0] == "full" for p in _plan_passes(registry, cap)) >= 2
         dup = corpus.limit(20).withColumn("url", F.lit("same-id"))
         with force_budget(cap):
             res = categorize(spark, dup, registry, id_col="url").collect()

@@ -698,11 +698,15 @@ class TestStore:
         assert store.sat_slots == int(((dense.ids & SAT_BIT) != 0).sum())
 
     def test_store_classify_matches_in_memory(
-        self, spark, labeled_corpus, mibf, store_env
+        self, spark, labeled_corpus, mibf, store_env, force_budget
     ):
-        from biobloom_spark.operators.mibf_store import (
-            classify_mibf_store, load_mibf_store,
-        )
+        """``classify_mibf`` takes the store on both routes: at the
+        session budget it assembles it and classifies in one broadcast pass
+        (no exchange); under a budget below ``ids_nbytes`` it fetches the
+        parquet segments one pass at a time (the one stitch exchange).
+        Both equal the in-memory rows."""
+        from biobloom_spark.operators.mibf_store import load_mibf_store
+        from biobloom_spark.plans import count_exchanges
 
         store, path = store_env
         store = load_mibf_store(spark, path)  # exercise the load path too
@@ -720,18 +724,21 @@ class TestStore:
         dense = {
             r["doc_id"]: key(r) for r in classify_mibf(spark, probe, mibf).collect()
         }
-        from_store = {
-            r["doc_id"]: key(r)
-            for r in classify_mibf_store(spark, probe, store).collect()
-        }
+        single = classify_mibf(spark, probe, store)
+        assert count_exchanges(single) == 0
+        assert {r["doc_id"]: key(r) for r in single.collect()} == dense
+        with force_budget(store.ids_nbytes - 1):
+            fetched = classify_mibf(spark, probe, store)
+            assert count_exchanges(fetched) == 1
+            from_store = {r["doc_id"]: key(r) for r in fetched.collect()}
         assert dense == from_store
         assert len(from_store) == probe.count()
 
     def test_store_classify_pairs_matches_in_memory(
-        self, spark, labeled_corpus, mibf, store_env
+        self, spark, labeled_corpus, mibf, store_env, force_budget
     ):
         from biobloom_spark.operators.mibf import classify_mibf_pairs
-        from biobloom_spark.operators.mibf_store import classify_mibf_store_pairs
+        from biobloom_spark.plans import count_exchanges
 
         store, _ = store_env
         texts = [r["text"] for r in labeled_corpus.limit(12).collect()]
@@ -751,10 +758,13 @@ class TestStore:
             r["doc_id"]: key(r)
             for r in classify_mibf_pairs(spark, pairs, mibf).collect()
         }
-        from_store = {
-            r["doc_id"]: key(r)
-            for r in classify_mibf_store_pairs(spark, pairs, store).collect()
-        }
+        single = classify_mibf_pairs(spark, pairs, store)
+        assert count_exchanges(single) == 0
+        assert {r["doc_id"]: key(r) for r in single.collect()} == dense
+        with force_budget(store.ids_nbytes - 1):
+            fetched = classify_mibf_pairs(spark, pairs, store)
+            assert count_exchanges(fetched) == 1
+            from_store = {r["doc_id"]: key(r) for r in fetched.collect()}
         assert dense == from_store
 
     def test_store_resume_from_kill(self, spark, labeled_corpus, tmp_path, monkeypatch):

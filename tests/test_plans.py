@@ -119,6 +119,55 @@ def test_chunked_categorize_one_stitch_shuffle(spark, pq_corpus, force_budget):
     assert_no_cartesian(result, "chunked categorize")
 
 
+def test_sharded_mibf_classify_one_stitch_shuffle(
+    spark, pq_corpus, force_budget, tmp_path
+):
+    """The miBF segment route shares the Bloom route's stitch: under a
+    budget below the id array, the in-memory sketch and the parquet
+    store each classify through exactly one shuffle exchange (the
+    groupBy __row stitch) and no cartesian product."""
+    from biobloom_spark.operators.mibf import build_mibf, classify_mibf
+    from biobloom_spark.operators.mibf_store import build_mibf_store
+    from biobloom_spark.plans import assert_no_cartesian
+
+    sk = build_mibf(spark, pq_corpus, key_col="lang", occupancy=0.1)
+    with force_budget(1):
+        store = build_mibf_store(
+            spark, pq_corpus, str(tmp_path / "mi"), key_col="lang", occupancy=0.1,
+        )
+    for what, filt in (("sketch", sk), ("store", store)):
+        with force_budget(filt.ids_nbytes // 3):
+            result = classify_mibf(spark, pq_corpus, filt, id_col="url")
+        n = count_exchanges(result)
+        assert n == 1, f"{what}: expected exactly the stitch exchange, found {n}"
+        assert_no_cartesian(result, f"sharded classify_mibf ({what})")
+
+
+def test_pass_guard_caps_every_route(spark, force_budget):
+    """One plan-size guard for every multi-pass route: under a 1-byte
+    budget an oversized Bloom filter splits into at most
+    ``multipass.MAX_PASSES`` word-range chunks, and the miBF segment
+    count is exactly that cap.  Only the planners run; no plan is
+    built."""
+    from biobloom_spark.operators.categorizer import _plan_passes
+    from biobloom_spark.operators.mibf import _mibf_segments
+    from biobloom_spark.operators.multipass import MAX_PASSES, clamp_passes
+
+    m_bits = 1 << 20
+    filters = [
+        {"filter_id": f"f{i}", "bitmap": bytes(m_bits // 8), "m_bits": m_bits,
+         "block_bits": bb}
+        for i, bb in enumerate((64, 512, 64))
+    ]
+    passes = _plan_passes(filters, 1)
+    for gi in range(len(filters)):
+        n = sum(p[0] == "chunk" and p[1] == gi for p in passes)
+        assert 1 < n <= MAX_PASSES, (gi, n)
+    with force_budget(1):
+        assert _mibf_segments(spark, 1 << 20) == MAX_PASSES
+    assert clamp_passes(1 << 20) == MAX_PASSES
+
+
 def test_broadcast_budget_follows_executor_memory(spark):
     """Every size-guarded route reads one budget derived from the session:
     the fixture leaves ``spark.executor.memory`` unset, so it is Spark's
